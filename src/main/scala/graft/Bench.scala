@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main (driver contract): times the read-only query corpus at
@@ -14,12 +13,11 @@ import java.nio.file.{Files, Paths}
   *     FULL-corpus warmup pass alone cost ~1,130 s — a third of the wall
   *     clock. Warmup now runs a fixed representative subset that touches
   *     every fixture table and engine subsystem once (session, parquet
-  *     footers, codegen/JIT machinery, streaming micro-batch, temp-dir
-  *     I/O). Residual per-query cold cost (each query's own generated
-  *     code compiles on its first timed run) lands in ONE of the three
-  *     timed runs and the MEDIAN discards it; measured effect on the
-  *     medians is <±5% on controls (OPTIMIZATION_r19.md declares this
-  *     measurement change and keeps the old-methodology r18 numbers);
+  *     footers, codegen/JIT machinery, streaming micro-batch).
+  *     Residual per-query cold cost (each query's own generated code
+  *     compiles on its first timed run) lands in ONE of the three timed
+  *     runs and the MEDIAN discards it (no committed artifact measures
+  *     this warmup against the old full-corpus one);
   *   - per-query time is the MEDIAN of 3 timed runs — single-shot
   *     timing showed order-dependent noise (r3's first-in-loop query
   *     read 4.4× its r2 time);
@@ -27,7 +25,8 @@ import java.nio.file.{Files, Paths}
   *     every projected column — `.count()` would let Catalyst prune all
   *     expression work;
   *   - a failed query aborts the bench (exit 1) instead of timing as -1;
-  *   - AQE on, aligned with the CLI session config;
+  *   - the session is the shared [[Session]] profile, so the bench
+  *     times the plans the CLI ships;
   *   - the JSON line carries per-query deltas (cur/prev ratio) against
   *     the previous round's BENCH_r*.json (or SPARK_GRAFT_BENCH_PREV),
   *     so regressions are visible in the artifact itself;
@@ -49,26 +48,13 @@ import java.nio.file.{Files, Paths}
   */
 object Bench {
   private val excluded = SparkEntry.mutating
+  /** Wall seconds after which no isolated retime starts. */
+  private val RetimeGuardSec = 2700.0
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r18: prefer shuffled-hash join when the planner's size
-      // conditions allow (build side estimated ≪ other side AND under
-      // threshold×partitions — the conditions gate the OOM risk): same
-      // results, no sort on either side. Aligned with Cli/Verify;
-      // measured 0.43×-0.85× on the join-heavy entries at sf0.1 with
-      // flat controls (OPTIMIZATION_r18.md).
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // optional args: bench only the named queries (local iteration aid;
     // the driver always runs the full corpus)
@@ -94,14 +80,14 @@ object Bench {
     val warm0 = System.nanoTime()
     // bounded warmup (see header): one entry per fixture table / engine
     // subsystem — events agg/scan/window, embeddings join, documents
-    // text, multimodal decode, streaming micro-batch, jsonl temp-dir
-    // round-trip, date dim, TPC-H join tails (orders/lineitem/supplier/
-    // nation/region and part), JSON props. Intersected with the corpus
-    // so a renamed entry can never break the bench.
+    // text, multimodal decode, streaming micro-batch, date dim, TPC-H
+    // join tails (orders/lineitem/supplier/nation/region and part), JSON
+    // props. Intersected with the timed names so a renamed entry can
+    // never break the bench.
     val warmupNames = Seq(
       "q1_agg", "q2_filter_project", "q11_window", "q17_knn",
       "q18_text_stats", "q25_multimodal", "q38_streaming_sessions",
-      "q109_copy_jsonl", "q150_date_dim", "q193_top_supplier",
+      "q150_date_dim", "q193_top_supplier",
       "q232_min_cost_supplier", "q32_json_props").filter(names0.contains)
     warmupNames.foreach(materialize)
     val warmupSec = (System.nanoTime() - warm0) / 1e9
@@ -133,19 +119,18 @@ object Bench {
 
     // auto-re-time in-run spikes (VERDICT r15 #2): a ≥2×-vs-prev entry
     // that also costs ≥1s is re-timed in ISOLATION at the end of the
-    // run (the graft.Retime discipline — streaming entries' micro-batch
-    // machinery contends with in-run neighbors and has produced 2-5×
-    // position-noise spikes three rounds running), and the ISOLATED
+    // run (streaming entries' micro-batch machinery contends with
+    // in-run neighbors and has produced 2-5× position-noise spikes
+    // three rounds running), and the ISOLATED
     // median goes into the queries map so the committed artifact needs
     // no prose correction. Both numbers are recorded under "retimed".
     val (prevName, prevTimes) = previousTimes()
     // retime cap (r19, VERDICT r18 #1): at most 6 isolated retimes, and
-    // none once the run has already spent 2700 s of wall — a spiky run
-    // must degrade to in-run numbers rather than blow the driver budget
+    // none once the run has already spent RetimeGuardSec of wall — a
+    // spiky run must degrade to in-run numbers rather than blow the
+    // wall budget
     val elapsedSec = (System.nanoTime() - warm0) / 1e9
-    val retimeCap =
-      if (elapsedSec > sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_RETIME_GUARD", "2700").toDouble) 0 else 6
+    val retimeCap = if (elapsedSec > RetimeGuardSec) 0 else 6
     val flagged = inRun.collect {
       case (n, t) if t >= 1.0 &&
         prevTimes.get(n).exists(pt => pt > 0 && t / pt >= 2.0) => n

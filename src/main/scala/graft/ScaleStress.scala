@@ -202,16 +202,7 @@ object ScaleStress {
     val factor = sys.env.getOrElse("GRAFT_SCALE_FACTOR", "10").toInt
     val scaleDir = sys.env.getOrElse("GRAFT_SCALE_DIR", "target/scale/sf1")
     val outPath = sys.env.getOrElse("GRAFT_SCALE_OUT", "SCALE_LOCAL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val listener = new MaxTaskListener
     spark.sparkContext.addSparkListener(listener)
 
@@ -418,7 +409,7 @@ object ScaleStress {
     val loadEnd = osBean.getSystemLoadAverage
     val json =
       s"""{"factor":$factor,"base":"$base","scale_dir":"$scaleDir",""" +
-        s""""cpus":$cpus,""" +
+        s""""cpus":${Session.cpus},""" +
         f""""load_start":$loadStart%.2f,"load_end":$loadEnd%.2f,""" +
         s""""entries":{${(rows ++ extraRows ++ dbscanRows ++ lpaRows)
           .mkString(",")}}}"""

@@ -113,9 +113,11 @@ final class TaskWrapper(
 
 /** The engine application: configure tasks, assemble the DAG (explicit +
   * implicit output→source edges), filter with the task query, then run
-  * serially in topo order with skip propagation — the Spark re-expression
-  * of sayn/core/app.py:126-654. Parallel branches can be added later; the
-  * serial loop matches reference behavior (app.py:611-654).
+  * the selection in topo order with skip propagation — the Spark
+  * re-expression of sayn/core/app.py:126-654. One scheduler serves every
+  * `jobs` value: `jobs = 1` is the reference's serial loop
+  * (app.py:611-654) and `jobs > 1` runs independent tasks concurrently
+  * under the same skip rule and the same `[i/n]` numbering.
   */
 final class App(
     val db: SparkDatabase,
@@ -194,17 +196,9 @@ final class App(
         objects.setSourcesFromProd(external.toSet)
       }
 
-      // 4. setup then execute, serially in topo order (app.py:611-654)
+      // 4. setup then execute
       tracker.emit(RunEvent.RunStarted(args.command, selected.size, Tracker.now()))
-      val statuses = mutable.LinkedHashMap.empty[String, TaskStatus]
-      val errors = mutable.LinkedHashMap.empty[String, GraftError]
-
-      if (args.jobs <= 1)
-        serialExecute(selected, byName, dag, args, tracker, statuses, errors)
-      else
-        parallelExecute(selected, byName, dag, args, tracker, statuses, errors)
-
-      val report = RunReport(selected, statuses.toMap, errors.toMap)
+      val report = execute(selected, byName, dag, args, tracker)
       tracker.emit(RunEvent.RunFinished(
         report.succeeded, Tracker.now() - runT0, Tracker.now()))
       report
@@ -212,12 +206,11 @@ final class App(
     }
   }
 
-  /** Execute one task's configured command. Pure of scheduler state —
-    * shared by the serial and parallel executors. Every Spark job the
-    * task triggers runs under a job group named after the task, so the
-    * Spark UI / event logs attribute cluster work to engine tasks — the
-    * job group is thread-local, so concurrent tasks don't clobber each
-    * other's group.
+  /** Execute one task's configured command on a pool thread. Every Spark
+    * job the task triggers runs under a job group named after the task,
+    * so the Spark UI / event logs attribute cluster work to engine tasks
+    * — the job group is thread-local, so concurrent tasks don't clobber
+    * each other's group.
     */
   private def executeOne(w: TaskWrapper, args: RunArguments): Result[Unit] = {
     val sc = db.spark.sparkContext
@@ -240,169 +233,92 @@ final class App(
     } finally sc.clearJobGroup()
   }
 
-  /** Reference-parity executor: strictly serial in topo order
-    * (app.py:611-654) with skip propagation (task_wrapper.py:269-300).
+  /** The one executor. Pending tasks are scanned in topo order and each
+    * is resolved: failed at config, skipped, or launched on a pool of
+    * `args.jobs` threads; the scan stops once every slot is taken and
+    * resumes after the next completion. At `jobs = 1` this is the
+    * reference's serial loop (app.py:611-654); at `jobs > 1` independent
+    * tasks run as concurrent Spark jobs, which one SparkSession schedules
+    * FIFO across the cluster.
+    *
+    * Skip rule (task_wrapper.py:269-300): a failed parent without
+    * `on_fail: no_skip`, or a skipped parent, skips the child even when
+    * that parent is outside the selection. A task waits only on parents
+    * in the selection. failFast stops launching after a failure; tasks
+    * already running finish.
     */
-  private def serialExecute(
+  private def execute(
       selected: Seq[String],
       byName: Map[String, TaskWrapper],
       dag: Map[String, Seq[String]],
       args: RunArguments,
-      tracker: Tracker,
-      statuses: mutable.LinkedHashMap[String, TaskStatus],
-      errors: mutable.LinkedHashMap[String, GraftError]): Unit = {
-    var interrupted = false
-    var taskIdx = 0
-    for (name <- selected) {
-      val w = byName(name)
-      taskIdx += 1
-      val taskT0 = Tracker.now()
-      def finish(status: TaskStatus, err: Option[GraftError]): Unit =
-        tracker.emit(RunEvent.TaskFinished(name, status.name,
-          Tracker.now() - taskT0, err.map(_.toString), Tracker.now()))
-      if (w.status == TaskStatus.Failed) {
-        errors(name) = w.error.get
-        statuses(name) = TaskStatus.Failed
-        finish(TaskStatus.Failed, w.error)
-      } else if (interrupted) {
-        w.status = TaskStatus.Skipped
-        statuses(name) = TaskStatus.Skipped
-        finish(TaskStatus.Skipped, None)
-      } else {
-        val badParent = dag(name).exists { p =>
-          val ps = statuses.get(p).orElse(Some(byName(p).status)).get
-          (ps == TaskStatus.Failed && byName(p).onFail != "no_skip") ||
-            ps == TaskStatus.Skipped
-        }
-        if (badParent) {
-          w.status = TaskStatus.Skipped
-          statuses(name) = TaskStatus.Skipped
-          finish(TaskStatus.Skipped, None)
-        } else {
-          w.status = TaskStatus.Executing
-          tracker.emit(RunEvent.TaskStarted(name, taskIdx, selected.size, taskT0))
-          executeOne(w, args) match {
-            case Right(_) =>
-              w.status = TaskStatus.Succeeded
-              statuses(name) = TaskStatus.Succeeded
-              finish(TaskStatus.Succeeded, None)
-            case Left(e) =>
-              w.status = TaskStatus.Failed
-              w.error = Some(e)
-              errors(name) = e
-              statuses(name) = TaskStatus.Failed
-              finish(TaskStatus.Failed, Some(e))
-              if (args.failFast) interrupted = true
-          }
-        }
-      }
-    }
-  }
-
-  /** Concurrent executor: up to `args.jobs` ready tasks run at once as
-    * concurrent Spark jobs (one SparkSession schedules them FIFO across
-    * the cluster). Dependency, skip-propagation and on_fail semantics are
-    * identical to the serial path — a task launches only when every
-    * parent is terminal; failFast stops LAUNCHING new tasks (in-flight
-    * ones finish). The win at scale: a 1000-executor cluster stays busy
-    * while an un-parallelizable branch would otherwise leave it idle.
-    */
-  private def parallelExecute(
-      selected: Seq[String],
-      byName: Map[String, TaskWrapper],
-      dag: Map[String, Seq[String]],
-      args: RunArguments,
-      tracker: Tracker,
-      statuses: mutable.LinkedHashMap[String, TaskStatus],
-      errors: mutable.LinkedHashMap[String, GraftError]): Unit = {
-    val selectedSet = selected.toSet
+      tracker: Tracker): RunReport = {
+    val position = selected.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
     val pending = mutable.LinkedHashSet(selected: _*)
     val running = mutable.Set.empty[String]
     var interrupted = false
+    val statuses = mutable.Map.empty[String, TaskStatus]
+    val errors = mutable.Map.empty[String, GraftError]
     val completion =
       new java.util.concurrent.LinkedBlockingQueue[(String, Result[Unit], Long)]
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(args.jobs)
-    var taskIdx = 0
+    val slots = args.jobs
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(slots)
 
-    def terminal(s: TaskStatus): Boolean = s match {
-      case TaskStatus.Succeeded | TaskStatus.Failed | TaskStatus.Skipped => true
-      case _ => false
-    }
-    def parentStatuses(name: String): Seq[(TaskStatus, String)] =
-      dag(name).filter(selectedSet.contains)
-        .map(p => (byName(p).status, byName(p).onFail))
-    def finishEvent(name: String, status: TaskStatus,
-        err: Option[GraftError], t0: Long): Unit =
-      tracker.emit(RunEvent.TaskFinished(name, status.name,
+    def finish(w: TaskWrapper, status: TaskStatus,
+        err: Option[GraftError], t0: Long): Unit = {
+      w.status = status
+      statuses(w.name) = status
+      err.foreach { e => w.error = Some(e); errors(w.name) = e }
+      tracker.emit(RunEvent.TaskFinished(w.name, status.name,
         Tracker.now() - t0, err.map(_.toString), Tracker.now()))
+    }
+    def blocks(parent: String): Boolean = {
+      val p = byName(parent)
+      (p.status == TaskStatus.Failed && p.onFail != "no_skip") ||
+        p.status == TaskStatus.Skipped
+    }
+    def waitsOn(parent: String): Boolean =
+      pending.contains(parent) || running.contains(parent)
 
-    /** Mark everything skippable (config-failed children, failed/skipped
-      * parents, failFast) and launch every ready task. Returns when
-      * nothing more can change without a completion.
-      */
-    def schedule(): Unit = {
-      var changed = true
-      while (changed) {
-        changed = false
-        for (name <- pending.toSeq) {
-          val w = byName(name)
-          val t0 = Tracker.now()
-          if (w.status == TaskStatus.Failed) { // config failure
-            pending -= name
-            errors(name) = w.error.get
-            statuses(name) = TaskStatus.Failed
-            finishEvent(name, TaskStatus.Failed, w.error, t0)
-            changed = true
-          } else if (interrupted ||
-            parentStatuses(name).exists { case (ps, onFail) =>
-              (ps == TaskStatus.Failed && onFail != "no_skip") ||
-                ps == TaskStatus.Skipped
-            }) {
-            pending -= name
-            w.status = TaskStatus.Skipped
-            statuses(name) = TaskStatus.Skipped
-            finishEvent(name, TaskStatus.Skipped, None, t0)
-            changed = true
-          } else if (running.size < args.jobs &&
-            parentStatuses(name).forall(p => terminal(p._1))) {
-            pending -= name
-            running += name
-            w.status = TaskStatus.Executing
-            taskIdx += 1
-            tracker.emit(RunEvent.TaskStarted(name, taskIdx, selected.size, t0))
-            pool.execute(() => {
-              val r =
-                try executeOne(w, args)
-                catch { case e: Throwable => Left(TaskFailed(e.toString, Some(e))) }
-              completion.put((name, r, t0))
-            })
-            changed = true
-          }
+    def scan(): Unit =
+      pending.toSeq.iterator.takeWhile(_ => running.size < slots).foreach { name =>
+        val w = byName(name)
+        val t0 = Tracker.now()
+        if (w.status == TaskStatus.Failed) { // config failure
+          pending -= name
+          finish(w, TaskStatus.Failed, w.error, t0)
+        } else if (interrupted || dag(name).exists(blocks)) {
+          pending -= name
+          finish(w, TaskStatus.Skipped, None, t0)
+        } else if (!dag(name).exists(waitsOn)) {
+          pending -= name
+          running += name
+          w.status = TaskStatus.Executing
+          tracker.emit(RunEvent.TaskStarted(name, position(name), selected.size, t0))
+          pool.execute(() => {
+            val r =
+              try executeOne(w, args)
+              catch { case e: Throwable => Left(TaskFailed(e.toString, Some(e))) }
+            completion.put((name, r, t0))
+          })
         }
       }
-    }
 
-    schedule()
-    while (running.nonEmpty) {
-      val (name, result, t0) = completion.take()
-      running -= name
-      val w = byName(name)
-      result match {
-        case Right(_) =>
-          w.status = TaskStatus.Succeeded
-          statuses(name) = TaskStatus.Succeeded
-          finishEvent(name, TaskStatus.Succeeded, None, t0)
-        case Left(e) =>
-          w.status = TaskStatus.Failed
-          w.error = Some(e)
-          errors(name) = e
-          statuses(name) = TaskStatus.Failed
-          finishEvent(name, TaskStatus.Failed, Some(e), t0)
-          if (args.failFast) interrupted = true
+    try {
+      scan()
+      while (running.nonEmpty) {
+        val (name, result, t0) = completion.take()
+        running -= name
+        result match {
+          case Right(_) => finish(byName(name), TaskStatus.Succeeded, None, t0)
+          case Left(e) =>
+            finish(byName(name), TaskStatus.Failed, Some(e), t0)
+            if (args.failFast) interrupted = true
+        }
+        scan()
       }
-      schedule()
-    }
-    pool.shutdown()
+    } finally pool.shutdown()
+    RunReport(selected, statuses.toMap, errors.toMap)
   }
 
   /** compile command output: compile/<group>/<task>.sql

@@ -3,7 +3,6 @@ package graft.app
 import graft.core.DbObjectCompiler
 import graft.db.SparkDatabase
 import graft.tasks.{RunArguments, UserTask}
-import org.apache.spark.sql.SparkSession
 
 /** Command-line entry point (sayn/cli.py surface):
   *
@@ -36,28 +35,21 @@ object Cli {
         // invocations (the warehouse IS the state, like the reference —
         // SURVEY §4). Warehouse + metastore live under the project dir.
         val warehouse = projectDir.resolve(".graft").toAbsolutePath
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
+        val partitions = sys.env.get("GRAFT_SHUFFLE_PARTITIONS").fold(32) { v =>
+          v.toIntOption.filter(_ >= 1).getOrElse {
+            System.err.println("config error: GRAFT_SHUFFLE_PARTITIONS " +
+              s"expects a positive integer, got '$v'")
+            sys.exit(1)
+          }
+        }
+        // NOTE: the legacy nanosAsLong conf is deliberately not set:
+        // silently reading a user project's TIMESTAMP(NANOS) columns as
+        // bigint would change query semantics; the loud Spark error is
+        // the better default. (Fixture event-time reads are instead
+        // schema-adaptive — queries/Tables.tsUs.)
+        val spark = graft.Session
+          .builder(sys.env.getOrElse("GRAFT_MASTER", "local[*]"), partitions)
           .appName("graft")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-          .config("spark.sql.adaptive.enabled", "true")
-          // prefer shuffled-hash over sort-merge when the planner's
-          // size conditions allow (the optimization guide's baseline
-          // posture): same results, no sort on either side; AQE still
-          // upgrades to broadcast when a side is small. Overridable
-          // per-session like any SQL conf.
-          .config("spark.sql.join.preferSortMergeJoin",
-            sys.env.getOrElse("GRAFT_PREFER_SMJ", "false") match {
-              case "1" | "true" => "true"
-              case _ => "false"
-            })
-          .config("spark.sql.session.timeZone", "UTC")
-          // NOTE: the legacy nanosAsLong conf is deliberately not set:
-          // silently reading a user project's TIMESTAMP(NANOS) columns as
-          // bigint would change query semantics; the loud Spark error is
-          // the better default. (Fixture event-time reads are instead
-          // schema-adaptive — queries/Tables.tsUs.)
           .config("spark.sql.warehouse.dir", warehouse.resolve("warehouse").toString)
           .config("javax.jdo.option.ConnectionURL",
             s"jdbc:derby:;databaseName=${warehouse.resolve("metastore")};create=true")

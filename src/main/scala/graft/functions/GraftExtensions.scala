@@ -11,8 +11,8 @@ import org.apache.spark.sql.graftbridge.GraftSqlBridge
   * integration point for engine libraries (the same mechanism
   * Delta/Iceberg use):
   *
-  *   - builder path: `SparkSession.builder().withExtensions(new
-  *     GraftExtensions)` or `--conf spark.sql.extensions=
+  *   - builder path: `withExtensions(new GraftExtensions)` on a
+  *     session builder, or `--conf spark.sql.extensions=
   *     graft.functions.GraftExtensions` (zero-arg class, conf-loadable);
   *   - live path: [[GraftExtensions.install]] registers the same
   *     functions on an already-built session (sayn-style embedders get

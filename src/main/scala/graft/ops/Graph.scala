@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.pipeline.Stage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -62,8 +63,6 @@ object Graph {
       damping: Double = 0.85): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping >= 0 && damping < 1, s"damping in [0,1), got $damping")
-    def materialize(df: DataFrame): DataFrame =
-      graft.pipeline.Stage.materialize(df)
 
     val perSrc = Window.partitionBy(col("_g_src"))
     // MATERIALIZED, not cache()d — the loop re-references these frames
@@ -75,7 +74,7 @@ object Graph {
     // mass: its edges are dropped here, which makes the node DANGLING
     // (its mass redistributes uniformly below) instead of silently
     // poisoning every score with 0.0/0.0 = NaN transition probabilities
-    val w = materialize(edges.select(
+    val w = Stage.materialize(edges.select(
         col(srcCol).as("_g_src"), col(dstCol).as("_g_dst"),
         col(weightCol).cast("double").as("_g_w"))
       .observe(wObs, min(col("_g_w")).as("min_w"))
@@ -90,15 +89,15 @@ object Graph {
           s"transition probabilities; min($weightCol) = $minW")
     // node universe from the RAW edge set — the zero-sum-source filter
     // above must demote nodes to dangling, not erase them
-    val nodes = materialize(
+    val nodes = Stage.materialize(
       edges.select(col(srcCol).as("node"))
         .union(edges.select(col(dstCol)))
         .distinct())
     // 1-row frames: N and the out-degree-bearing node set's complement
     // mass ride broadcasts — in-plan scalars, the q60/q113 discipline
     val nn = nodes.agg(count(lit(1)).cast("double").as("_g_n"))
-    val srcs = materialize(w.select(col("_g_src").as("node")).distinct())
-    var scores = materialize(
+    val srcs = Stage.materialize(w.select(col("_g_src").as("node")).distinct())
+    var scores = Stage.materialize(
         nodes.crossJoin(broadcast(nn))
         .select(col("node"), (lit(1.0) / col("_g_n")).as("score")))
     var it = 0
@@ -122,7 +121,7 @@ object Graph {
             lit(damping) * (coalesce(col("_g_in"), lit(0.0)) +
               col("_g_dangling") / col("_g_n"))).as("score"))
         .observe(obs, sum(abs(col("score") - col("_g_prev"))).as("l1_delta"))
-      scores = materialize(next).select(col("node"), col("score"))
+      scores = Stage.materialize(next).select(col("node"), col("score"))
       it += 1
     }
     scores.select(col("node"), col("score").as("pagerank"))
@@ -222,10 +221,8 @@ object Graph {
       weightCol: String,
       iters: Int = 10): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    def materialize(df: DataFrame): DataFrame =
-      graft.pipeline.Stage.materialize(df)
     val wObs = org.apache.spark.sql.Observation("graft_hits_weights")
-    val w = materialize(edges.select(
+    val w = Stage.materialize(edges.select(
         col(srcCol).as("_g_src"), col(dstCol).as("_g_dst"),
         col(weightCol).cast("double").as("_g_w"))
       .observe(wObs, min(col("_g_w")).as("min_w")))
@@ -233,7 +230,7 @@ object Graph {
     if (minW != null && minW.asInstanceOf[Double] < 0)
       throw new IllegalArgumentException(
         s"hits weights must be non-negative; min($weightCol) = $minW")
-    val nodes = materialize(
+    val nodes = Stage.materialize(
       w.select(col("_g_src").as("node"))
         .union(w.select(col("_g_dst"))).distinct())
     var hub = nodes.select(col("node"), lit(1.0).as("hub"))
@@ -243,7 +240,7 @@ object Graph {
       val a = w.join(hub, w("_g_src") === hub("node"))
         .groupBy(col("_g_dst"))
         .agg(sum(col("_g_w") * col("hub")).as("_g_auth"))
-      auth = materialize(
+      auth = Stage.materialize(
         nodes.join(a, nodes("node") === a("_g_dst"), "left")
           .select(col("node"),
             coalesce(col("_g_auth"), lit(0.0)).as("auth")))
@@ -254,7 +251,7 @@ object Graph {
       // hub (not nodes) on the left: the previous hub value rides
       // in-row, so the round's L1 delta observes on the same job
       val obs = org.apache.spark.sql.Observation(s"graft_hits_it$it")
-      hub = materialize(
+      hub = Stage.materialize(
         hub.join(h, hub("node") === h("_g_src"), "left")
           .crossJoin(broadcast(hTot))
           .select(col("node"), col("hub").as("_g_prev"),
@@ -308,10 +305,8 @@ object Graph {
       maxRounds: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    def materialize(df: DataFrame): DataFrame =
-      graft.pipeline.Stage.materialize(df)
-    val und = materialize(undirected(edges, srcCol, dstCol))
-    var alive = materialize(und.select(col("_g_a").as("node")).distinct())
+    val und = Stage.materialize(undirected(edges, srcCol, dstCol))
+    var alive = Stage.materialize(und.select(col("_g_a").as("node")).distinct())
     var n = alive.count()
     var rounds = 0
     var stable = false
@@ -321,7 +316,7 @@ object Graph {
         throw new IllegalStateException(
           s"kCore: not stable after $maxRounds peel rounds " +
             s"($n nodes alive) — raise maxRounds")
-      val next = materialize(
+      val next = Stage.materialize(
         und
           .join(alive.select(col("node").as("_g_b")), Seq("_g_b"),
             "left_semi")
@@ -536,14 +531,12 @@ object Graph {
       iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 16,
       s"iters must be in [1,16], got $iters")
-    def materialize(df: DataFrame): DataFrame =
-      graft.pipeline.Stage.materialize(df)
     val undBase = undirected(edges, srcCol, dstCol)
     // self-marker edges: the node's OWN label enters each round's race
     // at count 0 with a tie-winning flag — ONE labels reference per
     // round, so the oracle can replay the round inside a single
     // recursive-CTE arm
-    val undx = materialize(
+    val undx = Stage.materialize(
       undBase.withColumn("_g_s", lit(0L))
         .union(undBase.select(col("_g_a"), col("_g_a").as("_g_b"))
           .distinct().withColumn("_g_s", lit(1L))))
@@ -560,7 +553,7 @@ object Graph {
           max(col("_g_s")).as("_g_cur"))
       val w = W.partitionBy(col("_g_a"))
         .orderBy(col("_g_c").desc, col("_g_cur").desc, col("_g_l").asc)
-      labels = materialize(counts
+      labels = Stage.materialize(counts
         .withColumn("_g_r", row_number().over(w))
         .filter(col("_g_r") === 1)
         .select(col("_g_a").as("_g_n"), col("_g_l")))
@@ -605,11 +598,9 @@ object Graph {
       beta: Double = 1.0): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(alpha > 0 && alpha < 1, s"alpha in (0,1), got $alpha")
-    def materialize(df: DataFrame): DataFrame =
-      graft.pipeline.Stage.materialize(df)
     val perSrc = Window.partitionBy(col("_g_src"))
     val wObs = org.apache.spark.sql.Observation("graft_katz_weights")
-    val w = materialize(edges.select(
+    val w = Stage.materialize(edges.select(
         col(srcCol).as("_g_src"), col(dstCol).as("_g_dst"),
         col(weightCol).cast("double").as("_g_w"))
       .observe(wObs, min(col("_g_w")).as("min_w"))
@@ -622,11 +613,11 @@ object Graph {
       throw new IllegalArgumentException(
         s"katz weights must be non-negative to normalize into " +
           s"transition probabilities; min($weightCol) = $minW")
-    val nodes = materialize(
+    val nodes = Stage.materialize(
       edges.select(col(srcCol).as("node"))
         .union(edges.select(col(dstCol)))
         .distinct())
-    var scores = materialize(nodes.withColumn("score", lit(beta)))
+    var scores = Stage.materialize(nodes.withColumn("score", lit(beta)))
     var it = 0
     while (it < iters) {
       val contrib = scores
@@ -638,7 +629,7 @@ object Graph {
         .select(col("node"),
           (lit(beta) + lit(alpha) * coalesce(col("_g_in"), lit(0.0)))
             .as("score"))
-      scores = materialize(next)
+      scores = Stage.materialize(next)
       it += 1
     }
     scores.select(col("node"), col("score").as("katz"))
@@ -671,8 +662,6 @@ object Graph {
       s"maxRounds in [1,64], got $maxRounds")
     require(maxNodes >= 2L && maxNodes <= 100000L,
       s"maxNodes in [2,1e5], got $maxNodes")
-    def materialize(df: DataFrame): DataFrame =
-      graft.pipeline.Stage.materialize(df)
     val d6 = (c: org.apache.spark.sql.Column) =>
       c.cast("decimal(28,6)").cast("double")
     def d28(c: org.apache.spark.sql.Column) = c.cast("decimal(28,6)")
@@ -686,16 +675,16 @@ object Graph {
     // oversized graph refuses at the map side — the old form counted
     // through a single-partition window ON THE REFUSAL PATH
     val cnt = nodes.agg(count(lit(1)).as("_nn"))
-    val guarded = materialize(nodes.crossJoin(broadcast(cnt))
+    val guarded = Stage.materialize(nodes.crossJoin(broadcast(cnt))
       .select(when(col("_nn") <= maxNodes, col("node"))
         .otherwise(raise_error(concat(lit("harmonicCentrality: "),
           col("_nn").cast("string"),
           lit(s" nodes > maxNodes=$maxNodes — the distance frame is " +
             "O(N^2); use pageRank/kCore at graph scale")))
           .cast(nodes.schema("node").dataType)).as("node")))
-    val e = materialize(e0.join(guarded,
+    val e = Stage.materialize(e0.join(guarded,
       e0("_s") === guarded("node")).select(col("_s"), col("_d")))
-    var dist = materialize(e.select(col("_s"), col("_d"),
+    var dist = Stage.materialize(e.select(col("_s"), col("_d"),
       lit(1L).as("_h")))
     var r = 1
     while (r < maxRounds) {
@@ -704,7 +693,7 @@ object Graph {
         .filter(col("_s") =!= col("_nd"))
         .select(col("_s"), col("_nd").as("_d"),
           (col("_h") + lit(1L)).as("_h"))
-      dist = materialize(dist.union(ext)
+      dist = Stage.materialize(dist.union(ext)
         .groupBy(col("_s"), col("_d"))
         .agg(min(col("_h")).as("_h")))
       r += 1
@@ -903,8 +892,6 @@ object Graph {
       maxRounds: Int = 50): DataFrame = {
     require(k >= 3, s"k must be >= 3 (k=2 keeps every edge), got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    def materialize(df: DataFrame): DataFrame =
-      graft.pipeline.Stage.materialize(df)
     def support(e: DataFrame): DataFrame = {
       val sym = e.select(col("_g_a").as("_x"), col("_g_b").as("_w"))
         .union(e.select(col("_g_b"), col("_g_a")))
@@ -913,7 +900,7 @@ object Graph {
         .groupBy(col("_g_a"), col("_g_b"))
         .agg(count(lit(1)).as("_supp"))
     }
-    var e = materialize(
+    var e = Stage.materialize(
       undirected(edges, srcCol, dstCol).filter(col("_g_a") < col("_g_b")))
     var n = e.count()
     var rounds = 0
@@ -924,7 +911,7 @@ object Graph {
         throw new IllegalStateException(
           s"kTruss: not stable after $maxRounds peel rounds " +
             s"($n edges alive) — raise maxRounds")
-      val next = materialize(
+      val next = Stage.materialize(
         e.join(support(e).filter(col("_supp") >= k - 2),
           Seq("_g_a", "_g_b"), "left_semi"))
       val m = next.count()

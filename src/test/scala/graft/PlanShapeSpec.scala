@@ -731,18 +731,16 @@ class PlanShapeSpec extends SparkSpec {
       "q16_ngram_jaccard", "q112_jaccard_prefix", "q345_knn_shapley",
       "q224_ann_ivfpq_portable", "q231_curation_funnel", "q379_lz78",
       "q246_unigram_apply")
-    // under the bench/CLI join preference, so the law checks the plans
-    // the bench actually times — and with AUTO-broadcast off: at
-    // sf0.001 every frame estimates under the 10 MB threshold, so the
-    // static planner broadcasts corpus frames the real-scale planner
-    // never would; with the threshold at -1 the surviving
-    // BroadcastHashJoins are exactly the code's EXPLICIT broadcast()
-    // hints, which are the ones that must be bounded at any scale
-    val prevPref = spark.conf.get("spark.sql.join.preferSortMergeJoin",
-      "true")
+    // under the shipped join preference (the SparkSpec profile), so the
+    // law checks the plans the bench actually times — and with
+    // AUTO-broadcast off: at sf0.001 every frame estimates under the
+    // 10 MB threshold, so the static planner broadcasts corpus frames
+    // the real-scale planner never would; with the threshold at -1 the
+    // surviving BroadcastHashJoins are exactly the code's EXPLICIT
+    // broadcast() hints, which are the ones that must be bounded at any
+    // scale
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
       "10485760")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val broadcastViolations =
       scala.collection.mutable.ArrayBuffer.empty[String]
@@ -780,10 +778,7 @@ class PlanShapeSpec extends SparkSpec {
             if (!bounded(build)) shjScaling += n
           }
       }
-    } finally {
-      spark.conf.set("spark.sql.join.preferSortMergeJoin", prevPref)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     assert(broadcastViolations.isEmpty,
       s"\ncorpus-scaling BROADCAST build sides:\n  " +
         broadcastViolations.mkString("\n  "))

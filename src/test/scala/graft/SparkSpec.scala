@@ -4,23 +4,25 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession with an isolated warehouse + metastore per
-  * suite (the Spark analog of the reference's sqlite :memory: fixture).
+/** Shared local SparkSession on the [[Session]] profile, with an isolated
+  * warehouse + metastore per suite (the Spark analog of the reference's
+  * sqlite :memory: fixture). Plan laws therefore check the join
+  * preference the CLI, Bench and Verify run with.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val base = java.nio.file.Files.createTempDirectory("graft_test_")
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", base.resolve("warehouse").toString)
-    .config("javax.jdo.option.ConnectionURL",
-      s"jdbc:derby:;databaseName=${base.resolve("metastore")};create=true")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = Session.builder("local[4]", 4)
+      .appName(getClass.getSimpleName)
+      .config("spark.sql.warehouse.dir", base.resolve("warehouse").toString)
+      .config("javax.jdo.option.ConnectionURL",
+        s"jdbc:derby:;databaseName=${base.resolve("metastore")};create=true")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   override def afterAll(): Unit = {
     // One JVM per sbt test run: sessions share the backing SparkContext, so

@@ -147,17 +147,29 @@ class ParallelSpec extends SparkSpec {
   }
 
   test("parallel and serial agree on a mixed DAG") {
-    def specs(tag: String) = Seq(
-      sqlTask(s"m_a_$tag", s"CREATE OR REPLACE VIEW mix_a_$tag AS SELECT 1 AS x"),
-      sqlTask(s"m_bad_$tag", "SELECT broken FROM"),
-      sqlTask(s"m_b_$tag", s"CREATE OR REPLACE VIEW mix_b_$tag AS SELECT 2 AS x",
-        parents = Seq(s"m_a_$tag")),
-      sqlTask(s"m_c_$tag", "SELECT 3", parents = Seq(s"m_bad_$tag")))
-    val app = new App(db, new DbObjectCompiler("spark"))
-    val Right(serial) = app.run(specs("s"), RunArguments(jobs = 1))
-    val Right(par) = app.run(specs("p"), RunArguments(jobs = 4))
-    def canon(r: RunReport, tag: String) =
-      r.statuses.map { case (k, v) => k.stripSuffix(s"_$tag") -> v.name }
-    assert(canon(serial, "s") == canon(par, "p"))
+    // (label, m_bad's on_fail, m_b's parents, failFast); in the failFast
+    // input m_b also waits on m_bad, so whether it launches does not
+    // race m_a's completion against m_bad's failure
+    val inputs = Seq(
+      ("skip", "skip", Seq("m_a"), false),
+      ("no_skip", "no_skip", Seq("m_a"), false),
+      ("fail_fast", "no_skip", Seq("m_a", "m_bad"), true))
+    for ((label, onFail, bParents, failFast) <- inputs) {
+      def specs(tag: String) = Seq(
+        sqlTask(s"m_a_$tag", s"CREATE OR REPLACE VIEW mix_a_$tag AS SELECT 1 AS x"),
+        TaskSpec(s"m_bad_$tag", "g", Map("type" -> "sql",
+          "sql" -> "SELECT broken FROM", "on_fail" -> onFail)),
+        sqlTask(s"m_b_$tag", s"CREATE OR REPLACE VIEW mix_b_$tag AS SELECT 2 AS x",
+          parents = bParents.map(p => s"${p}_$tag")),
+        sqlTask(s"m_c_$tag", "SELECT 3", parents = Seq(s"m_bad_$tag")))
+      val app = new App(db, new DbObjectCompiler("spark"))
+      val Right(serial) = app.run(specs(s"${label}_s"),
+        RunArguments(jobs = 1, failFast = failFast))
+      val Right(par) = app.run(specs(s"${label}_p"),
+        RunArguments(jobs = 4, failFast = failFast))
+      def canon(r: RunReport, tag: String) =
+        r.statuses.map { case (k, v) => k.stripSuffix(s"_$tag") -> v.name }
+      assert(canon(serial, s"${label}_s") == canon(par, s"${label}_p"), label)
+    }
   }
 }
