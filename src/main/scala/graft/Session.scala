@@ -12,8 +12,12 @@ import org.apache.spark.sql.SparkSession
   * results, no sort on either side, measured 0.43×–0.85× on the
   * join-heavy entries at sf0.1 (OPTIMIZATION_r18.md). `GRAFT_PREFER_SMJ`
   * set to `1` or `true` rolls the join preference back to sort-merge (see
-  * docs/SCALING.md for the failure mode it guards). The Spark UI is left
-  * to the launcher; build.sbt turns it off for forked runs and tests.
+  * docs/SCALING.md for the failure mode it guards). Reliable checkpoint
+  * files are deleted once their frame is unreferenced
+  * (`spark.cleaner.referenceTracking.cleanCheckpoints`; Spark keeps them
+  * by default), since every incremental merge stages its delta through
+  * [[graft.pipeline.Stage.materialize]]. The Spark UI is left to the
+  * launcher; build.sbt turns it off for forked runs and tests.
   */
 object Session {
 
@@ -38,6 +42,7 @@ object Session {
       .config("spark.sql.adaptive.enabled", true)
       .config("spark.sql.join.preferSortMergeJoin", preferSortMergeJoin)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", true)
 
   /** The harness mains' session: `local[cpus]`, one shuffle partition per
     * core.

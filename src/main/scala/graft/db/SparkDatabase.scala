@@ -2,8 +2,11 @@ package graft.db
 
 import graft.core.{DbError, Result, TestFailed}
 import graft.core.Result.Result
+import graft.pipeline.Stage
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 
 /** The engine's single "warehouse connection": every ETL/materialisation
   * operator from SURVEY §2a, executed through the Spark session catalog.
@@ -105,19 +108,19 @@ final class SparkDatabase(
       replace: Boolean = false): Result[Unit] =
     Result.attempt {
       ensureDatabase(table)
-      var df = spark.sql(select)
-      // declared types → casts, declared order → projection
-      if (ddl.columns.exists(_.dataType.isDefined)) {
-        df = df.select(ddl.columns.map { c =>
-          c.dataType match {
-            case Some(t) => col(c.name).cast(Ddl.sparkType(t)).as(c.name)
-            case None => col(c.name)
-          }
-        }.toIndexedSeq: _*)
-      }
       val mode = if (replace) SaveMode.Overwrite else SaveMode.ErrorIfExists
-      writer(applySort(df, ddl), ddl).mode(mode).saveAsTable(table)
+      writer(applySort(typed(spark.sql(select), ddl), ddl), ddl)
+        .mode(mode).saveAsTable(table)
     }
+
+  /** Declared types → casts, declared order → projection; the frame as
+    * it is when no column declares a type.
+    */
+  private def typed(df: DataFrame, ddl: Ddl): DataFrame =
+    if (!ddl.columns.exists(_.dataType.isDefined)) df
+    else df.select(ddl.columns.map { c =>
+      c.dataType.fold(col(c.name))(t => col(c.name).cast(Ddl.sparkType(t)).as(c.name))
+    }.toIndexedSeq: _*)
 
   /** Full-refresh materialisation (sayn/database/__init__.py:747-787).
     * CTAS into a tmp table then swap, so a mid-write failure never leaves
@@ -148,20 +151,39 @@ final class SparkDatabase(
   /** Upsert src into dst on `deleteKey`: delete matching dst rows, insert
     * all src rows (sayn/database/__init__.py:678-699,
     * templates/merge_tables.sql). Drops src afterwards like the reference
-    * (cleanup=true).
+    * (cleanup=true). The src table is read as the delta of
+    * [[mergeDelta]], which holds the merge itself.
+    */
+  def mergeTables(
+      src: String, dst: String, deleteKey: String,
+      ddl: Ddl = Ddl.empty): Result[Unit] =
+    for {
+      _ <- Result.attempt(spark.table(src)).flatMap(mergeDelta(_, dst, deleteKey, ddl))
+      _ <- Result.attempt { spark.sql(s"DROP TABLE IF EXISTS $src"); () }
+    } yield ()
+
+  /** Upsert the rows of `delta` into the existing table `dst` on
+    * `deleteKey` (the merge of [[mergeTables]], without a src table).
+    * `delta` is read more than once (keys, anti-join, insert), so it must
+    * be stable: a table scan, or a frame staged with
+    * [[graft.pipeline.Stage.materialize]]. A live query would be
+    * re-evaluated per read — twice-drawn non-deterministic keys, or a
+    * self-referencing SELECT that sees dst mid-merge. dst's partition
+    * columns come from one catalog fetch.
     *
     * Scale path: when the destination is partitioned, only the partitions
-    * touched by src are rewritten (dynamic partition overwrite) — an
-    * incremental run that ingests 0.1% of rows must not rewrite 100% of a
-    * 100 TB table. "Touched" includes partitions holding dst rows whose
-    * `deleteKey` reappears in src under a different partition value, so a
-    * key that moves between partitions never leaves a stale duplicate
-    * behind (matches the reference's whole-table DELETE,
+    * touched by the delta are rewritten (dynamic partition overwrite) —
+    * an incremental run that ingests 0.1% of rows must not rewrite 100%
+    * of a 100 TB table. "Touched" includes partitions holding dst rows
+    * whose `deleteKey` reappears in the delta under a different partition
+    * value, so a key that moves between partitions never leaves a stale
+    * duplicate behind (matches the reference's whole-table DELETE,
     * templates/merge_tables.sql). Finding those costs one scan of dst
-    * (semi-join against the distinct src keys) but rewrites nothing extra.
-    * A touched partition that empties entirely is cleared explicitly
-    * (dynamic overwrite only replaces partitions present in the written
-    * data, so an emptied one would otherwise keep its stale files).
+    * (semi-join against the distinct delta keys) but rewrites nothing
+    * extra. A touched partition that empties entirely is cleared
+    * explicitly (dynamic overwrite only replaces partitions present in
+    * the written data, so an emptied one would otherwise keep its stale
+    * files).
     *
     * Atomicity: the partitioned path commits each touched partition via
     * Spark's job commit — a failure mid-commit can leave a subset of
@@ -169,15 +191,23 @@ final class SparkDatabase(
     * readers may observe that mix. Weaker than the unpartitioned
     * tmp+swap guarantee; the trade for not rewriting the full table.
     * Fallback (unpartitioned dst): anti-join + unionByName → tmp
-    * (written with the declared layout) → swap.
+    * (written with the declared layout) → swap. With [[acidMerge]] set,
+    * the delta is merged by DELETE + INSERT statements instead (see
+    * [[mergeDeltaAcid]]).
     */
-  def mergeTables(
-      src: String, dst: String, deleteKey: String,
-      ddl: Ddl = Ddl.empty): Result[Unit] = {
-    if (acidMerge) return mergeTablesAcid(src, dst, deleteKey)
+  def mergeDelta(
+      delta: DataFrame, dst: String, deleteKey: String,
+      ddl: Ddl = Ddl.empty): Result[Unit] =
+    Result.attempt(lookup(dst).getOrElse(
+      throw new IllegalStateException(s"mergeDelta: destination $dst does not exist")))
+      .flatMap(t => mergeInto(delta, dst, t.partitionColumnNames, deleteKey, ddl))
+
+  /** [[mergeDelta]] once dst's partition columns are known. */
+  private def mergeInto(
+      delta: DataFrame, dst: String, partCols: Seq[String], deleteKey: String,
+      ddl: Ddl): Result[Unit] = {
+    if (acidMerge) return mergeDeltaAcid(delta, dst, deleteKey)
     val partitionMerge = Result.attempt {
-      val partCols = spark.catalog.listColumns(dst)
-        .collect().filter(_.isPartition).map(_.name).toSeq
       // isolated session for the partitioned path: same SparkContext,
       // SAME catalog/warehouse (SharedState), but a PRIVATE SQLConf —
       // dynamic partition overwrite is scoped to this merge and can
@@ -185,7 +215,8 @@ final class SparkDatabase(
       // runs concurrently on the main session. (A writer-level
       // .option("partitionOverwriteMode", ...) is not forwarded by
       // insertInto, and a shared-session conf.set is exactly the race
-      // the r3 review flagged.)
+      // the r3 review flagged.) The write runs in the session of the
+      // join's dst side; the staged delta joins in from `spark`.
       val session =
         if (partCols.isEmpty) spark
         else {
@@ -193,15 +224,15 @@ final class SparkDatabase(
           s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
           s
         }
-      val srcDf = session.table(src)
       val dstDf = session.table(dst)
       val dstCols = dstDf.columns.toIndexedSeq
-      val srcAligned = srcDf.select(dstCols.map(col): _*)
+      val srcAligned = delta.select(dstCols.map(col): _*)
       if (partCols.nonEmpty) {
-        // touched = partitions present in src ∪ partitions of dst rows whose
-        // delete key is in src (the key may have MOVED partitions between
-        // runs — its old partition must be rewritten too or the stale row
-        // survives); dynamic overwrite then replaces exactly those partitions
+        // touched = partitions present in the delta ∪ partitions of dst
+        // rows whose delete key is in the delta (the key may have MOVED
+        // partitions between runs — its old partition must be rewritten
+        // too or the stale row survives); dynamic overwrite then replaces
+        // exactly those partitions
         val srcKeys = srcAligned.select(col(deleteKey)).distinct()
         val movedParts = dstDf.join(srcKeys, Seq(deleteKey), "left_semi")
           .select(partCols.map(col): _*).distinct()
@@ -244,54 +275,60 @@ final class SparkDatabase(
         val merged = dstDf
           .join(srcAligned, Seq(deleteKey), "left_anti")
           .unionByName(srcAligned)
-        // distinct stage name: src may itself be tmpName(dst) (mergeQuery)
+        // distinct stage name: a caller's src table may be tmpName(dst)
         val tmp = tmpName(dst, "merge_")
         writer(applySort(merged, ddl), ddl)
           .mode(SaveMode.Overwrite).saveAsTable(tmp)
         Some(tmp)
       }
     }
-    for {
-      tmp <- partitionMerge
-      _ <- tmp.map(moveTable(_, dst)).getOrElse(Right(()))
-      _ <- Result.attempt { spark.sql(s"DROP TABLE IF EXISTS $src"); () }
-    } yield ()
+    partitionMerge.flatMap(_.map(moveTable(_, dst)).getOrElse(Right(())))
   }
 
   /** ACID-catalog merge: the reference's merge_tables.sql statements
-    * verbatim — DELETE dst rows whose key appears in src, INSERT all src
-    * rows — each statement a catalog transaction, so readers never see
-    * the partial-partition mix the overwrite path can expose
-    * (docs/ACID_MERGE.md). Runs only when [[acidMerge]] is set; plain
-    * parquet v1 tables reject DELETE FROM and surface a clear error.
+    * verbatim — DELETE dst rows whose key appears in the delta, INSERT all
+    * delta rows — each statement a catalog transaction, so readers never
+    * see the partial-partition mix the overwrite path can expose
+    * (docs/ACID_MERGE.md). The SQL addresses the delta through a session
+    * temp view, dropped afterwards. Runs only when [[acidMerge]] is set;
+    * plain parquet v1 tables reject DELETE FROM and surface a clear error.
     */
-  private def mergeTablesAcid(
-      src: String, dst: String, deleteKey: String): Result[Unit] =
+  private def mergeDeltaAcid(
+      delta: DataFrame, dst: String, deleteKey: String): Result[Unit] =
     Result.attempt {
-      val cols = spark.table(dst).columns.mkString(", ")
-      spark.sql(
-        s"DELETE FROM $dst WHERE $deleteKey IN (SELECT $deleteKey FROM $src)")
-      spark.sql(s"INSERT INTO $dst ($cols) SELECT $cols FROM $src")
-      spark.sql(s"DROP TABLE IF EXISTS $src"); ()
+      val view = tmpPrefix + "delta_" + java.util.UUID.randomUUID.toString.replace("-", "")
+      delta.createOrReplaceTempView(view)
+      try {
+        val cols = spark.table(dst).columns.mkString(", ")
+        spark.sql(
+          s"DELETE FROM $dst WHERE $deleteKey IN (SELECT $deleteKey FROM $view)")
+        spark.sql(s"INSERT INTO $dst ($cols) SELECT $cols FROM $view")
+      } finally spark.catalog.dropTempView(view)
+      ()
     }
 
-  /** Incremental materialisation: stage the SELECT, then merge into the
-    * destination (sayn/database/__init__.py:819-846). Creates the
-    * destination outright when missing.
+  /** Incremental materialisation (sayn/database/__init__.py:819-846): the
+    * SELECT, cast to the declared types, is evaluated once and staged with
+    * [[graft.pipeline.Stage.materialize]] — no tmp catalog table — then
+    * merged into the destination by [[mergeDelta]]. Staging makes a
+    * self-referencing SELECT safe and keeps non-deterministic keys
+    * consistent between the delete and the insert. Creates the
+    * destination outright when missing; one catalog fetch answers both
+    * that and dst's partition layout.
     */
   def mergeQuery(
       table: String,
       select: String,
       deleteKey: String,
       ddl: Ddl = Ddl.empty): Result[Unit] =
-    if (!tableExists(table)) replaceTable(table, select, ddl)
-    else {
-      val tmp = tmpName(table)
-      for {
-        _ <- createTable(tmp, select, ddl, replace = true)
-        _ <- mergeTables(tmp, table, deleteKey, ddl)
-        _ <- runHooks(ddl)
-      } yield ()
+    Result.attempt(lookup(table)).flatMap {
+      case None => replaceTable(table, select, ddl)
+      case Some(t) =>
+        for {
+          delta <- Result.attempt(Stage.materialize(typed(spark.sql(select), ddl)))
+          _ <- mergeInto(delta, table, t.partitionColumnNames, deleteKey, ddl)
+          _ <- runHooks(ddl)
+        } yield ()
     }
 
   /** Rename/swap (sayn/database/__init__.py:701-743,
@@ -301,7 +338,8 @@ final class SparkDatabase(
     * dance); the backup is restored if the final rename throws. A view
     * destination can't back a RENAME target, so it is dropped — but only
     * after verifying src exists, leaving a missing-src failure with the
-    * view intact. Index recreation is a no-op on Spark.
+    * view intact. Index recreation is a no-op on Spark. Each name is
+    * looked up once: src for existence, dst for its type.
     */
   def moveTable(src: String, dst: String): Result[Unit] =
     Result.attempt {
@@ -375,21 +413,24 @@ final class SparkDatabase(
 
   // ---- introspection (§2a row 16) ----------------------------------------
 
+  /** One catalog fetch per name (see [[objectType]]); false on any
+    * failure, unparsable names included.
+    */
   def tableExists(name: String): Boolean =
-    try spark.catalog.tableExists(name)
+    try lookup(name).isDefined
     catch { case _: Exception => false }
 
   /** `table` / `view` / absent — drives create-vs-merge decisions
-    * (sayn/database/__init__.py:190-229, 374-416).
+    * (sayn/database/__init__.py:190-229, 374-416). One catalog fetch: a
+    * temp view answers `view` from the session catalog, any other name
+    * costs one metastore `getTable`. Absent names and databases are None;
+    * other catalog failures throw.
     */
   def objectType(name: String): Option[String] =
-    if (!tableExists(name)) None
-    else
-      try {
-        val t = spark.catalog.getTable(name)
-        Some(if (t.tableType != null && t.tableType.equalsIgnoreCase("VIEW")) "view"
-        else "table")
-      } catch { case _: Exception => Some("table") }
+    lookup(name).map(t => if (t.tableType == CatalogTableType.VIEW) "view" else "table")
+
+  private def lookup(name: String): Option[CatalogTable] =
+    GraftSqlBridge.catalogTable(spark, name)
 
   def tableSchema(name: String): Option[org.apache.spark.sql.types.StructType] =
     if (tableExists(name)) Some(spark.table(name).schema) else None

@@ -15,10 +15,18 @@ import org.apache.spark.sql.DataFrame
   * cheaper, context-cleaned when the frame is unreferenced, but an
   * executor loss kills the job).
   *
+  * Reliable checkpoint files are removed by the context cleaner once the
+  * frame is unreferenced: the [[graft.Session]] profile sets
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (Spark's
+  * default keeps them forever). Sessions built elsewhere keep Spark's
+  * default.
+  *
   * Used when a frame feeds MULTIPLE differently-keyed consumers
   * (exchange reuse cannot dedupe them — dbscan's pair frame, chrF's
-  * staged char arrays) or when an iterative loop would otherwise grow
-  * an unbounded logical plan (dupClusters, graph rounds).
+  * staged char arrays, the delta of every incremental merge in
+  * `SparkDatabase.mergeQuery` and `CopyTask`) or when an iterative loop
+  * would otherwise grow an unbounded logical plan (dupClusters, graph
+  * rounds).
   */
 private[graft] object Stage {
   def materialize(df: DataFrame): DataFrame =

@@ -1285,7 +1285,11 @@ object TextStats {
     * word stats frame is vocabulary-sized and broadcasts under AQE)
     * and one doc-keyed sum — all keyed shuffles of count rows, never
     * corpus text. `idCol` must be unique per row (the per-doc rollup
-    * re-joins on it; same contract as the oracle's join-back).
+    * re-joins on it; same contract as the oracle's join-back). A row
+    * whose `idCol` is NULL keeps its row and its `n_words`/`n_skipped`,
+    * but the equi-join never matches it, so it reports `n_pieces =
+    * n_unk_pieces = 0` — silently, not as an error; filter or key such
+    * rows first if their pieces matter.
     * Per-word stats multiply by the occurrence count — exact: every
     * occurrence of a word yields the identical (pieces, unk) pair.
     * Words longer than `maxWordLen` are skipped and counted.

@@ -3,6 +3,7 @@ package graft.tasks
 import graft.core.{ConfigError, Result}
 import graft.core.Result.Result
 import graft.db.{ColumnDdl, Ddl}
+import graft.pipeline.Stage
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -135,11 +136,12 @@ final class CopyTask extends TaskRunner {
       }
     } else ctx.spark.table(resolvedSrc)
 
-  /** Column set: declared DDL wins; else destination schema (incremental,
-    * minus engine columns) or source schema (full) — copy.py:543-630.
-    * `dst_name` renames apply on the way through (copy.py:625-630).
+  /** Column set: declared DDL wins; else destination schema (incremental
+    * task whose destination exists, minus engine columns) or source schema
+    * — copy.py:543-630. `dst_name` renames apply on the way through
+    * (copy.py:625-630).
     */
-  private def projectColumns(src: DataFrame): Result[DataFrame] = {
+  private def projectColumns(src: DataFrame, dstExists: Boolean): Result[DataFrame] = {
     val srcCols = src.columns.toSet
     if (ddl.columns.nonEmpty) {
       val missing = ddl.columns.map(_.name).filterNot(srcCols.contains)
@@ -151,7 +153,7 @@ final class CopyTask extends TaskRunner {
         val typed = c.dataType.map(t => base.cast(Ddl.sparkType(t))).getOrElse(base)
         typed.as(c.dstName.getOrElse(c.name))
       }.toIndexedSeq: _*))
-    } else if (ctx.db.tableExists(resolvedDst) && incrementalKey.isDefined) {
+    } else if (dstExists) {
       val dstCols = ctx.spark.table(resolvedDst).columns
         .filterNot(_.startsWith("_graft")) // engine columns excluded (copy.py:566-573)
       val missing = dstCols.filterNot(srcCols.contains)
@@ -173,12 +175,12 @@ final class CopyTask extends TaskRunner {
     * destination) disables the filter entirely rather than dropping every
     * row (copy.py:668-675 skips the WHERE when the watermark is NULL).
     * The watermark stays in-plan as a broadcast scalar — no driver-side
-    * collect, works at any scale.
+    * collect, works at any scale. Used by the append and inc modes only,
+    * whose destination exists.
     */
   private def applyWatermark(df: DataFrame): DataFrame =
     (incrementalKey, dstIncrementalKey) match {
-      case (Some(srcKey), Some(dstKey))
-          if ctx.db.tableExists(resolvedDst) && !ctx.runArgs.fullLoad =>
+      case (Some(srcKey), Some(dstKey)) =>
         val wm = ctx.spark.table(resolvedDst).agg(max(col(dstKey)).as("_wm"))
         df.join(broadcast(wm))
           .filter(col("_wm").isNull ||
@@ -188,23 +190,24 @@ final class CopyTask extends TaskRunner {
     }
 
   override def run(): Result[Unit] = {
+    // one catalog probe per run, and none for a plain full copy
+    val dstExists = incrementalKey.isDefined && ctx.db.tableExists(resolvedDst)
     val mode =
-      if (incrementalKey.isEmpty || ctx.runArgs.fullLoad ||
-        !ctx.db.tableExists(resolvedDst)) "full"
+      if (!dstExists || ctx.runArgs.fullLoad) "full"
       else if (append) "append"
       else "inc"
 
     ctx.track.startStep(s"copy_$mode")
-    val out = runMode(mode)
+    val out = runMode(mode, dstExists)
     ctx.track.finishCurrentStep(out.isRight)
     out
   }
 
-  private def runMode(mode: String): Result[Unit] = {
+  private def runMode(mode: String, dstExists: Boolean): Result[Unit] = {
     Result.attempt(readSource()).flatMap { src0 =>
       mode match {
         case "full" =>
-          projectColumns(src0).flatMap { projected =>
+          projectColumns(src0, dstExists).flatMap { projected =>
             val stamped =
               if (append) projected.withColumn(loadTsColumn, current_timestamp())
               else projected
@@ -214,7 +217,7 @@ final class CopyTask extends TaskRunner {
               .flatMap(_ => ctx.db.moveTable(tmp, resolvedDst))
           }
         case "append" =>
-          projectColumns(applyWatermark(src0)).flatMap { projected =>
+          projectColumns(applyWatermark(src0), dstExists).flatMap { projected =>
             ctx.db.loadDataFrame(
               projected.withColumn(loadTsColumn, current_timestamp()),
               resolvedDst, replace = false)
@@ -222,19 +225,19 @@ final class CopyTask extends TaskRunner {
         case "inc" =>
           maxMergeRows match {
             case None =>
-              projectColumns(applyWatermark(src0)).flatMap(mergeChunk)
+              projectColumns(applyWatermark(src0), dstExists).flatMap(mergeChunk)
             case Some(limit) => chunkedMerge(limit)
           }
       }
     }
   }
 
-  private def mergeChunk(chunk: DataFrame): Result[Unit] = {
-    val tmp = ctx.db.tmpName(resolvedDst)
-    ctx.db.loadDataFrame(chunk, tmp, replace = true)
-      .flatMap(_ =>
-        ctx.db.mergeTables(tmp, resolvedDst, dstIncrementalKeyOrDelete, ddl))
-  }
+  /** Stage the chunk once (it reads the destination's watermark, and the
+    * merge reads it several times), then merge it in; no tmp table.
+    */
+  private def mergeChunk(chunk: DataFrame): Result[Unit] =
+    Result.attempt(Stage.materialize(chunk)).flatMap(
+      ctx.db.mergeDelta(_, resolvedDst, dstIncrementalKeyOrDelete, ddl))
 
   private def dstIncrementalKeyOrDelete: String =
     deleteKey.map { k =>
@@ -255,7 +258,7 @@ final class CopyTask extends TaskRunner {
     var result: Result[Unit] = Right(())
     while (!done && iterations < 100 && result.isRight) {
       result = Result.attempt(readSource()).flatMap { src0 =>
-        projectColumns(applyWatermark(src0)).flatMap { projected =>
+        projectColumns(applyWatermark(src0), dstExists = true).flatMap { projected =>
           val key = dstIncrementalKey.get
           val chunk = projected.orderBy(col(key).asc_nulls_first).limit(limit)
             .cache()

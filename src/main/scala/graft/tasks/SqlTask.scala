@@ -107,14 +107,16 @@ final class SqlTask(isAutoSql: Boolean) extends TaskRunner {
           ctx.track.startStep("execute_sql")
           ctx.db.execute(sql)
         case "incremental" =>
-          val dstMissing = !ctx.db.tableExists(resolvedDst) ||
-            ctx.db.objectType(resolvedDst).contains("view")
-          if (ctx.runArgs.fullLoad || dstMissing) {
-            ctx.track.startStep("load_table")
-            ctx.db.replaceTable(resolvedDst, sql, ddl)
-          } else {
-            ctx.track.startStep("merge_table")
-            ctx.db.mergeQuery(resolvedDst, sql, deleteKey.get, ddl)
+          // one catalog fetch decides; none under --full-load
+          Result.attempt(ctx.runArgs.fullLoad ||
+            !ctx.db.objectType(resolvedDst).contains("table")).flatMap { reload =>
+            if (reload) {
+              ctx.track.startStep("load_table")
+              ctx.db.replaceTable(resolvedDst, sql, ddl)
+            } else {
+              ctx.track.startStep("merge_table")
+              ctx.db.mergeQuery(resolvedDst, sql, deleteKey.get, ddl)
+            }
           }
         case "table" =>
           ctx.track.startStep("load_table")

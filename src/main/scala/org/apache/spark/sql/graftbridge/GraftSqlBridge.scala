@@ -1,6 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.{NoSuchDatabaseException, NoSuchNamespaceException, NoSuchTableException}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -38,4 +40,28 @@ object GraftSqlBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(name, info, builder)
+
+  /** The catalog entry behind `name` from ONE lookup, None when absent
+    * (a missing database included): a temp view answers from the session
+    * catalog in memory, anything else from one external-catalog
+    * `getTable` — a single metastore round trip, where
+    * `spark.catalog.getTable` pays an existence probe before the same
+    * fetch. Names are qualified and case-folded as the analyzer does.
+    */
+  def catalogTable(
+      spark: org.apache.spark.sql.SparkSession,
+      name: String): Option[CatalogTable] = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val catalog = state.catalog
+    val ident = state.sqlParser.parseTableIdentifier(name)
+    if (catalog.isTempView(ident)) Some(catalog.getTempViewOrPermanentTableMetadata(ident))
+    else {
+      val q = catalog.qualifyIdentifier(ident)
+      try Some(catalog.externalCatalog.getTable(q.database.get, q.table))
+      catch {
+        case _: NoSuchTableException | _: NoSuchDatabaseException |
+            _: NoSuchNamespaceException => None
+      }
+    }
+  }
 }

@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.catalog.{CreateTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession on the [[Session]] profile, with an isolated
   * warehouse + metastore per suite (the Spark analog of the reference's
@@ -36,4 +38,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
+
+  /** Names of the tables created while `body` runs, in order, from the
+    * external catalog's create events (the hook the benchmark's tracer
+    * counts `catalog.create` with).
+    */
+  def tablesCreatedBy(body: => Unit): Seq[String] = {
+    val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new ExternalCatalogEventListener {
+      override def onEvent(e: ExternalCatalogEvent): Unit = e match {
+        case CreateTableEvent(_, name) => created.add(name)
+        case _ =>
+      }
+    }
+    val catalog = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.externalCatalog
+    catalog.addListener(listener)
+    try body
+    finally catalog.removeListener(listener)
+    created.asScala.toSeq
+  }
 }

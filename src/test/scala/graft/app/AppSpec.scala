@@ -159,6 +159,27 @@ class AppSpec extends SparkSpec {
       Seq(1L, 10L, "v1"), Seq(2L, 20L, "v2"), Seq(3L, null, "v3")))
   }
 
+  test("copy incremental stages the new rows: one table created, none left over") {
+    Seq((1L, 10L, "a"), (2L, 20L, "b"), (3L, 30L, "c"))
+      .toDF("id", "ts", "v").write.saveAsTable("copy_src_stage")
+    Seq((1L, 10L, "old"), (2L, 20L, "old"))
+      .toDF("id", "ts", "v").write.saveAsTable("copy_dst_stage")
+    val specs = Seq(TaskSpec("cp_stage", "g", Map(
+      "type" -> "copy", "source" -> "copy_src_stage", "destination" -> "copy_dst_stage",
+      "incremental_key" -> "ts", "delete_key" -> "id")))
+    val created = tablesCreatedBy {
+      val Right(report) = mkApp().run(specs)
+      assert(report.succeeded, report.errors)
+    }
+    // only the merged table that is swapped in; the rows past the
+    // watermark (ts >= 20) are staged in memory, not in a tmp table
+    assert(created.filter(_.endsWith("copy_dst_stage")) ==
+      Seq("graft_tmp_merge_copy_dst_stage"))
+    assert(!db.tableExists("graft_tmp_copy_dst_stage"))
+    assert(rows(spark.table("copy_dst_stage")) ==
+      Set(Seq(1L, 10L, "old"), Seq(2L, 20L, "b"), Seq(3L, 30L, "c")))
+  }
+
   test("copy append stamps _graft_load_ts and never deletes") {
     Seq((1L, 100L)).toDF("id", "ts").write.saveAsTable("copy_src3")
     val specs = Seq(TaskSpec("cp3", "g", Map(

@@ -105,6 +105,72 @@ class SparkDatabaseSpec extends SparkSpec {
     assert(rows(spark.table("mq_t")) == Set(Seq(1, "b")))
   }
 
+  test("mergeQuery stages the delta: one table created, no tmp table left") {
+    assert(db.replaceTable("stage_t", "SELECT id, 'old' AS v FROM RANGE(5)").isRight)
+    val created = tablesCreatedBy {
+      assert(db.mergeQuery("stage_t",
+        "SELECT id, 'new' AS v FROM RANGE(3, 8)", "id").isRight)
+    }
+    // only the merged table that is swapped in — the SELECT is staged in
+    // memory, not in a graft_tmp_stage_t catalog table
+    assert(created.filter(_.endsWith("stage_t")) == Seq("graft_tmp_merge_stage_t"))
+    assert(!spark.catalog.listTables().collect()
+      .exists(t => t.name.startsWith("graft_tmp_") && t.name.endsWith("stage_t")))
+    assert(rows(spark.table("stage_t")) ==
+      (0L until 3L).map(i => Seq(i, "old")).toSet ++
+        (3L until 8L).map(i => Seq(i, "new")))
+  }
+
+  test("mergeQuery evaluates a non-deterministic delta once") {
+    assert(db.replaceTable("once_t",
+      "SELECT CAST(id AS INT) AS id, 'old' AS v FROM RANGE(1000)").isRight)
+    // distinct random keys in 0..999: if the delete and the insert each
+    // evaluated the SELECT, they would draw different keys and leave
+    // duplicates behind
+    assert(db.mergeQuery("once_t",
+      "SELECT DISTINCT CAST(rand() * 1000 AS INT) AS id, 'new' AS v FROM RANGE(500)",
+      "id").isRight)
+    val Seq(r) = spark.sql(
+      "SELECT COUNT(*), COUNT(DISTINCT id), COUNT_IF(v = 'new') FROM once_t").collect().toSeq
+    assert(r.getLong(0) == 1000L && r.getLong(1) == 1000L, r)
+    assert(r.getLong(2) > 0L, r)
+  }
+
+  test("objectType: table, view, temp view, missing name, missing database, qualified name") {
+    assert(db.replaceTable("ot_t", "SELECT 1 AS x").isRight)
+    assert(db.replaceView("ot_v", "SELECT x FROM ot_t").isRight)
+    spark.range(1).createOrReplaceTempView("ot_tv")
+    assert(db.execute("CREATE DATABASE IF NOT EXISTS ot_db").isRight)
+    assert(db.replaceTable("ot_db.ot_q", "SELECT 1 AS x").isRight)
+    try {
+      val expected = Seq(
+        "ot_t" -> Some("table"),
+        "OT_T" -> Some("table"),
+        "default.ot_t" -> Some("table"),
+        "ot_v" -> Some("view"),
+        "ot_tv" -> Some("view"),
+        "ot_missing" -> None,
+        "no_such_db.ot_t" -> None,
+        "ot_db.ot_q" -> Some("table"),
+        "ot_q" -> None)
+      expected.foreach { case (name, kind) =>
+        assert(db.objectType(name) == kind, name)
+        assert(db.tableExists(name) == kind.isDefined, name)
+      }
+    } finally {
+      spark.catalog.dropTempView("ot_tv")
+      spark.sql("DROP DATABASE IF EXISTS ot_db CASCADE")
+    }
+  }
+
+  test("moveTable onto a view keeps the view when the source is missing") {
+    assert(db.replaceTable("mvv_base", "SELECT 1 AS x").isRight)
+    assert(db.replaceView("mvv_view", "SELECT x FROM mvv_base").isRight)
+    assert(db.moveTable("no_such_src_table", "mvv_view").isLeft)
+    assert(db.objectType("mvv_view").contains("view"))
+    assert(rows(spark.table("mvv_view")) == Set(Seq(1)))
+  }
+
   test("moveTable replaces the destination") {
     assert(db.replaceTable("mv_src", "SELECT 1 AS x").isRight)
     assert(db.replaceTable("mv_dst", "SELECT 99 AS x").isRight)

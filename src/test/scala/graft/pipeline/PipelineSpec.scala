@@ -1169,6 +1169,19 @@ class PipelineSpec extends SparkSpec {
     assert(out(3L) == ((2L, 1L, 1L, 0L)))
   }
 
+  test("unigramSegmentStats: a NULL id reports zero pieces (documented)") {
+    val vocab = Map("a" -> 100L, "b" -> 100L, "ab" -> 150L)
+    val df = Seq((Some(1L), "ab ba"), (None: Option[Long], "ab ba"))
+      .toDF("doc_id", "text")
+    val out = TextStats.unigramSegmentStats(df, "doc_id", "text", vocab, lMax = 2)
+      .collect().map(r => Option(r.get(0)) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+    assert(out(Some(1L)) == ((2L, 0L, 3L, 0L)))
+    // word counts survive; the per-doc rollup re-joins on the id, which
+    // NULL never matches, so the piece counts fall back to 0
+    assert(out(None) == ((2L, 0L, 0L, 0L)))
+  }
+
   test("mojibake table IS the UTF-8-as-cp1252 corruption, per character") {
     // independent re-derivation: every (corrupt, fixed) pair must be the
     // real encoding round trip, keys unique, nothing a no-op, and the
