@@ -43,8 +43,9 @@ import java.nio.file.{Files, Paths}
   *     into band on an idle host had cost three rounds of
   *     re-adjudication).
   *
-  * Mutating end-to-end entries (q22/q23: engine table writes) are excluded
-  * — they benchmark the local catalog, not the query engine.
+  * Entries registered with the `mutating` flag (11 merge/copy/compaction
+  * entries that write engine tables while their DataFrame is built) are
+  * excluded — they benchmark the local catalog, not the query engine.
   */
 object Bench {
   private val excluded = SparkEntry.mutating

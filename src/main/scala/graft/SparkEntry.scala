@@ -2,37 +2,38 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract — see SURVEY.md §7. Every map here is derived from the
+  * one registry: each query file's `entries`, where an entry's name,
+  * build function, oracle and `mutating` flag are written once.
+  */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q1Agg(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2 + the
-    * LLM-data-pipeline suite (dedup / similarity / text analysis /
+  /** Every registered entry: one per implemented operator from SURVEY.md
+    * §2 + the LLM-data-pipeline suite (dedup / similarity / text analysis /
     * multimodal / sessionization) + end-to-end ETL operators.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.all ++ RelationalTpch.all ++ Pipeline.all ++ EtlShapes.all ++
-      StreamingEntries.all ++ Temporal.all ++ Analytics.all ++ Corpus.all
+  lazy val entries: Seq[Entry] =
+    Relational.entries ++ RelationalTpch.entries ++ Pipeline.entries ++
+      EtlShapes.entries ++ StreamingEntries.entries ++ Temporal.entries ++
+      Analytics.entries ++ Corpus.entries
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.build).toMap
 
   /** Entries whose DataFrame CONSTRUCTION executes engine writes
     * (mergeTables / CopyTask against the local catalog). Bench skips them
     * (they'd benchmark the catalog, not the engine) and Explain skips
     * them by default (a plan-inspection tool must not mutate tables).
     */
-  val mutating: Set[String] =
-    Set("q22_merge", "q23_copy", "q33_copy_incremental", "q72_script_chain",
-      "q77_copy_csv", "q94_bucketed_join", "q109_copy_jsonl",
-      "q135_copy_jdbc", "q136_copy_jdbc_incremental", "q143_copy_orc",
-      "q188_compact")
+  lazy val mutating: Set[String] = entries.filter(_.mutating).map(_.name).toSet
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. LSH/approximate entries are omitted by
     * design (rows-only driver check; recall is asserted in ScalaTest).
     */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ RelationalTpch.oracles ++ Pipeline.oracles ++
-      EtlShapes.oracles ++ StreamingEntries.oracles ++ Temporal.oracles ++
-      Analytics.oracles ++ Corpus.oracles
+  lazy val oracleSql: Map[String, String] =
+    entries.flatMap(e => e.oracle.map(e.name -> _)).toMap
 }

@@ -19,7 +19,6 @@ import org.apache.spark.sql.graftbridge.GraftSqlBridge
   */
 final class SparkDatabase(
     val spark: SparkSession,
-    val tmpPrefix: String = "graft_tmp_",
     /** Route mergeTables through transactional DELETE+INSERT SQL (the
       * reference's own merge_tables.sql shape) instead of the
       * partition-overwrite dance. Requires the destination to live in an
@@ -29,6 +28,9 @@ final class SparkDatabase(
       * docs/ACID_MERGE.md. Enable via GRAFT_ACID_MERGE=1 on the CLI.
       */
     val acidMerge: Boolean = false) {
+
+  /** Name prefix of every staging table and temp view this layer creates. */
+  private val tmpPrefix = "graft_tmp_"
 
   // ---- raw SQL surface (§2a rows 1-3) ----------------------------------
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Entry, QueryFile}
 import graft.functions.ByteEntropy
 import graft.ops.{Profile, ZOrder}
 import graft.pipeline.Behavior
@@ -17,7 +18,7 @@ import graft.pipeline.Behavior
   * period arithmetic on INTEGERS (`div`, never `/`), doubles only
   * where both engines derive them from identical exact values.
   */
-object Analytics {
+object Analytics extends QueryFile {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
@@ -10335,403 +10336,203 @@ object Analytics {
       |    AS significant
       |FROM ag CROSS JOIN tot""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q504_cucconi" -> (q504Cucconi _),
-    "q505_lepage" -> (q505Lepage _),
-    "q506_gehan_wilcoxon" -> (q506Gehan _),
-    "q507_dunn" -> (q507Dunn _),
-    "q508_storey_q" -> (q508Storey _),
-    "q509_meta_combine" -> (q509MetaCombine _),
-    "q510_bowker" -> (q510Bowker _),
-    "q501_rank_distance" -> (q501RankDistance _),
-    "q502_gain_lift" -> (q502GainLift _),
-    "q503_optimal_threshold" -> (q503OptimalThreshold _),
-    "q498_item_analysis" -> (q498ItemAnalysis _),
-    "q499_weighted_kappa" -> (q499WeightedKappa _),
-    "q500_tost" -> (q500Tost _),
-    "q495_two_prop_diff" -> (q495TwoPropDiff _),
-    "q496_gumbel_fit" -> (q496GumbelFit _),
-    "q497_power_two_props" -> (q497PowerTwoProps _),
-    "q491_lorenz" -> (q491Lorenz _),
-    "q492_kakwani" -> (q492Kakwani _),
-    "q493_anderson_darling" -> (q493AndersonDarling _),
-    "q494_g_test" -> (q494GTest _),
-    "q487_hosmer_lemeshow" -> (q487HosmerLemeshow _),
-    "q488_c_chart" -> (q488CChart _),
-    "q489_u_chart" -> (q489UChart _),
-    "q490_perm_entropy" -> (q490PermEntropy _),
-    "q484_brunner_munzel" -> (q484BrunnerMunzel _),
-    "q485_quade" -> (q485Quade _),
-    "q486_diagnostic_panel" -> (q486DiagnosticPanel _),
-    "q480_by_fdr" -> (q480ByFdr _),
-    "q481_trimmed_stats" -> (q481TrimmedStats _),
-    "q477_rbo" -> (q477Rbo _),
-    "q478_cohens_h" -> (q478CohensH _),
-    "q479_smr" -> (q479Smr _),
-    "q470_welch_anova" -> (q470WelchAnova _),
-    "q471_mood_median" -> (q471MoodMedian _),
-    "q472_ansari_bradley" -> (q472AnsariBradley _),
-    "q473_lin_ccc" -> (q473LinCcc _),
-    "q474_bland_altman" -> (q474BlandAltman _),
-    "q475_gwet_ac1" -> (q475GwetAc1 _),
-    "q467_aalen_johansen" -> (q467AalenJohansen _),
-    "q468_life_table" -> (q468LifeTable _),
-    "q469_hoeffdings_d" -> (q469HoeffdingsD _),
-    "q464_xbar_r" -> (q464XbarR _),
-    "q465_capability" -> (q465Capability _),
-    "q466_ratio_ci" -> (q466RatioCI _),
-    "q455_turning_points" -> (q455TurningPoints _),
-    "q456_bartels_rvn" -> (q456Bartels _),
-    "q457_kpss" -> (q457Kpss _),
-    "q458_cox_stuart" -> (q458CoxStuart _),
-    "q459_diebold_mariano" -> (q459DieboldMariano _),
-    "q460_pinball" -> (q460Pinball _),
-    "q451_hhi" -> (q451Hhi _),
-    "q452_theil" -> (q452Theil _),
-    "q453_atkinson" -> (q453Atkinson _),
-    "q454_palma" -> (q454Palma _),
-    "q446_holm" -> (q446Holm _),
-    "q447_cliffs_delta" -> (q447CliffsDelta _),
-    "q448_iv" -> (q448Iv _),
-    "q449_breusch_pagan" -> (q449BreuschPagan _),
-    "q450_chow" -> (q450Chow _),
-    "q395_log_rank" -> (q395LogRank _),
-    "q396_jarque_bera" -> (q396JarqueBera _),
-    "q397_rmst" -> (q397Rmst _),
-    "q398_fisher_exact" -> (q398FisherExact _),
-    "q400_poisson_rate" -> (q400PoissonRate _),
-    "q403_bartlett" -> (q403Bartlett _),
-    "q404_neyman" -> (q404Neyman _),
-    "q405_ols_influence" -> (q405OlsInfluence _),
-    "q408_cohens_d" -> (q408CohensD _),
-    "q409_gumbel" -> (q409Gumbel _),
-    "q410_changepoint" -> (q410Changepoint _),
-    "q411_mantel_haenszel" -> (q411MantelHaenszel _),
-    "q412_cochran_armitage" -> (q412CochranArmitage _),
-    "q413_capture_recapture" -> (q413CaptureRecapture _),
-    "q414_newey_west" -> (q414NeweyWest _),
-    "q416_pairwise_contrasts" -> (q416PairwiseContrasts _),
-    "q417_bh_fdr" -> (q417BhFdr _),
-    "q419_risk_ratio" -> (q419RiskRatio _),
-    "q420_cronbach" -> (q420Cronbach _),
-    "q421_partial_corr" -> (q421PartialCorr _),
-    "q422_jonckheere" -> (q422Jonckheere _),
-    "q423_harrell_c" -> (q423HarrellC _),
-    "q424_icc" -> (q424Icc _),
-    "q425_threshold_sweep" -> (q425ThresholdSweep _),
-    "q430_energy_distance" -> (q430EnergyDistance _),
-    "q435_wilcoxon" -> (q435Wilcoxon _),
-    "q441_qq_drift" -> (q441QqDrift _),
-    "q442_corr_matrix" -> (q442CorrMatrix _),
-    "q443_rfm" -> (q443Rfm _),
-    "q444_stickiness" -> (q444Stickiness _),
-    "q436_hodges_lehmann" -> (q436HodgesLehmann _),
-    "q437_sign_test" -> (q437SignTest _),
-    "q438_decomp_strength" -> (q438DecompStrength _),
-    "q439_split_half" -> (q439SplitHalf _),
-    "q431_poisson_reg" -> (q431PoissonReg _),
-    "q432_post_stratified" -> (q432PostStratified _),
-    "q433_sample_size" -> (q433SampleSize _),
-    "q434_kuiper" -> (q434Kuiper _),
-    "q427_confusion_panel" -> (q427ConfusionPanel _),
-    "q428_page_trend" -> (q428PageTrend _),
-    "q429_ordinal_assoc" -> (q429OrdinalAssoc _),
-    "q399_target_encode" -> (q399TargetEncode _),
-    "q393_cox_ph" -> (q393CoxPh _),
-    "q392_platt" -> (q392Platt _),
-    "q389_ols2" -> (q389Ols2 _),
-    "q385_psi" -> (q385Psi _),
-    "q387_cvm" -> (q387Cvm _),
-    "q383_dtw" -> (q383Dtw _),
-    "q381_group_kfold" -> (q381GroupKfold _),
-    "q378_sax_word" -> (q378SaxWord _),
-    "q377_hurst" -> (q377Hurst _),
-    "q376_haar_energy" -> (q376HaarEnergy _),
-    "q375_periodogram" -> (q375Periodogram _),
-    "q374_mann_kendall" -> (q374MannKendall _),
-    "q373_runs_test" -> (q373RunsTest _),
-    "q372_forecast_accuracy" -> (q372ForecastAccuracy _),
-    "q371_transition_entropy" -> (q371TransitionEntropy _),
-    "q370_g2_keyness" -> (q370G2Keyness _),
-    "q369_odds_ratio" -> (q369OddsRatio _),
-    "q368_granger" -> (q368Granger _),
-    "q367_pacf" -> (q367Pacf _),
-    "q366_fano" -> (q366Fano _),
-    "q365_kendall_w" -> (q365KendallW _),
-    "q364_cochran_q" -> (q364CochranQ _),
-    "q363_nelson_aalen" -> (q363NelsonAalen _),
-    "q362_ccf" -> (q362Ccf _),
-    "q356_ljung_box" -> (q356LjungBox _),
-    "q355_friedman" -> (q355Friedman _),
-    "q354_brown_forsythe" -> (q354BrownForsythe _),
-    "q353_kruskal" -> (q353Kruskal _),
-    "q351_stationary" -> (q351Stationary _),
-    "q350_acf" -> (q350Acf _),
-    "q349_assoc_rules" -> (q349AssocRules _),
-    "q346_viterbi" -> (q346Viterbi _),
-    "q340_fairness" -> (q340Fairness _),
-    "q338_anova" -> (q338Anova _),
-    "q334_roc_auc" -> (q334RocAuc _),
-    "q335_wasserstein" -> (q335Wasserstein _),
-    "q331_krippendorff" -> (q331Krippendorff _),
-    "q332_class_balance" -> (q332ClassBalance _),
-    "q333_info_gain" -> (q333InfoGain _),
-    "q328_hill_tail" -> (q328Hill _),
-    "q329_dp_release" -> (q329DpRelease _),
-    "q330_raking" -> (q330Raking _),
-    "q319_theil_sen" -> (q319TheilSen _),
-    "q320_cusum" -> (q320Cusum _),
-    "q321_seasonal" -> (q321Seasonal _),
-    "q310_benford" -> (q310Benford _),
-    "q311_msprt" -> (q311Msprt _),
-    "q312_holt" -> (q312Holt _),
-    "q307_ks_test" -> (q307KsTest _),
-    "q308_spearman" -> (q308Spearman _),
-    "q309_kendall_tau" -> (q309Kendall _),
-    "q250_bootstrap_ci" -> (q250BootstrapCi _),
-    "q256_drift_monitor" -> (q256DriftMonitor _),
-    "q251_ab_ttest" -> (q251AbTtest _),
-    "q262_pass_at_k" -> (q262PassAtK _),
-    "q263_mann_whitney" -> (q263MannWhitney _),
-    "q264_bh_fdr" -> (q264BhFdr _),
-    "q265_cohens_kappa" -> (q265CohensKappa _),
-    "q268_k_anonymity" -> (q268KAnonymity _),
-    "q272_gini" -> (q272Gini _),
-    "q276_fleiss_kappa" -> (q276FleissKappa _),
-    "q277_l_diversity" -> (q277LDiversity _),
-    "q278_t_closeness" -> (q278TCloseness _),
-    "q279_ewma_chart" -> (q279EwmaChart _),
-    "q289_attribution" -> (q289Attribution _),
-    "q293_bradley_terry" -> (q293BradleyTerry _),
-    "q294_conformal_gate" -> (q294ConformalGate _),
-    "q295_isotonic" -> (q295Isotonic _),
-    "q298_fellegi_sunter" -> (q298FellegiSunter _),
-    "q299_cuped" -> (q299Cuped _),
-    "q300_did" -> (q300DiD _),
-    "q301_shapley" -> (q301Shapley _),
-    "q302_kaplan_meier" -> (q302KaplanMeier _),
-    "q303_srm" -> (q303Srm _),
-    "q304_lift_table" -> (q304LiftTable _),
-    "q305_cramers_v" -> (q305CramersV _),
-    "q306_mcnemar" -> (q306McNemar _),
-    "q133_group_corr" -> (q133GroupCorr _),
-    "q134_quantile_buckets" -> (q134QuantileBuckets _),
-    "q154_robust_mad" -> (q154RobustMad _),
-    "q102_funnel" -> (q102Funnel _),
-    "q103_transitions" -> (q103Transitions _),
-    "q104_cohort_retention" -> (q104CohortRetention _),
-    "q105_length_histogram" -> (q105LengthHistogram _),
-    "q106_iqr_outliers" -> (q106IqrOutliers _),
-    "q107_byte_entropy" -> (q107ByteEntropy _),
-    "q108_char_histogram" -> (q108CharHistogram _),
-    "q110_zorder_key" -> (q110ZorderKey _),
-    "q111_streaks" -> (q111Streaks _),
-    "q113_key_skew" -> (q113KeySkew _),
-    "q114_winsorize" -> (q114Winsorize _),
-    "q116_unigram_logprob" -> (q116UnigramLogprob _),
-    "q118_topk_per_key" -> (q118TopkPerKey _),
-    "q182_interarrival" -> (q182InterArrival _),
-    "q183_rate_anomalies" -> (q183RateAnomalies _),
-    "q186_session_paths" -> (q186SessionPaths _),
-    "q187_funnel_delays" -> (q187FunnelDelays _))
-
-  def oracles: Map[String, String] = Map(
-    "q508_storey_q" -> q508Sql,
-    "q509_meta_combine" -> q509Sql,
-    "q510_bowker" -> q510Sql,
-    "q504_cucconi" -> q504Sql,
-    "q505_lepage" -> q505Sql,
-    "q506_gehan_wilcoxon" -> q506Sql,
-    "q507_dunn" -> q507Sql,
-    "q501_rank_distance" -> q501Sql,
-    "q502_gain_lift" -> q502Sql,
-    "q503_optimal_threshold" -> q503Sql,
-    "q498_item_analysis" -> q498Sql,
-    "q499_weighted_kappa" -> q499Sql,
-    "q500_tost" -> q500Sql,
-    "q495_two_prop_diff" -> q495Sql,
-    "q496_gumbel_fit" -> q496Sql,
-    "q497_power_two_props" -> q497Sql,
-    "q491_lorenz" -> q491Sql,
-    "q492_kakwani" -> q492Sql,
-    "q493_anderson_darling" -> q493Sql,
-    "q494_g_test" -> q494Sql,
-    "q487_hosmer_lemeshow" -> q487Sql,
-    "q488_c_chart" -> q488Sql,
-    "q489_u_chart" -> q489Sql,
-    "q490_perm_entropy" -> q490Sql,
-    "q484_brunner_munzel" -> q484Sql,
-    "q485_quade" -> q485Sql,
-    "q486_diagnostic_panel" -> q486Sql,
-    "q480_by_fdr" -> q480Sql,
-    "q481_trimmed_stats" -> q481Sql,
-    "q477_rbo" -> q477Sql,
-    "q478_cohens_h" -> q478Sql,
-    "q479_smr" -> q479Sql,
-    "q470_welch_anova" -> q470Sql,
-    "q471_mood_median" -> q471Sql,
-    "q472_ansari_bradley" -> q472Sql,
-    "q473_lin_ccc" -> q473Sql,
-    "q474_bland_altman" -> q474Sql,
-    "q475_gwet_ac1" -> q475Sql,
-    "q467_aalen_johansen" -> q467Sql,
-    "q468_life_table" -> q468Sql,
-    "q469_hoeffdings_d" -> q469Sql,
-    "q464_xbar_r" -> q464Sql,
-    "q465_capability" -> q465Sql,
-    "q466_ratio_ci" -> q466Sql,
-    "q455_turning_points" -> q455Sql,
-    "q456_bartels_rvn" -> q456Sql,
-    "q457_kpss" -> q457Sql,
-    "q458_cox_stuart" -> q458Sql,
-    "q459_diebold_mariano" -> q459Sql,
-    "q460_pinball" -> q460Sql,
-    "q451_hhi" -> q451Sql,
-    "q452_theil" -> q452Sql,
-    "q453_atkinson" -> q453Sql,
-    "q454_palma" -> q454Sql,
-    "q446_holm" -> q446Sql,
-    "q447_cliffs_delta" -> q447Sql,
-    "q448_iv" -> q448Sql,
-    "q449_breusch_pagan" -> q449Sql,
-    "q450_chow" -> q450Sql,
-    "q395_log_rank" -> q395Sql,
-    "q396_jarque_bera" -> q396Sql,
-    "q397_rmst" -> q397Sql,
-    "q398_fisher_exact" -> q398Sql,
-    "q400_poisson_rate" -> q400Sql,
-    "q403_bartlett" -> q403Sql,
-    "q404_neyman" -> q404Sql,
-    "q405_ols_influence" -> q405Sql,
-    "q408_cohens_d" -> q408Sql,
-    "q409_gumbel" -> q409Sql,
-    "q410_changepoint" -> q410Sql,
-    "q411_mantel_haenszel" -> q411Sql,
-    "q412_cochran_armitage" -> q412Sql,
-    "q413_capture_recapture" -> q413Sql,
-    "q414_newey_west" -> q414Sql,
-    "q416_pairwise_contrasts" -> q416Sql,
-    "q417_bh_fdr" -> q417Sql,
-    "q419_risk_ratio" -> q419Sql,
-    "q420_cronbach" -> q420Sql,
-    "q421_partial_corr" -> q421Sql,
-    "q422_jonckheere" -> q422Sql,
-    "q423_harrell_c" -> q423Sql,
-    "q424_icc" -> q424Sql,
-    "q425_threshold_sweep" -> q425Sql,
-    "q430_energy_distance" -> q430Sql,
-    "q435_wilcoxon" -> q435Sql,
-    "q441_qq_drift" -> q441Sql,
-    "q442_corr_matrix" -> q442Sql,
-    "q443_rfm" -> q443Sql,
-    "q444_stickiness" -> q444Sql,
-    "q436_hodges_lehmann" -> q436Sql,
-    "q437_sign_test" -> q437Sql,
-    "q438_decomp_strength" -> q438Sql,
-    "q439_split_half" -> q439Sql,
-    "q431_poisson_reg" -> q431Sql,
-    "q432_post_stratified" -> q432Sql,
-    "q433_sample_size" -> q433Sql,
-    "q434_kuiper" -> q434Sql,
-    "q427_confusion_panel" -> q427Sql,
-    "q428_page_trend" -> q428Sql,
-    "q429_ordinal_assoc" -> q429Sql,
-    "q399_target_encode" -> q399Sql,
-    "q393_cox_ph" -> q393Sql,
-    "q392_platt" -> q392Sql,
-    "q389_ols2" -> q389Sql,
-    "q385_psi" -> q385Sql,
-    "q387_cvm" -> q387Sql,
-    "q383_dtw" -> q383Sql,
-    "q381_group_kfold" -> q381Sql,
-    "q378_sax_word" -> q378Sql,
-    "q375_periodogram" -> q375Sql,
-    "q376_haar_energy" -> q376Sql,
-    "q377_hurst" -> q377Sql,
-    "q351_stationary" -> q351Sql,
-    "q353_kruskal" -> q353Sql,
-    "q354_brown_forsythe" -> q354Sql,
-    "q355_friedman" -> q355Sql,
-    "q356_ljung_box" -> q356Sql,
-    "q362_ccf" -> q362Sql,
-    "q363_nelson_aalen" -> q363Sql,
-    "q364_cochran_q" -> q364Sql,
-    "q365_kendall_w" -> q365Sql,
-    "q366_fano" -> q366Sql,
-    "q367_pacf" -> q367Sql,
-    "q368_granger" -> q368Sql,
-    "q369_odds_ratio" -> q369Sql,
-    "q370_g2_keyness" -> q370Sql,
-    "q371_transition_entropy" -> q371Sql,
-    "q372_forecast_accuracy" -> q372Sql,
-    "q373_runs_test" -> q373Sql,
-    "q374_mann_kendall" -> q374Sql,
-    "q350_acf" -> q350Sql,
-    "q349_assoc_rules" -> q349Sql,
-    "q346_viterbi" -> q346Sql,
-    "q340_fairness" -> q340Sql,
-    "q338_anova" -> q338Sql,
-    "q334_roc_auc" -> q334Sql,
-    "q335_wasserstein" -> q335Sql,
-    "q331_krippendorff" -> q331Sql,
-    "q332_class_balance" -> q332Sql,
-    "q333_info_gain" -> q333Sql,
-    "q328_hill_tail" -> q328Sql,
-    "q329_dp_release" -> q329Sql,
-    "q330_raking" -> q330Sql,
-    "q319_theil_sen" -> q319Sql,
-    "q320_cusum" -> q320Sql,
-    "q321_seasonal" -> q321Sql,
-    "q310_benford" -> q310Sql,
-    "q311_msprt" -> q311Sql,
-    "q312_holt" -> q312Sql,
-    "q307_ks_test" -> q307Sql,
-    "q308_spearman" -> q308Sql,
-    "q309_kendall_tau" -> q309Sql,
-    "q250_bootstrap_ci" -> q250Sql,
-    "q256_drift_monitor" -> q256Sql,
-    "q251_ab_ttest" -> q251Sql,
-    "q262_pass_at_k" -> q262Sql,
-    "q263_mann_whitney" -> q263Sql,
-    "q264_bh_fdr" -> q264Sql,
-    "q265_cohens_kappa" -> q265Sql,
-    "q268_k_anonymity" -> q268Sql,
-    "q272_gini" -> q272Sql,
-    "q276_fleiss_kappa" -> q276Sql,
-    "q277_l_diversity" -> q277Sql,
-    "q278_t_closeness" -> q278Sql,
-    "q279_ewma_chart" -> q279Sql,
-    "q289_attribution" -> q289Sql,
-    "q293_bradley_terry" -> q293Sql,
-    "q294_conformal_gate" -> q294Sql,
-    "q295_isotonic" -> q295Sql,
-    "q298_fellegi_sunter" -> q298Sql,
-    "q299_cuped" -> q299Sql,
-    "q300_did" -> q300Sql,
-    "q301_shapley" -> q301Sql,
-    "q302_kaplan_meier" -> q302Sql,
-    "q303_srm" -> q303Sql,
-    "q304_lift_table" -> q304Sql,
-    "q305_cramers_v" -> q305Sql,
-    "q306_mcnemar" -> q306Sql,
-    "q133_group_corr" -> q133Sql,
-    "q134_quantile_buckets" -> q134Sql,
-    "q154_robust_mad" -> q154Sql,
-    "q102_funnel" -> q102Sql,
-    "q103_transitions" -> q103Sql,
-    "q104_cohort_retention" -> q104Sql,
-    "q105_length_histogram" -> q105Sql,
-    "q106_iqr_outliers" -> q106Sql,
-    "q107_byte_entropy" -> q107Sql,
-    "q108_char_histogram" -> q108Sql,
-    "q110_zorder_key" -> q110Sql,
-    "q111_streaks" -> q111Sql,
-    "q113_key_skew" -> q113Sql,
-    "q114_winsorize" -> q114Sql,
-    "q116_unigram_logprob" -> q116Sql,
-    "q118_topk_per_key" -> q118Sql,
-    "q182_interarrival" -> q182Sql,
-    "q183_rate_anomalies" -> q183Sql,
-    "q186_session_paths" -> q186Sql,
-    "q187_funnel_delays" -> q187Sql)
+  def entries: Seq[Entry] = Seq(
+    Entry("q504_cucconi", q504Cucconi, Some(q504Sql)),
+    Entry("q505_lepage", q505Lepage, Some(q505Sql)),
+    Entry("q506_gehan_wilcoxon", q506Gehan, Some(q506Sql)),
+    Entry("q507_dunn", q507Dunn, Some(q507Sql)),
+    Entry("q508_storey_q", q508Storey, Some(q508Sql)),
+    Entry("q509_meta_combine", q509MetaCombine, Some(q509Sql)),
+    Entry("q510_bowker", q510Bowker, Some(q510Sql)),
+    Entry("q501_rank_distance", q501RankDistance, Some(q501Sql)),
+    Entry("q502_gain_lift", q502GainLift, Some(q502Sql)),
+    Entry("q503_optimal_threshold", q503OptimalThreshold, Some(q503Sql)),
+    Entry("q498_item_analysis", q498ItemAnalysis, Some(q498Sql)),
+    Entry("q499_weighted_kappa", q499WeightedKappa, Some(q499Sql)),
+    Entry("q500_tost", q500Tost, Some(q500Sql)),
+    Entry("q495_two_prop_diff", q495TwoPropDiff, Some(q495Sql)),
+    Entry("q496_gumbel_fit", q496GumbelFit, Some(q496Sql)),
+    Entry("q497_power_two_props", q497PowerTwoProps, Some(q497Sql)),
+    Entry("q491_lorenz", q491Lorenz, Some(q491Sql)),
+    Entry("q492_kakwani", q492Kakwani, Some(q492Sql)),
+    Entry("q493_anderson_darling", q493AndersonDarling, Some(q493Sql)),
+    Entry("q494_g_test", q494GTest, Some(q494Sql)),
+    Entry("q487_hosmer_lemeshow", q487HosmerLemeshow, Some(q487Sql)),
+    Entry("q488_c_chart", q488CChart, Some(q488Sql)),
+    Entry("q489_u_chart", q489UChart, Some(q489Sql)),
+    Entry("q490_perm_entropy", q490PermEntropy, Some(q490Sql)),
+    Entry("q484_brunner_munzel", q484BrunnerMunzel, Some(q484Sql)),
+    Entry("q485_quade", q485Quade, Some(q485Sql)),
+    Entry("q486_diagnostic_panel", q486DiagnosticPanel, Some(q486Sql)),
+    Entry("q480_by_fdr", q480ByFdr, Some(q480Sql)),
+    Entry("q481_trimmed_stats", q481TrimmedStats, Some(q481Sql)),
+    Entry("q477_rbo", q477Rbo, Some(q477Sql)),
+    Entry("q478_cohens_h", q478CohensH, Some(q478Sql)),
+    Entry("q479_smr", q479Smr, Some(q479Sql)),
+    Entry("q470_welch_anova", q470WelchAnova, Some(q470Sql)),
+    Entry("q471_mood_median", q471MoodMedian, Some(q471Sql)),
+    Entry("q472_ansari_bradley", q472AnsariBradley, Some(q472Sql)),
+    Entry("q473_lin_ccc", q473LinCcc, Some(q473Sql)),
+    Entry("q474_bland_altman", q474BlandAltman, Some(q474Sql)),
+    Entry("q475_gwet_ac1", q475GwetAc1, Some(q475Sql)),
+    Entry("q467_aalen_johansen", q467AalenJohansen, Some(q467Sql)),
+    Entry("q468_life_table", q468LifeTable, Some(q468Sql)),
+    Entry("q469_hoeffdings_d", q469HoeffdingsD, Some(q469Sql)),
+    Entry("q464_xbar_r", q464XbarR, Some(q464Sql)),
+    Entry("q465_capability", q465Capability, Some(q465Sql)),
+    Entry("q466_ratio_ci", q466RatioCI, Some(q466Sql)),
+    Entry("q455_turning_points", q455TurningPoints, Some(q455Sql)),
+    Entry("q456_bartels_rvn", q456Bartels, Some(q456Sql)),
+    Entry("q457_kpss", q457Kpss, Some(q457Sql)),
+    Entry("q458_cox_stuart", q458CoxStuart, Some(q458Sql)),
+    Entry("q459_diebold_mariano", q459DieboldMariano, Some(q459Sql)),
+    Entry("q460_pinball", q460Pinball, Some(q460Sql)),
+    Entry("q451_hhi", q451Hhi, Some(q451Sql)),
+    Entry("q452_theil", q452Theil, Some(q452Sql)),
+    Entry("q453_atkinson", q453Atkinson, Some(q453Sql)),
+    Entry("q454_palma", q454Palma, Some(q454Sql)),
+    Entry("q446_holm", q446Holm, Some(q446Sql)),
+    Entry("q447_cliffs_delta", q447CliffsDelta, Some(q447Sql)),
+    Entry("q448_iv", q448Iv, Some(q448Sql)),
+    Entry("q449_breusch_pagan", q449BreuschPagan, Some(q449Sql)),
+    Entry("q450_chow", q450Chow, Some(q450Sql)),
+    Entry("q395_log_rank", q395LogRank, Some(q395Sql)),
+    Entry("q396_jarque_bera", q396JarqueBera, Some(q396Sql)),
+    Entry("q397_rmst", q397Rmst, Some(q397Sql)),
+    Entry("q398_fisher_exact", q398FisherExact, Some(q398Sql)),
+    Entry("q400_poisson_rate", q400PoissonRate, Some(q400Sql)),
+    Entry("q403_bartlett", q403Bartlett, Some(q403Sql)),
+    Entry("q404_neyman", q404Neyman, Some(q404Sql)),
+    Entry("q405_ols_influence", q405OlsInfluence, Some(q405Sql)),
+    Entry("q408_cohens_d", q408CohensD, Some(q408Sql)),
+    Entry("q409_gumbel", q409Gumbel, Some(q409Sql)),
+    Entry("q410_changepoint", q410Changepoint, Some(q410Sql)),
+    Entry("q411_mantel_haenszel", q411MantelHaenszel, Some(q411Sql)),
+    Entry("q412_cochran_armitage", q412CochranArmitage, Some(q412Sql)),
+    Entry("q413_capture_recapture", q413CaptureRecapture, Some(q413Sql)),
+    Entry("q414_newey_west", q414NeweyWest, Some(q414Sql)),
+    Entry("q416_pairwise_contrasts", q416PairwiseContrasts, Some(q416Sql)),
+    Entry("q417_bh_fdr", q417BhFdr, Some(q417Sql)),
+    Entry("q419_risk_ratio", q419RiskRatio, Some(q419Sql)),
+    Entry("q420_cronbach", q420Cronbach, Some(q420Sql)),
+    Entry("q421_partial_corr", q421PartialCorr, Some(q421Sql)),
+    Entry("q422_jonckheere", q422Jonckheere, Some(q422Sql)),
+    Entry("q423_harrell_c", q423HarrellC, Some(q423Sql)),
+    Entry("q424_icc", q424Icc, Some(q424Sql)),
+    Entry("q425_threshold_sweep", q425ThresholdSweep, Some(q425Sql)),
+    Entry("q430_energy_distance", q430EnergyDistance, Some(q430Sql)),
+    Entry("q435_wilcoxon", q435Wilcoxon, Some(q435Sql)),
+    Entry("q441_qq_drift", q441QqDrift, Some(q441Sql)),
+    Entry("q442_corr_matrix", q442CorrMatrix, Some(q442Sql)),
+    Entry("q443_rfm", q443Rfm, Some(q443Sql)),
+    Entry("q444_stickiness", q444Stickiness, Some(q444Sql)),
+    Entry("q436_hodges_lehmann", q436HodgesLehmann, Some(q436Sql)),
+    Entry("q437_sign_test", q437SignTest, Some(q437Sql)),
+    Entry("q438_decomp_strength", q438DecompStrength, Some(q438Sql)),
+    Entry("q439_split_half", q439SplitHalf, Some(q439Sql)),
+    Entry("q431_poisson_reg", q431PoissonReg, Some(q431Sql)),
+    Entry("q432_post_stratified", q432PostStratified, Some(q432Sql)),
+    Entry("q433_sample_size", q433SampleSize, Some(q433Sql)),
+    Entry("q434_kuiper", q434Kuiper, Some(q434Sql)),
+    Entry("q427_confusion_panel", q427ConfusionPanel, Some(q427Sql)),
+    Entry("q428_page_trend", q428PageTrend, Some(q428Sql)),
+    Entry("q429_ordinal_assoc", q429OrdinalAssoc, Some(q429Sql)),
+    Entry("q399_target_encode", q399TargetEncode, Some(q399Sql)),
+    Entry("q393_cox_ph", q393CoxPh, Some(q393Sql)),
+    Entry("q392_platt", q392Platt, Some(q392Sql)),
+    Entry("q389_ols2", q389Ols2, Some(q389Sql)),
+    Entry("q385_psi", q385Psi, Some(q385Sql)),
+    Entry("q387_cvm", q387Cvm, Some(q387Sql)),
+    Entry("q383_dtw", q383Dtw, Some(q383Sql)),
+    Entry("q381_group_kfold", q381GroupKfold, Some(q381Sql)),
+    Entry("q378_sax_word", q378SaxWord, Some(q378Sql)),
+    Entry("q377_hurst", q377Hurst, Some(q377Sql)),
+    Entry("q376_haar_energy", q376HaarEnergy, Some(q376Sql)),
+    Entry("q375_periodogram", q375Periodogram, Some(q375Sql)),
+    Entry("q374_mann_kendall", q374MannKendall, Some(q374Sql)),
+    Entry("q373_runs_test", q373RunsTest, Some(q373Sql)),
+    Entry("q372_forecast_accuracy", q372ForecastAccuracy, Some(q372Sql)),
+    Entry("q371_transition_entropy", q371TransitionEntropy, Some(q371Sql)),
+    Entry("q370_g2_keyness", q370G2Keyness, Some(q370Sql)),
+    Entry("q369_odds_ratio", q369OddsRatio, Some(q369Sql)),
+    Entry("q368_granger", q368Granger, Some(q368Sql)),
+    Entry("q367_pacf", q367Pacf, Some(q367Sql)),
+    Entry("q366_fano", q366Fano, Some(q366Sql)),
+    Entry("q365_kendall_w", q365KendallW, Some(q365Sql)),
+    Entry("q364_cochran_q", q364CochranQ, Some(q364Sql)),
+    Entry("q363_nelson_aalen", q363NelsonAalen, Some(q363Sql)),
+    Entry("q362_ccf", q362Ccf, Some(q362Sql)),
+    Entry("q356_ljung_box", q356LjungBox, Some(q356Sql)),
+    Entry("q355_friedman", q355Friedman, Some(q355Sql)),
+    Entry("q354_brown_forsythe", q354BrownForsythe, Some(q354Sql)),
+    Entry("q353_kruskal", q353Kruskal, Some(q353Sql)),
+    Entry("q351_stationary", q351Stationary, Some(q351Sql)),
+    Entry("q350_acf", q350Acf, Some(q350Sql)),
+    Entry("q349_assoc_rules", q349AssocRules, Some(q349Sql)),
+    Entry("q346_viterbi", q346Viterbi, Some(q346Sql)),
+    Entry("q340_fairness", q340Fairness, Some(q340Sql)),
+    Entry("q338_anova", q338Anova, Some(q338Sql)),
+    Entry("q334_roc_auc", q334RocAuc, Some(q334Sql)),
+    Entry("q335_wasserstein", q335Wasserstein, Some(q335Sql)),
+    Entry("q331_krippendorff", q331Krippendorff, Some(q331Sql)),
+    Entry("q332_class_balance", q332ClassBalance, Some(q332Sql)),
+    Entry("q333_info_gain", q333InfoGain, Some(q333Sql)),
+    Entry("q328_hill_tail", q328Hill, Some(q328Sql)),
+    Entry("q329_dp_release", q329DpRelease, Some(q329Sql)),
+    Entry("q330_raking", q330Raking, Some(q330Sql)),
+    Entry("q319_theil_sen", q319TheilSen, Some(q319Sql)),
+    Entry("q320_cusum", q320Cusum, Some(q320Sql)),
+    Entry("q321_seasonal", q321Seasonal, Some(q321Sql)),
+    Entry("q310_benford", q310Benford, Some(q310Sql)),
+    Entry("q311_msprt", q311Msprt, Some(q311Sql)),
+    Entry("q312_holt", q312Holt, Some(q312Sql)),
+    Entry("q307_ks_test", q307KsTest, Some(q307Sql)),
+    Entry("q308_spearman", q308Spearman, Some(q308Sql)),
+    Entry("q309_kendall_tau", q309Kendall, Some(q309Sql)),
+    Entry("q250_bootstrap_ci", q250BootstrapCi, Some(q250Sql)),
+    Entry("q256_drift_monitor", q256DriftMonitor, Some(q256Sql)),
+    Entry("q251_ab_ttest", q251AbTtest, Some(q251Sql)),
+    Entry("q262_pass_at_k", q262PassAtK, Some(q262Sql)),
+    Entry("q263_mann_whitney", q263MannWhitney, Some(q263Sql)),
+    Entry("q264_bh_fdr", q264BhFdr, Some(q264Sql)),
+    Entry("q265_cohens_kappa", q265CohensKappa, Some(q265Sql)),
+    Entry("q268_k_anonymity", q268KAnonymity, Some(q268Sql)),
+    Entry("q272_gini", q272Gini, Some(q272Sql)),
+    Entry("q276_fleiss_kappa", q276FleissKappa, Some(q276Sql)),
+    Entry("q277_l_diversity", q277LDiversity, Some(q277Sql)),
+    Entry("q278_t_closeness", q278TCloseness, Some(q278Sql)),
+    Entry("q279_ewma_chart", q279EwmaChart, Some(q279Sql)),
+    Entry("q289_attribution", q289Attribution, Some(q289Sql)),
+    Entry("q293_bradley_terry", q293BradleyTerry, Some(q293Sql)),
+    Entry("q294_conformal_gate", q294ConformalGate, Some(q294Sql)),
+    Entry("q295_isotonic", q295Isotonic, Some(q295Sql)),
+    Entry("q298_fellegi_sunter", q298FellegiSunter, Some(q298Sql)),
+    Entry("q299_cuped", q299Cuped, Some(q299Sql)),
+    Entry("q300_did", q300DiD, Some(q300Sql)),
+    Entry("q301_shapley", q301Shapley, Some(q301Sql)),
+    Entry("q302_kaplan_meier", q302KaplanMeier, Some(q302Sql)),
+    Entry("q303_srm", q303Srm, Some(q303Sql)),
+    Entry("q304_lift_table", q304LiftTable, Some(q304Sql)),
+    Entry("q305_cramers_v", q305CramersV, Some(q305Sql)),
+    Entry("q306_mcnemar", q306McNemar, Some(q306Sql)),
+    Entry("q133_group_corr", q133GroupCorr, Some(q133Sql)),
+    Entry("q134_quantile_buckets", q134QuantileBuckets, Some(q134Sql)),
+    Entry("q154_robust_mad", q154RobustMad, Some(q154Sql)),
+    Entry("q102_funnel", q102Funnel, Some(q102Sql)),
+    Entry("q103_transitions", q103Transitions, Some(q103Sql)),
+    Entry("q104_cohort_retention", q104CohortRetention, Some(q104Sql)),
+    Entry("q105_length_histogram", q105LengthHistogram, Some(q105Sql)),
+    Entry("q106_iqr_outliers", q106IqrOutliers, Some(q106Sql)),
+    Entry("q107_byte_entropy", q107ByteEntropy, Some(q107Sql)),
+    Entry("q108_char_histogram", q108CharHistogram, Some(q108Sql)),
+    Entry("q110_zorder_key", q110ZorderKey, Some(q110Sql)),
+    Entry("q111_streaks", q111Streaks, Some(q111Sql)),
+    Entry("q113_key_skew", q113KeySkew, Some(q113Sql)),
+    Entry("q114_winsorize", q114Winsorize, Some(q114Sql)),
+    Entry("q116_unigram_logprob", q116UnigramLogprob, Some(q116Sql)),
+    Entry("q118_topk_per_key", q118TopkPerKey, Some(q118Sql)),
+    Entry("q182_interarrival", q182InterArrival, Some(q182Sql)),
+    Entry("q183_rate_anomalies", q183RateAnomalies, Some(q183Sql)),
+    Entry("q186_session_paths", q186SessionPaths, Some(q186Sql)),
+    Entry("q187_funnel_delays", q187FunnelDelays, Some(q187Sql)))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Entry, QueryFile}
 import graft.functions.NfcNormalize
 import graft.ops.Graph
 import graft.pipeline.{Behavior, Retrieval, Sampling, TextDedup}
@@ -16,7 +17,7 @@ import graft.pipeline.{Behavior, Retrieval, Sampling, TextDedup}
   * tie-break, planted Unicode/boilerplate is injected IN-PLAN with
   * identical expressions on both sides (the q57 pattern).
   */
-object Corpus {
+object Corpus extends QueryFile {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
@@ -5913,258 +5914,134 @@ object Corpus {
       |       'b': GREATEST(sur.edge.b, w)}))) AS BIGINT) AS support
       |FROM sur""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q476_ktruss" -> (q476KTruss _),
-    "q461_bipartite" -> (q461Bipartite _),
-    "q462_reciprocity" -> (q462Reciprocity _),
-    "q463_rich_club" -> (q463RichClub _),
-    "q401_katz" -> (q401Katz _),
-    "q426_harmonic" -> (q426Harmonic _),
-    "q406_neg_sampling" -> (q406NegSampling _),
-    "q415_hellinger" -> (q415Hellinger _),
-    "q407_bray_curtis" -> (q407BrayCurtis _),
-    "q402_ordered_pairs" -> (q402OrderedPairs _),
-    "q388_skipgram_ppmi" -> (q388SkipgramPpmi _),
-    "q384_lpa" -> (q384Lpa _),
-    "q379_lz78" -> (q379Lz78 _),
-    "q341_burrows_delta" -> (q341Burrows _),
-    "q339_readability" -> (q339Readability _),
-    "q336_nb_model" -> (q336NbModel _),
-    "q337_nb_score" -> (q337NbScore _),
-    "q313_kcore" -> (q313KCore _),
-    "q314_adamic_adar" -> (q314AdamicAdar _),
-    "q315_textrank" -> (q315TextRank _),
-    "q316_rake" -> (q316Rake _),
-    "q323_wer" -> (q323Wer _),
-    "q324_calibration_error" -> (q324CalibrationError _),
-    "q325_modularity" -> (q325Modularity _),
-    "q326_assortativity" -> (q326Assortativity _),
-    "q327_good_turing" -> (q327GoodTuring _),
-    "q252_suffix_ranks" -> (q252SuffixRanks _),
-    "q257_span_corrupt" -> (q257SpanCorrupt _),
-    "q258_rouge_eval" -> (q258RougeEval _),
-    "q260_bigram_generate" -> (q260BigramGenerate _),
-    "q261_bleu_eval" -> (q261BleuEval _),
-    "q266_zipf_fit" -> (q266ZipfFit _),
-    "q267_kn_gate" -> (q267KnGate _),
-    "q269_chrf" -> (q269Chrf _),
-    "q270_heaps_fit" -> (q270HeapsFit _),
-    "q271_js_drift" -> (q271JsDrift _),
-    "q273_unimax" -> (q273Unimax _),
-    "q274_moore_lewis" -> (q274MooreLewis _),
-    "q280_distinct_n" -> (q280DistinctN _),
-    "q281_mmd_two_sample" -> (q281MmdTwoSample _),
-    "q283_vocab_overlap" -> (q283VocabOverlap _),
-    "q285_cluster_js" -> (q285ClusterJs _),
-    "q286_collocations" -> (q286Collocations _),
-    "q287_template_score" -> (q287TemplateScore _),
-    "q288_rbo" -> (q288Rbo _),
-    "q292_token_f1" -> (q292TokenF1 _),
-    "q296_lexical_richness" -> (q296LexicalRichness _),
-    "q297_fightin_words" -> (q297FightinWords _),
-    "q253_repeated_suffixes" -> (q253RepeatedSuffixes _),
-    "q254_longest_repeats" -> (q254LongestRepeats _),
-    "q259_sa_dedup_cut" -> (q259SaDedupCut _),
-    "q123_bm25" -> (q123Bm25 _),
-    "q124_nfc_normalize" -> (q124NfcNormalize _),
-    "q125_chunk_dedup" -> (q125ChunkDedup _),
-    "q126_mix_sample" -> (q126MixSample _),
-    "q127_vocab_oov" -> (q127VocabOov _),
-    "q128_pagerank" -> (q128PageRank _),
-    "q129_semantic_dedup" -> (q129SemanticDedup _),
-    "q130_bigram_logprob" -> (q130BigramLogprob _),
-    "q137_canonical_dedup" -> (q137CanonicalDedup _),
-    "q138_cooccur_triangles" -> (q138Triangles _),
-    "q139_hits" -> (q139Hits _),
-    "q140_script_mix" -> (q140ScriptMix _),
-    "q141_strip_markup" -> (q141StripMarkup _),
-    "q142_pmi_collocations" -> (q142PmiCollocations _),
-    "q144_embed_znorm" -> (q144EmbedZnorm _),
-    "q145_domain_stats" -> (q145DomainStats _),
-    "q146_c4_filter" -> (q146C4Filter _),
-    "q148_novel_against" -> (q148NovelAgainst _),
-    "q149_hashed_bow" -> (q149HashedBow _),
-    "q152_script_mix_fast" -> (q152ScriptMixFast _),
-    "q153_cross_near_dup" -> (q153CrossNearDup _),
-    "q158_accent_fold" -> (q158AccentFold _),
-    "q160_accent_dedup" -> (q160AccentDedup _),
-    "q162_count_min" -> (q162CountMin _),
-    "q163_semantic_dedup_ann" -> (q163SemanticDedupAnn _),
-    "q243_semantic_dedup_ann_auto" -> (q243SemanticDedupAnnAuto _),
-    "q244_mojibake_repair" -> (q244MojibakeRepair _),
-    "q245_unigram_train" -> (q245UnigramTrain _),
-    "q246_unigram_apply" -> (q246UnigramApply _),
-    "q247_retrieval_eval" -> (q247RetrievalEval _),
-    "q166_ingest_chain" -> (q166IngestChain _),
-    "q167_quantize_embed" -> (q167QuantizeEmbed _),
-    "q168_quantized_knn" -> (q168QuantizedKnn _),
-    "q169_url_canonicalize" -> (q169UrlCanonicalize _),
-    "q170_corpus_report" -> (q170CorpusReport _),
-    "q171_perplexity_tiers" -> (q171PerplexityTiers _),
-    "q172_filter_funnel" -> (q172FilterFunnel _),
-    "q173_group_split" -> (q173GroupSplit _),
-    "q174_quantized_knn_ann" -> (q174QuantizedKnnAnn _),
-    "q175_semantic_contamination" -> (q175SemanticContamination _),
-    "q176_boilerplate_lines" -> (q176BoilerplateLines _),
-    "q177_dedup_lines_within" -> (q177DedupLinesWithin _),
-    "q178_shared_ngrams" -> (q178SharedNgrams _),
-    "q179_cross_set_semantic_pairs" -> (q179CrossSetSemanticPairs _),
-    "q180_long_run_contamination" -> (q180LongRunContamination _),
-    "q181_bpe_pairs" -> (q181BpePairs _),
-    "q184_coverage_cut" -> (q184CoverageCut _),
-    "q185_rrf_fusion" -> (q185RrfFusion _),
-    "q189_bpe_apply" -> (q189BpeApply _),
-    "q220_bpe_train" -> (q220BpeTrain _),
-    "q248_wordpiece_train" -> (q248WordpieceTrain _),
-    "q221_count_min_portable" -> (q221CountMinPortable _),
-    "q222_heavy_hitters_portable" -> (q222HeavyHittersPortable _),
-    "q225_quality_classifier_train" -> (q225QualityClassifierTrain _),
-    "q226_quality_classifier_score" -> (q226QualityClassifierScore _),
-    "q228_tag_mix" -> (q228TagMix _),
-    "q229_kneser_ney_lm" -> (q229KneserNeyLm _),
-    "q230_score_calibration" -> (q230ScoreCalibration _),
-    "q231_curation_funnel" -> (q231CurationFunnel _),
-    "q190_principal_component" -> (q190PrincipalComponent _),
-    "q191_abtt_whiten" -> (q191AbttWhiten _),
-    "q192_dsir_select" -> (q192DsirSelect _),
-    "q197_hard_negatives" -> (q197HardNegatives _),
-    "q198_temperature_mix" -> (q198TemperatureMix _),
-    "q199_interleave" -> (q199Interleave _),
-    "q200_content_extract" -> (q200ContentExtract _),
-    "q201_domain_policy" -> (q201DomainPolicy _),
-    "q202_pipeline_e2e" -> (q202PipelineE2e _),
-    "q203_held_out_lm" -> (q203HeldOutLm _),
-    "q204_sentences" -> (q204Sentences _),
-    "q205_image_dedup" -> (q205ImageDedup _),
-    "q208_hard_negatives_ann" -> (q208HardNegativesAnn _),
-    "q209_split_leakage" -> (q209SplitLeakage _),
-    "q210_fixed_stratified" -> (q210FixedStratified _))
-
-  def oracles: Map[String, String] = Map(
-    "q476_ktruss" -> q476Sql,
-    "q461_bipartite" -> q461Sql,
-    "q462_reciprocity" -> q462Sql,
-    "q463_rich_club" -> q463Sql,
-    "q401_katz" -> q401Sql,
-    "q426_harmonic" -> q426Sql,
-    "q406_neg_sampling" -> q406Sql,
-    "q415_hellinger" -> q415Sql,
-    "q407_bray_curtis" -> q407Sql,
-    "q402_ordered_pairs" -> q402Sql,
-    "q388_skipgram_ppmi" -> q388Sql,
-    "q384_lpa" -> q384Sql,
-    "q379_lz78" -> q379Sql,
-    "q341_burrows_delta" -> q341Sql,
-    "q339_readability" -> q339Sql,
-    "q336_nb_model" -> q336Sql,
-    "q337_nb_score" -> q337Sql,
-    "q313_kcore" -> q313Sql,
-    "q314_adamic_adar" -> q314Sql,
-    "q315_textrank" -> q315Sql,
-    "q316_rake" -> q316Sql,
-    "q323_wer" -> q323Sql,
-    "q324_calibration_error" -> q324Sql,
-    "q325_modularity" -> q325Sql,
-    "q326_assortativity" -> q326Sql,
-    "q327_good_turing" -> q327Sql,
-    "q123_bm25" -> q123Sql,
-    "q124_nfc_normalize" -> q124Sql,
-    "q125_chunk_dedup" -> q125Sql,
-    "q126_mix_sample" -> q126Sql,
-    "q127_vocab_oov" -> q127Sql,
-    "q128_pagerank" -> q128Sql,
-    "q129_semantic_dedup" -> q129Sql,
-    "q130_bigram_logprob" -> q130Sql,
-    "q137_canonical_dedup" -> q137Sql,
-    "q138_cooccur_triangles" -> q138Sql,
-    "q139_hits" -> q139Sql,
-    "q140_script_mix" -> q140Sql,
-    "q141_strip_markup" -> q141Sql,
-    "q142_pmi_collocations" -> q142Sql,
-    "q144_embed_znorm" -> q144Sql,
-    "q145_domain_stats" -> q145Sql,
-    "q146_c4_filter" -> q146Sql,
-    "q148_novel_against" -> q148Sql,
-    "q149_hashed_bow" -> q149Sql,
-    "q152_script_mix_fast" -> q140Sql, // shared oracle: same contract
-    "q153_cross_near_dup" -> q153Sql,
-    "q158_accent_fold" -> q158Sql,
-    "q160_accent_dedup" -> q160Sql,
-    "q163_semantic_dedup_ann" -> q129Sql, // shared oracle: recall-1.0 ANN ≡ exact
-    "q243_semantic_dedup_ann_auto" -> q129Sql, // shared oracle: auto config, same regime
-    "q244_mojibake_repair" -> q244Sql,
-    "q245_unigram_train" -> q245Sql,
-    "q246_unigram_apply" -> q246Sql,
-    "q247_retrieval_eval" -> q247Sql,
-    "q252_suffix_ranks" -> q252Sql,
-    "q253_repeated_suffixes" -> q253Sql,
-    "q254_longest_repeats" -> q254Sql,
-    "q259_sa_dedup_cut" -> q259Sql,
-    "q257_span_corrupt" -> q257Sql,
-    "q258_rouge_eval" -> q258Sql,
-    "q260_bigram_generate" -> q260Sql,
-    "q261_bleu_eval" -> q261Sql,
-    "q266_zipf_fit" -> q266Sql,
-    "q267_kn_gate" -> q267Sql,
-    "q269_chrf" -> q269Sql,
-    "q270_heaps_fit" -> q270Sql,
-    "q271_js_drift" -> q271Sql,
-    "q273_unimax" -> q273Sql,
-    "q274_moore_lewis" -> q274Sql,
-    "q280_distinct_n" -> q280Sql,
-    "q281_mmd_two_sample" -> q281Sql,
-    "q283_vocab_overlap" -> q283Sql,
-    "q285_cluster_js" -> q285Sql,
-    "q286_collocations" -> q286Sql,
-    "q287_template_score" -> q287Sql,
-    "q288_rbo" -> q288Sql,
-    "q292_token_f1" -> q292Sql,
-    "q296_lexical_richness" -> q296Sql,
-    "q297_fightin_words" -> q297Sql,
-    "q166_ingest_chain" -> q166Sql,
-    "q167_quantize_embed" -> q167Sql,
-    "q168_quantized_knn" -> q168Sql,
-    "q169_url_canonicalize" -> q169Sql,
-    "q170_corpus_report" -> q170Sql,
-    "q171_perplexity_tiers" -> q171Sql,
-    "q172_filter_funnel" -> q172Sql,
-    "q173_group_split" -> q173Sql,
+  def entries: Seq[Entry] = Seq(
+    Entry("q476_ktruss", q476KTruss, Some(q476Sql)),
+    Entry("q461_bipartite", q461Bipartite, Some(q461Sql)),
+    Entry("q462_reciprocity", q462Reciprocity, Some(q462Sql)),
+    Entry("q463_rich_club", q463RichClub, Some(q463Sql)),
+    Entry("q401_katz", q401Katz, Some(q401Sql)),
+    Entry("q426_harmonic", q426Harmonic, Some(q426Sql)),
+    Entry("q406_neg_sampling", q406NegSampling, Some(q406Sql)),
+    Entry("q415_hellinger", q415Hellinger, Some(q415Sql)),
+    Entry("q407_bray_curtis", q407BrayCurtis, Some(q407Sql)),
+    Entry("q402_ordered_pairs", q402OrderedPairs, Some(q402Sql)),
+    Entry("q388_skipgram_ppmi", q388SkipgramPpmi, Some(q388Sql)),
+    Entry("q384_lpa", q384Lpa, Some(q384Sql)),
+    Entry("q379_lz78", q379Lz78, Some(q379Sql)),
+    Entry("q341_burrows_delta", q341Burrows, Some(q341Sql)),
+    Entry("q339_readability", q339Readability, Some(q339Sql)),
+    Entry("q336_nb_model", q336NbModel, Some(q336Sql)),
+    Entry("q337_nb_score", q337NbScore, Some(q337Sql)),
+    Entry("q313_kcore", q313KCore, Some(q313Sql)),
+    Entry("q314_adamic_adar", q314AdamicAdar, Some(q314Sql)),
+    Entry("q315_textrank", q315TextRank, Some(q315Sql)),
+    Entry("q316_rake", q316Rake, Some(q316Sql)),
+    Entry("q323_wer", q323Wer, Some(q323Sql)),
+    Entry("q324_calibration_error", q324CalibrationError, Some(q324Sql)),
+    Entry("q325_modularity", q325Modularity, Some(q325Sql)),
+    Entry("q326_assortativity", q326Assortativity, Some(q326Sql)),
+    Entry("q327_good_turing", q327GoodTuring, Some(q327Sql)),
+    Entry("q252_suffix_ranks", q252SuffixRanks, Some(q252Sql)),
+    Entry("q257_span_corrupt", q257SpanCorrupt, Some(q257Sql)),
+    Entry("q258_rouge_eval", q258RougeEval, Some(q258Sql)),
+    Entry("q260_bigram_generate", q260BigramGenerate, Some(q260Sql)),
+    Entry("q261_bleu_eval", q261BleuEval, Some(q261Sql)),
+    Entry("q266_zipf_fit", q266ZipfFit, Some(q266Sql)),
+    Entry("q267_kn_gate", q267KnGate, Some(q267Sql)),
+    Entry("q269_chrf", q269Chrf, Some(q269Sql)),
+    Entry("q270_heaps_fit", q270HeapsFit, Some(q270Sql)),
+    Entry("q271_js_drift", q271JsDrift, Some(q271Sql)),
+    Entry("q273_unimax", q273Unimax, Some(q273Sql)),
+    Entry("q274_moore_lewis", q274MooreLewis, Some(q274Sql)),
+    Entry("q280_distinct_n", q280DistinctN, Some(q280Sql)),
+    Entry("q281_mmd_two_sample", q281MmdTwoSample, Some(q281Sql)),
+    Entry("q283_vocab_overlap", q283VocabOverlap, Some(q283Sql)),
+    Entry("q285_cluster_js", q285ClusterJs, Some(q285Sql)),
+    Entry("q286_collocations", q286Collocations, Some(q286Sql)),
+    Entry("q287_template_score", q287TemplateScore, Some(q287Sql)),
+    Entry("q288_rbo", q288Rbo, Some(q288Sql)),
+    Entry("q292_token_f1", q292TokenF1, Some(q292Sql)),
+    Entry("q296_lexical_richness", q296LexicalRichness, Some(q296Sql)),
+    Entry("q297_fightin_words", q297FightinWords, Some(q297Sql)),
+    Entry("q253_repeated_suffixes", q253RepeatedSuffixes, Some(q253Sql)),
+    Entry("q254_longest_repeats", q254LongestRepeats, Some(q254Sql)),
+    Entry("q259_sa_dedup_cut", q259SaDedupCut, Some(q259Sql)),
+    Entry("q123_bm25", q123Bm25, Some(q123Sql)),
+    Entry("q124_nfc_normalize", q124NfcNormalize, Some(q124Sql)),
+    Entry("q125_chunk_dedup", q125ChunkDedup, Some(q125Sql)),
+    Entry("q126_mix_sample", q126MixSample, Some(q126Sql)),
+    Entry("q127_vocab_oov", q127VocabOov, Some(q127Sql)),
+    Entry("q128_pagerank", q128PageRank, Some(q128Sql)),
+    Entry("q129_semantic_dedup", q129SemanticDedup, Some(q129Sql)),
+    Entry("q130_bigram_logprob", q130BigramLogprob, Some(q130Sql)),
+    Entry("q137_canonical_dedup", q137CanonicalDedup, Some(q137Sql)),
+    Entry("q138_cooccur_triangles", q138Triangles, Some(q138Sql)),
+    Entry("q139_hits", q139Hits, Some(q139Sql)),
+    Entry("q140_script_mix", q140ScriptMix, Some(q140Sql)),
+    Entry("q141_strip_markup", q141StripMarkup, Some(q141Sql)),
+    Entry("q142_pmi_collocations", q142PmiCollocations, Some(q142Sql)),
+    Entry("q144_embed_znorm", q144EmbedZnorm, Some(q144Sql)),
+    Entry("q145_domain_stats", q145DomainStats, Some(q145Sql)),
+    Entry("q146_c4_filter", q146C4Filter, Some(q146Sql)),
+    Entry("q148_novel_against", q148NovelAgainst, Some(q148Sql)),
+    Entry("q149_hashed_bow", q149HashedBow, Some(q149Sql)),
+    Entry("q152_script_mix_fast", q152ScriptMixFast, Some(q140Sql)), // shared oracle: same contract
+    Entry("q153_cross_near_dup", q153CrossNearDup, Some(q153Sql)),
+    Entry("q158_accent_fold", q158AccentFold, Some(q158Sql)),
+    Entry("q160_accent_dedup", q160AccentDedup, Some(q160Sql)),
+    Entry("q162_count_min", q162CountMin, None),
+    // shared oracle: recall-1.0 ANN ≡ exact
+    Entry("q163_semantic_dedup_ann", q163SemanticDedupAnn, Some(q129Sql)),
+    // shared oracle: auto config, same regime
+    Entry("q243_semantic_dedup_ann_auto", q243SemanticDedupAnnAuto, Some(q129Sql)),
+    Entry("q244_mojibake_repair", q244MojibakeRepair, Some(q244Sql)),
+    Entry("q245_unigram_train", q245UnigramTrain, Some(q245Sql)),
+    Entry("q246_unigram_apply", q246UnigramApply, Some(q246Sql)),
+    Entry("q247_retrieval_eval", q247RetrievalEval, Some(q247Sql)),
+    Entry("q166_ingest_chain", q166IngestChain, Some(q166Sql)),
+    Entry("q167_quantize_embed", q167QuantizeEmbed, Some(q167Sql)),
+    Entry("q168_quantized_knn", q168QuantizedKnn, Some(q168Sql)),
+    Entry("q169_url_canonicalize", q169UrlCanonicalize, Some(q169Sql)),
+    Entry("q170_corpus_report", q170CorpusReport, Some(q170Sql)),
+    Entry("q171_perplexity_tiers", q171PerplexityTiers, Some(q171Sql)),
+    Entry("q172_filter_funnel", q172FilterFunnel, Some(q172Sql)),
+    Entry("q173_group_split", q173GroupSplit, Some(q173Sql)),
     // shared oracle: recall-1.0 ANN candidates ≡ full-corpus MIPS
-    "q174_quantized_knn_ann" -> q168Sql,
-    "q175_semantic_contamination" -> q175Sql,
-    "q176_boilerplate_lines" -> q176Sql,
-    "q177_dedup_lines_within" -> q177Sql,
-    "q178_shared_ngrams" -> q178Sql,
-    "q179_cross_set_semantic_pairs" -> q179Sql,
-    "q180_long_run_contamination" -> q180Sql,
-    "q181_bpe_pairs" -> q181Sql,
-    "q184_coverage_cut" -> q184Sql,
-    "q185_rrf_fusion" -> q185Sql,
-    "q189_bpe_apply" -> q189Sql,
-    "q220_bpe_train" -> q220Sql,
-    "q248_wordpiece_train" -> q248Sql,
-    "q221_count_min_portable" -> q221Sql,
-    "q222_heavy_hitters_portable" -> q222Sql,
-    "q225_quality_classifier_train" -> q225Sql,
-    "q226_quality_classifier_score" -> q226Sql,
-    "q228_tag_mix" -> q228Sql,
-    "q229_kneser_ney_lm" -> q229Sql,
-    "q230_score_calibration" -> q230Sql,
-    "q231_curation_funnel" -> q231Sql,
-    "q190_principal_component" -> q190Sql,
-    "q191_abtt_whiten" -> q191Sql,
-    "q192_dsir_select" -> q192Sql,
-    "q197_hard_negatives" -> q197Sql,
-    "q198_temperature_mix" -> q198Sql,
-    "q199_interleave" -> q199Sql,
-    "q200_content_extract" -> q200Sql,
-    "q201_domain_policy" -> q201Sql,
-    "q202_pipeline_e2e" -> q202Sql,
-    "q203_held_out_lm" -> q203Sql,
-    "q204_sentences" -> q204Sql,
-    "q205_image_dedup" -> q205Sql,
+    Entry("q174_quantized_knn_ann", q174QuantizedKnnAnn, Some(q168Sql)),
+    Entry("q175_semantic_contamination", q175SemanticContamination, Some(q175Sql)),
+    Entry("q176_boilerplate_lines", q176BoilerplateLines, Some(q176Sql)),
+    Entry("q177_dedup_lines_within", q177DedupLinesWithin, Some(q177Sql)),
+    Entry("q178_shared_ngrams", q178SharedNgrams, Some(q178Sql)),
+    Entry("q179_cross_set_semantic_pairs", q179CrossSetSemanticPairs, Some(q179Sql)),
+    Entry("q180_long_run_contamination", q180LongRunContamination, Some(q180Sql)),
+    Entry("q181_bpe_pairs", q181BpePairs, Some(q181Sql)),
+    Entry("q184_coverage_cut", q184CoverageCut, Some(q184Sql)),
+    Entry("q185_rrf_fusion", q185RrfFusion, Some(q185Sql)),
+    Entry("q189_bpe_apply", q189BpeApply, Some(q189Sql)),
+    Entry("q220_bpe_train", q220BpeTrain, Some(q220Sql)),
+    Entry("q248_wordpiece_train", q248WordpieceTrain, Some(q248Sql)),
+    Entry("q221_count_min_portable", q221CountMinPortable, Some(q221Sql)),
+    Entry("q222_heavy_hitters_portable", q222HeavyHittersPortable, Some(q222Sql)),
+    Entry("q225_quality_classifier_train", q225QualityClassifierTrain, Some(q225Sql)),
+    Entry("q226_quality_classifier_score", q226QualityClassifierScore, Some(q226Sql)),
+    Entry("q228_tag_mix", q228TagMix, Some(q228Sql)),
+    Entry("q229_kneser_ney_lm", q229KneserNeyLm, Some(q229Sql)),
+    Entry("q230_score_calibration", q230ScoreCalibration, Some(q230Sql)),
+    Entry("q231_curation_funnel", q231CurationFunnel, Some(q231Sql)),
+    Entry("q190_principal_component", q190PrincipalComponent, Some(q190Sql)),
+    Entry("q191_abtt_whiten", q191AbttWhiten, Some(q191Sql)),
+    Entry("q192_dsir_select", q192DsirSelect, Some(q192Sql)),
+    Entry("q197_hard_negatives", q197HardNegatives, Some(q197Sql)),
+    Entry("q198_temperature_mix", q198TemperatureMix, Some(q198Sql)),
+    Entry("q199_interleave", q199Interleave, Some(q199Sql)),
+    Entry("q200_content_extract", q200ContentExtract, Some(q200Sql)),
+    Entry("q201_domain_policy", q201DomainPolicy, Some(q201Sql)),
+    Entry("q202_pipeline_e2e", q202PipelineE2e, Some(q202Sql)),
+    Entry("q203_held_out_lm", q203HeldOutLm, Some(q203Sql)),
+    Entry("q204_sentences", q204Sentences, Some(q204Sql)),
+    Entry("q205_image_dedup", q205ImageDedup, Some(q205Sql)),
     // shared oracle: recall-1.0 LSH candidates ≡ the exact miner
-    "q208_hard_negatives_ann" -> q197Sql,
-    "q209_split_leakage" -> q209Sql,
-    "q210_fixed_stratified" -> q210Sql)
+    Entry("q208_hard_negatives_ann", q208HardNegativesAnn, Some(q197Sql)),
+    Entry("q209_split_leakage", q209SplitLeakage, Some(q209Sql)),
+    Entry("q210_fixed_stratified", q210FixedStratified, Some(q210Sql)))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Entry, QueryFile}
 import graft.core.DbObjectCompiler
 import graft.db.{AllowedValuesTest, ColumnDdl, Ddl, SparkDatabase, UniqueTest}
 import graft.tasks.{CopyTask, RunArguments, TaskContext}
@@ -14,7 +15,7 @@ import graft.tasks.{CopyTask, RunArguments, TaskContext}
   * gate. The DuckDB oracle re-states each operator's declarative semantics
   * (merge_tables.sql / copy.py projection / standard_tests.sql).
   */
-object EtlShapes {
+object EtlShapes extends QueryFile {
 
   private def fail(e: graft.core.GraftError): Nothing =
     throw new RuntimeException(e.toString)
@@ -531,31 +532,17 @@ object EtlShapes {
   val q188Sql: String =
     "SELECT l_orderkey, l_partkey, l_quantity FROM lineitem"
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q188_compact" -> (q188Compact _),
-    "q22_merge" -> (q22Merge _),
-    "q23_copy" -> (q23Copy _),
-    "q24_violations" -> (q24Violations _),
-    "q33_copy_incremental" -> (q33CopyIncremental _),
-    "q72_script_chain" -> (q72ScriptChain _),
-    "q77_copy_csv" -> (q77CopyCsv _),
-    "q94_bucketed_join" -> (q94BucketedJoin _),
-    "q109_copy_jsonl" -> (q109CopyJsonl _),
-    "q135_copy_jdbc" -> (q135CopyJdbc _),
-    "q136_copy_jdbc_incremental" -> (q136CopyJdbcIncremental _),
-    "q143_copy_orc" -> (q143CopyOrc _))
-
-  def oracles: Map[String, String] = Map(
-    "q188_compact" -> q188Sql,
-    "q22_merge" -> q22Sql,
-    "q23_copy" -> q23Sql,
-    "q24_violations" -> q24Sql,
-    "q33_copy_incremental" -> q33Sql,
-    "q72_script_chain" -> q72Sql,
-    "q77_copy_csv" -> q77Sql,
-    "q94_bucketed_join" -> q94Sql,
-    "q109_copy_jsonl" -> q109Sql,
-    "q135_copy_jdbc" -> q135Sql,
-    "q136_copy_jdbc_incremental" -> q136Sql,
-    "q143_copy_orc" -> q143Sql)
+  def entries: Seq[Entry] = Seq(
+    Entry("q188_compact", q188Compact, Some(q188Sql), mutating = true),
+    Entry("q22_merge", q22Merge, Some(q22Sql), mutating = true),
+    Entry("q23_copy", q23Copy, Some(q23Sql), mutating = true),
+    Entry("q24_violations", q24Violations, Some(q24Sql)),
+    Entry("q33_copy_incremental", q33CopyIncremental, Some(q33Sql), mutating = true),
+    Entry("q72_script_chain", q72ScriptChain, Some(q72Sql), mutating = true),
+    Entry("q77_copy_csv", q77CopyCsv, Some(q77Sql), mutating = true),
+    Entry("q94_bucketed_join", q94BucketedJoin, Some(q94Sql), mutating = true),
+    Entry("q109_copy_jsonl", q109CopyJsonl, Some(q109Sql), mutating = true),
+    Entry("q135_copy_jdbc", q135CopyJdbc, Some(q135Sql), mutating = true),
+    Entry("q136_copy_jdbc_incremental", q136CopyJdbcIncremental, Some(q136Sql), mutating = true),
+    Entry("q143_copy_orc", q143CopyOrc, Some(q143Sql), mutating = true))
 }

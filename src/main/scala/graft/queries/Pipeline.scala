@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Entry, QueryFile}
 import graft.pipeline.{Multimodal, Sessionize, Similarity, TextClean, TextDedup, TextStats}
 
 /** LLM-data-pipeline corpus over the `documents` / `embeddings` / `events`
@@ -17,7 +18,7 @@ import graft.pipeline.{Multimodal, Sessionize, Similarity, TextClean, TextDedup,
   * (rows-only driver check) and their recall against the exact answer is
   * asserted in the ScalaTest suite.
   */
-object Pipeline {
+object Pipeline extends QueryFile {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
@@ -2345,92 +2346,93 @@ object Pipeline {
       |FROM fin f, (SELECT CAST(unnest(range(1, 6)) AS INTEGER) AS j) u
       |WHERE u.j <= len(f.sel)""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q390_weighted_percentiles" -> (q390WeightedPercentiles _),
-    "q391_chao1" -> (q391Chao1 _),
-    "q386_cluster_agreement" -> (q386ClusterAgreement _),
-    "q382_random_projection" -> (q382RandomProjection _),
-    "q380_stratified_sample" -> (q380StratifiedSample _),
-    "q361_skew_advisor" -> (q361SkewAdvisor _),
-    "q360_hubness" -> (q360Hubness _),
-    "q445_hubness_ann" -> (q445HubnessAnn _),
-    "q359_winnowing" -> (q359Winnowing _),
-    "q358_dp_dispersion" -> (q358DpDispersion _),
-    "q357_mtld" -> (q357Mtld _),
-    "q352_dbscan_ann" -> (q352DbscanAnn _),
-    "q482_dbscan_ann_auto" -> (q482DbscanAnnAuto _),
-    "q483_hubness_ann_auto" -> (q483HubnessAnnAuto _),
-    "q348_mmr" -> (q348Mmr _),
-    "q347_dbscan" -> (q347Dbscan _),
-    "q345_knn_shapley" -> (q345KnnShapley _),
-    "q344_silhouette" -> (q344Silhouette _),
-    "q418_davies_bouldin" -> (q418DaviesBouldin _),
-    "q343_cdc_dup_pairs" -> (q343CdcDup _),
-    "q342_cdc_chunks" -> (q342CdcChunks _),
-    "q317_quantile_normalize" -> (q317QuantileNormalize _),
-    "q318_pack_ffd" -> (q318PackFfd _),
-    "q15_dedup_exact" -> (q15DedupExact _),
-    "q16_ngram_jaccard" -> (q16NgramJaccard _),
-    "q275_containment" -> (q275Containment _),
-    "q282_card_audit" -> (q282CardAudit _),
-    "q284_percentile_gate" -> (q284PercentileGate _),
-    "q17_knn" -> (q17Knn _),
-    "q18_text_stats" -> (q18TextStats _),
-    "q19_quality" -> (q19Quality _),
-    "q20_lang_id" -> (q20LangId _),
-    "q21_sessions" -> (q21Sessions _),
-    "q25_multimodal" -> (q25Multimodal _),
-    "q26_embed_dup" -> (q26EmbedDup _),
-    "q32_json_props" -> (q32JsonProps _),
-    "q207_variant_props" -> (q207VariantProps _),
-    "q46_dup_clusters" -> (q46DupClusters _),
-    "q47_regex_tokens" -> (q47RegexTokens _),
-    "q48_embed_dup_blocked" -> (q48EmbedDupBlocked _),
-    "q49_image_headers" -> (q49ImageHeaders _),
-    "q50_hash_split" -> (q50HashSplit _),
-    "q51_contamination" -> (q51Contamination _),
-    "q52_repetition" -> (q52Repetition _),
-    "q53_shuffle" -> (q53Shuffle _),
-    "q54_cluster_reps" -> (q54ClusterReps _),
-    "q57_pii_scrub" -> (q57PiiScrub _),
-    "q60_tfidf_terms" -> (q60TfidfTerms _),
-    "q61_stratified_sample" -> (q61StratifiedSample _),
-    "q64_approx_distinct" -> (q64ApproxDistinct _),
-    "q65_approx_quantiles" -> (q65ApproxQuantiles _),
-    "q71_frame_sample" -> (q71FrameSample _),
-    "q73_heavy_hitters" -> (q73HeavyHitters _),
-    "q76_edit_near_dup" -> (q76EditNearDup _),
-    "q255_entity_resolution" -> (q255EntityResolution _),
-    "q80_weighted_sample" -> (q80WeightedSample _),
-    "q81_imageio_round_trip" -> (q81ImageioRoundTrip _),
-    "q82_sql_functions" -> (q82SqlFunctions _),
-    "q87_embed_centroids" -> (q87EmbedCentroids _),
-    "q92_array_funcs" -> (q92ArrayFuncs _),
-    "q93_image_ahash" -> (q93ImageAhash _),
-    "q223_jpeg_profile" -> (q223JpegProfile _),
-    "q95_audio_stats" -> (q95AudioStats _),
-    "q99_chunking" -> (q99Chunking _),
-    "q100_sequence_packing" -> (q100SequencePacking _),
-    "q27_minhash_lsh" -> (q27MinhashLsh _),
-    "q211_minhash_portable" -> (q211MinhashPortable _),
-    "q213_simhash_portable" -> (q213SimhashPortable _),
-    "q214_cluster_sizes" -> (q214ClusterSizes _),
-    "q217_fingerprints_portable" -> (q217FingerprintsPortable _),
-    "q218_ann_ivf_portable" -> (q218AnnIvfPortable _),
-    "q249_semdedup" -> (q249SemDeDup _),
-    "q224_ann_ivfpq_portable" -> (q224AnnIvfPq _),
-    "q219_minhash_incremental" -> (q219MinhashIncremental _),
-    "q28_ann_lsh" -> (q28AnnLsh _),
-    "q31_ann_ivf" -> (q31AnnIvf _),
-    "q29_simhash_pairs" -> (q29SimhashPairs _),
-    "q101_compression_signal" -> (q101CompressionSignal _),
-    "q112_jaccard_prefix" -> (q112JaccardPrefix _),
-    "q117_incremental_dedup" -> (q117IncrementalDedup _),
-    "q119_training_prep" -> (q119TrainingPrep _),
-    "q120_image_resize" -> (q120ImageResize _),
-    "q121_audio_decimate" -> (q121AudioDecimate _),
-    "q122_gif_frames" -> (q122GifFrames _),
-    "q30_fingerprints" -> (q30Fingerprints _))
+  def entries: Seq[Entry] = Seq(
+    Entry("q390_weighted_percentiles", q390WeightedPercentiles, Some(q390Sql)),
+    Entry("q391_chao1", q391Chao1, Some(q391Sql)),
+    Entry("q386_cluster_agreement", q386ClusterAgreement, Some(q386Sql)),
+    Entry("q382_random_projection", q382RandomProjection, Some(q382Sql)),
+    Entry("q380_stratified_sample", q380StratifiedSample, Some(q380Sql)),
+    Entry("q361_skew_advisor", q361SkewAdvisor, Some(q361Sql)),
+    Entry("q360_hubness", q360Hubness, Some(q360Sql)),
+    Entry("q445_hubness_ann", q445HubnessAnn, Some(q360Sql)),
+    Entry("q359_winnowing", q359Winnowing, Some(q359Sql)),
+    Entry("q358_dp_dispersion", q358DpDispersion, Some(q358Sql)),
+    Entry("q357_mtld", q357Mtld, Some(q357Sql)),
+    Entry("q352_dbscan_ann", q352DbscanAnn, Some(q347Sql)),
+    Entry("q482_dbscan_ann_auto", q482DbscanAnnAuto, Some(q347Sql)),
+    Entry("q483_hubness_ann_auto", q483HubnessAnnAuto, Some(q360Sql)),
+    Entry("q348_mmr", q348Mmr, Some(q348Sql)),
+    Entry("q347_dbscan", q347Dbscan, Some(q347Sql)),
+    Entry("q345_knn_shapley", q345KnnShapley, Some(q345Sql)),
+    Entry("q344_silhouette", q344Silhouette, Some(q344Sql)),
+    Entry("q418_davies_bouldin", q418DaviesBouldin, Some(q418Sql)),
+    Entry("q343_cdc_dup_pairs", q343CdcDup, Some(q343Sql)),
+    Entry("q342_cdc_chunks", q342CdcChunks, Some(q342Sql)),
+    Entry("q317_quantile_normalize", q317QuantileNormalize, Some(q317Sql)),
+    Entry("q318_pack_ffd", q318PackFfd, Some(q318Sql)),
+    Entry("q15_dedup_exact", q15DedupExact, Some(q15Sql)),
+    Entry("q16_ngram_jaccard", q16NgramJaccard, Some(q16Sql)),
+    Entry("q275_containment", q275Containment, Some(q275Sql)),
+    Entry("q282_card_audit", q282CardAudit, Some(q282Sql)),
+    Entry("q284_percentile_gate", q284PercentileGate, Some(q284Sql)),
+    Entry("q17_knn", q17Knn, Some(q17Sql)),
+    Entry("q18_text_stats", q18TextStats, Some(q18Sql)),
+    Entry("q19_quality", q19Quality, Some(q19Sql)),
+    Entry("q20_lang_id", q20LangId, Some(q20Sql)),
+    Entry("q21_sessions", q21Sessions, Some(q21Sql)),
+    Entry("q25_multimodal", q25Multimodal, Some(q25Sql)),
+    Entry("q26_embed_dup", q26EmbedDup, Some(q26Sql)),
+    Entry("q32_json_props", q32JsonProps, Some(q32Sql)),
+    Entry("q207_variant_props", q207VariantProps, Some(q207Sql)),
+    Entry("q46_dup_clusters", q46DupClusters, Some(q46Sql)),
+    Entry("q47_regex_tokens", q47RegexTokens, Some(q47Sql)),
+    Entry("q48_embed_dup_blocked", q48EmbedDupBlocked, Some(q26Sql)), // identical contract to q26
+    Entry("q49_image_headers", q49ImageHeaders, Some(q49Sql)),
+    Entry("q50_hash_split", q50HashSplit, Some(q50Sql)),
+    Entry("q51_contamination", q51Contamination, Some(q51Sql)),
+    Entry("q52_repetition", q52Repetition, Some(q52Sql)),
+    Entry("q53_shuffle", q53Shuffle, Some(q53Sql)),
+    Entry("q54_cluster_reps", q54ClusterReps, Some(q54Sql)),
+    Entry("q57_pii_scrub", q57PiiScrub, Some(q57Sql)),
+    Entry("q60_tfidf_terms", q60TfidfTerms, Some(q60Sql)),
+    Entry("q61_stratified_sample", q61StratifiedSample, Some(q61Sql)),
+    Entry("q64_approx_distinct", q64ApproxDistinct, None),
+    Entry("q65_approx_quantiles", q65ApproxQuantiles, None),
+    Entry("q71_frame_sample", q71FrameSample, Some(q71Sql)),
+    Entry("q73_heavy_hitters", q73HeavyHitters, None),
+    Entry("q76_edit_near_dup", q76EditNearDup, Some(q76Sql)),
+    Entry("q255_entity_resolution", q255EntityResolution, Some(q255Sql)),
+    Entry("q80_weighted_sample", q80WeightedSample, Some(q80Sql)),
+    Entry("q81_imageio_round_trip", q81ImageioRoundTrip, Some(q81Sql)),
+    Entry("q82_sql_functions", q82SqlFunctions, Some(q82Sql)),
+    Entry("q87_embed_centroids", q87EmbedCentroids, Some(q87Sql)),
+    Entry("q92_array_funcs", q92ArrayFuncs, Some(q92Sql)),
+    Entry("q93_image_ahash", q93ImageAhash, Some(q93Sql)),
+    Entry("q223_jpeg_profile", q223JpegProfile, None),
+    Entry("q95_audio_stats", q95AudioStats, Some(q95Sql)),
+    Entry("q99_chunking", q99Chunking, Some(q99Sql)),
+    Entry("q100_sequence_packing", q100SequencePacking, Some(q100Sql)),
+    Entry("q27_minhash_lsh", q27MinhashLsh, None),
+    Entry("q211_minhash_portable", q211MinhashPortable, Some(q211Sql)),
+    Entry("q213_simhash_portable", q213SimhashPortable, Some(q213Sql)),
+    Entry("q214_cluster_sizes", q214ClusterSizes, Some(q214Sql)),
+    Entry("q217_fingerprints_portable", q217FingerprintsPortable, Some(q217Sql)),
+    Entry("q218_ann_ivf_portable", q218AnnIvfPortable, Some(q218Sql)),
+    Entry("q249_semdedup", q249SemDeDup, Some(q249Sql)),
+    Entry("q224_ann_ivfpq_portable", q224AnnIvfPq, Some(q224Sql)),
+    Entry("q219_minhash_incremental", q219MinhashIncremental, Some(q219Sql)),
+    Entry("q28_ann_lsh", q28AnnLsh, Some(q28Sql)),
+    Entry("q31_ann_ivf", q31AnnIvf, None),
+    Entry("q29_simhash_pairs", q29SimhashPairs, None),
+    Entry("q101_compression_signal", q101CompressionSignal, None),
+    // lossless ⇒ q16's SQL
+    Entry("q112_jaccard_prefix", q112JaccardPrefix, Some(jaccardOracle(0.5))),
+    Entry("q117_incremental_dedup", q117IncrementalDedup, Some(q117Sql)),
+    Entry("q119_training_prep", q119TrainingPrep, Some(q119Sql)),
+    Entry("q120_image_resize", q120ImageResize, Some(q120Sql)),
+    Entry("q121_audio_decimate", q121AudioDecimate, Some(q121Sql)),
+    Entry("q122_gif_frames", q122GifFrames, Some(q122Sql)),
+    Entry("q30_fingerprints", q30Fingerprints, None))
 
   // q57: PII scrub — the fixture text contains no PII, so the entry
   // plants deterministic doc_id-derived PII in-plan (an email, an IPv4,
@@ -3069,82 +3071,4 @@ object Pipeline {
       |    CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
       |      % 1000000 AS h
       |  FROM pk)""".stripMargin
-
-  def oracles: Map[String, String] = Map(
-    "q390_weighted_percentiles" -> q390Sql,
-    "q391_chao1" -> q391Sql,
-    "q386_cluster_agreement" -> q386Sql,
-    "q382_random_projection" -> q382Sql,
-    "q380_stratified_sample" -> q380Sql,
-    "q348_mmr" -> q348Sql,
-    "q347_dbscan" -> q347Sql,
-    "q352_dbscan_ann" -> q347Sql,
-    "q482_dbscan_ann_auto" -> q347Sql,
-    "q357_mtld" -> q357Sql,
-    "q358_dp_dispersion" -> q358Sql,
-    "q359_winnowing" -> q359Sql,
-    "q360_hubness" -> q360Sql,
-    "q445_hubness_ann" -> q360Sql,
-    "q483_hubness_ann_auto" -> q360Sql,
-    "q361_skew_advisor" -> q361Sql,
-    "q345_knn_shapley" -> q345Sql,
-    "q344_silhouette" -> q344Sql,
-    "q418_davies_bouldin" -> q418Sql,
-    "q343_cdc_dup_pairs" -> q343Sql,
-    "q342_cdc_chunks" -> q342Sql,
-    "q317_quantile_normalize" -> q317Sql,
-    "q318_pack_ffd" -> q318Sql,
-    "q15_dedup_exact" -> q15Sql,
-    "q16_ngram_jaccard" -> q16Sql,
-    "q275_containment" -> q275Sql,
-    "q282_card_audit" -> q282Sql,
-    "q284_percentile_gate" -> q284Sql,
-    "q17_knn" -> q17Sql,
-    "q18_text_stats" -> q18Sql,
-    "q19_quality" -> q19Sql,
-    "q20_lang_id" -> q20Sql,
-    "q21_sessions" -> q21Sql,
-    "q25_multimodal" -> q25Sql,
-    "q26_embed_dup" -> q26Sql,
-    "q32_json_props" -> q32Sql,
-    "q207_variant_props" -> q207Sql,
-    "q211_minhash_portable" -> q211Sql,
-    "q28_ann_lsh" -> q28Sql,
-    "q213_simhash_portable" -> q213Sql,
-    "q214_cluster_sizes" -> q214Sql,
-    "q217_fingerprints_portable" -> q217Sql,
-    "q218_ann_ivf_portable" -> q218Sql,
-    "q249_semdedup" -> q249Sql,
-    "q224_ann_ivfpq_portable" -> q224Sql,
-    "q219_minhash_incremental" -> q219Sql,
-    "q46_dup_clusters" -> q46Sql,
-    "q47_regex_tokens" -> q47Sql,
-    "q48_embed_dup_blocked" -> q26Sql, // identical contract to q26
-    "q49_image_headers" -> q49Sql,
-    "q50_hash_split" -> q50Sql,
-    "q51_contamination" -> q51Sql,
-    "q52_repetition" -> q52Sql,
-    "q53_shuffle" -> q53Sql,
-    "q54_cluster_reps" -> q54Sql,
-    "q57_pii_scrub" -> q57Sql,
-    "q60_tfidf_terms" -> q60Sql,
-    "q61_stratified_sample" -> q61Sql,
-    "q71_frame_sample" -> q71Sql,
-    "q76_edit_near_dup" -> q76Sql,
-    "q255_entity_resolution" -> q255Sql,
-    "q80_weighted_sample" -> q80Sql,
-    "q81_imageio_round_trip" -> q81Sql,
-    "q82_sql_functions" -> q82Sql,
-    "q87_embed_centroids" -> q87Sql,
-    "q92_array_funcs" -> q92Sql,
-    "q93_image_ahash" -> q93Sql,
-    "q95_audio_stats" -> q95Sql,
-    "q99_chunking" -> q99Sql,
-    "q100_sequence_packing" -> q100Sql,
-    "q112_jaccard_prefix" -> jaccardOracle(0.5), // lossless ⇒ q16's SQL
-    "q117_incremental_dedup" -> q117Sql,
-    "q119_training_prep" -> q119Sql,
-    "q120_image_resize" -> q120Sql,
-    "q121_audio_decimate" -> q121Sql,
-    "q122_gif_frames" -> q122Sql)
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Entry, QueryFile}
 
 /** Relational-surface corpus (SURVEY.md §2b): every construct the reference's
   * generated/accepted SQL exercises, expressed as idiomatic DataFrame plans so
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
   * the DuckDB oracle produce bit-identical results (double summation order is
   * nondeterministic across engines; decimal addition is exact).
   */
-object Relational {
+object Relational extends QueryFile {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
@@ -896,81 +897,42 @@ object Relational {
       |WHERE l_shipdate >= TIMESTAMP '1996-03-01'
       |  AND l_shipdate < TIMESTAMP '1996-04-01'""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg _),
-    "q2_filter_project" -> (q2FilterProject _),
-    "q3_multi_join" -> (q3MultiJoin _),
-    "q4_semi_join" -> (q4SemiJoin _),
-    "q5_anti_join" -> (q5AntiJoin _),
-    "q6_union" -> (q6Union _),
-    "q7_case_cast_concat" -> (q7CaseCastConcat _),
-    "q8_having" -> (q8Having _),
-    "q9_topk" -> (q9TopK _),
-    "q10_distinct" -> (q10Distinct _),
-    "q11_window" -> (q11Window _),
-    "q12_rollup" -> (q12Rollup _),
-    "q13_in_subquery" -> (q13InSubquery _),
-    "q14_watermark" -> (q14Watermark _),
-    "q34_full_outer" -> (q34FullOuter _),
-    "q35_scalar_funcs" -> (q35ScalarFuncs _),
-    "q36_window_funcs" -> (q36WindowFuncs _),
-    "q151_window_dist_battery" -> (q151WindowDistBattery _),
-    "q155_join_reorder" -> (q155JoinReorder _),
-    "q157_null_semantics" -> (q157NullSemantics _),
-    "q159_window_distinct" -> (q159WindowDistinct _),
-    "q164_cust_dist" -> (q164CustDist _),
-    "q165_global_sales_opp" -> (q165GlobalSalesOpp _),
-    "q37_set_ops" -> (q37SetOps _),
-    "q40_grouping_sets" -> (q40GroupingSets _),
-    "q41_correlated_scalar" -> (q41CorrelatedScalar _),
-    "q42_date_funcs" -> (q42DateFuncs _),
-    "q43_string_funcs" -> (q43StringFuncs _),
-    "q44_ordered_agg" -> (q44OrderedAgg _),
-    "q45_pivot" -> (q45Pivot _),
-    "q67_unpivot" -> (q67Unpivot _),
-    "q88_group_percentiles" -> (q88GroupPercentiles _),
-    "q193_top_supplier" -> (q193TopSupplier _),
-    "q194_small_qty_revenue" -> (q194SmallQtyRevenue _),
-    "q195_large_orders" -> (q195LargeOrders _),
-    "q196_returned_items" -> (q196ReturnedItems _),
-    "q216_promo_revenue" -> (q216PromoRevenue _))
-
-  def oracles: Map[String, String] = Map(
-    "q1_agg" -> q1Sql,
-    "q2_filter_project" -> q2Sql,
-    "q3_multi_join" -> q3Sql,
-    "q4_semi_join" -> q4Sql,
-    "q5_anti_join" -> q5Sql,
-    "q6_union" -> q6Sql,
-    "q7_case_cast_concat" -> q7Sql,
-    "q8_having" -> q8Sql,
-    "q9_topk" -> q9Sql,
-    "q10_distinct" -> q10Sql,
-    "q11_window" -> q11Sql,
-    "q12_rollup" -> q12Sql,
-    "q13_in_subquery" -> q13Sql,
-    "q14_watermark" -> q14Sql,
-    "q34_full_outer" -> q34Sql,
-    "q35_scalar_funcs" -> q35Sql,
-    "q36_window_funcs" -> q36Sql,
-    "q151_window_dist_battery" -> q151Sql,
-    "q155_join_reorder" -> q155Sql,
-    "q157_null_semantics" -> q157Sql,
-    "q159_window_distinct" -> q159Sql,
-    "q164_cust_dist" -> q164Sql,
-    "q165_global_sales_opp" -> q165Sql,
-    "q37_set_ops" -> q37Sql,
-    "q40_grouping_sets" -> q40Sql,
-    "q41_correlated_scalar" -> q41Sql,
-    "q42_date_funcs" -> q42Sql,
-    "q43_string_funcs" -> q43Sql,
-    "q44_ordered_agg" -> q44Sql,
-    "q45_pivot" -> q45Sql,
-    "q67_unpivot" -> q67Sql,
-    "q88_group_percentiles" -> q88Sql,
-    "q193_top_supplier" -> q193Sql,
-    "q194_small_qty_revenue" -> q194Sql,
-    "q195_large_orders" -> q195Sql,
-    "q196_returned_items" -> q196Sql,
-    "q216_promo_revenue" -> q216Sql)
+  def entries: Seq[Entry] = Seq(
+    Entry("q1_agg", q1Agg, Some(q1Sql)),
+    Entry("q2_filter_project", q2FilterProject, Some(q2Sql)),
+    Entry("q3_multi_join", q3MultiJoin, Some(q3Sql)),
+    Entry("q4_semi_join", q4SemiJoin, Some(q4Sql)),
+    Entry("q5_anti_join", q5AntiJoin, Some(q5Sql)),
+    Entry("q6_union", q6Union, Some(q6Sql)),
+    Entry("q7_case_cast_concat", q7CaseCastConcat, Some(q7Sql)),
+    Entry("q8_having", q8Having, Some(q8Sql)),
+    Entry("q9_topk", q9TopK, Some(q9Sql)),
+    Entry("q10_distinct", q10Distinct, Some(q10Sql)),
+    Entry("q11_window", q11Window, Some(q11Sql)),
+    Entry("q12_rollup", q12Rollup, Some(q12Sql)),
+    Entry("q13_in_subquery", q13InSubquery, Some(q13Sql)),
+    Entry("q14_watermark", q14Watermark, Some(q14Sql)),
+    Entry("q34_full_outer", q34FullOuter, Some(q34Sql)),
+    Entry("q35_scalar_funcs", q35ScalarFuncs, Some(q35Sql)),
+    Entry("q36_window_funcs", q36WindowFuncs, Some(q36Sql)),
+    Entry("q151_window_dist_battery", q151WindowDistBattery, Some(q151Sql)),
+    Entry("q155_join_reorder", q155JoinReorder, Some(q155Sql)),
+    Entry("q157_null_semantics", q157NullSemantics, Some(q157Sql)),
+    Entry("q159_window_distinct", q159WindowDistinct, Some(q159Sql)),
+    Entry("q164_cust_dist", q164CustDist, Some(q164Sql)),
+    Entry("q165_global_sales_opp", q165GlobalSalesOpp, Some(q165Sql)),
+    Entry("q37_set_ops", q37SetOps, Some(q37Sql)),
+    Entry("q40_grouping_sets", q40GroupingSets, Some(q40Sql)),
+    Entry("q41_correlated_scalar", q41CorrelatedScalar, Some(q41Sql)),
+    Entry("q42_date_funcs", q42DateFuncs, Some(q42Sql)),
+    Entry("q43_string_funcs", q43StringFuncs, Some(q43Sql)),
+    Entry("q44_ordered_agg", q44OrderedAgg, Some(q44Sql)),
+    Entry("q45_pivot", q45Pivot, Some(q45Sql)),
+    Entry("q67_unpivot", q67Unpivot, Some(q67Sql)),
+    Entry("q88_group_percentiles", q88GroupPercentiles, Some(q88Sql)),
+    Entry("q193_top_supplier", q193TopSupplier, Some(q193Sql)),
+    Entry("q194_small_qty_revenue", q194SmallQtyRevenue, Some(q194Sql)),
+    Entry("q195_large_orders", q195LargeOrders, Some(q195Sql)),
+    Entry("q196_returned_items", q196ReturnedItems, Some(q196Sql)),
+    Entry("q216_promo_revenue", q216PromoRevenue, Some(q216Sql)))
 }

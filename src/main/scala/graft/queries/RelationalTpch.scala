@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Entry, QueryFile}
 
 /** TPC-H battery completion (SURVEY.md §2b extended battery): the eleven
   * decision-support shapes not yet covered by [[Relational]] — Q2, Q4, Q6,
@@ -32,7 +33,7 @@ import org.apache.spark.sql.functions._
   * Float discipline: aggregate doubles go through DECIMAL(28,6) so Spark and
   * DuckDB agree bit-for-bit (see [[Relational]] scaladoc).
   */
-object RelationalTpch {
+object RelationalTpch extends QueryFile {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
@@ -471,29 +472,16 @@ object RelationalTpch {
       |    AND ps_availqty > half_qty)
       |ORDER BY s_name""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q232_min_cost_supplier" -> (q232MinCostSupplier _),
-    "q233_order_priority" -> (q233OrderPriority _),
-    "q234_forecast_revenue" -> (q234ForecastRevenue _),
-    "q235_volume_shipping" -> (q235VolumeShipping _),
-    "q236_market_share" -> (q236MarketShare _),
-    "q237_product_profit" -> (q237ProductProfit _),
-    "q238_important_parts" -> (q238ImportantParts _),
-    "q239_shipmode_priority" -> (q239ShipmodePriority _),
-    "q240_parts_supplier_census" -> (q240PartsSupplierCensus _),
-    "q241_discounted_revenue" -> (q241DiscountedRevenue _),
-    "q242_potential_promotion" -> (q242PotentialPromotion _))
-
-  def oracles: Map[String, String] = Map(
-    "q232_min_cost_supplier" -> q232Sql,
-    "q233_order_priority" -> q233Sql,
-    "q234_forecast_revenue" -> q234Sql,
-    "q235_volume_shipping" -> q235Sql,
-    "q236_market_share" -> q236Sql,
-    "q237_product_profit" -> q237Sql,
-    "q238_important_parts" -> q238Sql,
-    "q239_shipmode_priority" -> q239Sql,
-    "q240_parts_supplier_census" -> q240Sql,
-    "q241_discounted_revenue" -> q241Sql,
-    "q242_potential_promotion" -> q242Sql)
+  def entries: Seq[Entry] = Seq(
+    Entry("q232_min_cost_supplier", q232MinCostSupplier, Some(q232Sql)),
+    Entry("q233_order_priority", q233OrderPriority, Some(q233Sql)),
+    Entry("q234_forecast_revenue", q234ForecastRevenue, Some(q234Sql)),
+    Entry("q235_volume_shipping", q235VolumeShipping, Some(q235Sql)),
+    Entry("q236_market_share", q236MarketShare, Some(q236Sql)),
+    Entry("q237_product_profit", q237ProductProfit, Some(q237Sql)),
+    Entry("q238_important_parts", q238ImportantParts, Some(q238Sql)),
+    Entry("q239_shipmode_priority", q239ShipmodePriority, Some(q239Sql)),
+    Entry("q240_parts_supplier_census", q240PartsSupplierCensus, Some(q240Sql)),
+    Entry("q241_discounted_revenue", q241DiscountedRevenue, Some(q241Sql)),
+    Entry("q242_potential_promotion", q242PotentialPromotion, Some(q242Sql)))
 }

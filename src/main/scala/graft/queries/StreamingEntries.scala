@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
+import graft.{Entry, QueryFile}
 import graft.streaming.{Event, Streaming}
 import java.nio.file.{Files, Paths}
 
@@ -28,7 +29,7 @@ import java.nio.file.{Files, Paths}
   * the batch GROUP BY — which is precisely the invariant worth
   * driver-checking about the streaming operators.
   */
-object StreamingEntries {
+object StreamingEntries extends QueryFile {
 
   /** Read schema of a staged events dir: the ACTUAL on-disk schema from
     * the parquet footers (staging copies or rewrites fixture files, so
@@ -1111,66 +1112,44 @@ object StreamingEntries {
       |      AS DECIMAL(28,6)) AS DOUBLE) END AS hellinger
       |FROM tot LEFT JOIN agg ON agg.k = tot.k""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q394_streaming_psi" -> (q394StreamingPsi _),
-    "q440_streaming_hellinger" -> (q440StreamingHellinger _),
-    "q322_streaming_cusum" -> (q322StreamingCusum _),
-    "q227_streaming_quality_score" -> (q227StreamingQualityScore _),
-    "q290_streaming_ewma" -> (q290StreamingEwma _),
-    "q131_streaming_incremental_dedup" -> (q131StreamingIncrementalDedup _),
-    "q206_streaming_domain_policy" -> (q206StreamingDomainPolicy _),
-    "q215_streaming_domain_policy_tws" -> (q215StreamingDomainPolicyTws _),
-    "q132_sessionize_tws" -> (q132SessionizeTws _),
-    "q115_streaming_funnel" -> (q115StreamingFunnel _),
-    "q38_streaming_sessions" -> (q38StreamingSessions _),
-    "q39_streaming_window" -> (q39StreamingWindow _),
-    "q55_streaming_dedup" -> (q55StreamingDedup _),
-    "q56_streaming_enrich" -> (q56StreamingEnrich _),
-    "q62_streaming_interval_join" -> (q62StreamingIntervalJoin _),
-    "q63_streaming_asof" -> (q63StreamingAsof _),
-    "q74_session_window" -> (q74SessionWindow _),
-    "q75_streaming_topk" -> (q75StreamingTopk _),
-    "q89_streaming_cdc_apply" -> (q89StreamingCdcApply _),
-    "q97_streaming_left_interval_join" -> (q97StreamingLeftIntervalJoin _),
-    "q147_streaming_sliding_window" -> (q147StreamingSlidingWindow _))
-
-  def oracles: Map[String, String] = Map(
+  def entries: Seq[Entry] = Seq(
     // batch q385, this streaming twin, and DuckDB agree three ways
-    "q394_streaming_psi" -> Analytics.q385Sql,
-    "q440_streaming_hellinger" -> q440Sql,
-    "q322_streaming_cusum" -> q322Sql,
+    Entry("q394_streaming_psi", q394StreamingPsi, Some(Analytics.q385Sql)),
+    Entry("q440_streaming_hellinger", q440StreamingHellinger, Some(q440Sql)),
+    Entry("q322_streaming_cusum", q322StreamingCusum, Some(q322Sql)),
     // batch q226 scorer, the stateless streaming scorer, and DuckDB's
     // full gradient-descent replay agree three ways
-    "q227_streaming_quality_score" -> Corpus.q226Sql,
-    "q290_streaming_ewma" -> Analytics.q279Sql,
+    Entry("q227_streaming_quality_score", q227StreamingQualityScore, Some(Corpus.q226Sql)),
+    Entry("q290_streaming_ewma", q290StreamingEwma, Some(Analytics.q279Sql)),
     // batch incrementalExactDedup (q117), the streaming foreachBatch
     // merge, and DuckDB agree three ways
-    "q131_streaming_incremental_dedup" -> Pipeline.q117Sql,
+    Entry("q131_streaming_incremental_dedup", q131StreamingIncrementalDedup,
+      Some(Pipeline.q117Sql)),
     // batch q201's gate, the streaming stateful cap, and DuckDB agree
     // three ways on the same oracle
-    "q206_streaming_domain_policy" -> Corpus.q201Sql,
+    Entry("q206_streaming_domain_policy", q206StreamingDomainPolicy, Some(Corpus.q201Sql)),
     // ...and the transformWithState form makes it FOUR ways
-    "q215_streaming_domain_policy_tws" -> Corpus.q201Sql,
+    Entry("q215_streaming_domain_policy_tws", q215StreamingDomainPolicyTws, Some(Corpus.q201Sql)),
     // batch q21, fMGWS q38, session_window q74 and transformWithState
     // q132 agree four ways
-    "q132_sessionize_tws" -> q38Sql,
-    "q38_streaming_sessions" -> q38Sql,
-    "q39_streaming_window" -> q39Sql,
-    "q55_streaming_dedup" -> q55Sql,
-    "q56_streaming_enrich" -> q56Sql,
-    // all three of batch rangeJoin, streaming intervalJoin and DuckDB's
-    // inequality join compute the same pair set
-    "q62_streaming_interval_join" -> Temporal.q59Sql,
-    // batch asOf, streaming asOfStatic and DuckDB ASOF agree three ways
-    "q63_streaming_asof" -> Temporal.q58Sql,
-    "q74_session_window" -> q74Sql,
-    "q75_streaming_topk" -> q75Sql,
-    // batch latestByKey, the streaming foreachBatch upsert sink, and
-    // DuckDB's row_number argmax agree three ways
-    "q89_streaming_cdc_apply" -> Temporal.q66Sql,
-    "q97_streaming_left_interval_join" -> q97Sql,
-    "q147_streaming_sliding_window" -> q147Sql,
+    Entry("q132_sessionize_tws", q132SessionizeTws, Some(q38Sql)),
     // batch funnel, streaming span-bound funnel and the DuckDB
     // progressive-CTE rebuild agree three ways
-    "q115_streaming_funnel" -> Analytics.q102Sql)
+    Entry("q115_streaming_funnel", q115StreamingFunnel, Some(Analytics.q102Sql)),
+    Entry("q38_streaming_sessions", q38StreamingSessions, Some(q38Sql)),
+    Entry("q39_streaming_window", q39StreamingWindow, Some(q39Sql)),
+    Entry("q55_streaming_dedup", q55StreamingDedup, Some(q55Sql)),
+    Entry("q56_streaming_enrich", q56StreamingEnrich, Some(q56Sql)),
+    // all three of batch rangeJoin, streaming intervalJoin and DuckDB's
+    // inequality join compute the same pair set
+    Entry("q62_streaming_interval_join", q62StreamingIntervalJoin, Some(Temporal.q59Sql)),
+    // batch asOf, streaming asOfStatic and DuckDB ASOF agree three ways
+    Entry("q63_streaming_asof", q63StreamingAsof, Some(Temporal.q58Sql)),
+    Entry("q74_session_window", q74SessionWindow, Some(q74Sql)),
+    Entry("q75_streaming_topk", q75StreamingTopk, Some(q75Sql)),
+    // batch latestByKey, the streaming foreachBatch upsert sink, and
+    // DuckDB's row_number argmax agree three ways
+    Entry("q89_streaming_cdc_apply", q89StreamingCdcApply, Some(Temporal.q66Sql)),
+    Entry("q97_streaming_left_interval_join", q97StreamingLeftIntervalJoin, Some(q97Sql)),
+    Entry("q147_streaming_sliding_window", q147StreamingSlidingWindow, Some(q147Sql)))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Entry, QueryFile}
 import graft.ops.Joins
 
 /** Temporal join entries over the events fixture: as-of (point-in-time)
@@ -20,7 +21,7 @@ import graft.ops.Joins
   * schema-adaptive read (nanos-long / timestamp / timestamp_ntz all
   * land on the same µs values), matching the oracles' `epoch_us`.
   */
-object Temporal {
+object Temporal extends QueryFile {
 
   private def ev(s: SparkSession, dir: String): DataFrame =
     Tables.eventsUs(s, dir)
@@ -543,45 +544,25 @@ object Temporal {
       |  CASE WHEN d = last_day(d) THEN 1 ELSE 0 END AS is_month_end
       |FROM ds""".stripMargin
 
-  def all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q150_date_dim" -> (q150DateDim _),
-    "q156_multi_exists" -> (q156MultiExists _),
-    "q161_time_weighted_avg" -> (q161TimeWeightedAvg _),
-    "q58_asof_join" -> (q58AsofJoin _),
-    "q59_range_join" -> (q59RangeJoin _),
-    "q66_latest_by_key" -> (q66LatestByKey _),
-    "q68_resample" -> (q68Resample _),
-    "q69_column_profile" -> (q69ColumnProfile _),
-    "q70_salted_join" -> (q70SaltedJoin _),
-    "q78_range_frame" -> (q78RangeFrame _),
-    "q79_lateral" -> (q79Lateral _),
-    "q83_skew_salted_join" -> (q83SkewSaltedJoin _),
-    "q84_skew_plain_join" -> (q84SkewPlainJoin _),
-    "q85_scd2" -> (q85Scd2 _),
-    "q86_bloom_prune_join" -> (q86BloomPruneJoin _),
-    "q90_snapshot_diff" -> (q90SnapshotDiff _),
-    "q91_incremental_agg" -> (q91IncrementalAgg _),
-    "q96_ignore_nulls" -> (q96IgnoreNulls _),
-    "q98_filter_agg" -> (q98FilterAgg _))
-
-  def oracles: Map[String, String] = Map(
-    "q150_date_dim" -> q150Sql,
-    "q156_multi_exists" -> q156Sql,
-    "q161_time_weighted_avg" -> q161Sql,
-    "q58_asof_join" -> q58Sql,
-    "q59_range_join" -> q59Sql,
-    "q66_latest_by_key" -> q66Sql,
-    "q68_resample" -> q68Sql,
-    "q69_column_profile" -> q69Sql,
-    "q70_salted_join" -> q70Sql,
-    "q78_range_frame" -> q78Sql,
-    "q79_lateral" -> q79Sql,
-    "q83_skew_salted_join" -> q83Sql,
-    "q84_skew_plain_join" -> q83Sql, // same data, same SQL: parity check
-    "q85_scd2" -> q85Sql,
-    "q86_bloom_prune_join" -> q86Sql,
-    "q90_snapshot_diff" -> q90Sql,
-    "q91_incremental_agg" -> q91Sql,
-    "q96_ignore_nulls" -> q96Sql,
-    "q98_filter_agg" -> q98Sql)
+  def entries: Seq[Entry] = Seq(
+    Entry("q150_date_dim", q150DateDim, Some(q150Sql)),
+    Entry("q156_multi_exists", q156MultiExists, Some(q156Sql)),
+    Entry("q161_time_weighted_avg", q161TimeWeightedAvg, Some(q161Sql)),
+    Entry("q58_asof_join", q58AsofJoin, Some(q58Sql)),
+    Entry("q59_range_join", q59RangeJoin, Some(q59Sql)),
+    Entry("q66_latest_by_key", q66LatestByKey, Some(q66Sql)),
+    Entry("q68_resample", q68Resample, Some(q68Sql)),
+    Entry("q69_column_profile", q69ColumnProfile, Some(q69Sql)),
+    Entry("q70_salted_join", q70SaltedJoin, Some(q70Sql)),
+    Entry("q78_range_frame", q78RangeFrame, Some(q78Sql)),
+    Entry("q79_lateral", q79Lateral, Some(q79Sql)),
+    Entry("q83_skew_salted_join", q83SkewSaltedJoin, Some(q83Sql)),
+    // same data, same SQL: parity check
+    Entry("q84_skew_plain_join", q84SkewPlainJoin, Some(q83Sql)),
+    Entry("q85_scd2", q85Scd2, Some(q85Sql)),
+    Entry("q86_bloom_prune_join", q86BloomPruneJoin, Some(q86Sql)),
+    Entry("q90_snapshot_diff", q90SnapshotDiff, Some(q90Sql)),
+    Entry("q91_incremental_agg", q91IncrementalAgg, Some(q91Sql)),
+    Entry("q96_ignore_nulls", q96IgnoreNulls, Some(q96Sql)),
+    Entry("q98_filter_agg", q98FilterAgg, Some(q98Sql)))
 }

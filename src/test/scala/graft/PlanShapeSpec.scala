@@ -518,20 +518,20 @@ class PlanShapeSpec extends SparkSpec {
     * RENAME (`user_id AS uid` escaped it) and to GENERATED columns (a
     * `groupBy(term)` over exploded tokens collapses to the vocabulary,
     * which scales with the corpus). This walks a grouping attribute
-    * back through pure alias chains in the subtree below the
-    * aggregate; the key is corpus-scaling if the chain terminates at
-    * (a) a data-leaf column whose NAME is a corpus unit key, or (b)
-    * any Generate (explode) output. A key that passes through a real
-    * function (hash bucket, time floor, substring) stops the trace
-    * and PASSES — boundedness of derived keys is the operator
-    * author's responsibility, sanctioned per-entry in the whitelist
-    * with a reason when the structural test cannot see it.
+    * back through alias chains (renames and casts of an attribute) in
+    * the subtree below the aggregate; the key is corpus-scaling if the
+    * chain terminates at (a) a data-leaf column whose NAME is a corpus
+    * unit key, or (b) any Generate (explode) output. A key that passes
+    * through a real function (hash bucket, time floor, substring)
+    * stops the trace and PASSES — boundedness of derived keys is the
+    * operator author's responsibility, sanctioned per-entry in the
+    * whitelist with a reason when the structural test cannot see it.
     */
   private def corpusScalingKey(
       a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec)
       : Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{Alias,
-      AttributeReference, ExprId}
+      AttributeReference, Cast, ExprId, Expression}
     import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     // every node in (and referenced by) the subtree, piercing reuse
@@ -557,13 +557,21 @@ class PlanShapeSpec extends SparkSpec {
     val leafCols: Map[ExprId, String] = nodes
       .filter(_.children.isEmpty)
       .flatMap(_.output.map(o => o.exprId -> o.name.toLowerCase)).toMap
+    // a rename or a cast keeps one key per input key: peel it and
+    // keep following the attribute underneath
+    def peel(e: Expression): Option[AttributeReference] = e match {
+      case ar: AttributeReference => Some(ar)
+      case al: Alias => peel(al.child)
+      case c: Cast => peel(c.child)
+      case _ => None
+    }
     @annotation.tailrec
     def scaling(id: ExprId, hops: Int): Boolean =
       if (hops > 64) false
       else if (generated.contains(id)) true
-      else aliasOf.get(id) match {
-        case Some(ar: AttributeReference) => scaling(ar.exprId, hops + 1)
-        case Some(_) => false // a real function — trace stops, passes
+      else aliasOf.get(id).map(peel) match {
+        case Some(Some(ar)) => scaling(ar.exprId, hops + 1)
+        case Some(None) => false // a real function — trace stops, passes
         case None => leafCols.get(id).exists(corpusKeyNames.contains)
       }
     a.groupingExpressions.exists {
@@ -835,17 +843,20 @@ class PlanShapeSpec extends SparkSpec {
       "uid` must not escape the name set (VERDICT r18 #7)") {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.functions._
-    val df = spark.read.parquet(s"$dir/events.parquet")
-      .select(col("user_id").as("uid"), col("value"))
-      .groupBy(col("uid")).agg(sum(col("value")).as("sv"))
+    val events = spark.read.parquet(s"$dir/events.parquet")
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val p = df.queryExecution.executedPlan
-      val aggs = p.collect { case a: BaseAggregateExec => a }
-      assert(aggs.nonEmpty)
-      assert(aggs.exists(corpusScalingKey),
-        "the provenance walk failed to trace uid back to user_id")
+      // a plain rename and a cast rename
+      for (uid <- Seq(col("user_id"), col("user_id").cast("string"))) {
+        val df = events.select(uid.as("uid"), col("value"))
+          .groupBy(col("uid")).agg(sum(col("value")).as("sv"))
+        val aggs = df.queryExecution.executedPlan
+          .collect { case a: BaseAggregateExec => a }
+        assert(aggs.nonEmpty)
+        assert(aggs.exists(corpusScalingKey),
+          s"the provenance walk failed to trace uid ($uid) back to user_id")
+      }
       // and a genuinely derived key still passes: bucketed by a hash
       val ok = spark.read.parquet(s"$dir/events.parquet")
         .groupBy((xxhash64(col("user_id")) % 64).as("b"))

@@ -43,20 +43,45 @@ class InventorySpec extends AnyFunSuite {
       s"entries without a SURVEY.md row: ${missing.mkString(", ")}")
   }
 
+  /** `actual` must equal the set declared here: a name in only one of
+    * the two is drift in the registry or in this declaration.
+    */
+  private def assertDeclared(what: String, actual: Set[String],
+      declared: Set[String]): Unit =
+    assert(actual == declared,
+      s"undeclared $what entries: ${(actual diff declared).toSeq.sorted
+        .mkString(", ")}; stale declarations: ${(declared diff actual)
+        .toSeq.sorted.mkString(", ")}")
+
   test("every SparkEntry.queries key has an oracle or a declared " +
     "rows-only note in the catalog") {
     // weaker sibling: oracleSql omissions are legal ONLY for the
     // declared sketch/lossy set — catch silent drift in either map
     val noOracle = graft.SparkEntry.queries.keySet diff
       graft.SparkEntry.oracleSql.keySet
-    val declared = Set("q27_minhash_lsh", "q29_simhash_pairs",
-      "q30_fingerprints", "q31_ann_ivf", "q64_approx_distinct",
-      "q65_approx_quantiles", "q73_heavy_hitters",
-      "q101_compression_signal", "q162_count_min", "q223_jpeg_profile")
-    assert(noOracle == declared,
-      s"undeclared rows-only entries: ${(noOracle diff declared).toSeq.sorted
-        .mkString(", ")}; stale declarations: ${(declared diff noOracle)
-        .toSeq.sorted.mkString(", ")}")
+    assertDeclared("rows-only", noOracle, Set("q27_minhash_lsh",
+      "q29_simhash_pairs", "q30_fingerprints", "q31_ann_ivf",
+      "q64_approx_distinct", "q65_approx_quantiles", "q73_heavy_hitters",
+      "q101_compression_signal", "q162_count_min", "q223_jpeg_profile"))
+    // Bench, Explain and both plan-law sweeps skip exactly these: each
+    // one writes engine tables while its DataFrame is built
+    assertDeclared("mutating", graft.SparkEntry.mutating, Set("q22_merge",
+      "q23_copy", "q33_copy_incremental", "q72_script_chain",
+      "q77_copy_csv", "q94_bucketed_join", "q109_copy_jsonl",
+      "q135_copy_jdbc", "q136_copy_jdbc_incremental", "q143_copy_orc",
+      "q188_compact"))
+  }
+
+  test("every entry is registered once, and every oracle is SQL") {
+    // the derived maps keep one of two same-named entries silently
+    val names = graft.SparkEntry.entries.map(_.name)
+    val dup = names.diff(names.distinct).distinct.sorted
+    assert(dup.isEmpty, s"entries registered twice: ${dup.mkString(", ")}")
+    // an oracle read through an object-initialisation cycle is null
+    val blank = graft.SparkEntry.entries.collect {
+      case e if e.oracle.exists(o => o == null || o.trim.isEmpty) => e.name
+    }.sorted
+    assert(blank.isEmpty, s"null or empty oracles: ${blank.mkString(", ")}")
   }
 
   test("every bounded-occupancy pair generator in docs/SCALING.md names " +
