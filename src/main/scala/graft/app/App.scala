@@ -5,6 +5,7 @@ import graft.core.Result.Result
 import graft.db.SparkDatabase
 import graft.tasks._
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** One task declaration: `cfg` carries the YAML-shaped map including
   * `type`, `parents`, `tags`, `on_fail` and type-specific keys.
@@ -87,7 +88,12 @@ final class TaskWrapper(
 
     val result = made.flatMap { r =>
       runner = r
-      r.config(ctx, spec.cfg).map { _ =>
+      // a runner that throws on a malformed value (`append: maybe`,
+      // `ddl.buckets: x`) fails this task's config, not the whole run
+      val configured =
+        try r.config(ctx, spec.cfg)
+        catch { case NonFatal(e) => Left(ConfigError(s"task $name: invalid config: $e")) }
+      configured.map { _ =>
         // config() macro may add parents/tags (autosql.py:241-288)
         r match {
           case s: SqlTask =>

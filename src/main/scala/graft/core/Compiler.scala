@@ -553,35 +553,6 @@ object Compiler {
       case other => other
     }
 
-  /** Split an interpolation on top-level `|` (filter pipes), honoring
-    * quotes, parens and brackets. `||` never appears in `{{ }}` context
-    * (SQL concat lives in the SQL text, not inside interpolations).
-    */
-  private def splitPipes(s: String): Seq[String] = {
-    val parts = mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (quote != 0) {
-        cur.append(c)
-        if (c == '\\' && i + 1 < s.length) { cur.append(s(i + 1)); i += 1 }
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' => quote = c; cur.append(c)
-        case '(' | '[' => depth += 1; cur.append(c)
-        case ')' | ']' => depth -= 1; cur.append(c)
-        case '|' if depth == 0 => parts += cur.result(); cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    parts += cur.result()
-    parts.toSeq.map(_.trim)
-  }
-
   /** Jinja filter battery (the constructs real reference projects pipe
     * through; sayn/utils/compiler.py exposes full Jinja). `value` is
     * Some(v) for a defined input, None for an undefined variable —
@@ -713,7 +684,9 @@ object Compiler {
 
   private def evalExpr(
       expr: String, ctx: Context, scope: Map[String, Any]): Result[String] = {
-    val pipes = splitPipes(expr)
+    // filter pipes; `||` never appears in `{{ }}` context (SQL concat
+    // lives in the SQL text, not inside interpolations)
+    val pipes = splitTopLevel(expr, '|').map(_.trim)
     val head = pipes.head
     // head value: Some = defined, None = undefined (only |default may
     // consume an undefined head — Jinja's Undefined-with-default idiom)

@@ -4,6 +4,7 @@ import graft.pipeline.Stage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.pipeline.Exact.{dec, d28, d6}
 
 /** Iterative graph measures over edge DataFrames. Same execution
   * discipline as [[graft.pipeline.TextDedup.dupClusters]]: per-round
@@ -422,8 +423,6 @@ object Graph {
       membership: DataFrame,
       nodeCol: String,
       communityCol: String): DataFrame = {
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     val und = undirected(edges, srcCol, dstCol)
     val mem = membership.select(col(nodeCol).cast("string").as("_g_n"),
       col(communityCol).cast("string").as("_g_c"))
@@ -442,7 +441,6 @@ object Graph {
       .groupBy(col("_g_ca"))
       .agg(count(lit(1)).as("_g_dc"), // total degree of community
         sum((col("_g_ca") === col("_g_cb")).cast("long")).as("_g_ec2"))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val agg = perC.crossJoin(broadcast(m2))
       .agg(count(lit(1)).as("n_communities"),
         max(col("_g_m2")).as("_g_m2"),
@@ -469,8 +467,6 @@ object Graph {
       edges: DataFrame,
       srcCol: String,
       dstCol: String): DataFrame = {
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     val und = undirected(edges, srcCol, dstCol)
     val deg = und.groupBy(col("_g_a").as("_g_n"))
       .agg(count(lit(1)).as("_g_d"))
@@ -479,7 +475,6 @@ object Graph {
         Seq("_g_a"))
       .join(deg.select(col("_g_n").as("_g_b"), col("_g_d").as("_g_y")),
         Seq("_g_b"))
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val agg = paired.agg(
       count(lit(1)).cast("decimal(38,0)").as("_n"),
       sum(dec(col("_g_x"))).as("_sx"), sum(dec(col("_g_y"))).as("_sy"),
@@ -662,9 +657,6 @@ object Graph {
       s"maxRounds in [1,64], got $maxRounds")
     require(maxNodes >= 2L && maxNodes <= 100000L,
       s"maxNodes in [2,1e5], got $maxNodes")
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
-    def d28(c: org.apache.spark.sql.Column) = c.cast("decimal(28,6)")
     val e0 = edges.select(col(srcCol).as("_s"), col(dstCol).as("_d"))
       .filter(col("_s") =!= col("_d")).distinct()
     val nodes = e0.select(col("_s").as("node"))
@@ -739,8 +731,6 @@ object Graph {
       rightCol: String,
       maxLeftDegree: Int = 1000): DataFrame = {
     require(maxLeftDegree >= 2, s"maxLeftDegree >= 2, got $maxLeftDegree")
-    def d6(c: org.apache.spark.sql.Column) =
-      c.cast("decimal(28,6)").cast("double")
     val m = df.select(col(leftCol).cast("string").as("_l"),
       col(rightCol).cast("string").as("_r")).distinct()
     val ldeg = m.groupBy(col("_l")).agg(count(lit(1)).as("_ld"))
@@ -795,8 +785,6 @@ object Graph {
       edges: DataFrame,
       srcCol: String,
       dstCol: String): DataFrame = {
-    def d6(c: org.apache.spark.sql.Column) =
-      c.cast("decimal(28,6)").cast("double")
     val e = edges
       .select(col(srcCol).cast("string").as("_s"),
         col(dstCol).cast("string").as("_d"))
@@ -839,8 +827,6 @@ object Graph {
       ks: Seq[Int] = Seq(1, 2, 4, 8, 16)): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 0), s"bad ladder $ks")
     require(ks.distinct.size == ks.size, "ladder must be distinct")
-    def d6(c: org.apache.spark.sql.Column) =
-      c.cast("decimal(28,6)").cast("double")
     val und = undirected(edges, srcCol, dstCol)
     val deg = und.groupBy(col("_g_a").as("node"))
       .agg(count(lit(1)).as("_deg"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.pipeline.Exact.d6
 
 /** Dataset profiling: per-column row/null/distinct counts in ONE pass —
   * the data-quality snapshot an ETL framework prints before/after a
@@ -199,7 +200,6 @@ object Profile {
     reserved.foreach(n => require(!df.columns.contains(n),
       s"reserved column name in input: $n"))
     val v = col(valueCol).cast("double")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val fences = df.groupBy(keys.map(col): _*)
       .agg(
         percentile(v, lit(0.25)).as("_g_q1"),
@@ -271,7 +271,6 @@ object Profile {
       l: Int): DataFrame = {
     require(quasiCols.nonEmpty, "lDiversity needs at least one quasi column")
     require(l >= 2, s"l must be >= 2, got $l")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val qc = quasiCols.map(col)
     val perValue = df.groupBy(
         (qc :+ col(sensitiveCol).cast("string").as("_sv")): _*)
@@ -323,7 +322,6 @@ object Profile {
     require(quasiCols.nonEmpty, "tCloseness needs at least one quasi column")
     require(threshold > 0 && threshold < 1,
       s"threshold must be in (0,1), got $threshold")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val qc = quasiCols.map(col)
     val sv = col(sensitiveCol).cast("long")
@@ -391,7 +389,6 @@ object Profile {
       salt: String = "dp"): DataFrame = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     require(epsilon > 0, s"epsilon must be positive, got $epsilon")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val counts = df.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("_n"))
     val keyStr = concat_ws("|", keyCols.map(c => col(c).cast("string")): _*)
@@ -424,7 +421,6 @@ object Profile {
     * corpus-sized shuffle beyond the digit aggregate.
     */
   def benfordAudit(df: DataFrame, valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val spark = df.sparkSession
     val v = col(valueCol).cast("long")
     val counts = df.filter(v > 0L)
@@ -485,7 +481,6 @@ object Profile {
     require(keyCols.nonEmpty, "at least one key column")
     require(targetRowsPerTask >= 1, "targetRowsPerTask must be >= 1")
     require(topK >= 1, "topK must be >= 1")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val key = concat_ws("", keyCols.map(c => col(c).cast("string")): _*)
     val counts = df.groupBy(key.as("key"))
       .agg(count(lit(1)).as("n_rows"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.pipeline.Exact.{dec, d28, d6}
 
 /** Time-series regularization: resample irregular events onto a fixed
   * grid per key, materializing empty buckets and carrying values across
@@ -193,13 +194,12 @@ object Timeseries {
     val s1 = col("_g_s1")
     val s2 = col("_g_s2")
     // exact predicate in decimal(38,0): long wraps at c ≈ 3·10⁹ here
-    val d38 = "decimal(38,0)"
-    val cD = c.cast(d38)
-    val nD = n.cast(d38)
-    val s1D = s1.cast(d38)
-    val s2D = s2.cast(d38)
-    val lhs = (nD * cD - s1D) * (nD * cD - s1D) * (nD - lit(1L).cast(d38))
-    val rhs = lit(tau.toLong * tau).cast(d38) * nD * (nD * s2D - s1D * s1D)
+    val cD = dec(c)
+    val nD = dec(n)
+    val s1D = dec(s1)
+    val s2D = dec(s2)
+    val lhs = (nD * cD - s1D) * (nD * cD - s1D) * (nD - dec(lit(1L)))
+    val rhs = dec(lit(tau.toLong * tau)) * nD * (nD * s2D - s1D * s1D)
     val mean = s1.cast("double") / n.cast("double")
     val varS = (n.cast("double") * s2.cast("double") -
       s1.cast("double") * s1.cast("double")) /
@@ -208,7 +208,7 @@ object Timeseries {
     counts
       .withColumn("_g_n", count(c).over(w))
       .withColumn("_g_s1", sum(c).over(w))
-      .withColumn("_g_s2", sum(c.cast(d38) * c.cast(d38)).over(w))
+      .withColumn("_g_s2", sum(dec(c) * dec(c)).over(w))
       .select(kcols ++ Seq(
         (col("_g_b") * bucketUs).as("bucket_start_us"),
         c.as("n_events"),
@@ -253,7 +253,6 @@ object Timeseries {
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
     require(maxLen >= 2 && maxLen <= 48,
       s"maxLen must be in [2, 48], got $maxLen")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val series = df
       .select(col(keyCol).cast("string").as("key"),
         struct(col(timeCol).cast("long").as("t"),
@@ -339,7 +338,6 @@ object Timeseries {
       valueCol: String,
       period: Int): DataFrame = {
     require(period >= 2, s"period must be >= 2, got $period")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val base = df.select(col(keyCol).cast("string").as("key"),
       col(timeCol).cast("long").as("t"), col(valueCol).cast("long").as("x"))
     val wOrd = Window.partitionBy(col("key")).orderBy(col("t"))
@@ -423,8 +421,6 @@ object Timeseries {
       xCol: String,
       maxLag: Int): DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1, got $maxLag")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
-    def d38(c: Column): Column = c.cast("decimal(38,0)")
     val stats = df.groupBy(col(keyCol).as("_k"))
       .agg(count(lit(1)).as("_n"), sum(col(xCol).cast("long")).as("_s"))
     val dev = df
@@ -437,12 +433,12 @@ object Timeseries {
       Seq(col("_k"), col("_n"), col("_d")) ++
         (1 to maxLag).map(k => lag(col("_d"), k).over(w).as(s"_l$k")): _*)
     val den = lagged.groupBy(col("_k"))
-      .agg(sum(d38(d38(col("_d")) * d38(col("_d")))).as("_den"),
+      .agg(sum(dec(dec(col("_d")) * dec(col("_d")))).as("_den"),
         max(col("_n")).as("_n"))
     val prods = lagged.select(col("_k"),
       explode(array((1 to maxLag).map(k =>
         struct(lit(k).as("lag"),
-          d38(d38(col("_d")) * d38(col(s"_l$k"))).as("p"))): _*))
+          dec(dec(col("_d")) * dec(col(s"_l$k"))).as("p"))): _*))
         .as("_e"))
       .select(col("_k"), col("_e.lag").as("lag"), col("_e.p").as("p"))
       .filter(col("p").isNotNull)
@@ -592,8 +588,6 @@ object Timeseries {
       yCol: String,
       maxLag: Int): DataFrame = {
     require(maxLag >= 0, s"maxLag must be >= 0, got $maxLag")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
-    def d38(c: Column): Column = c.cast("decimal(38,0)")
     val stats = df.groupBy(col(keyCol).as("_k"))
       .agg(count(lit(1)).as("_n"),
         sum(col(xCol).cast("long")).as("_sx"),
@@ -610,13 +604,13 @@ object Timeseries {
         (0 to maxLag).map(k =>
           lag(col("_dx"), k).over(w).as(s"_l$k")): _*)
     val den = lagged.groupBy(col("_k"))
-      .agg(sum(d38(d38(col("_dx")) * d38(col("_dx")))).as("_denx"),
-        sum(d38(d38(col("_dy")) * d38(col("_dy")))).as("_deny"),
+      .agg(sum(dec(dec(col("_dx")) * dec(col("_dx")))).as("_denx"),
+        sum(dec(dec(col("_dy")) * dec(col("_dy")))).as("_deny"),
         max(col("_n")).as("_n"))
     val prods = lagged.select(col("_k"),
       explode(array((0 to maxLag).map(k =>
         struct(lit(k).as("lag"),
-          d38(d38(col("_dy")) * d38(col(s"_l$k"))).as("p"))): _*))
+          dec(dec(col("_dy")) * dec(col(s"_l$k"))).as("p"))): _*))
         .as("_e"))
       .select(col("_k"), col("_e.lag").as("lag"), col("_e.p").as("p"))
       .filter(col("p").isNotNull)
@@ -658,7 +652,6 @@ object Timeseries {
       keyCol: String,
       tCol: String,
       xCol: String): DataFrame = {
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val W = Window
     val byKV = df.groupBy(col(keyCol).as("_k"),
         col(xCol).cast("long").as("_v"))
@@ -736,8 +729,6 @@ object Timeseries {
       xCol: String,
       maxPeriods: Int = 512): DataFrame = {
     require(maxPeriods >= 3, s"maxPeriods must be >= 3, got $maxPeriods")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val series = df
       .select(col(keyCol).as("_k"), col(tCol).cast("long").as("_t"),
         col(xCol).cast("long").as("_x"))
@@ -812,7 +803,6 @@ object Timeseries {
       forecastCol: String,
       season: Int = 1): DataFrame = {
     require(season >= 1, s"season must be >= 1, got $season")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val base = df
       .select(col(keyCol).as("_k"), col(tCol).as("_t"),
         col(actualCol).cast("long").as("_a"),
@@ -873,8 +863,6 @@ object Timeseries {
       tCol: String,
       xCol: String,
       yCol: String): DataFrame = {
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val w = Window.partitionBy(col("_k")).orderBy(col("_t"))
     val lagged = df
       .select(col(keyCol).as("_k"), col(tCol).as("_t"),
@@ -930,7 +918,6 @@ object Timeseries {
       maxLag: Int): DataFrame = {
     require(maxLag >= 1 && maxLag <= 30,
       s"maxLag must be in [1,30] (chi-square table bound), got $maxLag")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val rho = acf(df, keyCol, tCol, xCol, maxLag)
     val term = (col("acf") * col("acf") /
       (col("n_periods") - col("lag")).cast("double"))
@@ -980,7 +967,6 @@ object Timeseries {
       maxFreq: Int): DataFrame = {
     require(maxFreq >= 1 && maxFreq <= 512,
       s"maxFreq must be in [1,512], got $maxFreq")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     def d386(c: Column) = c.cast("decimal(38,6)")
     val stats = df.groupBy(col(keyCol).as("_k"))
       .agg(count(lit(1)).as("_n"), sum(col(xCol).cast("long")).as("_s"))
@@ -1052,8 +1038,6 @@ object Timeseries {
       levels: Int): DataFrame = {
     require(levels >= 1 && levels <= 16,
       s"levels must be in [1,16], got $levels")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val len = 1L << levels
     val w = Window.partitionBy(col("_k")).orderBy(col("_t"))
     val head = df
@@ -1125,8 +1109,6 @@ object Timeseries {
     require(windows.nonEmpty && windows.forall(_ >= 4),
       s"windows must be non-empty, each >= 4, got $windows")
     require(windows.distinct.size == windows.size, "windows must be distinct")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val wOrd = Window.partitionBy(col("_k")).orderBy(col("_t"))
     val base = df
       .select(col(keyCol).as("_k"), col(tCol).as("_t"),
@@ -1274,7 +1256,6 @@ object Timeseries {
     require(maxPeriods >= 2 && maxPeriods <= 512,
       s"maxPeriods must be in [2,512], got $maxPeriods")
     require(maxKeys >= 2, s"maxKeys must be >= 2, got $maxKeys")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val series = df
       .select(col(keyCol).as("_k"), col(tCol).cast("long").as("_t"),
         col(xCol).cast("long").as("_x"))
@@ -1351,8 +1332,6 @@ object Timeseries {
       returnPeriods: Seq[Long] = Seq(10L, 100L)): DataFrame = {
     require(returnPeriods.nonEmpty && returnPeriods.forall(_ >= 2L),
       s"return periods must all be >= 2, got $returnPeriods")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val maxima = df.groupBy(col(blockCol).as("_b"))
       .agg(max(col(xCol).cast("long")).as("_m"))
     val agg = maxima.agg(count(lit(1)).as("n_blocks"),
@@ -1408,9 +1387,6 @@ object Timeseries {
       yCol: String,
       lags: Int = 3): DataFrame = {
     require(lags >= 1 && lags <= 32, s"lags in [1,32], got $lags")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(col(orderCol).cast("long").as("_t"),
       col(yCol).cast("long").as("_y"))
     val agg = base.agg(count(lit(1)).as("_n"),
@@ -1497,8 +1473,6 @@ object Timeseries {
       timeCol: String,
       valueCol: String,
       period: Int): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val dc = seasonalDecompose(df, keyCol, timeCol, valueCol, period)
       .filter(col("residual").isNotNull)
       .select(col(keyCol).as("_k"), col("residual").as("_r"),
@@ -1552,7 +1526,6 @@ object Timeseries {
       keyCol: String,
       tCol: String,
       xCol: String): DataFrame = {
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val w = Window.partitionBy(col("_k")).orderBy(col("_t").asc)
     val rows = df
       .select(col(keyCol).as("_k"), col(tCol).cast("long").as("_t"),
@@ -1603,8 +1576,6 @@ object Timeseries {
       keyCol: String,
       tCol: String,
       xCol: String): DataFrame = {
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val wv = Window.partitionBy(col("_k")).orderBy(col("_x").asc)
     val we = Window.partitionBy(col("_k"), col("_x"))
     val wt = Window.partitionBy(col("_k")).orderBy(col("_t").asc)
@@ -1669,8 +1640,6 @@ object Timeseries {
       xCol: String,
       lags: Int = 4): DataFrame = {
     require(lags >= 0 && lags <= 32, s"lags in [0,32], got $lags")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val wk = Window.partitionBy(col("_k"))
     val wt = Window.partitionBy(col("_k")).orderBy(col("_t").asc)
     val base = df
@@ -1731,7 +1700,6 @@ object Timeseries {
       keyCol: String,
       tCol: String,
       xCol: String): DataFrame = {
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val wt = Window.partitionBy(col("_k")).orderBy(col("_t").asc)
     val ranked = df
       .select(col(keyCol).as("_k"), col(tCol).cast("long").as("_t"),
@@ -1789,8 +1757,6 @@ object Timeseries {
       e2Col: String,
       lags: Int = 2): DataFrame = {
     require(lags >= 0 && lags <= 32, s"lags in [0,32], got $lags")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val wk = Window.partitionBy(col("_k"))
     val wt = Window.partitionBy(col("_k")).orderBy(col("_t").asc)
     // squares and clearing in decimal(38,0) from the start (ADVICE
@@ -1868,8 +1834,6 @@ object Timeseries {
       s"quantilesPpm must be in (0,1e6), got $quantilesPpm")
     require(quantilesPpm.distinct.size == quantilesPpm.size,
       "quantilesPpm must be distinct")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val wt = Window.partitionBy(col("_k"))
       .orderBy(col("_x").asc, col("_t").asc)
     val base = df.select(col(keyCol).as("_k"),
@@ -1940,7 +1904,6 @@ object Timeseries {
       s"subgroupSize must be in 2..10 (published A2/D3/D4 table), " +
         s"got $subgroupSize")
     val (a2, dd3, dd4) = consts(subgroupSize)
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val wt = Window.partitionBy(col("_k")).orderBy(col("_t").asc)
     val sub = df
       .select(col(keyCol).as("_k"), col(tCol).cast("long").as("_t"),
@@ -1995,8 +1958,6 @@ object Timeseries {
       df: DataFrame,
       unitCol: String,
       countCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cnt = when(col(countCol).cast("long") >= 0L,
       col(countCol).cast("long"))
       .otherwise(raise_error(concat(lit("cChart: negative count "),
@@ -2038,8 +1999,6 @@ object Timeseries {
       unitCol: String,
       countCol: String,
       sizeCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cnt = when(col(countCol).cast("long") >= 0L,
       col(countCol).cast("long"))
       .otherwise(raise_error(concat(lit("uChart: negative count "),
@@ -2096,8 +2055,6 @@ object Timeseries {
       xCol: String,
       m: Int = 3): DataFrame = {
     require(m >= 2 && m <= 5, s"m in [2,5], got $m")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val wt = Window.partitionBy(col("_k")).orderBy(col("_t").asc)
     // loud NULL contract (ADVICE r16): an interior NULL x would fall
     // through every `x_j < x_i` comparison to the 0 branch and bias

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.pipeline.Exact.d6
 
 /** Behavioral analytics over event streams: sequential funnels, Markov
   * transition counts and cohort retention — the three questions an
@@ -122,7 +123,6 @@ object Behavior {
       steps: Seq[String],
       maxSpan: Long): DataFrame = {
     val users = funnelUsers(events, userCol, typeCol, tsCol, steps, maxSpan)
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val aggs = steps.indices.drop(1).flatMap { i =>
       val d = col(s"step_ts_${i + 1}") - col("step_ts_1")
       val dSec = d.cast("double") / lit(1000000.0)
@@ -198,7 +198,6 @@ object Behavior {
       typeCol: String,
       tsCol: String,
       tieCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val tr = transitions(events, userCol, typeCol, tsCol, tieCol)
     val rows = tr.groupBy(col("from_type"))
       .agg(sum(col("n_transitions")).as("_nx"))
@@ -342,7 +341,6 @@ object Behavior {
     // the double-rounded moments can land epsilon-negative → sqrt(NaN)
     val variance = greatest(
       (nD * s2D - s1D * s1D) / (nD * (nD - lit(1.0))), lit(0.0))
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     agg.select(u,
       (col("_g_n") + 1L).as("n_events"),
       col("min_gap"), col("max_gap"),
@@ -665,7 +663,6 @@ object Behavior {
     require(basketCols.nonEmpty, "need at least one basket key column")
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     requireFree(events, "_g_item", "_g_nb", "_g_na", "_g_nc")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val bk = basketCols.map(col)
     val baskets = events.select(bk :+ col(itemCol).as("_g_item"): _*)
       .filter(col("_g_item").isNotNull).distinct()
@@ -818,7 +815,6 @@ object Behavior {
       maxTypesPerUser: Int = 64): DataFrame = {
     require(maxTypesPerUser >= 2 && maxTypesPerUser <= 4096,
       s"maxTypesPerUser in [2,4096], got $maxTypesPerUser")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val perUT = events.groupBy(col(keyCol).as("_u"),
         col(typeCol).as("_t"))
       .agg(min(col(tsCol)).as("_mn"), max(col(tsCol)).as("_mx"))
@@ -887,7 +883,6 @@ object Behavior {
       buckets: Int = 5): DataFrame = {
     require(buckets >= 2 && buckets <= 10,
       s"buckets in [2,10], got $buckets")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val mx = events.agg(max(col(tsCol).cast("long")).as("_mx"))
     val per = events.crossJoin(broadcast(mx))
@@ -951,7 +946,6 @@ object Behavior {
       window: Int = 28): DataFrame = {
     require(window >= 2 && window <= 366,
       s"window in [2,366], got $window")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val ud = events.select(col(keyCol).as("_u"),
       col(dayCol).cast("long").as("_d")).distinct()
     val days = ud.select(col("_d").as("day")).distinct()

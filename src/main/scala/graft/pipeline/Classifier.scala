@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.pipeline.Exact.{d28, d6}
 
 /** Trained quality classifier — the CCNet/GPT-3 curation move the
   * heuristic gates (TextStats.qualityFilter, the C4 gate) lead up to:
@@ -347,7 +348,6 @@ object Classifier {
       idCol: String,
       textCol: String,
       labelCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val tk = toks(df, idCol, textCol, labelCol)
     val pairs = tk.groupBy(col("_l"), col("_tok"))
       .agg(count(lit(1)).as("token_count"))
@@ -390,8 +390,6 @@ object Classifier {
       idCol: String,
       textCol: String,
       labelCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dd6(c: Column) = c.cast("decimal(28,6)")
     val tk = toks(df, idCol, textCol, labelCol)
     val pairs = tk.groupBy(col("_l"), col("_tok"))
       .agg(count(lit(1)).as("_c"))
@@ -411,9 +409,9 @@ object Classifier {
         Seq("_cl"), "left") // a class of only empty docs still scores
       .crossJoin(broadcast(vocab)).crossJoin(broadcast(nDocs))
       .select(col("_cl"),
-        dd6(d6(log(col("_dc").cast("double") / col("_d").cast("double"))))
+        d28(d6(log(col("_dc").cast("double") / col("_d").cast("double"))))
           .as("_prior6"),
-        dd6(d6(log(lit(1.0) /
+        d28(d6(log(lit(1.0) /
           (coalesce(col("_nl"), lit(0L)) + col("_v")).cast("double"))))
           .as("_dflt6"))
     val docTf = tk.groupBy(col("_id"), col("_tok"))
@@ -422,7 +420,7 @@ object Classifier {
         col("_cl"), col("_dflt6"))))
       .join(broadcast(model), Seq("_cl", "_tok"), "left")
       .groupBy(col("_id"), col("_cl"))
-      .agg(sum(col("_tf") * dd6(coalesce(col("logp"),
+      .agg(sum(col("_tf") * d28(coalesce(col("logp"),
         col("_dflt6").cast("double")))).as("_tsum"))
     val base = df.select(col(idCol).as("_id"),
         col(labelCol).cast("string").as("_y"))

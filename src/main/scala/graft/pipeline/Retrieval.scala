@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.pipeline.Exact.{d28, d6}
 
 /** Corpus retrieval and vocabulary operators: BM25 relevance scoring
   * (the IR baseline every RAG/contamination pipeline reaches for before
@@ -291,8 +292,6 @@ object Retrieval {
     require(k >= 1, s"k must be >= 1, got $k")
     require(relThreshold >= 1, s"relThreshold must be >= 1, got $relThreshold")
     val spark = run.sparkSession
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     val joined = run.filter(col("rank") <= k)
       .join(qrels.select(col(queryCol), col(idCol),
         col(relCol).cast("long").as("_g_rel")), Seq(queryCol, idCol), "left")
@@ -377,8 +376,6 @@ object Retrieval {
       refCol: String,
       n: Int): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     val joined = clippedGramCounts(df, idCol, candCol, refCol, n)
     val p = col("n_match").cast("double") / col("n_cand").cast("double")
     val r = col("n_match").cast("double") / col("n_ref").cast("double")
@@ -467,8 +464,6 @@ object Retrieval {
       refCol: String,
       maxN: Int = 4): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"maxN in [1, 8], got $maxN")
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     val perN = (1 to maxN).map { n =>
       clippedGramCounts(df, idCol, candCol, refCol, n)
         .select(col("_id"), lit(n).as("_n"), col("n_match"),
@@ -546,8 +541,6 @@ object Retrieval {
       beta: Double = 2.0): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"maxN in [1, 8], got $maxN")
     require(beta > 0, s"beta must be > 0, got $beta")
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     // STAGED char arrays: the split must materialize ONCE per row —
     // inlined into the transform lambda it would re-split the whole
     // string at EVERY gram position (O(len²) per doc; the round-12
@@ -633,8 +626,6 @@ object Retrieval {
       idCol: String,
       predCol: String,
       goldCol: String): DataFrame = {
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     def norm(c: org.apache.spark.sql.Column) =
       filter(split(trim(regexp_replace(
           lower(c), "[^a-z0-9]", " ")), " +"),
@@ -715,8 +706,6 @@ object Retrieval {
       rankBCol: String,
       maxItems: Int = 1000): DataFrame = {
     require(maxItems >= 2, s"maxItems must be >= 2, got $maxItems")
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     // fast refusal (the hoeffdingsD r17 treatment, VERDICT r17 #4):
     // the permutation audit aggregates DISTRIBUTED (count/distinct/
     // min/max in one map-side-combined pass, 1-row broadcast) and the
@@ -773,8 +762,6 @@ object Retrieval {
       rankCol: String,
       k: Int): DataFrame = {
     require(k >= 1 && k <= 62, s"k must be in [1,62], got $k")
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     val a = runA.select(col(docCol).as("_doc"), col(rankCol).as("_ra"))
       .filter(col("_ra") <= k)
     val b = runB.select(col(docCol).as("_doc"), col(rankCol).as("_rb"))
@@ -828,8 +815,6 @@ object Retrieval {
       idCol: String,
       refCol: String,
       hypCol: String): DataFrame = {
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     val alphabet = (0x21 to 0x7E).map(_.toChar).mkString // 94 chars
     def toks(c: org.apache.spark.sql.Column) =
       filter(split(c, " "), t => t =!= "")
@@ -883,9 +868,6 @@ object Retrieval {
       depth: Int = 20): DataFrame = {
     require(p > 0 && p < 1, s"p in (0,1), got $p")
     require(depth >= 1 && depth <= 1000, s"depth in [1,1000], got $depth")
-    def d6(c: org.apache.spark.sql.Column) =
-      c.cast("decimal(28,6)").cast("double")
-    def d28(c: org.apache.spark.sql.Column) = c.cast("decimal(28,6)")
     val ra = col(rankACol).cast("long")
     val rb = col(rankBCol).cast("long")
     val base = df.select(ra.as("_ra"), rb.as("_rb"))

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.pipeline.Exact.{dec, d28, d6}
 
 /** Deterministic sampling/splitting for training-data pipelines.
   *
@@ -445,7 +446,6 @@ object Sampling {
   def temperatureShares(
       df: DataFrame, domainCol: String, alpha: Double): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val counts = df.groupBy(col(domainCol)).agg(count(lit(1)).as("n"))
       .withColumn("_w", pow(col("n").cast("double"), lit(alpha))
         .cast("decimal(28,6)"))
@@ -486,7 +486,6 @@ object Sampling {
       maxEpochs: Int): DataFrame = {
     require(totalBudget >= 1, s"totalBudget must be >= 1, got $totalBudget")
     require(maxEpochs >= 1, s"maxEpochs must be >= 1, got $maxEpochs")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val counts = df.groupBy(col(domainCol))
       .agg(sum(col(weightCol).cast("long")).as("n_tokens"))
@@ -651,7 +650,6 @@ object Sampling {
       sliceCol: String,
       idCol: String,
       scoreCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val w = W.partitionBy(col(sliceCol))
       .orderBy(col("_q_v").asc, col(idCol).asc)
@@ -860,9 +858,6 @@ object Sampling {
       xCol: String,
       budget: Long): DataFrame = {
     require(budget > 0L, s"budget must be positive, got $budget")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x = col(xCol).cast("long")
     val per = df.groupBy(col(stratumCol).cast("string").as("_h"))
       .agg(count(lit(1)).as("n_pop"),
@@ -911,7 +906,6 @@ object Sampling {
       s"need 1..1000 thresholds, got ${thresholds.size}")
     require(thresholds.distinct.size == thresholds.size,
       "thresholds must be distinct")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val sc = col(scoreCol).cast("long")
     val w = col(weightCol).cast("long")
     val sorted = thresholds.sorted

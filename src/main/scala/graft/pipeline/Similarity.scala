@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.pipeline.Exact.{dec, d28, d6}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -1581,8 +1582,6 @@ object Similarity {
       idCol: String,
       labelCol: String,
       embCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dd6(c: Column) = c.cast("decimal(28,6)")
     val q = df.select(col(idCol).as("_id"),
       col(labelCol).cast("long").as("_l"),
       transform(col(embCol),
@@ -1628,7 +1627,7 @@ object Similarity {
           .otherwise(lit(0.0)).as("_s"))
     perPoint.groupBy(col("_l").as(labelCol))
       .agg(count(lit(1)).as("n_points"),
-        sum(dd6(col("_s"))).as("_sSum"))
+        sum(d28(col("_s"))).as("_sSum"))
       .select(col(labelCol), col("n_points"),
         d6(col("_sSum").cast("double") / col("n_points").cast("double"))
           .as("mean_silhouette"))
@@ -1663,9 +1662,6 @@ object Similarity {
       idCol: String,
       labelCol: String,
       embCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dd6(c: Column) = c.cast("decimal(28,6)")
-    def d38(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val q = df.select(col(idCol).as("_id"),
       col(labelCol).cast("long").as("_l"),
@@ -1703,7 +1699,7 @@ object Similarity {
           .cast("double")) / col("_n").cast("double")).as("_dist"))
     val scat = own.groupBy(col("_l"))
       .agg(count(lit(1)).as("n_points"),
-        sum(dd6(col("_dist"))).as("_dSum"))
+        sum(d28(col("_dist"))).as("_dSum"))
       .select(col("_l"), col("n_points"),
         d6(col("_dSum").cast("double") /
           col("n_points").cast("double")).as("scatter"))
@@ -1715,8 +1711,8 @@ object Similarity {
       .select(col("_la"), col("_lb"),
         d6(sqrt(aggregate(
           zip_with(col("_sa"), col("_sb"), (x, y) =>
-            ((d38(col("_nb")) * x - d38(col("_na")) * y) *
-              (d38(col("_nb")) * x - d38(col("_na")) * y))
+            ((dec(col("_nb")) * x - dec(col("_na")) * y) *
+              (dec(col("_nb")) * x - dec(col("_na")) * y))
               .cast("decimal(38,0)")),
           lit(0L).cast("decimal(38,0)"),
           (acc, v) => (acc + v).cast("decimal(38,0)"))
@@ -1739,7 +1735,7 @@ object Similarity {
       .select(col("_l").as(labelCol), col("n_points"), col("scatter"),
         col("worst_ratio"))
       .withColumn("db_index",
-        d6(sum(dd6(col("worst_ratio"))).over(wAll).cast("double") /
+        d6(sum(d28(col("worst_ratio"))).over(wAll).cast("double") /
           count(lit(1)).over(wAll).cast("double")))
   }
 
@@ -1784,7 +1780,6 @@ object Similarity {
       s"need 1 <= k <= topN, got k=$k topN=$topN")
     require(lambda >= 0 && lambda <= 1, s"lambda in [0,1], got $lambda")
     val lam6 = math.floor(lambda * 1e6).toLong
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val packed = packedWithNorm(df, idCol, embCol)
     val queries = packed.filter(queryPred)
       .select(col(idCol).as("query_id"), col("q").as("qq"),

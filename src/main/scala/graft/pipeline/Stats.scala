@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.pipeline.Exact.{dec, d28, d6}
 
 /** Statistical inference over corpus/product metrics: bootstrap
   * confidence intervals and two-sample significance tests — the
@@ -67,7 +68,6 @@ object Stats {
       alpha: Double = 0.05): DataFrame = {
     require(reps >= 4, s"reps must be >= 4, got $reps")
     require(alpha > 0 && alpha < 1, s"alpha in (0,1), got $alpha")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val lo = math.ceil(alpha / 2 * reps).toLong.max(1L)
     val hi = reps + 1L - lo
     val x = col(valueCol).cast("long")
@@ -126,7 +126,6 @@ object Stats {
       df: DataFrame,
       armCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val x = col(valueCol).cast("long")
     val arm = col(armCol).cast("int")
     def side(a: Int, c: Column) = sum(when(arm === a, c).otherwise(lit(0L)))
@@ -195,7 +194,6 @@ object Stats {
       curCol: String,
       dims: Seq[(String, Column)]): DataFrame = {
     require(dims.nonEmpty, "psiDrift needs at least one dimension")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val cur = col(curCol).cast("boolean")
     val perDim = dims.map { case (dimName, bucket) =>
       val cnt = df.groupBy(bucket.cast("string").as("bucket"))
@@ -251,7 +249,6 @@ object Stats {
       itemCol: String,
       raterCols: Seq[String]): DataFrame = {
     require(raterCols.size >= 2, "fleissKappa needs >= 2 rater columns")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val r = raterCols.size
     val votes = raterCols.map(rc =>
         df.select(col(itemCol).as("_it"), col(rc).cast("string").as("_cat")))
@@ -304,7 +301,6 @@ object Stats {
       df: DataFrame,
       curCol: String,
       bucket: Column): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val cur = col(curCol).cast("boolean")
     val cnt = df.groupBy(bucket.cast("string").as("bucket"))
       .agg(
@@ -345,7 +341,6 @@ object Stats {
   def giniConcentration(
       df: DataFrame,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val byVal = df
       .groupBy(col(valueCol).cast("long").as("_v"))
       .agg(count(lit(1)).as("_m"))
@@ -403,7 +398,6 @@ object Stats {
       df: DataFrame,
       armCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val arm = col(armCol).cast("int")
     val byVal = df
       .groupBy(col(valueCol).cast("long").as("_v"))
@@ -472,7 +466,6 @@ object Stats {
       correctCol: String,
       ks: Seq[Int]): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ >= 1), s"ks must be >= 1: $ks")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val agg = df.groupBy(col(problemCol))
       .agg(count(lit(1)).as("n_samples"),
         sum(col(correctCol).cast("long")).as("n_correct"))
@@ -526,7 +519,6 @@ object Stats {
       pCol: String,
       q: Double): DataFrame = {
     require(q > 0 && q < 1, s"q in (0,1), got $q")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val p = guardedP(pCol, keyCol, "bhFdr")
     val ranked = df
@@ -573,7 +565,6 @@ object Stats {
       df: DataFrame,
       raterACol: String,
       raterBCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val conf = df.groupBy(col(raterACol).cast("string").as("_a"),
         col(raterBCol).cast("string").as("_b"))
       .agg(count(lit(1)).as("_n"))
@@ -640,7 +631,6 @@ object Stats {
     require(horizon >= 1 && horizon <= 32,
       s"horizon must be in [1,32], got $horizon")
     require(nSigma > 0, s"nSigma must be positive, got $nSigma")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val w = W.partitionBy(col(keyCol)).orderBy(col(orderCol).asc)
     val x = col(valueCol).cast("long")
@@ -704,7 +694,6 @@ object Stats {
       df: DataFrame,
       aCol: String,
       bCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val wAll = W.partitionBy(lit(1))
       .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
@@ -755,7 +744,6 @@ object Stats {
       df: DataFrame,
       aCol: String,
       bCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val a = col(aCol).cast("boolean")
     val b = col(bCol).cast("boolean")
     df.agg(count(lit(1)).as("n_pairs"),
@@ -838,7 +826,6 @@ object Stats {
     require(shards >= 2 && shards <= 4096,
       s"shards in [2,4096], got $shards")
     require(rowsPerShard >= 1L, s"rowsPerShard >= 1, got $rowsPerShard")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val g = groupCols.map(col)
     val boundsAggs = Seq(min(col("_sk")).as("_lo"),
@@ -946,7 +933,6 @@ object Stats {
       nBuckets: Int = 10): DataFrame = {
     require(nBuckets >= 2 && nBuckets <= 1000,
       s"nBuckets in [2,1000], got $nBuckets")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val shards = 64
     val scored = df.select(col(idCol).as("_lid"),
@@ -1021,7 +1007,6 @@ object Stats {
       df: DataFrame,
       durationCol: String,
       eventCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val byT = df.groupBy(col(durationCol).cast("long").as("duration"))
       .agg(count(lit(1)).as("_n"),
@@ -1078,7 +1063,6 @@ object Stats {
       df: DataFrame,
       durationCol: String,
       eventCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val byT = df.groupBy(col(durationCol).cast("long").as("duration"))
       .agg(count(lit(1)).as("_n"),
@@ -1118,7 +1102,6 @@ object Stats {
     val spark = df.sparkSession
     import spark.implicits._
     val W = org.apache.spark.sql.expressions.Window
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val shares = broadcast(designShares.toSeq.toDF("_arm", "_share"))
     val counts = df.groupBy(col(armCol).cast("string").as("_arm"))
       .agg(count(lit(1)).as("n_obs"))
@@ -1167,7 +1150,6 @@ object Stats {
       armCol: String,
       preCol: String,
       postCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val x6 = col(preCol).cast("decimal(28,6)")
     val y6 = col(postCol).cast("decimal(28,6)")
     val pooled = df.agg(
@@ -1227,7 +1209,6 @@ object Stats {
       treatedCol: String,
       postCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val v6 = col(valueCol).cast("decimal(28,6)")
     val t = col(treatedCol).cast("boolean")
     val p = col(postCol).cast("boolean")
@@ -1348,7 +1329,6 @@ object Stats {
       nBuckets: Int): DataFrame = {
     require(nBuckets >= 2 && nBuckets <= 1000,
       s"nBuckets must be in [2,1000], got $nBuckets")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val spark = df.sparkSession
     import spark.implicits._
     val s = col(scoreCol).cast("double")
@@ -1426,7 +1406,6 @@ object Stats {
       maxItems: Int = 10000): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1,50], got $iters")
     require(maxItems >= 2, s"maxItems must be >= 2, got $maxItems")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val spark = games.sparkSession
     import spark.implicits._
     val pairs = games.select(col(winnerCol).cast("string").as("_w"),
@@ -1511,7 +1490,6 @@ object Stats {
       df: DataFrame,
       armCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val arm = col(armCol).cast("int")
     val byVal = df
       .groupBy(col(valueCol).cast("long").as("_v"))
@@ -1587,7 +1565,6 @@ object Stats {
       df: DataFrame,
       xCol: String,
       yCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     def rank2Map(c: String): DataFrame = {
       val byVal = df.groupBy(col(c).cast("long").as("_v"))
         .agg(count(lit(1)).as("_m"))
@@ -1655,7 +1632,6 @@ object Stats {
       yCol: String,
       maxCells: Int = 4096): DataFrame = {
     require(maxCells >= 1, s"maxCells must be >= 1, got $maxCells")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val cells = df.groupBy(col(xCol).cast("long").as("_x"),
         col(yCol).cast("long").as("_y"))
       .agg(count(lit(1)).as("_m"))
@@ -1729,7 +1705,6 @@ object Stats {
       yCol: String,
       maxPoints: Int = 2000): DataFrame = {
     require(maxPoints >= 2, s"maxPoints must be >= 2, got $maxPoints")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val pts = df.select(col(xCol).cast("long").as("_x"),
       col(yCol).cast("long").as("_y"))
     val nPts = pts.agg(count(lit(1)).as("_n"))
@@ -1790,7 +1765,6 @@ object Stats {
     require(kPermille >= 0 && kPermille < 1000,
       s"kPermille in [0, 1000), got $kPermille")
     require(hPermille > 0, s"hPermille must be positive, got $hPermille")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val byP = df.groupBy(col(periodCol).cast("long").as("period"))
       .agg(sum(col(valueCol).cast("long")).as("x"))
     val W = org.apache.spark.sql.expressions.Window
@@ -1850,7 +1824,6 @@ object Stats {
       df: DataFrame,
       unitCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val byUV = df.groupBy(col(unitCol).as("_u"),
         col(valueCol).cast("string").as("_v"))
       .agg(count(lit(1)).as("_nuv"))
@@ -1901,7 +1874,6 @@ object Stats {
       labelCol: String,
       beta: Double = 0.999): DataFrame = {
     require(beta > 0 && beta < 1, s"beta in (0,1), got $beta")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val counts = df.groupBy(col(labelCol))
       .agg(count(lit(1)).as("n_rows"))
     val effN = d6((lit(1.0) - exp(col("n_rows").cast("double") *
@@ -1939,7 +1911,6 @@ object Stats {
       valueCol: String,
       k: Int = 50): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val v = col(valueCol).cast("long")
     val top = df.filter(v > 0L).select(v.as("_x"))
       .orderBy(col("_x").desc).limit(k + 1)
@@ -2003,8 +1974,6 @@ object Stats {
     require(cells.length <= maxCells,
       s"rakeWeights: ${cells.length} cells > maxCells $maxCells")
     val total = cells.map(_._3).sum.toDouble
-    def d6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     // weights start at 1; each phase scales every cell's weight by
     // (target total) / (current weighted margin), d6 after the division
     var w = cells.map(_ => 1.0)
@@ -2065,10 +2034,8 @@ object Stats {
       yCol: String,
       bins: Int = 10): DataFrame = {
     require(bins >= 2, s"bins must be >= 2, got $bins")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val s6 = col(scoreCol).cast("long")
     val y = col(yCol).cast("long")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val binned = df
       .select(least(floor(s6.cast("double") * bins / 1000000.0)
           .cast("long"), lit(bins - 1L)).as("_b"),
@@ -2125,10 +2092,8 @@ object Stats {
       alpha: Double = 0.05): DataFrame = {
     require(tau2 > 0, s"tau2 must be positive, got $tau2")
     require(alpha > 0 && alpha < 1, s"alpha in (0,1), got $alpha")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val arm = col(armCol).cast("int")
     val x = col(valueCol).cast("long")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val byP = df.groupBy(col(periodCol).cast("long").as("period"))
       .agg(
         sum(when(arm === 0, 1L).otherwise(0L)).as("_pn0"),
@@ -2212,8 +2177,6 @@ object Stats {
       df: DataFrame,
       scoreCol: String,
       labelCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val byScore = df
       .select(col(scoreCol).cast("long").as("_s"),
         col(labelCol).cast("long").as("_y"))
@@ -2283,8 +2246,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x = col(valueCol).cast("long")
     val byG = df.groupBy(col(groupCol).cast("string").as("_g"))
       .agg(count(lit(1)).as("_n"), sum(dec(x)).as("_s"),
@@ -2351,7 +2312,6 @@ object Stats {
       groupCol: String,
       predCol: String,
       labelCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val p = col(predCol).cast("long")
     val y = col(labelCol).cast("long")
     val byG = df.groupBy(col(groupCol).cast("string").as(groupCol))
@@ -2420,8 +2380,6 @@ object Stats {
       groupA: String,
       groupB: String): DataFrame = {
     require(groupA != groupB, "groupA and groupB must differ")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val g = col(groupCol).cast("string")
     val byV = df
       .filter(g === groupA || g === groupB)
@@ -2511,8 +2469,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val byGV = df.groupBy(col(groupCol).cast("string").as("_g"),
         col(valueCol).cast("long").as("_v"))
       .agg(count(lit(1)).as("_c"))
@@ -2590,8 +2546,6 @@ object Stats {
       itemCol: String,
       systemCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(col(itemCol).cast("string").as("_i"),
       col(systemCol).cast("string").as("_sys"),
       col(valueCol).cast("long").as("_v"))
@@ -2672,8 +2626,6 @@ object Stats {
       itemCol: String,
       systemCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(col(itemCol).cast("string").as("_i"),
       col(systemCol).cast("string").as("_sys"),
       col(valueCol).cast("long").as("_x"))
@@ -2742,8 +2694,6 @@ object Stats {
       df: DataFrame,
       exposureCol: String,
       outcomeCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val e = col(exposureCol).cast("long")
     val y = col(outcomeCol).cast("long")
     val agg = df.agg(
@@ -2812,8 +2762,6 @@ object Stats {
       itemCol: String,
       systemCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(col(itemCol).cast("string").as("_i"),
       col(systemCol).cast("string").as("_sys"),
       col(valueCol).cast("long").as("_v"))
@@ -2893,8 +2841,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val byGV = df.groupBy(col(groupCol).cast("string").as("_g"),
         col(valueCol).cast("long").as("_v"))
       .agg(count(lit(1)).as("_c"))
@@ -2979,7 +2925,6 @@ object Stats {
       isRefCol: String,
       bins: Int = 10): DataFrame = {
     require(bins >= 2 && bins <= 100, s"bins must be in [2,100], got $bins")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val binned = psiBinCounts(df, keyCol, idCol, valueCol, isRefCol, bins)
     val tot = binned.groupBy(col("_k"))
       .agg(sum(col("_cr")).as("_nr"), sum(col("_cc")).as("_nc"))
@@ -3077,8 +3022,6 @@ object Stats {
       df: DataFrame,
       aCol: String,
       bCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def c2(c: Column) = dec(c) * dec(c - 1L) / lit(2)
     val cont = df.select(col(aCol).cast("string").as("_a"),
         col(bCol).cast("string").as("_b"))
@@ -3153,8 +3096,6 @@ object Stats {
       idCol: String,
       valueCol: String,
       inXCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val base = df.select(col(keyCol).as("_k"), col(idCol).as("_id"),
       floor(col(valueCol).cast("double") * 1000.0).cast("long").as("_v"),
@@ -3255,7 +3196,6 @@ object Stats {
       df: DataFrame,
       keyCol: String,
       textCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val tok = df.select(col(keyCol).as("_k"),
       explode(expr(s"filter(split($textCol, ' '), w -> w != '')"))
         .as("_t"))
@@ -3303,8 +3243,6 @@ object Stats {
       steps: Int = 6): DataFrame = {
     require(steps >= 1 && steps <= 12,
       s"steps must be in [1,12], got $steps")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val base = df.select(
       (floor(col(scoreCol).cast("double") * 1000.0).cast("long")
         .cast("double") / 1000.0).as("_s"),
@@ -3384,8 +3322,6 @@ object Stats {
       steps: Int = 6): DataFrame = {
     require(steps >= 1 && steps <= 12,
       s"steps must be in [1,12], got $steps")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val W = org.apache.spark.sql.expressions.Window
     val base = df.select(col(keyCol).as("_k"),
       col(timeCol).cast("long").as("_t"),
@@ -3479,8 +3415,6 @@ object Stats {
       yCol: String,
       x1Col: String,
       x2Col: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(col(keyCol).as("_k"),
       col(yCol).cast("long").as("_y"),
       col(x1Col).cast("long").as("_u"), col(x2Col).cast("long").as("_v"))
@@ -3568,8 +3502,6 @@ object Stats {
       durationCol: String,
       eventCol: String,
       groupCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val W = org.apache.spark.sql.expressions.Window
     val g = when(col(groupCol).cast("long").isin(0L, 1L),
       col(groupCol).cast("long"))
@@ -3632,8 +3564,6 @@ object Stats {
       df: DataFrame,
       keyCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x = col(xCol).cast("long")
     val agg = df.groupBy(col(keyCol).as("_k"))
       .agg(count(lit(1)).as("_n"),
@@ -3689,8 +3619,6 @@ object Stats {
       eventCol: String,
       tau: Long): DataFrame = {
     require(tau > 0L, s"tau must be positive, got $tau")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val W = org.apache.spark.sql.expressions.Window
     val km = kaplanMeier(df, durationCol, eventCol)
     val wOrd = W.partitionBy(lit(1)).orderBy(col("duration").asc)
@@ -3777,8 +3705,6 @@ object Stats {
     require(cols.size >= 2 && cols.size <= 16,
       s"need 2..16 columns, got ${cols.size}")
     require(cols.distinct.size == cols.size, "columns must be distinct")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(cols.map(c => col(c).cast("long").as(c)): _*)
     val sums = Seq(count(lit(1)).as("_n")) ++
       cols.map(c => sum(dec(col(c))).as(s"_s_$c")) ++
@@ -3820,8 +3746,6 @@ object Stats {
       df: DataFrame,
       xCol: String,
       yCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val diff = df.select((col(xCol).cast("long") -
       col(yCol).cast("long")).as("_d"))
@@ -3872,7 +3796,6 @@ object Stats {
       df: DataFrame,
       xCol: String,
       yCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val diff = df.select((col(xCol).cast("long") -
       col(yCol).cast("long")).as("_d"))
     val agg = diff.agg(
@@ -3914,8 +3837,6 @@ object Stats {
       maxCells: Long = 10000L): DataFrame = {
     require(maxCells >= 2L && maxCells <= 1000000L,
       s"maxCells in [2,1e6], got $maxCells")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val wAll = W.partitionBy(lit(1))
       .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
@@ -3973,8 +3894,6 @@ object Stats {
       unitCol: String,
       halfCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val half = when(col(halfCol).cast("long").isin(0L, 1L),
       col(halfCol).cast("long"))
       .otherwise(raise_error(concat(
@@ -4024,8 +3943,6 @@ object Stats {
       df: DataFrame,
       armCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val arm = col(armCol).cast("int")
     val byVal = df
@@ -4109,8 +4026,6 @@ object Stats {
       yCol: String,
       steps: Int = 6): DataFrame = {
     require(steps >= 1 && steps <= 12, s"steps in [1,12], got $steps")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val base = df.select(col(keyCol).as("_k"),
       col(xCol).cast("long").as("_x"),
       when(col(yCol).cast("long") >= 0L, col(yCol).cast("long"))
@@ -4194,9 +4109,6 @@ object Stats {
     require(populationShares.nonEmpty, "populationShares is empty")
     require(math.abs(populationShares.values.sum - 1.0) < 1e-9,
       s"shares must sum to 1, got ${populationShares.values.sum}")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val spark = df.sparkSession
     import spark.implicits._
     val shares = broadcast(populationShares.toSeq.toDF("_h", "_w"))
@@ -4263,7 +4175,6 @@ object Stats {
       s"need 1..100 MDEs, got ${relativeMdes.size}")
     require(relativeMdes.forall(m => m != 0.0),
       "a zero MDE needs infinite n")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val y = when(col(outcomeCol).cast("long").isin(0L, 1L),
       col(outcomeCol).cast("long"))
       .otherwise(raise_error(concat(
@@ -4307,7 +4218,6 @@ object Stats {
       df: DataFrame,
       armCol: String,
       valueCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val arm = col(armCol).cast("int")
     val byVal = df
       .groupBy(col(valueCol).cast("long").as("_v"))
@@ -4377,8 +4287,6 @@ object Stats {
       df: DataFrame,
       labelCol: String,
       predCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def flag(name: String, c: Column): Column =
       when(c.cast("long").isin(0L, 1L), c.cast("long"))
         .otherwise(raise_error(concat(
@@ -4447,8 +4355,6 @@ object Stats {
       itemCol: String,
       systemCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val cells = df.groupBy(col(itemCol).as("_i"),
         col(systemCol).cast("long").as("_j"))
@@ -4533,8 +4439,6 @@ object Stats {
       maxCells: Long = 10000L): DataFrame = {
     require(maxCells >= 4L && maxCells <= 1000000L,
       s"maxCells in [4,1e6], got $maxCells")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val wAll = W.partitionBy(lit(1))
       .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
@@ -4602,9 +4506,6 @@ object Stats {
       unitCol: String,
       itemCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val cells = df.groupBy(col(unitCol).as("_u"),
         col(itemCol).cast("string").as("_i"))
       .agg(sum(col(xCol).cast("long")).as("_x"))
@@ -4666,8 +4567,6 @@ object Stats {
       xCol: String,
       yCol: String,
       zCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x = col(xCol).cast("long")
     val y = col(yCol).cast("long")
     val z = col(zCol).cast("long")
@@ -4725,8 +4624,6 @@ object Stats {
       maxCells: Long = 10000L): DataFrame = {
     require(maxCells >= 4L && maxCells <= 1000000L,
       s"maxCells in [4,1e6], got $maxCells")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val rawCells = df.select(col(doseCol).cast("long").as("_d"),
         col(xCol).cast("long").as("_v"))
@@ -4823,7 +4720,6 @@ object Stats {
       maxCells: Long = 10000L): DataFrame = {
     require(maxCells >= 4L && maxCells <= 1000000L,
       s"maxCells in [4,1e6], got $maxCells")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val ev = when(col(eventCol).cast("long").isin(0L, 1L),
       col(eventCol).cast("long"))
       .otherwise(raise_error(concat(lit("harrellC: event flag "),
@@ -4882,8 +4778,6 @@ object Stats {
       df: DataFrame,
       unitCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x = col(xCol).cast("long")
     val per = df.groupBy(col(unitCol).as("_u"))
       .agg(count(lit(1)).as("_k"), sum(dec(x)).as("_s"),
@@ -4953,8 +4847,6 @@ object Stats {
       df: DataFrame,
       curCol: String,
       bucket: Column): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val W = org.apache.spark.sql.expressions.Window
     val cur = col(curCol).cast("boolean")
     val cnt = df.groupBy(bucket.cast("string").as("bucket"))
@@ -5018,8 +4910,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x = col(xCol).cast("long")
     val per = df.groupBy(col(groupCol).cast("string").as("_g"))
       .agg(count(lit(1)).as("_n"),
@@ -5083,7 +4973,6 @@ object Stats {
       keyCol: String,
       zCol: String,
       q: Double = 0.05): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val withP = df.select(col(keyCol), col(zCol).cast("double").as("z"))
       .withColumn("_p_raw", d6(normalTwoSidedP(col("z"))))
     bhFdr(withP, keyCol, "_p_raw", q)
@@ -5111,7 +5000,6 @@ object Stats {
       df: DataFrame,
       armCol: String,
       outcomeCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     def flag(name: String, c: Column): Column =
       when(c.cast("long").isin(0L, 1L), c.cast("long"))
         .otherwise(raise_error(concat(lit(s"riskRatio: $name flag "),
@@ -5171,8 +5059,6 @@ object Stats {
       df: DataFrame,
       orderCol: String,
       yCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val wOrd = W.partitionBy(lit(1)).orderBy(col("_t").asc)
     val upTo = wOrd.rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -5248,8 +5134,6 @@ object Stats {
       stratumCol: String,
       armCol: String,
       outcomeCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     def flag(name: String, c: Column): Column =
       when(c.cast("long").isin(0L, 1L), c.cast("long"))
         .otherwise(raise_error(concat(
@@ -5319,8 +5203,6 @@ object Stats {
       df: DataFrame,
       doseCol: String,
       outcomeCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val y = when(col(outcomeCol).cast("long").isin(0L, 1L),
       col(outcomeCol).cast("long"))
       .otherwise(raise_error(concat(
@@ -5375,7 +5257,6 @@ object Stats {
       df: DataFrame,
       flagACol: String,
       flagBCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     def flag(name: String, c: Column): Column =
       when(c.cast("long").isin(0L, 1L), c.cast("long"))
         .otherwise(raise_error(concat(
@@ -5428,8 +5309,6 @@ object Stats {
       df: DataFrame,
       xCol: String,
       yCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x = col(xCol).cast("long")
     val y = col(yCol).cast("long")
     val base = df.select(x.as("_x"), y.as("_y"))
@@ -5484,6 +5363,30 @@ object Stats {
       .drop("_mse")
   }
 
+  /** The arm column of a two-arm test as a 0/1 `long`; any other value
+    * fails the query loudly, naming the operator `fn`.
+    */
+  private def armFlag(fn: String, armCol: String): Column =
+    when(col(armCol).cast("long").isin(0L, 1L),
+      col(armCol).cast("long"))
+      .otherwise(raise_error(concat(lit(s"$fn: arm flag "),
+        col(armCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+
+  /** The value-grouped frame of a two-arm rank test (the `mannWhitneyU`
+    * discipline, docs/SCALING.md class 6): one row per distinct `_x`
+    * (`xCol` as `long`) with the per-arm counts `_c0`/`_c1` and the
+    * run length `_t`. Midranks are constant on a value run, so every
+    * rank statistic of the two arms is a function of these counts.
+    */
+  private def twoArmValueCells(df: DataFrame, fn: String, armCol: String,
+      xCol: String): DataFrame =
+    df.select(armFlag(fn, armCol).as("_a"),
+        col(xCol).cast("long").as("_x"))
+      .groupBy(col("_x"))
+      .agg(sum(when(col("_a") === 0L, 1L).otherwise(0L)).as("_c0"),
+        sum(when(col("_a") === 1L, 1L).otherwise(0L)).as("_c1"))
+      .withColumn("_t", col("_c0") + col("_c1"))
+
   /** Cohen's d / Hedges' g standardized effect size between two arms
     * (Cohen 1988; Hedges 1981) — the "how BIG is the difference"
     * readout that belongs NEXT to [[welchTTest]]'s "is it real":
@@ -5505,13 +5408,7 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    val arm = when(col(armCol).cast("long").isin(0L, 1L),
-      col(armCol).cast("long"))
-      .otherwise(raise_error(concat(lit("cohensD: arm flag "),
-        col(armCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val arm = armFlag("cohensD", armCol)
     val x = col(xCol).cast("long")
     val base = df.select(arm.as("_a"), x.as("_x"))
     val agg = base.agg(
@@ -5583,11 +5480,7 @@ object Stats {
       exposure1: Long): DataFrame = {
     require(exposure0 > 0L && exposure1 > 0L,
       s"exposures must be positive, got ($exposure0, $exposure1)")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    val arm = when(col(armCol).cast("long").isin(0L, 1L),
-      col(armCol).cast("long"))
-      .otherwise(raise_error(concat(lit("poissonRateTest: arm flag "),
-        col(armCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val arm = armFlag("poissonRateTest", armCol)
     val p = exposure1.toDouble / (exposure0 + exposure1).toDouble
     val agg = df.select(col(keyCol).as("_k"), arm.as("_a"))
       .groupBy(col("_k"))
@@ -5629,9 +5522,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x = col(xCol).cast("long")
     val per = df.groupBy(col(groupCol).cast("string").as("_g"))
       .agg(count(lit(1)).as("_n"),
@@ -5701,8 +5591,6 @@ object Stats {
       maxN: Long = 10000L): DataFrame = {
     require(maxN >= 2L && maxN <= 100000L,
       s"maxN must be in [2,100000], got $maxN")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val W = org.apache.spark.sql.expressions.Window
     def flag(name: String, c: Column): Column =
       when(c.cast("long").isin(0L, 1L), c.cast("long"))
@@ -5789,8 +5677,6 @@ object Stats {
       yCol: String,
       m: Double = 100.0): DataFrame = {
     require(m >= 0.0, s"smoothing m must be >= 0, got $m")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val y = col(yCol).cast("long")
     val base = df.select(col(catCol).cast("string").as("_c"), y.as("_y"))
     val perCat = base.groupBy(col("_c"))
@@ -5832,7 +5718,6 @@ object Stats {
       pCol: String,
       alpha: Double): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha in (0,1), got $alpha")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val p = guardedP(pCol, keyCol, "holmBonferroni")
     val ranked = df
@@ -5886,19 +5771,8 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
-    val arm = when(col(armCol).cast("long").isin(0L, 1L),
-      col(armCol).cast("long"))
-      .otherwise(raise_error(concat(lit("cliffsDelta: arm flag "),
-        col(armCol).cast("string"), lit(" is not 0/1"))).cast("long"))
-    val cells = df
-      .select(arm.as("_a"), col(xCol).cast("long").as("_x"))
-      .groupBy(col("_x"))
-      .agg(sum(when(col("_a") === 0L, 1L).otherwise(0L)).as("_c0"),
-        sum(when(col("_a") === 1L, 1L).otherwise(0L)).as("_c1"))
-      .withColumn("_t", col("_c0") + col("_c1"))
+    val cells = twoArmValueCells(df, "cliffsDelta", armCol, xCol)
       .withColumn("_cb", coalesce(sum(col("_t"))
         .over(W.orderBy(col("_x").asc)
           .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
@@ -5952,8 +5826,6 @@ object Stats {
       zCol: String,
       xCol: String,
       yCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(col(zCol).cast("long").as("_z"),
       col(xCol).cast("long").as("_x"), col(yCol).cast("long").as("_y"))
     val agg = base.agg(count(lit(1)).as("_n"),
@@ -6021,8 +5893,6 @@ object Stats {
       df: DataFrame,
       xCol: String,
       yCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(col(xCol).cast("long").as("_x"),
       col(yCol).cast("long").as("_y"))
     val agg = base.agg(count(lit(1)).as("_n"),
@@ -6098,8 +5968,6 @@ object Stats {
       splitCol: String,
       xCol: String,
       yCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val seg = when(col(splitCol).cast("long").isin(0L, 1L),
       col(splitCol).cast("long"))
       .otherwise(raise_error(concat(lit("chowTest: split flag "),
@@ -6179,8 +6047,6 @@ object Stats {
       xCol: String,
       topK: Int = 4): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val x = when(col(xCol).cast("long") >= 0L, col(xCol).cast("long"))
       .otherwise(raise_error(concat(lit("hhiConcentration: mass "),
@@ -6234,9 +6100,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x = when(col(xCol).cast("long") > 0L, col(xCol).cast("long"))
       .otherwise(raise_error(concat(lit("theilDecomposition: mass "),
         col(xCol).cast("string"), lit(" is not positive"))).cast("long"))
@@ -6283,9 +6146,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val x = when(col(xCol).cast("long") > 0L, col(xCol).cast("long"))
       .otherwise(raise_error(concat(lit("atkinsonIndices: mass "),
         col(xCol).cast("string"), lit(" is not positive"))).cast("long"))
@@ -6336,7 +6196,6 @@ object Stats {
       groupCol: String,
       idCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val x = when(col(xCol).cast("long") >= 0L, col(xCol).cast("long"))
       .otherwise(raise_error(concat(lit("palmaShares: mass "),
         col(xCol).cast("string"), lit(" is negative"))).cast("long"))
@@ -6390,8 +6249,6 @@ object Stats {
       lsl: Long,
       usl: Long): DataFrame = {
     require(usl > lsl, s"need usl > lsl, got ($lsl, $usl)")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(col(keyCol).as("_k"),
       col(xCol).cast("long").as("_x"))
     val agg = base.groupBy(col("_k"))
@@ -6443,8 +6300,6 @@ object Stats {
       denCol: String,
       z: Double = 1.959964): DataFrame = {
     require(z > 0, s"z must be positive, got $z")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(col(numCol).cast("long").as("_x"),
       col(denCol).cast("long").as("_y"))
     val agg = base.agg(count(lit(1)).as("_n"),
@@ -6506,8 +6361,6 @@ object Stats {
       df: DataFrame,
       durationCol: String,
       causeCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val W = org.apache.spark.sql.expressions.Window
     val cause = when(col(causeCol).cast("long") >= 0L,
       col(causeCol).cast("long"))
@@ -6562,7 +6415,6 @@ object Stats {
       eventCol: String,
       width: Long): DataFrame = {
     require(width > 0L, s"width must be positive, got $width")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     // exact integer bucketing (ADVICE r15): `div` matches the oracle's
     // `//` bit-for-bit for non-negative durations; negatives (where
@@ -6651,8 +6503,6 @@ object Stats {
       yCol: String,
       maxRows: Long = 10000L): DataFrame = {
     require(maxRows >= 5L, s"maxRows must be >= 5, got $maxRows")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val raw = df.select(col(xCol).cast("long").as("_x0"),
       col(yCol).cast("long").as("_y"))
@@ -6717,9 +6567,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(col(groupCol).as("_g"),
       col(xCol).cast("long").as("_x"))
     val g = base.groupBy(col("_g"))
@@ -6804,8 +6651,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val W = org.apache.spark.sql.expressions.Window
     val base = df.select(col(groupCol).as("_g"),
       col(xCol).cast("long").as("_x"))
@@ -6877,18 +6722,8 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
-    val arm = when(col(armCol).cast("long").isin(0L, 1L),
-      col(armCol).cast("long"))
-      .otherwise(raise_error(concat(lit("ansariBradley: arm flag "),
-        col(armCol).cast("string"), lit(" is not 0/1"))).cast("long"))
-    val byVal = df.select(arm.as("_a"), col(xCol).cast("long").as("_x"))
-      .groupBy(col("_x"))
-      .agg(sum(when(col("_a") === 0L, 1L).otherwise(0L)).as("_c0"),
-        sum(when(col("_a") === 1L, 1L).otherwise(0L)).as("_c1"))
-      .withColumn("_t", col("_c0") + col("_c1"))
+    val byVal = twoArmValueCells(df, "ansariBradley", armCol, xCol)
     val wBefore = W.orderBy(col("_x").asc)
       .rowsBetween(W.unboundedPreceding, -1)
     val wFrame = W.orderBy(col("_x").asc)
@@ -6946,8 +6781,6 @@ object Stats {
       df: DataFrame,
       xCol: String,
       yCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select(col(xCol).cast("long").as("_x"),
       col(yCol).cast("long").as("_y"))
     val agg = base.agg(count(lit(1)).as("_n"),
@@ -7001,8 +6834,6 @@ object Stats {
       yCol: String,
       z: Double = 1.959964): DataFrame = {
     require(z > 0, s"z must be positive, got $z")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val base = df.select((col(xCol).cast("long") -
       col(yCol).cast("long")).as("_d"))
     val agg = base.agg(count(lit(1)).as("_n"),
@@ -7042,8 +6873,6 @@ object Stats {
       df: DataFrame,
       raterACol: String,
       raterBCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val base = df.select(col(raterACol).cast("string").as("_a"),
       col(raterBCol).cast("string").as("_b"))
     val n = base.agg(count(lit(1)).as("_n"),
@@ -7090,11 +6919,7 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    val arm = when(col(armCol).cast("long").isin(0L, 1L),
-      col(armCol).cast("long"))
-      .otherwise(raise_error(concat(lit("cohensH: arm flag "),
-        col(armCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val arm = armFlag("cohensH", armCol)
     val x = when(col(xCol).cast("long").isin(0L, 1L),
       col(xCol).cast("long"))
       .otherwise(raise_error(concat(lit("cohensH: outcome "),
@@ -7148,8 +6973,6 @@ object Stats {
       strataCol: String,
       refPred: Column,
       eventCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val x = when(col(eventCol).cast("long").isin(0L, 1L),
       col(eventCol).cast("long"))
       .otherwise(raise_error(concat(lit("smrIndirect: outcome "),
@@ -7206,8 +7029,6 @@ object Stats {
       pCol: String,
       q: Double): DataFrame = {
     require(q > 0 && q < 1, s"q in (0,1), got $q")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val W = org.apache.spark.sql.expressions.Window
     val p = guardedP(pCol, keyCol, "byFdr")
     val wAll = W.partitionBy(lit(1))
@@ -7260,8 +7081,6 @@ object Stats {
       trimPpm: Long = 100000L): DataFrame = {
     require(trimPpm >= 0L && trimPpm < 500000L,
       s"trimPpm in [0, 5e5), got $trimPpm")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val ranked = df
       .select(col(keyCol).as("_k"), col(xCol).cast("long").as("_x"))
@@ -7321,8 +7140,6 @@ object Stats {
       labelCol: String,
       groups: Int = 10): DataFrame = {
     require(groups >= 2, s"groups must be >= 2, got $groups")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val y = when(col(labelCol).cast("long").isin(0L, 1L),
       col(labelCol).cast("long"))
@@ -7384,7 +7201,6 @@ object Stats {
       costFn: Long): DataFrame = {
     require(benefitTp >= 0L && costFp >= 0L && costFn >= 0L,
       "coefficients must be non-negative")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val y = when(col(labelCol).cast("long").isin(0L, 1L),
       col(labelCol).cast("long"))
@@ -7449,8 +7265,6 @@ object Stats {
       raterCol: String,
       itemCol: String,
       scoreCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val y = when(col(scoreCol).cast("long").isin(0L, 1L),
       col(scoreCol).cast("long"))
@@ -7515,8 +7329,6 @@ object Stats {
       df: DataFrame,
       raterACol: String,
       raterBCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val wAll = W.partitionBy(lit(1))
       .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
@@ -7561,12 +7373,7 @@ object Stats {
       xCol: String,
       margin: Double): DataFrame = {
     require(margin > 0.0, s"margin must be positive, got $margin")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    val arm = when(col(armCol).cast("long").isin(0L, 1L),
-      col(armCol).cast("long"))
-      .otherwise(raise_error(concat(lit("tostMeans: arm flag "),
-        col(armCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val arm = armFlag("tostMeans", armCol)
     val agg = df.select(arm.as("_a"), col(xCol).cast("long").as("_x"))
       .groupBy(col("_a"))
       .agg(count(lit(1)).as("_n"), sum(dec(col("_x"))).as("_s"),
@@ -7638,7 +7445,6 @@ object Stats {
       df: DataFrame,
       armCol: String,
       flagCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val z = 1.96
     def f01(cn: String) = when(col(cn).cast("long").isin(0L, 1L),
       col(cn).cast("long"))
@@ -7716,8 +7522,6 @@ object Stats {
       s"return periods must all be >= 2, got $returnPeriods")
     require(returnPeriods.distinct.size == returnPeriods.size,
       "return periods must be distinct")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val euler = 0.5772156649015329
     val sqrt6OverPi = math.sqrt(6.0) / math.Pi
     val g = df.select(col(keyCol).as("_k"), col(xCol).cast("long").as("_x"))
@@ -7773,7 +7577,6 @@ object Stats {
       df: DataFrame,
       p0PpmCol: String,
       p1PpmCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val zA = 1.959964
     val zB = 0.841621
     def ppm(cn: String) = when(col(cn).cast("long") > 0L &&
@@ -7825,8 +7628,6 @@ object Stats {
       valueCol: String,
       points: Int = 10): DataFrame = {
     require(points >= 2, s"points must be >= 2, got $points")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val y = when(col(valueCol).cast("long") >= 0L,
       col(valueCol).cast("long"))
       .otherwise(raise_error(concat(lit("lorenzCurve: negative value "),
@@ -7886,8 +7687,6 @@ object Stats {
       unitCol: String,
       baseCol: String,
       contribCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     def pos(cn: String) = when(col(cn).cast("long") >= 0L,
       col(cn).cast("long"))
       .otherwise(raise_error(concat(lit(s"kakwani: negative $cn "),
@@ -7946,9 +7745,6 @@ object Stats {
   def andersonDarling(
       df: DataFrame,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val byVal = df.select(col(xCol).cast("long").as("_x"))
       .groupBy(col("_x"))
@@ -8035,9 +7831,6 @@ object Stats {
       df: DataFrame,
       aCol: String,
       bCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val wAll = W.partitionBy(lit(1))
       .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
@@ -8097,9 +7890,6 @@ object Stats {
       labelCol: String,
       groups: Int = 10): DataFrame = {
     require(groups >= 3, s"groups must be >= 3 (df = G-2), got $groups")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val p = when(col(probPpmCol).cast("long").between(0L, 1000000L),
       col(probPpmCol).cast("long"))
@@ -8183,18 +7973,8 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
-    val arm = when(col(armCol).cast("long").isin(0L, 1L),
-      col(armCol).cast("long"))
-      .otherwise(raise_error(concat(lit("brunnerMunzel: arm flag "),
-        col(armCol).cast("string"), lit(" is not 0/1"))).cast("long"))
-    val byVal = df.select(arm.as("_a"), col(xCol).cast("long").as("_x"))
-      .groupBy(col("_x"))
-      .agg(sum(when(col("_a") === 0L, 1L).otherwise(0L)).as("_c0"),
-        sum(when(col("_a") === 1L, 1L).otherwise(0L)).as("_c1"))
-      .withColumn("_t", col("_c0") + col("_c1"))
+    val byVal = twoArmValueCells(df, "brunnerMunzel", armCol, xCol)
     val wBefore = W.orderBy(col("_x").asc)
       .rowsBetween(W.unboundedPreceding, -1)
     // doubled midranks per value run: 2·avgRank = 2·cumBefore + t + 1
@@ -8279,8 +8059,6 @@ object Stats {
       blockCol: String,
       treatCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     val cell = df.select(col(blockCol).as("_b"), col(treatCol).as("_t"),
         col(xCol).cast("long").as("_x"))
@@ -8372,7 +8150,6 @@ object Stats {
       df: DataFrame,
       truthCol: String,
       predCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     def flag(cn: String) = when(col(cn).cast("long").isin(0L, 1L),
       col(cn).cast("long"))
       .otherwise(raise_error(concat(
@@ -8461,18 +8238,8 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
-    val arm = when(col(armCol).cast("long").isin(0L, 1L),
-      col(armCol).cast("long"))
-      .otherwise(raise_error(concat(lit("cucconiTest: arm flag "),
-        col(armCol).cast("string"), lit(" is not 0/1"))).cast("long"))
-    val byVal = df.select(arm.as("_a"), col(xCol).cast("long").as("_x"))
-      .groupBy(col("_x"))
-      .agg(sum(when(col("_a") === 0L, 1L).otherwise(0L)).as("_c0"),
-        sum(when(col("_a") === 1L, 1L).otherwise(0L)).as("_c1"))
-      .withColumn("_t", col("_c0") + col("_c1"))
+    val byVal = twoArmValueCells(df, "cucconiTest", armCol, xCol)
     val wBefore = W.orderBy(col("_x").asc)
       .rowsBetween(W.unboundedPreceding, -1)
     val wFrame = W.orderBy(col("_x").asc)
@@ -8554,18 +8321,8 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
-    val arm = when(col(armCol).cast("long").isin(0L, 1L),
-      col(armCol).cast("long"))
-      .otherwise(raise_error(concat(lit("lepageTest: arm flag "),
-        col(armCol).cast("string"), lit(" is not 0/1"))).cast("long"))
-    val byVal = df.select(arm.as("_a"), col(xCol).cast("long").as("_x"))
-      .groupBy(col("_x"))
-      .agg(sum(when(col("_a") === 0L, 1L).otherwise(0L)).as("_c0"),
-        sum(when(col("_a") === 1L, 1L).otherwise(0L)).as("_c1"))
-      .withColumn("_t", col("_c0") + col("_c1"))
+    val byVal = twoArmValueCells(df, "lepageTest", armCol, xCol)
     val wBefore = W.orderBy(col("_x").asc)
       .rowsBetween(W.unboundedPreceding, -1)
     val wFrame = W.orderBy(col("_x").asc)
@@ -8650,8 +8407,6 @@ object Stats {
       durationCol: String,
       eventCol: String,
       groupCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val W = org.apache.spark.sql.expressions.Window
     val g = when(col(groupCol).cast("long").isin(0L, 1L),
       col(groupCol).cast("long"))
@@ -8728,8 +8483,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       xCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val W = org.apache.spark.sql.expressions.Window
     // NULL group raises loudly (ADVICE r17: a NULL group would inflate
     // N and the tie term while vanishing from every output pair — both
@@ -8827,7 +8580,6 @@ object Stats {
       lambdaPermille: Int = 500): DataFrame = {
     require(lambdaPermille >= 1 && lambdaPermille <= 999,
       s"lambdaPermille in [1,999], got $lambdaPermille")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val lam = lambdaPermille.toDouble / 1000.0
     val p = guardedP(pCol, keyCol, "storeyQValues")
@@ -8882,8 +8634,6 @@ object Stats {
   def metaCombine(
       df: DataFrame,
       zCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val z = when(col(zCol).cast("double").isNotNull &&
       !isnan(col(zCol).cast("double")), col(zCol).cast("double"))
       .otherwise(raise_error(lit(
@@ -8944,8 +8694,6 @@ object Stats {
       df: DataFrame,
       aCol: String,
       bCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val cells = df.groupBy(col(aCol).cast("string").as("_a"),
         col(bCol).cast("string").as("_b"))
       .agg(count(lit(1)).as("_n"))

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.pipeline.Exact.d6
 
 /** Document deduplication operators for large-scale training-data pipelines.
   *
@@ -187,7 +188,6 @@ object TextDedup {
       threshold: Double,
       maxShingleDocs: Int = 500): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1]: $threshold")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
     // candidate generation may be df-pruned, but n_common is ALWAYS
     // re-counted against the full shingle sets (jaccardPairs'
@@ -1181,7 +1181,6 @@ object TextDedup {
       window: Int = 16,
       divisor: Int = 64): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val dc = cdcChunks(df, idCol, textCol, window, divisor)
       .select(col(idCol), col("chunk_md5")).distinct()
     val pruned = dc.join(

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.pipeline.Exact.{dec, d28, d6}
 
 /** Text-analysis operators for training-data curation: token statistics,
   * quality scoring, lexicon-based language id, and rolling-hash document
@@ -149,8 +150,6 @@ object TextStats {
       .otherwise(nSym.cast("double") / nChars)
     val digitShare = when(nChars === 0, lit(0.0))
       .otherwise(nDig.cast("double") / nChars)
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     df.select(col(idCol), nTok.as("n_tokens"),
         avgTokLen.as("_g_atl"), symbolShare.as("_g_sym"),
         digitShare.as("_g_dig"))
@@ -189,8 +188,6 @@ object TextStats {
     def cnt(script: String) =
       length(regexp_replace(t, s"[^\\p{Is$script}]", "")).cast("long")
     val nDigit = length(regexp_replace(t, "[^0-9]", "")).cast("long")
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     df.select(col(idCol), length(t).cast("long").as("n_chars"),
         cnt("Latin").as("n_latin"), cnt("Cyrillic").as("n_cyrillic"),
         cnt("Greek").as("n_greek"), cnt("Han").as("n_han"),
@@ -217,8 +214,6 @@ object TextStats {
     * reference formulation.
     */
   def scriptMixFast(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val d6 = (c: org.apache.spark.sql.Column) =>
-      c.cast("decimal(28,6)").cast("double")
     val c = graft.functions.ScriptCounts.scriptCounts(col(textCol))
     df.select(col(idCol), c.as("_g_sc"))
       .select(col(idCol),
@@ -1574,7 +1569,6 @@ object TextStats {
       idCol: String,
       textCol: String,
       minDelta: Double): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val sIn = knLogProbAgainst(inDomain, df, idCol, textCol)
       .select(col(idCol), col("n_bigrams"),
         col("avg_logprob_kn").as("lp_in"))
@@ -1618,7 +1612,6 @@ object TextStats {
       textCol: String,
       points: Int = 8): DataFrame = {
     require(points >= 3 && points <= 64, s"points in [3, 64], got $points")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val dsum = (c: Column) => sum(c.cast("decimal(28,6)")).cast("double")
     val bounds = df.agg(min(col(idCol)).cast("long").as("_mn"),
       (max(col(idCol)).cast("long") + 1L).as("_mx"))
@@ -1693,7 +1686,6 @@ object TextStats {
       textCol: String,
       topR: Int = 200): DataFrame = {
     require(topR >= 3, s"topR must be >= 3, got $topR")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val dsum = (c: Column) => sum(c.cast("decimal(28,6)")).cast("double")
     val top = df
       .select(explode(split(col(textCol), " ")).as("tok"))
@@ -1808,7 +1800,6 @@ object TextStats {
       minCount: Int = 5): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val toks = df
       .select(col(idCol),
         posexplode(split(col(textCol), " ")).as(Seq("_g_pos", "tok")))
@@ -1862,7 +1853,6 @@ object TextStats {
       groupCol: String,
       textCol: String,
       delimRe: String = "\n"): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val units = df
       .select(col(groupCol).as("_grp"),
         explode(filter(transform(split(col(textCol), delimRe),
@@ -1909,7 +1899,6 @@ object TextStats {
       df: DataFrame,
       groupCol: String,
       textCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val terms = df
       .select(col(groupCol).as("_grp"),
         explode(filter(split(col(textCol), " "),
@@ -1968,7 +1957,6 @@ object TextStats {
       minCount: Int = 5): DataFrame = {
     require(alpha0 > 0, s"alpha0 must be positive, got $alpha0")
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val flagged = df.select(col(flagCol).cast("boolean").as("_a"),
       explode(filter(split(col(textCol), " "),
         t => length(t) > 0)).as("term"))
@@ -2073,7 +2061,6 @@ object TextStats {
       topK: Int = 30): DataFrame = {
     require(window >= 2, s"window must be >= 2, got $window")
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val toks = df
       .select(col(idCol).as("_g_id"),
         posexplode(split(col(textCol), " ")).as(Seq("_g_pos", "tok")))
@@ -2124,7 +2111,6 @@ object TextStats {
       minDocs: Int = 5): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(minDocs >= 1, s"minDocs must be >= 1, got $minDocs")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val y = col(labelCol).cast("int")
     val docs = df.select(col(idCol), y.as("_y"), col(textCol))
     val presence = docs
@@ -2187,7 +2173,6 @@ object TextStats {
       textCol: String,
       maxR: Int = 10): DataFrame = {
     require(maxR >= 1, s"maxR must be >= 1, got $maxR")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val spark = df.sparkSession
     val toks = df
       .select(explode(split(col(textCol), " ")).as("tok"))
@@ -2243,7 +2228,6 @@ object TextStats {
       topK: Int = 30): DataFrame = {
     require(maxPhraseLen >= 1, s"maxPhraseLen must be >= 1, got $maxPhraseLen")
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val toks = df
       .select(col(idCol).as("_g_id"),
         posexplode(split(col(textCol), " ")).as(Seq("_g_pos", "tok")))
@@ -2321,8 +2305,6 @@ object TextStats {
       topM: Int = 30,
       maxAuthors: Int = 1000): DataFrame = {
     require(topM >= 1, s"topM must be >= 1, got $topM")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dd6(c: Column) = c.cast("decimal(28,6)")
     val tk = df.select(col(authorCol).cast("string").as("_a"),
         explode(split(col(textCol), " ")).as("_w"))
       .filter(col("_w") =!= "")
@@ -2341,7 +2323,7 @@ object TextStats {
         d6(coalesce(col("_c"), lit(0L)).cast("double") /
           col("_na").cast("double")).as("_f"))
     val mu = grid.groupBy(col("_w"))
-      .agg(sum(dd6(col("_f"))).as("_fSum"))
+      .agg(sum(d28(col("_f"))).as("_fSum"))
       .crossJoin(broadcast(nAuthors))
       .withColumn("_nA",
         when(col("_nA") <= maxAuthors && col("_nA") >= 2L, col("_nA"))
@@ -2353,7 +2335,7 @@ object TextStats {
           .as("_mu"))
     val dev = grid.join(broadcast(mu), "_w")
       .select(col("_a"), col("_w"), col("_nA"), col("_f"), col("_mu"),
-        dd6((col("_f") - col("_mu")) * (col("_f") - col("_mu")))
+        d28((col("_f") - col("_mu")) * (col("_f") - col("_mu")))
           .as("_dev6"))
     val sigma = dev.groupBy(col("_w"))
       .agg(max(col("_nA")).as("_nA"), sum(col("_dev6")).as("_vSum"))
@@ -2363,7 +2345,7 @@ object TextStats {
       .filter(col("_sigma") > 0.0)
     val z = dev.join(broadcast(sigma), "_w")
       .select(col("_a"), col("_w"),
-        dd6(d6((col("_f") - col("_mu")) / col("_sigma"))).as("_z"))
+        d28(d6((col("_f") - col("_mu")) / col("_sigma"))).as("_z"))
     val za = z.select(col("_a").as("author_a"), col("_w"),
       col("_z").as("_za"))
     val zb = z.select(col("_a").as("author_b"), col("_w"),
@@ -2372,7 +2354,7 @@ object TextStats {
       .filter(col("author_a") < col("author_b"))
       .groupBy(col("author_a"), col("author_b"))
       .agg(count(lit(1)).as("n_words"),
-        sum(dd6(abs(col("_za") - col("_zb")))).as("_dSum"))
+        sum(d28(abs(col("_za") - col("_zb")))).as("_dSum"))
       .select(col("author_a"), col("author_b"), col("n_words"),
         d6(col("_dSum").cast("double") / col("n_words").cast("double"))
           .as("delta"))
@@ -2407,7 +2389,6 @@ object TextStats {
       df: DataFrame,
       idCol: String,
       textCol: String): DataFrame = {
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val syl = (w: String) =>
       s"greatest(1, size(regexp_extract_all(lower($w), '[aeiouy]+', 0)))"
     val words = s"filter(split($textCol, ' '), w -> w != '')"
@@ -2472,7 +2453,6 @@ object TextStats {
       textCol: String,
       maxTokens: Int = 200): DataFrame = {
     require(maxTokens >= 10, s"maxTokens must be >= 10, got $maxTokens")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val toks = s"slice(filter(split($textCol, ' '), w -> w != ''), " +
       s"1, $maxTokens)"
     // fold state: (f factors, seg distinct-token array, st seg tokens)
@@ -2550,7 +2530,6 @@ object TextStats {
       slicePred: Column,
       minCount: Long = 5L): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val toks = df.select(slicePred.cast("int").as("_in"),
       explode(expr(s"filter(split($textCol, ' '), w -> w != '')"))
         .as("tok"))
@@ -2628,8 +2607,6 @@ object TextStats {
       textCol: String,
       minCount: Long = 5L): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val toks = df.select(col(idCol).as("_d"),
       explode(expr(s"filter(split($textCol, ' '), w -> w != '')"))
         .as("tok"))
@@ -2656,8 +2633,6 @@ object TextStats {
       partCol: String,
       minCount: Long = 5L): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
-    def dec(c: Column) = c.cast("decimal(38,0)")
     val toks = df.select(col(partCol).cast("string").as("_p"),
       explode(expr(s"filter(split($textCol, ' '), w -> w != '')"))
         .as("tok"))
@@ -2714,7 +2689,6 @@ object TextStats {
       s"window must be in [1,16], got $window")
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val d6 = (c: Column) => c.cast("decimal(28,6)").cast("double")
     val W = org.apache.spark.sql.expressions.Window
     val toks = df.select(col(idCol).as("_d"),
         posexplode(expr(s"filter(split($textCol, ' '), w -> w != '')"))
@@ -2776,7 +2750,6 @@ object TextStats {
       maxChars: Int = 2000): DataFrame = {
     require(maxChars >= 1 && maxChars <= 8192,
       s"maxChars must be in [1,8192], got $maxChars")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val t = "_g_t"
     val guarded = df
       .withColumn(t,
@@ -2822,8 +2795,6 @@ object TextStats {
     require(maxCount <= 200000L,
       s"maxCount must be <= 200000 (c^3 must stay exact in a double)" +
         s", got $maxCount")
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
-    def d28(c: Column) = c.cast("decimal(28,6)")
     val counts = tokens(df, textCol)
       .filter(col("tok") =!= "")
       .groupBy(col("tok")).agg(count(lit(1)).as("n"))
@@ -2870,7 +2841,6 @@ object TextStats {
       df: DataFrame,
       sliceCol: String,
       textCol: String): DataFrame = {
-    def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
     val counts = tokens(df, textCol, sliceCol)
       .filter(col("tok") =!= "")
       .groupBy(col(sliceCol).as("_s"), col("tok"))

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.pipeline.Exact.d28
 
 /** Training-data valuation — which examples HELP. The reference has no
   * model surface at all (sayn delegates SQL; see SURVEY §2e intro);
@@ -49,7 +50,6 @@ object Valuation {
       k: Int = 5,
       maxTest: Int = 10000): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    def dd6(c: Column) = c.cast("decimal(28,6)")
     def quant(df: DataFrame, prefix: String): DataFrame =
       df.select(col(idCol).as(s"${prefix}_id"),
         col(labelCol).cast("long").as(s"${prefix}_y"),
@@ -109,7 +109,7 @@ object Valuation {
       .withColumn("_s", col("_sBase") + sum(col("_inc")).over(wSuffix))
     perPair.groupBy(col("t_id").as(idCol))
       .agg(count(lit(1)).as("n_test"),
-        sum(dd6(col("_s"))).as("_sv"))
+        sum(d28(col("_s"))).as("_sv"))
       .select(col(idCol), col("n_test"),
         // floor-convention here too: Σs/n lands on exact half values
         // (the decimal sum has 6 dp), where decimal-cast engines

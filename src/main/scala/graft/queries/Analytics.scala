@@ -6,6 +6,7 @@ import graft.{Entry, QueryFile}
 import graft.functions.ByteEntropy
 import graft.ops.{Profile, ZOrder}
 import graft.pipeline.Behavior
+import graft.pipeline.Exact.d6
 
 /** Behavioral-analytics and data-quality profiling entries: funnel /
   * transition / retention over the events fixture (the questions a team
@@ -27,8 +28,6 @@ object Analytics extends QueryFile {
     Tables.eventsUs(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("ts_us"))
-
-  private def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
 
   private val dayUs = 86400L * 1000 * 1000
 

@@ -6,6 +6,7 @@ import graft.{Entry, QueryFile}
 import graft.functions.NfcNormalize
 import graft.ops.Graph
 import graft.pipeline.{Behavior, Retrieval, Sampling, TextDedup}
+import graft.pipeline.Exact.d6
 
 /** Corpus-curation entries (round 8): retrieval scoring, Unicode key
   * normalization, sub-document dedup, domain mixing, vocabulary
@@ -21,8 +22,6 @@ object Corpus extends QueryFile {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
-
-  private def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
 
   // q123: BM25 top-50 against a 3-term query. Scores are d6-rounded
   // BEFORE the rank (score DESC, doc_id) — the top-k boundary at sf0.01

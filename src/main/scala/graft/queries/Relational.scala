@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Entry, QueryFile}
+import graft.pipeline.Exact.d6
 
 /** Relational-surface corpus (SURVEY.md §2b): every construct the reference's
   * generated/accepted SQL exercises, expressed as idiomatic DataFrame plans so
@@ -713,7 +714,6 @@ object Relational extends QueryFile {
   // binary-exact so the rank arithmetic is deterministic, and the
   // result is rounded through DECIMAL(28,6) on both sides to absorb
   // any last-ulp interpolation difference.
-  private def d6(c: Column): Column = c.cast("decimal(28,6)").cast("double")
 
   def q88GroupPercentiles(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")

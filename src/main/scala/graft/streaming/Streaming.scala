@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import graft.pipeline.Exact.d6
 
 /** One event of the sessionization stream (the `events` fixture shape).
   * Top-level case class: Spark's state-encoder codegen requires a
@@ -626,9 +627,6 @@ object Streaming {
     implicit val outEnc = Encoders.product[EwmaPoint]
     implicit val keyEnc = Encoders.STRING
 
-    def d6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
     def finalize(key: String, buf: EwmaBuf): Iterator[EwmaPoint] = {
       val series = buf.days.zip(buf.xs).sortBy(_._1)
       val xs = series.map(_._2)
@@ -719,9 +717,6 @@ object Streaming {
     implicit val outEnc = Encoders.product[CusumPoint]
     implicit val keyEnc = Encoders.STRING
 
-    def d6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
     def finalizeKey(key: String, buf: CusumBuf): Iterator[CusumPoint] = {
       val series = buf.periods.zip(buf.xs).sortBy(_._1)
       require(series.length >= baselinePeriods,
@@ -792,8 +787,6 @@ object Streaming {
     implicit val accEnc = Encoders.product[PsiBuf]
     implicit val outEnc = Encoders.product[PsiReport]
     implicit val keyEnc = Encoders.STRING
-    def d6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     def finalizeKey(key: String, buf: PsiBuf): Iterator[PsiReport] = {
       val byBin = buf.bins.indices
         .groupBy(i => buf.bins(i))
@@ -857,8 +850,6 @@ object Streaming {
     implicit val accEnc = Encoders.product[PsiBuf]
     implicit val outEnc = Encoders.product[HellingerReport]
     implicit val keyEnc = Encoders.STRING
-    def d6(v: Double): Double =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     def finalizeKey(key: String, buf: PsiBuf): Iterator[HellingerReport] = {
       val byBin = buf.bins.indices
         .groupBy(i => buf.bins(i))

@@ -47,7 +47,11 @@ final class CopyTask extends TaskRunner {
     incrementalKey = cfg.get("incremental_key").map(_.toString)
     deleteKey = cfg.get("delete_key").map(_.toString)
     append = cfg.get("append").exists(_.toString.toBoolean)
-    maxMergeRows = cfg.get("max_merge_rows").map(_.toString.toInt)
+    val maxMergeRaw = cfg.get("max_merge_rows").map(_.toString)
+    maxMergeRows = maxMergeRaw.flatMap(_.toIntOption).filter(_ > 0)
+    if (maxMergeRaw.isDefined && maxMergeRows.isEmpty)
+      return Left(ConfigError(s"task ${ctx.name}: max_merge_rows must be " +
+        s"a positive integer, got '${maxMergeRaw.get}'"))
 
     // validation (copy.py:85-109): incremental needs the key and exactly
     // one of delete_key / append

@@ -22,7 +22,6 @@ final class SqlTask(isAutoSql: Boolean) extends TaskRunner {
   private var resolvedDst: String = _ // physical name
   private var deleteKey: Option[String] = None
   private var ddl: Ddl = Ddl.empty
-  private var compiled: String = _
 
   /** config() macro overrides surfaced to the wrapper (tags/parents/on_fail
     * handled there; sayn/tasks/autosql.py:241-288).
@@ -86,7 +85,7 @@ final class SqlTask(isAutoSql: Boolean) extends TaskRunner {
 
   /** Recompile with final names; config() is inert on later passes. */
   private def recompile(): Result[String] =
-    ctx.compile(template).map { s => compiled = s; s }
+    ctx.compile(template)
 
   override def setup(): Result[Unit] = recompile().map(_ => ())
 

@@ -194,6 +194,30 @@ class AppSpec extends SparkSpec {
     assert(dst.count() == 2) // appended, not merged
   }
 
+  test("bad copy config fails its own task: children skip, the rest runs") {
+    val base = Map("type" -> "copy", "source" -> "copy_src_bad",
+      "destination" -> "copy_dst_bad", "incremental_key" -> "ts")
+    val bad = Seq(
+      "bad_rows" -> (base + ("delete_key" -> "id") + ("max_merge_rows" -> "abc")),
+      "zero_rows" -> (base + ("delete_key" -> "id") + ("max_merge_rows" -> 0)),
+      "bad_append" -> (base + ("append" -> "maybe")),
+      "bad_buckets" -> (base + ("delete_key" -> "id") +
+        ("ddl" -> Map("cluster" -> "id", "buckets" -> "x"))))
+    val specs = bad.flatMap { case (n, cfg) =>
+      Seq(TaskSpec(n, "g", cfg),
+        TaskSpec(s"${n}_child", "g", Map("type" -> "dummy", "parents" -> Seq(n))))
+    } :+ TaskSpec("independent", "g", Map("type" -> "dummy"))
+    assert(mkApp().dag(specs).isRight)
+    val Right(report) = mkApp().run(specs)
+    bad.foreach { case (n, _) =>
+      assert(report.statuses(n) == TaskStatus.Failed, n)
+      assert(report.errors(n).kind == "config", report.errors(n))
+      assert(report.statuses(s"${n}_child") == TaskStatus.Skipped, n)
+    }
+    assert(report.errors("zero_rows").msg.contains("max_merge_rows"))
+    assert(report.statuses("independent") == TaskStatus.Succeeded)
+  }
+
   test("test task: custom sql failing surfaces offending rows") {
     db.replaceTable("t_src", "SELECT 1 AS x UNION ALL SELECT -1")
     val failing = Seq(TaskSpec("t_fail", "g", Map(

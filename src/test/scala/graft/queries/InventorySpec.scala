@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Inventory lockstep: every driver entry in `SparkEntry.queries` must
   * have a row in docs/OPERATORS.md — the catalog IS the contract the
@@ -107,6 +108,28 @@ class InventorySpec extends AnyFunSuite {
     }
     assert(bad.isEmpty, s"class-3b rows whose bound is missing in " +
       s"source: ${bad.mkString(", ")}")
+  }
+
+  test("the exact-arithmetic helpers dec/d28/d6 are defined only in Exact") {
+    // the rounding contract every oracle-exact entry rests on is stated
+    // once, in graft.pipeline.Exact; a local copy (or an alias such as
+    // dd6/d38) drifts silently. The oracle-SQL builders that render the
+    // same contract as DuckDB text take a String and stay local.
+    val Def = ("""^\s+(private )?(def (dec|d6|d28|dd6|d38)\b|""" +
+      """val (dec|d6|d28|dd6|d38) = (\(|"decimal))""").r
+    val files = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.size > 50, s"scanned only ${files.size} source files")
+    val copies = for {
+      f <- files if f.getFileName.toString != "Exact.scala"
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if Def.findFirstIn(line).isDefined && !line.contains(": String)")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(copies.isEmpty, s"local exact-arithmetic helpers (import " +
+      s"graft.pipeline.Exact instead):\n${copies.mkString("\n")}")
   }
 
   test("every class-6 global-order operator in docs/SCALING.md names " +
