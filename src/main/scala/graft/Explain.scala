@@ -1,24 +1,34 @@
 package graft
 
-/** Plan-inspection tool: prints the formatted physical plan for the named
-  * queries (all non-mutating ones, when none given) at SPARK_GRAFT_SF_DIR.
-  * The mutating ETL entries run real table writes during DataFrame
-  * construction, so they are excluded unless named explicitly. Review
-  * targets: PushedFilters/ReadSchema on scans, broadcast vs sort-merge
-  * joins, and WholeStageCodegen span width.
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.streaming.state.StateStore
+import scala.util.{Failure, Success}
+
+/** Plan-inspection tool: prints the formatted static physical plan (the
+  * AQE-off executed plan of [[PlanCorpus]], the one the plan laws check)
+  * for the named queries (all non-mutating ones, when none given) at
+  * SPARK_GRAFT_SF_DIR. The mutating ETL entries run real table writes
+  * during DataFrame construction, so they are excluded unless named
+  * explicitly. What to look for: PushedFilters/ReadSchema on scans,
+  * exchanges, broadcast vs shuffled joins, and WholeStageCodegen span
+  * width.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = Session.local()
-    val names =
-      if (args.nonEmpty) args.toSeq
-      else SparkEntry.queries.keys.filterNot(SparkEntry.mutating).toSeq.sorted
-    names.foreach { n =>
-      println(s"\n==== $n ====")
-      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+    val names = if (args.nonEmpty) args.toSeq else PlanCorpus.readOnly
+    PlanCorpus.plan(names)(SparkEntry.queries(_)(spark, sfDir)).foreach {
+      case (n, planned) =>
+        println(s"\n==== $n ====")
+        planned match {
+          case Success(e) => println(e.execution.explainString(FormattedMode))
+          case Failure(e) => println(s"failed: ${e.getMessage}")
+        }
     }
+    // the streaming entries leave StateStore maintenance scheduled; stop
+    // it first, or it can fire after the SparkEnv is gone
+    StateStore.stop()
     spark.stop()
   }
 }

@@ -113,16 +113,21 @@ object Ddl {
       case x => Seq(x)
     }.getOrElse(Nil)
 
+    val bucketsRaw = m.get("buckets").map(_.toString)
+    val buckets = bucketsRaw.fold(Option(32))(_.toIntOption.filter(_ > 0))
+
     Result.sequence(colsRaw.map(parseColumn)).flatMap { cols =>
       val dups = cols.groupBy(_.name).collect { case (n, cs) if cs.size > 1 => n }
       if (dups.nonEmpty)
         Left(ConfigError(s"duplicate columns in ddl: ${dups.toSeq.sorted.mkString(", ")}"))
+      else if (buckets.isEmpty)
+        Left(ConfigError(s"ddl buckets must be a positive integer, got '${bucketsRaw.get}'"))
       else
         Right(Ddl(
           columns = cols,
           partitionBy = m.get("partition").orElse(m.get("partition_by")).map(strSeq).getOrElse(Nil),
           clusterBy = m.get("cluster").orElse(m.get("cluster_by")).map(strSeq).getOrElse(Nil),
-          buckets = m.get("buckets").map(_.toString.toInt).getOrElse(32),
+          buckets = buckets.get,
           sortBy = m.get("sort").orElse(m.get("sorting")).map(strSeq).getOrElse(Nil),
           postHooks = m.get("post_hook").map(strSeq).getOrElse(Nil)))
     }

@@ -3246,11 +3246,7 @@ object Stats {
     val base = df.select(
       (floor(col(scoreCol).cast("double") * 1000.0).cast("long")
         .cast("double") / 1000.0).as("_s"),
-      when(col(labelCol).cast("long").isin(0L, 1L),
-        col(labelCol).cast("long").cast("double"))
-        .otherwise(raise_error(concat(lit("plattScaling: label "),
-          col(labelCol).cast("string"), lit(" is not 0/1")))
-          .cast("double")).as("_y"))
+      flag01("plattScaling", "label", col(labelCol), "double").as("_y"))
     var params = df.sparkSession.range(1)
       .select(lit(0.0).as("_a"), lit(0.0).as("_b"))
     (1 to steps).foreach { _ =>
@@ -3325,11 +3321,7 @@ object Stats {
     val W = org.apache.spark.sql.expressions.Window
     val base = df.select(col(keyCol).as("_k"),
       col(timeCol).cast("long").as("_t"),
-      when(col(eventCol).cast("long").isin(0L, 1L),
-        col(eventCol).cast("long"))
-        .otherwise(raise_error(concat(lit("coxPh: event flag "),
-          col(eventCol).cast("string"), lit(" is not 0/1")))
-          .cast("long")).as("_d"),
+      flag01("coxPh", "event flag", col(eventCol)).as("_d"),
       col(xCol).cast("long").as("_x"))
     var params = base.groupBy(col("_k"))
       .agg(count(lit(1)).as("_nr"), sum(col("_d")).as("_ne"))
@@ -3503,10 +3495,7 @@ object Stats {
       eventCol: String,
       groupCol: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val g = when(col(groupCol).cast("long").isin(0L, 1L),
-      col(groupCol).cast("long"))
-      .otherwise(raise_error(concat(lit("logRank: group flag "),
-        col(groupCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val g = flag01("logRank", "group flag", col(groupCol))
     val byT = df
       .select(col(durationCol).cast("long").as("_t"),
         col(eventCol).cast("long").as("_d"), g.as("_g"))
@@ -3894,11 +3883,7 @@ object Stats {
       unitCol: String,
       halfCol: String,
       xCol: String): DataFrame = {
-    val half = when(col(halfCol).cast("long").isin(0L, 1L),
-      col(halfCol).cast("long"))
-      .otherwise(raise_error(concat(
-        lit("splitHalfReliability: half flag "),
-        col(halfCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val half = flag01("splitHalfReliability", "half flag", col(halfCol))
     val per = df.select(col(unitCol).as("_u"), half.as("_h"),
         col(xCol).cast("long").as("_x"))
       .groupBy(col("_u"))
@@ -4175,12 +4160,7 @@ object Stats {
       s"need 1..100 MDEs, got ${relativeMdes.size}")
     require(relativeMdes.forall(m => m != 0.0),
       "a zero MDE needs infinite n")
-    val y = when(col(outcomeCol).cast("long").isin(0L, 1L),
-      col(outcomeCol).cast("long"))
-      .otherwise(raise_error(concat(
-        lit("sampleSizePlanner: outcome flag "),
-        col(outcomeCol).cast("string"), lit(" is not 0/1")))
-        .cast("long"))
+    val y = flag01("sampleSizePlanner", "outcome flag", col(outcomeCol))
     val base = df.select(y.as("_y"))
       .agg(count(lit(1)).as("n_baseline"), sum(col("_y")).as("_pos"))
       .withColumn("p0",
@@ -4287,13 +4267,9 @@ object Stats {
       df: DataFrame,
       labelCol: String,
       predCol: String): DataFrame = {
-    def flag(name: String, c: Column): Column =
-      when(c.cast("long").isin(0L, 1L), c.cast("long"))
-        .otherwise(raise_error(concat(
-          lit(s"confusionPanel: $name flag "), c.cast("string"),
-          lit(" is not 0/1"))).cast("long"))
-    val base = df.select(flag("label", col(labelCol)).as("_y"),
-      flag("prediction", col(predCol)).as("_p"))
+    val base = df.select(
+      flag01("confusionPanel", "label flag", col(labelCol)).as("_y"),
+      flag01("confusionPanel", "prediction flag", col(predCol)).as("_p"))
     val agg = base.agg(
       sum(col("_y") * col("_p")).as("tp"),
       sum((lit(1L) - col("_y")) * col("_p")).as("fp"),
@@ -4720,10 +4696,7 @@ object Stats {
       maxCells: Long = 10000L): DataFrame = {
     require(maxCells >= 4L && maxCells <= 1000000L,
       s"maxCells in [4,1e6], got $maxCells")
-    val ev = when(col(eventCol).cast("long").isin(0L, 1L),
-      col(eventCol).cast("long"))
-      .otherwise(raise_error(concat(lit("harrellC: event flag "),
-        col(eventCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val ev = flag01("harrellC", "event flag", col(eventCol))
     val cells = df.select(col(timeCol).cast("long").as("_t"),
         ev.as("_e"), col(scoreCol).cast("long").as("_s"))
       .groupBy(col("_t"), col("_e"), col("_s"))
@@ -5000,12 +4973,9 @@ object Stats {
       df: DataFrame,
       armCol: String,
       outcomeCol: String): DataFrame = {
-    def flag(name: String, c: Column): Column =
-      when(c.cast("long").isin(0L, 1L), c.cast("long"))
-        .otherwise(raise_error(concat(lit(s"riskRatio: $name flag "),
-          c.cast("string"), lit(" is not 0/1"))).cast("long"))
-    val base = df.select(flag("arm", col(armCol)).as("_g"),
-      flag("outcome", col(outcomeCol)).as("_y"))
+    val base = df.select(
+      flag01("riskRatio", "arm flag", col(armCol)).as("_g"),
+      flag01("riskRatio", "outcome flag", col(outcomeCol)).as("_y"))
     val agg = base.agg(
       sum(col("_g") * col("_y")).as("_a"),
       sum(col("_g") * (lit(1L) - col("_y"))).as("_b"),
@@ -5134,14 +5104,9 @@ object Stats {
       stratumCol: String,
       armCol: String,
       outcomeCol: String): DataFrame = {
-    def flag(name: String, c: Column): Column =
-      when(c.cast("long").isin(0L, 1L), c.cast("long"))
-        .otherwise(raise_error(concat(
-          lit(s"mantelHaenszel: $name flag "), c.cast("string"),
-          lit(" is not 0/1"))).cast("long"))
     val base = df.select(col(stratumCol).cast("string").as("_s"),
-      flag("arm", col(armCol)).as("_g"),
-      flag("outcome", col(outcomeCol)).as("_y"))
+      flag01("mantelHaenszel", "arm flag", col(armCol)).as("_g"),
+      flag01("mantelHaenszel", "outcome flag", col(outcomeCol)).as("_y"))
     val per = base.groupBy(col("_s"))
       .agg(count(lit(1)).as("_n"),
         sum(col("_g") * col("_y")).as("_a"),
@@ -5203,12 +5168,7 @@ object Stats {
       df: DataFrame,
       doseCol: String,
       outcomeCol: String): DataFrame = {
-    val y = when(col(outcomeCol).cast("long").isin(0L, 1L),
-      col(outcomeCol).cast("long"))
-      .otherwise(raise_error(concat(
-        lit("cochranArmitage: outcome flag "),
-        col(outcomeCol).cast("string"), lit(" is not 0/1")))
-        .cast("long"))
+    val y = flag01("cochranArmitage", "outcome flag", col(outcomeCol))
     val per = df.select(col(doseCol).cast("long").as("_w"), y.as("_y"))
       .groupBy(col("_w"))
       .agg(count(lit(1)).as("_n"), sum(col("_y")).as("_r"))
@@ -5257,13 +5217,9 @@ object Stats {
       df: DataFrame,
       flagACol: String,
       flagBCol: String): DataFrame = {
-    def flag(name: String, c: Column): Column =
-      when(c.cast("long").isin(0L, 1L), c.cast("long"))
-        .otherwise(raise_error(concat(
-          lit(s"captureRecapture: $name flag "), c.cast("string"),
-          lit(" is not 0/1"))).cast("long"))
-    val base = df.select(flag("capture A", col(flagACol)).as("_a"),
-      flag("capture B", col(flagBCol)).as("_b"))
+    val base = df.select(
+      flag01("captureRecapture", "capture A flag", col(flagACol)).as("_a"),
+      flag01("captureRecapture", "capture B flag", col(flagBCol)).as("_b"))
     val agg = base.agg(sum(col("_a")).as("n1"), sum(col("_b")).as("n2"),
       sum(col("_a") * col("_b")).as("m_overlap"))
     val n1 = col("n1").cast("double")
@@ -5363,14 +5319,15 @@ object Stats {
       .drop("_mse")
   }
 
-  /** The arm column of a two-arm test as a 0/1 `long`; any other value
-    * fails the query loudly, naming the operator `fn`.
+  /** `c` as a 0/1 flag of type `as`; any other value fails the query
+    * loudly with `<fn>: <what> <value> is not 0/1`. (The optimizer drops
+    * the second cast to `long` of the default.)
     */
-  private def armFlag(fn: String, armCol: String): Column =
-    when(col(armCol).cast("long").isin(0L, 1L),
-      col(armCol).cast("long"))
-      .otherwise(raise_error(concat(lit(s"$fn: arm flag "),
-        col(armCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+  private def flag01(fn: String, what: String, c: Column,
+      as: String = "long"): Column =
+    when(c.cast("long").isin(0L, 1L), c.cast("long").cast(as))
+      .otherwise(raise_error(concat(lit(s"$fn: $what "), c.cast("string"),
+        lit(" is not 0/1"))).cast(as))
 
   /** The value-grouped frame of a two-arm rank test (the `mannWhitneyU`
     * discipline, docs/SCALING.md class 6): one row per distinct `_x`
@@ -5380,7 +5337,7 @@ object Stats {
     */
   private def twoArmValueCells(df: DataFrame, fn: String, armCol: String,
       xCol: String): DataFrame =
-    df.select(armFlag(fn, armCol).as("_a"),
+    df.select(flag01(fn, "arm flag", col(armCol)).as("_a"),
         col(xCol).cast("long").as("_x"))
       .groupBy(col("_x"))
       .agg(sum(when(col("_a") === 0L, 1L).otherwise(0L)).as("_c0"),
@@ -5408,7 +5365,7 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val arm = armFlag("cohensD", armCol)
+    val arm = flag01("cohensD", "arm flag", col(armCol))
     val x = col(xCol).cast("long")
     val base = df.select(arm.as("_a"), x.as("_x"))
     val agg = base.agg(
@@ -5480,7 +5437,7 @@ object Stats {
       exposure1: Long): DataFrame = {
     require(exposure0 > 0L && exposure1 > 0L,
       s"exposures must be positive, got ($exposure0, $exposure1)")
-    val arm = armFlag("poissonRateTest", armCol)
+    val arm = flag01("poissonRateTest", "arm flag", col(armCol))
     val p = exposure1.toDouble / (exposure0 + exposure1).toDouble
     val agg = df.select(col(keyCol).as("_k"), arm.as("_a"))
       .groupBy(col("_k"))
@@ -5592,12 +5549,9 @@ object Stats {
     require(maxN >= 2L && maxN <= 100000L,
       s"maxN must be in [2,100000], got $maxN")
     val W = org.apache.spark.sql.expressions.Window
-    def flag(name: String, c: Column): Column =
-      when(c.cast("long").isin(0L, 1L), c.cast("long"))
-        .otherwise(raise_error(concat(lit(s"fisherExact: $name flag "),
-          c.cast("string"), lit(" is not 0/1"))).cast("long"))
-    val base = df.select(flag("group", col(groupCol)).as("_g"),
-      flag("outcome", col(outcomeCol)).as("_y"))
+    val base = df.select(
+      flag01("fisherExact", "group flag", col(groupCol)).as("_g"),
+      flag01("fisherExact", "outcome flag", col(outcomeCol)).as("_y"))
     val agg = base.agg(count(lit(1)).as("_rawn"),
       sum(col("_g") * col("_y")).as("a"),
       sum(col("_g")).as("r1"), sum(col("_y")).as("c1"))
@@ -5968,10 +5922,7 @@ object Stats {
       splitCol: String,
       xCol: String,
       yCol: String): DataFrame = {
-    val seg = when(col(splitCol).cast("long").isin(0L, 1L),
-      col(splitCol).cast("long"))
-      .otherwise(raise_error(concat(lit("chowTest: split flag "),
-        col(splitCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val seg = flag01("chowTest", "split flag", col(splitCol))
     val base = df.select(seg.as("_g"), col(xCol).cast("long").as("_x"),
       col(yCol).cast("long").as("_y"))
     def sums(pred: Column, tag: String): Seq[Column] = Seq(
@@ -6919,11 +6870,8 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val arm = armFlag("cohensH", armCol)
-    val x = when(col(xCol).cast("long").isin(0L, 1L),
-      col(xCol).cast("long"))
-      .otherwise(raise_error(concat(lit("cohensH: outcome "),
-        col(xCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val arm = flag01("cohensH", "arm flag", col(armCol))
+    val x = flag01("cohensH", "outcome", col(xCol))
     val base = df.select(arm.as("_a"), x.as("_x"))
     val agg = base.agg(
       sum(when(col("_a") === 0L, 1L).otherwise(0L)).as("_n0"),
@@ -6973,10 +6921,7 @@ object Stats {
       strataCol: String,
       refPred: Column,
       eventCol: String): DataFrame = {
-    val x = when(col(eventCol).cast("long").isin(0L, 1L),
-      col(eventCol).cast("long"))
-      .otherwise(raise_error(concat(lit("smrIndirect: outcome "),
-        col(eventCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val x = flag01("smrIndirect", "outcome", col(eventCol))
     val base = df.select(col(strataCol).as("_s"),
       refPred.cast("boolean").as("_ref"), x.as("_x"))
     val byS = base.groupBy(col("_s"))
@@ -7141,10 +7086,7 @@ object Stats {
       groups: Int = 10): DataFrame = {
     require(groups >= 2, s"groups must be >= 2, got $groups")
     val W = org.apache.spark.sql.expressions.Window
-    val y = when(col(labelCol).cast("long").isin(0L, 1L),
-      col(labelCol).cast("long"))
-      .otherwise(raise_error(concat(lit("gainLiftTable: label "),
-        col(labelCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val y = flag01("gainLiftTable", "label", col(labelCol))
     val ranked = shardedTotalOrder(
       df.select(col(idCol).as("_tb"),
         col(scoreCol).cast("long").as("_sk"), y.as("_y")),
@@ -7202,10 +7144,7 @@ object Stats {
     require(benefitTp >= 0L && costFp >= 0L && costFn >= 0L,
       "coefficients must be non-negative")
     val W = org.apache.spark.sql.expressions.Window
-    val y = when(col(labelCol).cast("long").isin(0L, 1L),
-      col(labelCol).cast("long"))
-      .otherwise(raise_error(concat(lit("optimalThreshold: label "),
-        col(labelCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val y = flag01("optimalThreshold", "label", col(labelCol))
     val byScore = df.select(col(scoreCol).cast("long").as("_s"),
         y.as("_y"))
       .groupBy(col("_s"))
@@ -7266,10 +7205,7 @@ object Stats {
       itemCol: String,
       scoreCol: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val y = when(col(scoreCol).cast("long").isin(0L, 1L),
-      col(scoreCol).cast("long"))
-      .otherwise(raise_error(concat(lit("itemAnalysis: score "),
-        col(scoreCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val y = flag01("itemAnalysis", "score", col(scoreCol))
     val base = df.select(col(raterCol).as("_r"), col(itemCol).as("_i"),
         y.as("_y"))
       .withColumn("_dup", count(lit(1)).over(
@@ -7373,7 +7309,7 @@ object Stats {
       xCol: String,
       margin: Double): DataFrame = {
     require(margin > 0.0, s"margin must be positive, got $margin")
-    val arm = armFlag("tostMeans", armCol)
+    val arm = flag01("tostMeans", "arm flag", col(armCol))
     val agg = df.select(arm.as("_a"), col(xCol).cast("long").as("_x"))
       .groupBy(col("_a"))
       .agg(count(lit(1)).as("_n"), sum(dec(col("_x"))).as("_s"),
@@ -7446,12 +7382,9 @@ object Stats {
       armCol: String,
       flagCol: String): DataFrame = {
     val z = 1.96
-    def f01(cn: String) = when(col(cn).cast("long").isin(0L, 1L),
-      col(cn).cast("long"))
-      .otherwise(raise_error(concat(
-        lit(s"twoProportionDiff: $cn "), col(cn).cast("string"),
-        lit(" is not 0/1"))).cast("long"))
-    val agg = df.select(f01(armCol).as("_a"), f01(flagCol).as("_y"))
+    val agg = df.select(
+      flag01("twoProportionDiff", armCol, col(armCol)).as("_a"),
+      flag01("twoProportionDiff", flagCol, col(flagCol)).as("_y"))
       .agg(
         sum(when(col("_a") === 0L, 1L).otherwise(0L)).as("_n0raw"),
         sum(when(col("_a") === 0L, col("_y")).otherwise(0L)).as("x0"),
@@ -7897,10 +7830,7 @@ object Stats {
         lit("hosmerLemeshow: prob_ppm "),
         col(probPpmCol).cast("string"),
         lit(" outside [0, 1000000]"))).cast("long"))
-    val y = when(col(labelCol).cast("long").isin(0L, 1L),
-      col(labelCol).cast("long"))
-      .otherwise(raise_error(concat(lit("hosmerLemeshow: label "),
-        col(labelCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val y = flag01("hosmerLemeshow", "label", col(labelCol))
     // risk groups cut the sharded (prob, id) total order
     // ([[shardedTotalOrder]], SCALING.md class 6 — same exact ranks
     // as the old raw-row global window, never its single-task sort)
@@ -8150,13 +8080,10 @@ object Stats {
       df: DataFrame,
       truthCol: String,
       predCol: String): DataFrame = {
-    def flag(cn: String) = when(col(cn).cast("long").isin(0L, 1L),
-      col(cn).cast("long"))
-      .otherwise(raise_error(concat(
-        lit(s"diagnosticPanel: $cn flag "), col(cn).cast("string"),
-        lit(" is not 0/1"))).cast("long"))
     val z = 1.96
-    val agg = df.select(flag(truthCol).as("_t"), flag(predCol).as("_p"))
+    val agg = df.select(
+      flag01("diagnosticPanel", s"$truthCol flag", col(truthCol)).as("_t"),
+      flag01("diagnosticPanel", s"$predCol flag", col(predCol)).as("_p"))
       .agg(
         sum(when(col("_t") === 1L && col("_p") === 1L, 1L).otherwise(0L))
           .as("tp"),
@@ -8408,10 +8335,7 @@ object Stats {
       eventCol: String,
       groupCol: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val g = when(col(groupCol).cast("long").isin(0L, 1L),
-      col(groupCol).cast("long"))
-      .otherwise(raise_error(concat(lit("gehanWilcoxon: group flag "),
-        col(groupCol).cast("string"), lit(" is not 0/1"))).cast("long"))
+    val g = flag01("gehanWilcoxon", "group flag", col(groupCol))
     val byT = df
       .select(col(durationCol).cast("long").as("_t"),
         col(eventCol).cast("long").as("_d"), g.as("_g"))

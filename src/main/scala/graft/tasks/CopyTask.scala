@@ -46,7 +46,11 @@ final class CopyTask extends TaskRunner {
     val dst = cfg.get("destination").map(_.toString)
     incrementalKey = cfg.get("incremental_key").map(_.toString)
     deleteKey = cfg.get("delete_key").map(_.toString)
-    append = cfg.get("append").exists(_.toString.toBoolean)
+    val appendRaw = cfg.get("append").map(_.toString)
+    if (appendRaw.exists(_.toBooleanOption.isEmpty))
+      return Left(ConfigError(s"task ${ctx.name}: append must be true or " +
+        s"false, got '${appendRaw.get}'"))
+    append = appendRaw.exists(_.toBoolean)
     val maxMergeRaw = cfg.get("max_merge_rows").map(_.toString)
     maxMergeRows = maxMergeRaw.flatMap(_.toIntOption).filter(_ > 0)
     if (maxMergeRaw.isDefined && maxMergeRows.isEmpty)

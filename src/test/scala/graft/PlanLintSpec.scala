@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.CartesianProductExec
+import graft.PlanCorpus.staticPlans
+import graft.PlanLaws.{bareGlobalSorts, cartesians, stackedExchanges}
 
 /** Corpus-wide physical-plan lint: every non-mutating driver entry is
   * planned at sf0.001 and screened for the shapes that kill 100 TB
@@ -17,11 +16,13 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
   *   - NO Exchange feeding directly into another Exchange — a
   *     double-shuffle that re-moves every row.
   *
-  * Checks run on the pre-AQE physical plan (queryExecution.sparkPlan),
-  * including all subquery plans, so future entries are pinned at plan
-  * time without executing the batch ones. Streaming/iterative entries
-  * execute during construction (their loops ARE construction) — the
-  * lint then sees their final frame plus everything the build ran.
+  * Checks run on the static plans of the shared corpus ([[PlanLaws]]):
+  * the AQE-off executed plan, after EnsureRequirements has inserted the
+  * exchanges, including all subquery plans, so future entries are
+  * pinned at plan time without executing the batch ones.
+  * Streaming/iterative entries execute during construction (their loops
+  * ARE construction) — the lint then sees their final frame plus
+  * everything the build ran.
   */
 class PlanLintSpec extends SparkSpec {
 
@@ -31,32 +32,21 @@ class PlanLintSpec extends SparkSpec {
   private val allowCartesian: Set[String] = Set.empty
   private val allowGlobalSort: Set[String] = Set.empty
 
-  private def allPlans(p: SparkPlan): Seq[SparkPlan] = p +: p.subqueriesAll
-
   test("no entry plans a cartesian product, bare global sort, or stacked exchange") {
-    val names =
-      SparkEntry.queries.keys.filterNot(SparkEntry.mutating).toSeq.sorted
-    val violations = scala.collection.mutable.ArrayBuffer.empty[String]
-    names.foreach { n =>
-      try {
-        val df = SparkEntry.queries(n)(spark, dir)
-        val plans = allPlans(df.queryExecution.sparkPlan)
-        val cartesian = plans.flatMap(_.collect {
-          case c: CartesianProductExec => c })
-        if (cartesian.nonEmpty && !allowCartesian(n))
-          violations += s"$n: CartesianProduct (${cartesian.size})"
-        val globalSorts = plans.flatMap(_.collect {
-          case s: SortExec if s.global => s })
-        if (globalSorts.nonEmpty && !allowGlobalSort(n))
-          violations += s"$n: global Sort without limit (${globalSorts.size})"
-        val stacked = plans.flatMap(_.collect {
-          case e: ShuffleExchangeExec
-              if e.child.isInstanceOf[ShuffleExchangeExec] => e })
-        if (stacked.nonEmpty)
-          violations += s"$n: Exchange directly under Exchange (${stacked.size})"
-      } catch {
-        case e: Exception => violations += s"$n: failed to plan: ${e.getMessage}"
-      }
+    val violations = PlanLaws.corpus(spark, dir).flatMap { case (n, planned) =>
+      planned.fold(e => Seq(s"$n: failed to plan: ${e.getMessage}"), { e =>
+        val cartesian = cartesians(e.plans)
+        val globalSorts = bareGlobalSorts(e.plans)
+        val stacked = stackedExchanges(e.plans)
+        Seq(
+          Option.when(cartesian.nonEmpty && !allowCartesian(n))(
+            s"$n: CartesianProduct (${cartesian.size})"),
+          Option.when(globalSorts.nonEmpty && !allowGlobalSort(n))(
+            s"$n: global Sort without limit (${globalSorts.size})"),
+          Option.when(stacked.nonEmpty)(
+            s"$n: Exchange directly under Exchange (${stacked.size})")
+        ).flatten
+      })
     }
     assert(violations.isEmpty,
       s"\nplan lint violations:\n  ${violations.mkString("\n  ")}")
@@ -68,15 +58,36 @@ class PlanLintSpec extends SparkSpec {
     val big = spark.range(10).toDF("a")
     val cross = big.hint("shuffle_replicate_nl")
       .crossJoin(spark.range(10).toDF("b"))
-    assert(allPlans(cross.queryExecution.sparkPlan)
-      .flatMap(_.collect { case c: CartesianProductExec => c }).nonEmpty)
-    // an orderBy with no limit is a global sort
-    val sorted = spark.range(10).toDF("a").orderBy($"a")
-    assert(allPlans(sorted.queryExecution.sparkPlan)
-      .flatMap(_.collect { case s: SortExec if s.global => s }).nonEmpty)
+    assert(cartesians(staticPlans(cross)).nonEmpty)
+    // an orderBy with no limit is a global sort (descending: the
+    // executed plan drops a sort that Range's ascending order satisfies)
+    val sorted = spark.range(10).toDF("a").orderBy($"a".desc)
+    assert(bareGlobalSorts(staticPlans(sorted)).nonEmpty)
     // ...and the corpus-approved top-k form is NOT flagged
-    val topk = spark.range(10).toDF("a").orderBy($"a").limit(3)
-    assert(allPlans(topk.queryExecution.sparkPlan)
-      .flatMap(_.collect { case s: SortExec if s.global => s }).isEmpty)
+    val topk = spark.range(10).toDF("a").orderBy($"a".desc).limit(3)
+    assert(bareGlobalSorts(staticPlans(topk)).isEmpty)
+  }
+
+  test("the stacked-exchange detector fires on a repartition under a " +
+      "shuffled join, which only the executed plan shows") {
+    // the join's hash exchange sits directly on the round-robin one;
+    // sparkPlan comes before EnsureRequirements and holds only the
+    // repartition, so the old lint could not see it
+    val df = spark.range(100).toDF("k").repartition(7)
+      .join(spark.range(100).toDF("k"), "k")
+    val qe = PlanCorpus.staticExecution(df, PlanCorpus.noAutoBroadcast)
+    assert(stackedExchanges(Seq(qe.executedPlan)).nonEmpty)
+    assert(stackedExchanges(Seq(qe.sparkPlan)).isEmpty)
+  }
+
+  test("the plan corpus builds each read-only entry exactly once per JVM") {
+    val first = PlanLaws.corpus(spark, dir)
+    val counts = PlanLaws.buildCounts
+    assert(first.map(_._1) == PlanCorpus.readOnly)
+    assert(counts.keySet == PlanCorpus.readOnly.toSet)
+    assert(counts.values.forall(_ == 1), counts.filter(_._2 != 1))
+    // a second access plans nothing and builds nothing
+    assert(PlanLaws.corpus(spark, dir) eq first)
+    assert(PlanLaws.buildCounts == counts)
   }
 }

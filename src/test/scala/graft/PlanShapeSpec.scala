@@ -1,35 +1,41 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import graft.PlanCorpus.staticPlans
+import graft.PlanLaws.{bounded, corpusScalingKey, rawGlobalWindows}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan,
+  TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+  BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec,
+  ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
+import scala.reflect.ClassTag
 
 /** Pins the documented plan SHAPES of flagship entries — the scale
   * claims in docs/SCALING.md stated as executable assertions, so a
   * refactor that silently adds an exchange (or turns a broadcast into
   * a sort-merge join) fails here instead of surfacing as a 100 TB
-  * regression. Counts run on the pre-AQE physical plan at sf0.001,
-  * PlanLintSpec's convention.
+  * regression. Entry plans come from the shared sf0.001 corpus
+  * ([[PlanLaws]]): the AQE-off executed plan, whose exchange count is
+  * the one the docs promise (sparkPlan has no exchanges inserted yet,
+  * and the AQE wrapper hides them). Ad-hoc frames are planned the same
+  * way with `staticPlans`.
   */
 class PlanShapeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** Post-EnsureRequirements plan with AQE off: sparkPlan has no
-    * exchanges inserted yet, and the AQE wrapper hides them — this is
-    * the concrete static plan whose exchange count the docs promise.
-    */
-  private def plans(name: String): Seq[SparkPlan] = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val p = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
-      p +: p.subqueriesAll
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
-  }
+  private def plans(name: String): Seq[SparkPlan] =
+    PlanLaws.entry(spark, dir, name).plans
+  /** Every node of type `T` in the entry's plans. */
+  private def nodes[T <: SparkPlan: ClassTag](name: String): Seq[T] =
+    plans(name).flatMap(_.collect { case n: T => n })
   private def shuffles(name: String): Int =
-    plans(name).map(_.collect { case e: ShuffleExchangeExec => e }.size).sum
+    nodes[ShuffleExchangeExec](name).size
+  /** The all-pairs joins: nested loops and cartesian products. */
+  private def allPairs(name: String): Seq[BaseJoinExec] =
+    nodes[BroadcastNestedLoopJoinExec](name) ++
+      nodes[CartesianProductExec](name)
 
   test("q200 content extraction and q204 sentences are zero-shuffle scans") {
     assert(shuffles("q200_content_extract") == 0)
@@ -61,8 +67,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q199 interleave never plans an unpartitioned window") {
-    val wins = plans("q199_interleave")
-      .flatMap(_.collect { case w: WindowExec => w })
+    val wins = nodes[WindowExec]("q199_interleave")
     assert(wins.nonEmpty, "expected the per-domain position window")
     assert(wins.forall(_.partitionSpec.nonEmpty),
       "interleave's windows must all be domain-partitioned")
@@ -72,15 +77,10 @@ class PlanShapeSpec extends SparkSpec {
     // blocking is the whole 100 TB story: the self-join must be a hash
     // equi-join on (brand, size) — never a nested-loop/cartesian pair
     // enumeration with the JW filter applied after the fact
-    val ps = plans("q255_entity_resolution")
-    val nl = ps.flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-        => j
-      case c: org.apache.spark.sql.execution.joins.CartesianProductExec => c })
+    val q = "q255_entity_resolution"
+    val nl = allPairs(q)
     assert(nl.isEmpty, s"entity resolution fell back to all-pairs: $nl")
-    val eq = ps.flatMap(_.collect {
-      case j: BroadcastHashJoinExec => j
-      case j: SortMergeJoinExec => j })
+    val eq = nodes[BroadcastHashJoinExec](q) ++ nodes[SortMergeJoinExec](q)
     assert(eq.nonEmpty, "expected a hash/sort-merge equi-join on block keys")
   }
 
@@ -91,10 +91,8 @@ class PlanShapeSpec extends SparkSpec {
     // to render the topK previews. The old formulation attached each
     // rank's whole representative text to the corpus-sized frame
     // (L² bytes per document — the Kasai-avoidable naive-LCP cost).
-    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    val ps = plans("q254_longest_repeats")
-    val topk = ps.flatMap(_.collect { case t: TakeOrderedAndProjectExec => t })
+    val q = "q254_longest_repeats"
+    val topk = nodes[TakeOrderedAndProjectExec](q)
     assert(topk.nonEmpty, "expected the top-k cut in the plan")
     val textish = (n: org.apache.spark.sql.execution.SparkPlan) =>
       n.output.exists(a => a.name == "_t" || a.name == "text")
@@ -108,7 +106,7 @@ class PlanShapeSpec extends SparkSpec {
         "document text crossed a join/exchange below the top-k cut")
     }
     // above the cut: the preview attach is the one text-carrying join
-    val above = ps.flatMap(_.collect { case j: BaseJoinExec => j })
+    val above = nodes[BaseJoinExec](q)
       .filter(j => j.output.exists(_.name == "_t"))
     assert(above.size == 1, s"expected exactly one preview join, got $above")
   }
@@ -117,9 +115,7 @@ class PlanShapeSpec extends SparkSpec {
     // q197 is the DECLARED exact baseline (broadcast nested loop by
     // design); its scale composition q208 must meet candidates through
     // equi-joins only
-    val nl = plans("q208_hard_negatives_ann").flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-        => j })
+    val nl = nodes[BroadcastNestedLoopJoinExec]("q208_hard_negatives_ann")
     assert(nl.isEmpty, s"ANN-fed miner fell back to all-pairs: $nl")
   }
 
@@ -128,9 +124,7 @@ class PlanShapeSpec extends SparkSpec {
     // nested loop by design); its scale composition q352 must meet
     // ε-candidates through the (tbl, bucket) equi-join only — the
     // q208/q163 pin applied to clustering
-    val nl = plans("q352_dbscan_ann").flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-        => j })
+    val nl = nodes[BroadcastNestedLoopJoinExec]("q352_dbscan_ann")
     assert(nl.isEmpty, s"ANN-fed DBSCAN fell back to all-pairs: $nl")
   }
 
@@ -139,9 +133,7 @@ class PlanShapeSpec extends SparkSpec {
     // nested loop by design); its scale composition q445 must meet
     // kNN candidates through the (tbl, bucket) bucket SELF-join only
     // — the q352/q208 pin applied to the hubness audit
-    val nl = plans("q445_hubness_ann").flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-        => j })
+    val nl = nodes[BroadcastNestedLoopJoinExec]("q445_hubness_ann")
     assert(nl.isEmpty, s"ANN-fed hubness fell back to all-pairs: $nl")
   }
 
@@ -151,9 +143,7 @@ class PlanShapeSpec extends SparkSpec {
     // plan family: candidates must still meet through bucket
     // equi-joins only
     for (q <- Seq("q482_dbscan_ann_auto", "q483_hubness_ann_auto")) {
-      val nl = plans(q).flatMap(_.collect {
-        case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-          => j })
+      val nl = nodes[BroadcastNestedLoopJoinExec](q)
       assert(nl.isEmpty, s"$q fell back to all-pairs: $nl")
     }
   }
@@ -163,11 +153,7 @@ class PlanShapeSpec extends SparkSpec {
     // coBucketEdges' occ-count join and the pair self-join are both
     // hash equi-joins; the raise_error guard rides the bucket key —
     // no plan-shape regression from guarding (VERDICT r15 #1)
-    val nl = plans("q384_lpa").flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-        => j
-      case c: org.apache.spark.sql.execution.joins.CartesianProductExec
-        => c })
+    val nl = allPairs("q384_lpa")
     assert(nl.isEmpty, s"guarded edge stage planned a non-equi join: $nl")
   }
 
@@ -180,8 +166,7 @@ class PlanShapeSpec extends SparkSpec {
   test("q284 percentile gate holds its one-exchange contract") {
     // rank + group count share the single group-keyed exchange
     assert(shuffles("q284_percentile_gate") == 1)
-    val wins = plans("q284_percentile_gate")
-      .flatMap(_.collect { case w: WindowExec => w })
+    val wins = nodes[WindowExec]("q284_percentile_gate")
     assert(wins.nonEmpty && wins.forall(_.partitionSpec.nonEmpty),
       "percentileGate windows must all be group-partitioned")
   }
@@ -191,9 +176,7 @@ class PlanShapeSpec extends SparkSpec {
     // count broadcasts; a CartesianProduct (data × data) is the
     // all-pairs failure both ops exist to avoid
     Seq("q281_mmd_two_sample", "q275_containment").foreach { q =>
-      val cp = plans(q).flatMap(_.collect {
-        case c: org.apache.spark.sql.execution.joins
-          .CartesianProductExec => c })
+      val cp = nodes[CartesianProductExec](q)
       assert(cp.isEmpty, s"$q fell back to a cartesian product: $cp")
     }
   }
@@ -208,11 +191,10 @@ class PlanShapeSpec extends SparkSpec {
     // the tagged union-aggregate replaced the B-row full-outer join, so
     // the ONLY join in the weighting pass is the broadcast of the
     // lambda frame onto the exploded tokens
-    val ps = plans("q192_dsir_select")
-    val smj = ps.flatMap(_.collect { case j: SortMergeJoinExec => j })
+    val smj = nodes[SortMergeJoinExec]("q192_dsir_select")
     assert(smj.isEmpty,
       s"DSIR must not sort-merge-join anywhere: $smj")
-    val bhj = ps.flatMap(_.collect { case j: BroadcastHashJoinExec => j })
+    val bhj = nodes[BroadcastHashJoinExec]("q192_dsir_select")
     assert(bhj.nonEmpty,
       "expected the B-row lambda frame to broadcast onto the tokens")
   }
@@ -272,14 +254,10 @@ class PlanShapeSpec extends SparkSpec {
     // the common-neighbor generator is the (w)-keyed adjacency
     // self-join; a CartesianProduct (data x data) is the all-pairs
     // failure the hub cap exists to avoid
-    val ps = plans("q314_adamic_adar")
-    val cart = ps.flatMap(_.collect {
-      case c: org.apache.spark.sql.execution.joins.CartesianProductExec
-        => c })
+    val q = "q314_adamic_adar"
+    val cart = nodes[CartesianProductExec](q)
     assert(cart.isEmpty, s"adamicAdar planned a cartesian: $cart")
-    val eq = ps.flatMap(_.collect {
-      case j: BroadcastHashJoinExec => j
-      case j: SortMergeJoinExec => j })
+    val eq = nodes[BroadcastHashJoinExec](q) ++ nodes[SortMergeJoinExec](q)
     assert(eq.nonEmpty, "expected hash/sort-merge joins on the " +
       "shared-neighbor key")
   }
@@ -299,8 +277,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q317 quantile normalization windows are slice-partitioned") {
-    val wins = plans("q317_quantile_normalize")
-      .flatMap(_.collect { case w: WindowExec => w })
+    val wins = nodes[WindowExec]("q317_quantile_normalize")
     assert(wins.nonEmpty && wins.forall(_.partitionSpec.nonEmpty),
       "quantileNormalize rank windows must be slice-partitioned " +
         "(a global window would serialize the corpus)")
@@ -311,18 +288,13 @@ class PlanShapeSpec extends SparkSpec {
     // the pageRank loop materializes per round, so the ENTRY plan only
     // shows the final round: its joins must be hash joins on the
     // vocab-sized frames, never a cartesian
-    val ps = plans("q315_textrank")
-    val cart = ps.flatMap(_.collect {
-      case c: org.apache.spark.sql.execution.joins.CartesianProductExec
-        => c })
+    val cart = nodes[CartesianProductExec]("q315_textrank")
     assert(cart.isEmpty, s"textRank planned a cartesian: $cart")
   }
 
   test("q430 energy distance plans ZERO joins — the crossing-count " +
       "identity replaces the pair join") {
-    val ps = plans("q430_energy_distance")
-    val joins = ps.flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j })
+    val joins = nodes[BaseJoinExec]("q430_energy_distance")
     assert(joins.isEmpty, s"energy distance planned a join: $joins")
   }
 
@@ -331,35 +303,25 @@ class PlanShapeSpec extends SparkSpec {
     // the only non-equi join allowed is the 1-row totals broadcast
     // (the in-plan-scalar discipline); the PAIR stage itself must be
     // an equi-join on the user key
-    val ps = plans("q402_ordered_pairs")
-    val cart = ps.flatMap(_.collect {
-      case c: org.apache.spark.sql.execution.joins.CartesianProductExec
-        => c })
+    val q = "q402_ordered_pairs"
+    val cart = nodes[CartesianProductExec](q)
     assert(cart.isEmpty, s"ordered pairs planned a cartesian: $cart")
-    val equi = ps.flatMap(_.collect {
-      case j: BroadcastHashJoinExec => j
-      case j: SortMergeJoinExec => j
-      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-        => j })
+    val equi = nodes[BroadcastHashJoinExec](q) ++
+      nodes[SortMergeJoinExec](q) ++ nodes[ShuffledHashJoinExec](q)
     assert(equi.nonEmpty, "expected an equi pair join on the user key")
   }
 
   test("q425 threshold sweep reads the corpus ONCE — all thresholds " +
       "are conditional sums in a single aggregate") {
-    val ps = plans("q425_threshold_sweep")
-    val scans = ps.flatMap(_.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f })
+    val scans = nodes[FileSourceScanExec]("q425_threshold_sweep")
     assert(scans.size == 1, s"threshold sweep scans ${scans.size} times")
   }
 
   test("q442 correlation matrix aggregates once and never re-joins " +
       "the metric frame") {
-    val ps = plans("q442_corr_matrix")
-    val joins = ps.flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j })
+    val joins = nodes[BaseJoinExec]("q442_corr_matrix")
     assert(joins.isEmpty, s"corrMatrix planned a join: $joins")
-    val scans = ps.flatMap(_.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f })
+    val scans = nodes[FileSourceScanExec]("q442_corr_matrix")
     assert(scans.size == 1, s"corrMatrix scans ${scans.size} times")
   }
 
@@ -367,39 +329,25 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q457 KPSS plans ZERO joins — the exact-rational collapsed " +
       "form is pure window chains") {
-    val ps = plans("q457_kpss")
-    val joins = ps.flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j })
+    val joins = nodes[BaseJoinExec]("q457_kpss")
     assert(joins.isEmpty, s"KPSS planned a join: $joins")
   }
 
   test("q459 Diebold–Mariano plans ZERO joins — the HAC assembly " +
       "rides lead windows, never a self-join") {
-    val ps = plans("q459_diebold_mariano")
-    val joins = ps.flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j })
+    val joins = nodes[BaseJoinExec]("q459_diebold_mariano")
     assert(joins.isEmpty, s"Diebold–Mariano planned a join: $joins")
   }
 
   test("q461 bipartite projection pairs through the left-key " +
       "equi-join, never a cartesian") {
-    val ps = plans("q461_bipartite")
-    val cart = ps.flatMap(_.collect {
-      case c: org.apache.spark.sql.execution.joins.CartesianProductExec
-        => c
-      case n: org.apache.spark.sql.execution.joins
-        .BroadcastNestedLoopJoinExec => n })
+    val cart = allPairs("q461_bipartite")
     assert(cart.isEmpty, s"bipartite projection went all-pairs: $cart")
   }
 
   test("q476 k-truss meets triangles through equi-joins only (final " +
       "round plan — earlier rounds are materialized)") {
-    val ps = plans("q476_ktruss")
-    val cart = ps.flatMap(_.collect {
-      case c: org.apache.spark.sql.execution.joins.CartesianProductExec
-        => c
-      case n: org.apache.spark.sql.execution.joins
-        .BroadcastNestedLoopJoinExec => n })
+    val cart = allPairs("q476_ktruss")
     assert(cart.isEmpty, s"k-truss went all-pairs: $cart")
   }
 
@@ -408,28 +356,22 @@ class PlanShapeSpec extends SparkSpec {
       "(≤2 corpus scans), the union pivot is join-free, and every " +
       "unpartitioned window sits above the depth-bounded limit " +
       "(VERDICT r17 #2)") {
-    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
-    val ps = plans("q477_rbo")
+    val q = "q477_rbo"
     // column pruning makes the two head aggregates genuinely different
     // (each reads only its own metric), so exchange reuse cannot fire:
     // two partial-agg scans, never more — and never a sort
-    val scans = ps.flatMap(_.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f })
+    val scans = nodes[FileSourceScanExec](q)
     assert(scans.size <= 2, s"RBO scans ${scans.size} times")
-    val joins = ps.flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j })
+    val joins = nodes[BaseJoinExec](q)
     assert(joins.isEmpty, s"RBO planned a join: $joins")
-    val topk = ps.flatMap(_.collect {
-      case t: TakeOrderedAndProjectExec => t })
+    val topk = nodes[TakeOrderedAndProjectExec](q)
     assert(topk.size == 2, s"expected the two top-depth heads, got $topk")
-    val globalSorts = ps.flatMap(_.collect {
-      case s: org.apache.spark.sql.execution.SortExec if s.global => s })
+    val globalSorts = PlanLaws.bareGlobalSorts(plans(q))
     assert(globalSorts.isEmpty,
       s"RBO still globally sorts the users frame: $globalSorts")
     // the head rank windows are unpartitioned but depth-bounded: a
     // TakeOrdered sits strictly below each
-    val wins = ps.flatMap(_.collect { case w: WindowExec
-      if w.partitionSpec.isEmpty => w })
+    val wins = nodes[WindowExec](q).filter(_.partitionSpec.isEmpty)
     assert(wins.nonEmpty && wins.forall(w => w.child.collect {
       case t: TakeOrderedAndProjectExec => t }.nonEmpty),
       "every unpartitioned window must sit above the top-depth cut")
@@ -437,9 +379,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q481 trimmed stats plans ZERO joins — rank blocks are one " +
       "window plus one keyed rollup") {
-    val ps = plans("q481_trimmed_stats")
-    val joins = ps.flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j })
+    val joins = nodes[BaseJoinExec]("q481_trimmed_stats")
     assert(joins.isEmpty, s"trimmed stats planned a join: $joins")
   }
 
@@ -455,19 +395,9 @@ class PlanShapeSpec extends SparkSpec {
     * scan/project — has no aggregate below and fails here.
     */
   private def assertNoRawRowGlobalWindow(name: String): Unit = {
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    // a ReusedExchangeExec is a leaf that POINTS at the collapsed
-    // subtree — pierce it, or a reused value-grouped aggregate reads
-    // as a raw frame
-    def hasAggBelow(p: SparkPlan): Boolean =
-      p.collect { case a: BaseAggregateExec => a }.nonEmpty ||
-        p.collect { case r: ReusedExchangeExec => r }
-          .exists(r => hasAggBelow(r.child))
-    val wins = plans(name)
-      .flatMap(_.collect { case w: WindowExec => w })
+    val wins = nodes[WindowExec](name)
     val bad = wins.filter(w => w.partitionSpec.isEmpty &&
-      !hasAggBelow(w.child))
+      !PlanLaws.aggregateBelow(w.child))
     assert(bad.isEmpty,
       s"$name: unpartitioned window over a raw row-level frame:\n" +
         bad.map(_.simpleStringWithNodeId()).mkString("\n"))
@@ -488,8 +418,7 @@ class PlanShapeSpec extends SparkSpec {
       "rank window is present (q487/q491/q492/q502/q443)") {
     Seq("q487_hosmer_lemeshow", "q491_lorenz", "q492_kakwani",
       "q502_gain_lift", "q443_rfm").foreach { name =>
-      val wins = plans(name)
-        .flatMap(_.collect { case w: WindowExec => w })
+      val wins = nodes[WindowExec](name)
       assert(wins.exists(_.partitionSpec.nonEmpty),
         s"$name: expected the shard-partitioned rank window")
     }
@@ -497,90 +426,11 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q493 Anderson–Darling plans ZERO joins — the substitution " +
       "form removes the rank-key self-join") {
-    val ps = plans("q493_anderson_darling")
-    val joins = ps.flatMap(_.collect {
-      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j })
+    val joins = nodes[BaseJoinExec]("q493_anderson_darling")
     assert(joins.isEmpty, s"Anderson–Darling planned a join: $joins")
   }
 
   // ---- round-18: the class-6 law, corpus-wide (VERDICT r17 #1) ----
-
-  /** Column names that mean "one row per corpus unit": an aggregate
-    * keyed on one of these COLLAPSES NOTHING — its output frame scales
-    * with the corpus, and feeding it into an unpartitioned window is
-    * exactly the shape r17's "aggregate strictly below" test could not
-    * see (q477's per-user aggregate under the global rank windows).
-    */
-  private val corpusKeyNames = Set("user_id", "doc_id", "vec_id",
-    "event_id", "l_orderkey", "o_orderkey", "_u")
-
-  /** r19 hardening (VERDICT r18 #7): the name set alone is blind to a
-    * RENAME (`user_id AS uid` escaped it) and to GENERATED columns (a
-    * `groupBy(term)` over exploded tokens collapses to the vocabulary,
-    * which scales with the corpus). This walks a grouping attribute
-    * back through alias chains (renames and casts of an attribute) in
-    * the subtree below the aggregate; the key is corpus-scaling if the
-    * chain terminates at (a) a data-leaf column whose NAME is a corpus
-    * unit key, or (b) any Generate (explode) output. A key that passes
-    * through a real function (hash bucket, time floor, substring)
-    * stops the trace and PASSES — boundedness of derived keys is the
-    * operator author's responsibility, sanctioned per-entry in the
-    * whitelist with a reason when the structural test cannot see it.
-    */
-  private def corpusScalingKey(
-      a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec)
-      : Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias,
-      AttributeReference, Cast, ExprId, Expression}
-    import org.apache.spark.sql.execution.GenerateExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    // every node in (and referenced by) the subtree, piercing reuse
-    def all(p: SparkPlan): Seq[SparkPlan] =
-      p.collect { case q => q }.flatMap {
-        case r: ReusedExchangeExec => r +: all(r.child)
-        case q => Seq(q)
-      }
-    val nodes = all(a)
-    val aliasOf: Map[ExprId, org.apache.spark.sql.catalyst.expressions
-        .Expression] =
-      nodes.flatMap(_.expressions).flatMap(_.collect {
-        case al: Alias => al.exprId -> al.child
-      }).toMap
-    // only DATA-FED generators scale: explode of a literal sequence
-    // (bootstrapCI's replicate axis) references no input attribute and
-    // is bounded by the code literal. (The UNBOUND generator — the
-    // bound one's references are ordinals, always empty.)
-    val generated: Set[ExprId] = nodes.collect {
-      case g: GenerateExec if g.generator.references.nonEmpty =>
-        g.generatorOutput.map(_.exprId)
-    }.flatten.toSet
-    val leafCols: Map[ExprId, String] = nodes
-      .filter(_.children.isEmpty)
-      .flatMap(_.output.map(o => o.exprId -> o.name.toLowerCase)).toMap
-    // a rename or a cast keeps one key per input key: peel it and
-    // keep following the attribute underneath
-    def peel(e: Expression): Option[AttributeReference] = e match {
-      case ar: AttributeReference => Some(ar)
-      case al: Alias => peel(al.child)
-      case c: Cast => peel(c.child)
-      case _ => None
-    }
-    @annotation.tailrec
-    def scaling(id: ExprId, hops: Int): Boolean =
-      if (hops > 64) false
-      else if (generated.contains(id)) true
-      else aliasOf.get(id).map(peel) match {
-        case Some(Some(ar)) => scaling(ar.exprId, hops + 1)
-        case Some(None) => false // a real function — trace stops, passes
-        case None => leafCols.get(id).exists(corpusKeyNames.contains)
-      }
-    a.groupingExpressions.exists {
-      case ar: AttributeReference =>
-        corpusKeyNames.contains(ar.name.toLowerCase) ||
-          scaling(ar.exprId, 0)
-      case g => corpusKeyNames.contains(g.name.toLowerCase)
-    }
-  }
 
   /** Entries whose unpartitioned windows are sanctioned for a reason
     * the structural test cannot see, each with the reason (the
@@ -596,65 +446,16 @@ class PlanShapeSpec extends SparkSpec {
       "entry sits above a LIMIT, a collapsing (non-corpus-keyed) " +
       "aggregate frontier, or a loud guard — never raw/corpus-keyed " +
       "rows (VERDICT r17 #1; red on the pre-r18 q477 shape)") {
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    import org.apache.spark.sql.execution.{GlobalLimitExec,
-      TakeOrderedAndProjectExec, CollectLimitExec, RangeExec,
-      LocalTableScanExec, SparkPlan}
-    import org.apache.spark.sql.catalyst.expressions.RaiseError
-
-    // bounded-frontier walk: TRUE iff every leafward path from p hits
-    // a limit, a non-corpus-keyed aggregate, or a literal leaf before
-    // any data leaf. The FIRST aggregate on a path decides (aggregates
-    // above a corpus-keyed one may re-collapse — the survival duration
-    // frames — so only the frontier matters); a corpus-keyed frontier
-    // aggregate is the q477 shape and fails the walk.
-    def bounded(p: SparkPlan): Boolean = p match {
-      case a: BaseAggregateExec =>
-        // r19: provenance-hardened (rename + generate blind spots)
-        !corpusScalingKey(a)
-      case _: GlobalLimitExec | _: TakeOrderedAndProjectExec |
-           _: CollectLimitExec => true
-      case _: RangeExec | _: LocalTableScanExec => true // literal frames
-      case r: ReusedExchangeExec => bounded(r.child)
-      case leaf if leaf.children.isEmpty => false // scan/RDD: raw rows
-      case other => other.children.forall(bounded)
-    }
-    // loud-bound clause (hoeffdingsD's class): the window input is raw
-    // BY DESIGN, bounded at runtime by a raise_error guard riding a
-    // consumed column, with the count from a distributed (groupless)
-    // aggregate underneath
-    def guarded(p: SparkPlan): Boolean = {
-      val hasRaise = (p +: p.collect { case q => q }).exists(
-        _.expressions.exists(_.exists {
-          case _: RaiseError => true
-          case _ => false
-        }))
-      def scalarAggBelow(q: SparkPlan): Boolean =
-        q.collect { case a: BaseAggregateExec
-          if a.groupingExpressions.isEmpty => a }.nonEmpty ||
-          q.collect { case r: ReusedExchangeExec => r }
-            .exists(r => scalarAggBelow(r.child))
-      hasRaise && scalarAggBelow(p)
-    }
-    val names =
-      SparkEntry.queries.keys.filterNot(SparkEntry.mutating).toSeq.sorted
-    val violations = scala.collection.mutable.ArrayBuffer.empty[String]
-    names.foreach { n =>
-      try {
-        val wins = plans(n)
-          .flatMap(_.collect { case w: WindowExec
-            if w.partitionSpec.isEmpty => w })
-        val bad = wins.filterNot(w =>
-          bounded(w.child) || guarded(w.child) ||
-            class6Whitelist.contains(n))
-        if (bad.nonEmpty)
-          violations += s"$n: ${bad.size} unpartitioned window(s) over " +
-            s"an unbounded/corpus-keyed frame"
-      } catch {
-        case e: Exception => violations += s"$n: failed to plan: " +
-          s"${String.valueOf(e.getMessage).take(120)}"
-      }
+    val violations = PlanLaws.corpus(spark, dir).flatMap { case (n, planned) =>
+      planned.fold(
+        e => Seq(s"$n: failed to plan: " +
+          s"${String.valueOf(e.getMessage).take(120)}"),
+        { e =>
+          val bad =
+            if (class6Whitelist.contains(n)) Nil else rawGlobalWindows(e.plans)
+          Option.when(bad.nonEmpty)(s"$n: ${bad.size} unpartitioned " +
+            "window(s) over an unbounded/corpus-keyed frame")
+        })
     }
     assert(violations.isEmpty,
       s"\nclass-6 corpus-wide violations:\n  ${violations.mkString("\n  ")}")
@@ -662,7 +463,6 @@ class PlanShapeSpec extends SparkSpec {
 
   test("the corpus-wide class-6 law actually fires on the retired " +
       "q477 shape (a global rank window over a per-user aggregate)") {
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.functions._
     val W = org.apache.spark.sql.expressions.Window
     val df = spark.range(100).select(col("id").as("user_id"),
@@ -670,26 +470,10 @@ class PlanShapeSpec extends SparkSpec {
       .groupBy(col("user_id")).agg(sum(col("x")).as("sx"))
       .select(row_number().over(W.partitionBy(lit(1))
         .orderBy(col("sx").desc, col("user_id").asc)).as("r"))
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val p = df.queryExecution.executedPlan
-      val wins = p.collect { case w: WindowExec
-        if w.partitionSpec.isEmpty => w }
-      assert(wins.nonEmpty, "expected the unpartitioned window")
-      // the r17 law would have passed this (an aggregate IS below);
-      // the r18 frontier walk must reject it — per-user keyed
-      def frontierOk(q: org.apache.spark.sql.execution.SparkPlan): Boolean =
-        q match {
-          case a: BaseAggregateExec =>
-            !a.groupingExpressions.map(_.name.toLowerCase)
-              .exists(Set("user_id").contains(_))
-          case leaf if leaf.children.isEmpty => true // range = literal
-          case other => other.children.forall(frontierOk)
-        }
-      assert(wins.exists(w => !frontierOk(w.child)),
-        "the frontier walk failed to flag the per-user aggregate")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    // the r17 law would have passed this (an aggregate IS below); the
+    // law's frontier walk must reject it — per-user keyed
+    assert(rawGlobalWindows(staticPlans(df)).nonEmpty,
+      "the frontier walk failed to flag the per-user aggregate")
   }
 
   // ---- round-19: hash-join build sides in the heavy entries ----
@@ -700,33 +484,22 @@ class PlanShapeSpec extends SparkSpec {
       "at scale regardless of AQE), and ShuffledHashJoin build sides " +
       "that do scale with the corpus are enumerated with the reason " +
       "they are safe (VERDICT r18 #6 / SCALING.md SHJ caveat)") {
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
-    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
-    import org.apache.spark.sql.execution.{CollectLimitExec,
-      GlobalLimitExec, LocalTableScanExec, RangeExec,
-      TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.joins.HashJoin
     // bounded = every leafward path collapses (non-corpus-keyed
     // aggregate / limit / literal) before a data leaf — the class-6
-    // walk's definition, reused for build sides
-    def bounded(p: SparkPlan): Boolean = p match {
-      case a: BaseAggregateExec => !corpusScalingKey(a)
-      case _: GlobalLimitExec | _: TakeOrderedAndProjectExec |
-           _: CollectLimitExec => true
-      case _: RangeExec | _: LocalTableScanExec => true
-      // a materialized intermediate (localCheckpoint → LogicalRDD, or
-      // a temp-dir parquet round-trip — q224's per-round Lloyd
-      // centroid/codebook frames, k rows by construction): shape
-      // analysis cannot cross a materialization boundary; boundedness
-      // there is the materializing operator's documented contract.
-      // Only scans of the FIXTURE corpus count as raw corpus rows.
+    // walk, reused for build sides, where a materialized intermediate
+    // (localCheckpoint → LogicalRDD, or a temp-dir parquet round-trip —
+    // q224's per-round Lloyd centroid/codebook frames, k rows by
+    // construction) also counts as bounded: shape analysis cannot cross
+    // a materialization boundary; boundedness there is the
+    // materializing operator's documented contract. Only scans of the
+    // FIXTURE corpus count as raw corpus rows.
+    val materialized: SparkPlan => Boolean = {
       case _: org.apache.spark.sql.execution.RDDScanExec => true
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         !f.relation.location.rootPaths.exists(_.toString.contains(dir))
-      case r: ReusedExchangeExec => bounded(r.child)
-      case leaf if leaf.children.isEmpty => false
-      case other => other.children.forall(bounded)
+      case _ => false
     }
     // the cost tail (≥ ~4 s in the r18 bench) — where a build-side
     // OOM would actually hurt
@@ -746,47 +519,32 @@ class PlanShapeSpec extends SparkSpec {
     // the real-scale planner never would; with the threshold at -1 the
     // surviving BroadcastHashJoins are exactly the code's EXPLICIT
     // broadcast() hints, which are the ones that must be bounded at any
-    // scale
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold",
-      "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val broadcastViolations =
-      scala.collection.mutable.ArrayBuffer.empty[String]
-    val shjScaling = scala.collection.mutable.ArrayBuffer.empty[String]
-    try {
-      heavy.foreach { n =>
-        val ps = plans(n)
-        ps.flatMap(_.collect {
-          case j: org.apache.spark.sql.execution.joins
-              .BroadcastHashJoinExec => j
-        }).foreach { j =>
-          val build = j.buildSide match {
-            case BuildLeft => j.left
-            case BuildRight => j.right
-          }
-          // sanctioned-by-contract broadcasts: a selective filter over
-          // the fixture is structurally a raw scan, but the operator's
-          // CONTRACT bounds it (a retrieval query set ≪ the corpus) —
-          // enumerate each with its reason, like the SHJ arm below
-          val broadcastSanction: Map[String, String] = Map(
-            "q224_ann_ivfpq_portable" ->
-              ("explicit broadcast(queries/probes): the retrieval " +
-                "QUERY-side frame (vec_id-filtered, ≪ corpus by the " +
-                "top-k contract) and the probed-centroid slice"))
-          if (!bounded(build) && !broadcastSanction.contains(n))
-            broadcastViolations += s"$n: broadcast of an unbounded " +
-              s"frame:\n${build.simpleStringWithNodeId()}"
-        }
-        ps.flatMap(_.collect { case j: ShuffledHashJoinExec => j })
-          .foreach { j =>
-            val build = j.buildSide match {
-              case BuildLeft => j.left
-              case BuildRight => j.right
-            }
-            if (!bounded(build)) shjScaling += n
-          }
-      }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    // scale (the corpus entry re-planned, not rebuilt)
+    // sanctioned-by-contract broadcasts: a selective filter over the
+    // fixture is structurally a raw scan, but the operator's CONTRACT
+    // bounds it (a retrieval query set ≪ the corpus) — enumerate each
+    // with its reason, like the SHJ arm below
+    val broadcastSanction: Map[String, String] = Map(
+      "q224_ann_ivfpq_portable" ->
+        ("explicit broadcast(queries/probes): the retrieval " +
+          "QUERY-side frame (vec_id-filtered, ≪ corpus by the " +
+          "top-k contract) and the probed-centroid slice"))
+    // every hash join (broadcast or shuffled) whose build side is not
+    // bounded
+    val unbounded = heavy.flatMap { n =>
+      PlanLaws.entry(spark, dir, n).plansNoAutoBroadcast.flatMap(_.collect {
+        case j: HashJoin =>
+          (n, j, if (j.buildSide == BuildLeft) j.left else j.right)
+      })
+    }.filterNot { case (_, _, build) => bounded(build, materialized) }
+    val broadcastViolations = unbounded.collect {
+      case (n, _: BroadcastHashJoinExec, build)
+          if !broadcastSanction.contains(n) =>
+        s"$n: broadcast of an unbounded frame:\n" +
+          build.simpleStringWithNodeId()
+    }
+    val shjScaling = unbounded.collect {
+      case (n, _: ShuffledHashJoinExec, _) => n }
     assert(broadcastViolations.isEmpty,
       s"\ncorpus-scaling BROADCAST build sides:\n  " +
         broadcastViolations.mkString("\n  "))
@@ -824,48 +582,36 @@ class PlanShapeSpec extends SparkSpec {
       .select(col("term"),
         row_number().over(W.partitionBy(lit(1))
           .orderBy(col("n").desc, col("term").asc)).as("r"))
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val p = df.queryExecution.executedPlan
-      val wins = p.collect { case w: WindowExec
-        if w.partitionSpec.isEmpty => w }
-      assert(wins.nonEmpty, "expected the unpartitioned window")
-      val frontier = wins.flatMap(_.child.collect {
-        case a: BaseAggregateExec => a })
-      assert(frontier.nonEmpty, "expected the term-keyed aggregate")
-      assert(frontier.exists(corpusScalingKey),
-        "the provenance walk failed to flag the generated term key")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    val wins = staticPlans(df).flatMap(_.collect { case w: WindowExec
+      if w.partitionSpec.isEmpty => w })
+    assert(wins.nonEmpty, "expected the unpartitioned window")
+    val frontier = wins.flatMap(_.child.collect {
+      case a: BaseAggregateExec => a })
+    assert(frontier.nonEmpty, "expected the term-keyed aggregate")
+    assert(frontier.exists(corpusScalingKey),
+      "the provenance walk failed to flag the generated term key")
   }
 
   test("the hardened walk reds on a RENAMED unit key — `user_id AS " +
       "uid` must not escape the name set (VERDICT r18 #7)") {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.functions._
+    def aggs(df: org.apache.spark.sql.DataFrame) =
+      staticPlans(df).flatMap(_.collect { case a: BaseAggregateExec => a })
     val events = spark.read.parquet(s"$dir/events.parquet")
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      // a plain rename and a cast rename
-      for (uid <- Seq(col("user_id"), col("user_id").cast("string"))) {
-        val df = events.select(uid.as("uid"), col("value"))
-          .groupBy(col("uid")).agg(sum(col("value")).as("sv"))
-        val aggs = df.queryExecution.executedPlan
-          .collect { case a: BaseAggregateExec => a }
-        assert(aggs.nonEmpty)
-        assert(aggs.exists(corpusScalingKey),
-          s"the provenance walk failed to trace uid ($uid) back to user_id")
-      }
-      // and a genuinely derived key still passes: bucketed by a hash
-      val ok = spark.read.parquet(s"$dir/events.parquet")
-        .groupBy((xxhash64(col("user_id")) % 64).as("b"))
-        .agg(count(lit(1)).as("n"))
-      val aggs2 = ok.queryExecution.executedPlan
-        .collect { case a: BaseAggregateExec => a }
-      assert(aggs2.nonEmpty && !aggs2.exists(corpusScalingKey),
-        "a hash-bucketed key must not flag (the trace stops at the " +
-          "function boundary)")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    // a plain rename and a cast rename
+    for (uid <- Seq(col("user_id"), col("user_id").cast("string"))) {
+      val df = events.select(uid.as("uid"), col("value"))
+        .groupBy(col("uid")).agg(sum(col("value")).as("sv"))
+      assert(aggs(df).nonEmpty)
+      assert(aggs(df).exists(corpusScalingKey),
+        s"the provenance walk failed to trace uid ($uid) back to user_id")
+    }
+    // and a genuinely derived key still passes: bucketed by a hash
+    val ok = aggs(events.groupBy((xxhash64(col("user_id")) % 64).as("b"))
+      .agg(count(lit(1)).as("n")))
+    assert(ok.nonEmpty && !ok.exists(corpusScalingKey),
+      "a hash-bucketed key must not flag (the trace stops at the " +
+        "function boundary)")
   }
 }

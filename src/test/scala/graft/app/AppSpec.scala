@@ -215,6 +215,10 @@ class AppSpec extends SparkSpec {
       assert(report.statuses(s"${n}_child") == TaskStatus.Skipped, n)
     }
     assert(report.errors("zero_rows").msg.contains("max_merge_rows"))
+    assert(report.errors("bad_append").msg.contains("append must be true " +
+      "or false, got 'maybe'"), report.errors("bad_append"))
+    assert(report.errors("bad_buckets").msg.contains("buckets must be a " +
+      "positive integer, got 'x'"), report.errors("bad_buckets"))
     assert(report.statuses("independent") == TaskStatus.Succeeded)
   }
 
