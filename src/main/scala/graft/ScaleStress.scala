@@ -343,8 +343,8 @@ object ScaleStress {
         val tightRows = Seq(2, 4, 6, 10, 16).map { b =>
           def run(dir: String): (Double, Long) = {
             val df = graft.queries.Tables(spark, dir, "embeddings")
-            val cand = graft.pipeline.Clustering.annCandidates(
-              df, "vec_id", "embedding", tables = 32, bits = b).count()
+            val cand = graft.pipeline.Similarity.dupCandidates(
+              df, "vec_id", "embedding", tables = 32, bits = b)._2.count()
             val t0 = System.nanoTime()
             graft.pipeline.Clustering.euclideanPairsAnn(
                 df, "vec_id", "embedding", eps2 = 400000L,

@@ -16,12 +16,12 @@ import org.apache.spark.sql.functions._
   * logic is a fixed keyed pipeline over whatever pair frame feeds it.
   *
   *   - [[euclideanPairs]]: exact quantized-integer ε-pairs — the
-  *     oracle-checkable baseline (hash-blocked broadcast nested loop,
-  *     the declared-exact-baseline regime of `embeddingDupPairsBlocked`).
-  *   - at 100 TB: feed [[dbscanFromPairs]] from LSH candidates
-  *     ([[Similarity.annDupPairs]]-style bucketed generation) verified
-  *     at the ε threshold — candidate recall misses split clusters,
-  *     the standard approximate-DBSCAN trade, and the ONLY part of the
+  *     oracle-checkable baseline, Similarity's `blockedPairs` stage
+  *     scored by d².
+  *   - [[euclideanPairsAnn]]: at 100 TB, [[dbscanFromPairs]] is fed
+  *     from Similarity's `dupCandidates` verified by its `pairDots` at
+  *     the ε threshold — candidate recall misses split clusters, the
+  *     standard approximate-DBSCAN trade, and the ONLY part of the
   *     operator that changes.
   *
   * Determinism (the cross-engine contract): distances are integer
@@ -37,11 +37,10 @@ object Clustering {
     * one row per unordered pair with d² ≤ eps2, d² in quantized units
     * (ε of 1.2 in embedding space ⇒ eps2 = (1.2·1000)² = 1,440,000).
     *
-    * Identity d² = |a|² + |b|² − 2a·b over the packed longs, so the
-    * kernel reuses the codegen'd [[graft.functions.LongArrayDot]] and
-    * every comparison is integer-exact. Hash-blocked broadcast nested
-    * loop: exact-baseline regime, O(N²/blocks) per task — swap for LSH
-    * candidates past that regime (scaladoc above).
+    * Identity d² = |a|² + |b|² − 2a·b over the packed longs ([[d2]]),
+    * so every comparison is integer-exact. Hash-blocked broadcast
+    * nested loop: exact-baseline regime, O(N²/blocks) per task — swap
+    * for LSH candidates past that regime (scaladoc above).
     */
   def euclideanPairs(
       df: DataFrame,
@@ -50,32 +49,13 @@ object Clustering {
       eps2: Long,
       blocks: Int = 8): DataFrame = {
     require(eps2 > 0, s"eps2 must be positive, got $eps2")
-    require(blocks >= 1, "blocks must be >= 1")
-    val packed = df.select(
-      col(idCol),
-      transform(col(embCol),
-        v => floor(v.cast("double") * lit(1000.0)).cast("long")).as("q"))
-      .select(col(idCol), col("q"),
-        graft.functions.GraftFunctions.longArrayDot(col("q"), col("q"))
-          .as("nrm"))
-      .withColumn("_blk", pmod(xxhash64(col(idCol)), lit(blocks)).cast("int"))
-    def side(i: Int, n: String) = packed.filter(col("_blk") === i)
-      .select(col(idCol).as(s"vec_$n"), col("q").as(s"q$n"),
-        col("nrm").as(s"n$n"))
-    val branches = for { i <- 0 until blocks; j <- i until blocks } yield {
-      val cond = if (i == j) col("vec_a") < col("vec_b")
-                 else col("vec_a") =!= col("vec_b")
-      side(i, "a").join(broadcast(side(j, "b")), cond)
-        .select(
-          least(col("vec_a"), col("vec_b")).as("vec_a"),
-          greatest(col("vec_a"), col("vec_b")).as("vec_b"),
-          (col("na") + col("nb") -
-            lit(2L) * graft.functions.GraftFunctions
-              .longArrayDot(col("qa"), col("qb"))).as("d2"))
-        .filter(col("d2") <= eps2)
-    }
-    branches.reduce(_ unionByName _)
+    Similarity.blockedPairs(Similarity.packedWithNorm(df, idCol, embCol),
+      idCol, blocks, d2, col("d2") <= eps2)
   }
+
+  /** d² = nA + nB − 2·dot of a [[Similarity.pairDots]] pair. */
+  private def d2: Column =
+    (col("na") + col("nb") - lit(2L) * col("dot")).as("d2")
 
   /** DBSCAN given the ε-neighbor pair frame (`vec_a`, `vec_b`, one row
     * per unordered pair). Neighborhood counts INCLUDE the point itself
@@ -156,13 +136,10 @@ object Clustering {
   /** LSH-candidate ε-neighbor pairs verified at the exact quantized
     * threshold — the linear-cost pair stage that replaces
     * [[euclideanPairs]] past the exact-baseline regime (the
-    * [[Similarity.annDupPairs]] playbook applied to euclidean ε-pairs).
-    * Candidates meet through the (tbl, bucket) self equi-join on the
-    * random-hyperplane sign buckets; every surviving candidate pays one
-    * in-row codegen'd integer dot for the exact d² ≤ eps2 verify, so
-    * the output is ALWAYS a subset of [[euclideanPairs]]' pair set
-    * (false positives die at the verify; false negatives are true
-    * pairs whose buckets never collide). NEVER all-pairs by plan: the
+    * [[Similarity.annDupPairs]] pipeline with the exact d² ≤ eps2
+    * verify), so the output is ALWAYS a subset of [[euclideanPairs]]'
+    * pair set (false positives die at the verify; false negatives are
+    * true pairs whose buckets never collide). NEVER all-pairs by plan: the
     * only shuffles are the bucket join and the pair-key distinct, both
     * O(candidates).
     *
@@ -192,45 +169,12 @@ object Clustering {
       tables: Int = 32,
       bits: Int = 2): DataFrame = {
     require(eps2 > 0, s"eps2 must be positive, got $eps2")
+    // packed apart from the candidate stage's frame, as the plan has it
     val e = Similarity.packedWithNorm(df, idCol, embCol)
-    val cand = annCandidates(df, idCol, embCol, tables, bits)
-    cand
-      .join(e.select(col(idCol).as("vec_a"), col("q").as("qa"),
-        col("nrm").as("na")), Seq("vec_a"))
-      .join(e.select(col(idCol).as("vec_b"), col("q").as("qb"),
-        col("nrm").as("nb")), Seq("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        (col("na") + col("nb") - lit(2L) *
-          graft.functions.GraftFunctions.longArrayDot(col("qa"), col("qb")))
-          .as("d2"))
+    val (_, cand) = Similarity.dupCandidates(df, idCol, embCol, tables, bits)
+    Similarity.pairDots(cand, e, e, idCol, "vec_a", "vec_b")
+      .select(col("vec_a"), col("vec_b"), d2)
       .filter(col("d2") <= eps2)
-  }
-
-  /** [[euclideanPairsAnn]]'s bucket stage alone: the unordered
-    * candidate pairs that share an LSH bucket in some table, BEFORE
-    * the exact d² verify. Exposed so the scale sidecar can MEASURE
-    * the density law (candidate count vs bits at each SF) instead of
-    * asserting it in prose — candidates depend only on (tables, bits)
-    * and the corpus, never on ε, so this one frame prices every ε
-    * regime of the same config.
-    */
-  def annCandidates(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      tables: Int = 32,
-      bits: Int = 2): DataFrame = {
-    require(tables >= 1 && bits >= 1, "tables and bits must be >= 1")
-    val dims = df.select(size(col(embCol))).head().getInt(0)
-    val e = Similarity.packedWithNorm(df, idCol, embCol)
-    val hashed = Similarity.lshBuckets(e, idCol, tables, bits, dims)
-    hashed
-      .select(col("tbl"), col("bucket"), col(idCol).as("vec_a"))
-      .join(hashed.select(col("tbl"), col("bucket"), col(idCol).as("vec_b")),
-        Seq("tbl", "bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"))
-      .distinct()
   }
 
   /** Block count derived from the corpus so each broadcast side stays

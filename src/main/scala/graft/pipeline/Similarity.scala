@@ -7,51 +7,207 @@ import graft.pipeline.Exact.{dec, d28, d6}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Two paths:
-  *   - [[bruteForceKnn]]: exact cosine top-k. The embedding is QUANTIZED to
-  *     integers (floor(v·1000)) so every downstream sum is exact integer
-  *     math and the cosine (int / sqrt(int·int)) is bit-reproducible across
-  *     engines — that is what makes the operator oracle-checkable, and at
-  *     scale it doubles as a poor-man's int8-style quantization. Work is
-  *     O(queries × corpus); the query side is broadcast so the corpus never
-  *     reshuffles. This is the baseline + re-rank kernel, not the scale path.
-  *   - [[annLsh]]: random-hyperplane LSH. Vectors hash to sign-pattern
-  *     buckets in L independent tables; candidates meet through an
-  *     equi-join on (table, bucket) — never all-pairs — then exact cosine
-  *     re-ranks the candidates. The 100 TB path: cost is
-  *     O(rows × planes) hashing + O(candidates) re-rank, and the only
-  *     shuffle is the bucket join.
-  *
-  * All scoring runs on built-in Catalyst expressions (posexplode + integer
-  * aggregates); the plane projections use array higher-order functions.
+  * Every kNN / ANN / near-duplicate operator here is one pipeline —
+  * candidates → exact verify → per-query top-k — composed from stages
+  * defined once below:
+  *   - [[quantize]] / [[packedWithNorm]]: each element on the floor(v·1000)
+  *     integer grid, packed into one `array<long>` with its squared norm,
+  *     so every dot product is exact integer math and the cosine
+  *     ([[cosine]]: int / sqrt(int·int)) is bit-reproducible across
+  *     engines — what makes the operators oracle-checkable;
+  *   - candidates: the broadcast query block ([[querySide]]) for the exact
+  *     baselines, [[lshHashed]] + [[bucketPairs]] (random-hyperplane
+  *     buckets meeting through the (tbl, bucket) equi-join — never
+  *     all-pairs) for LSH, [[ivfCandidates]] for IVF probes, and
+  *     [[blockedPairs]] (hash-blocked broadcast nested loops) for the
+  *     exact all-pairs stage;
+  *   - verify: one in-row codegen'd [[graft.functions.LongArrayDot]] per
+  *     pair ([[exactReRank]] for query × neighbor, [[pairDots]] for
+  *     unordered pairs);
+  *   - [[topK]]: the per-query rank window (ties → lower neighbor id).
+  * Operators below name the stages they compose instead of restating
+  * their shapes. The exact baselines cost O(queries × corpus); the LSH
+  * and IVF paths cost O(rows × planes) hashing + O(candidates) verify.
   */
 object Similarity {
 
-  /** (id, q, nrm): embedding quantized into one `array<long>` plus its
-    * squared norm. floor() not round() — round's tie behavior differs
-    * across engines. Dot products over the packed array run in-row through
-    * the codegen'd [[graft.functions.LongArrayDot]].
+  // ---- the shared stages ----
+
+  /** One embedding element on the module's integer grid: floor(v·1000)
+    * as a long. floor() not round() — round's tie behavior differs
+    * across engines.
     */
-  private[pipeline] def packedWithNorm(df: DataFrame, idCol: String, embCol: String): DataFrame =
-    df.select(
-      col(idCol),
-      transform(col(embCol),
-        v => floor(v.cast("double") * lit(1000.0)).cast("long")).as("q"))
-      .select(col(idCol), col("q"), packedDot(col("q"), col("q")).as("nrm"))
+  private[pipeline] def quantize(v: Column): Column =
+    floor(v.cast("double") * lit(1000.0)).cast("long")
+
+  /** (id, carry…, q, nrm): the embedding [[quantize]]d into one
+    * `array<long>` plus its squared norm; the `carry` columns ride along
+    * after the id.
+    */
+  private[pipeline] def packedWithNorm(
+      df: DataFrame, idCol: String, embCol: String, carry: String*): DataFrame = {
+    val keep = (idCol +: carry).map(col)
+    df.select(keep :+ transform(col(embCol), quantize(_)).as("q"): _*)
+      .select(keep :+ col("q") :+ packedDot(col("q"), col("q")).as("nrm"): _*)
+  }
 
   private def packedDot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.longArrayDot(a, b)
+
+  /** The cosine of two packed vectors from their dot and squared norms. */
+  private[pipeline] def cosine(dot: Column, nA: Column, nB: Column): Column =
+    dot.cast("double") / sqrt(nA.cast("double") * nB.cast("double"))
+
+  /** The rows of `e` whose `idCol` is in `qb`, a one-column id frame. */
+  private[pipeline] def querySide(e: DataFrame, idCol: String, qb: DataFrame): DataFrame =
+    e.join(qb, e(idCol) === qb(qb.columns.head), "left_semi")
+
+  /** A packed frame as the query side of a re-rank: (qid, qq, q_nrm). */
+  private def asQueries(e: DataFrame, idCol: String): DataFrame =
+    e.select(col(idCol).as("qid"), col("q").as("qq"), col("nrm").as("q_nrm"))
+
+  /** The broadcast query block of `e` for the ids in `qb`. */
+  private def queryBlock(e: DataFrame, idCol: String, qb: DataFrame): DataFrame =
+    broadcast(asQueries(querySide(e, idCol, qb), idCol))
+
+  /** The `k` best rows per `qid` of `scored` by `scoreCol` descending,
+    * ties to the lower `nid`: a `rank` column goes in before the score,
+    * every other column keeps its place.
+    */
+  private[pipeline] def topK(scored: DataFrame, scoreCol: String, k: Int): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col(scoreCol).desc, col("nid").asc)
+    scored.select(scored.columns.toSeq.flatMap { c =>
+        if (c == scoreCol) Seq(row_number().over(w).as("rank"), col(c))
+        else Seq(col(c))
+      }: _*)
+      .filter(col("rank") <= k)
+  }
+
+  /** LSH prologue for one frame or two that share the planes: `tables`
+    * and `bits` checked, the vector length read from the first frame
+    * (one eager job), then per frame its packed form and its
+    * [[lshBuckets]].
+    */
+  private[pipeline] def lshHashed(idCol: String, embCol: String, tables: Int, bits: Int)(
+      dfs: DataFrame*): Seq[(DataFrame, DataFrame)] = {
+    require(tables >= 1, s"tables must be >= 1, got $tables")
+    // 1 << 32 wraps onto bit 0: a 32nd sign bit would alias the first
+    require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
+    val dims = dfs.head.select(size(col(embCol))).head().getInt(0)
+    dfs.map { df =>
+      val e = packedWithNorm(df, idCol, embCol)
+      (e, lshBuckets(e, idCol, tables, bits, dims))
+    }
+  }
+
+  /** The distinct (a, b) id pairs of two [[lshBuckets]] frames that share
+    * a bucket in some table and pass `keep`: one (tbl, bucket)
+    * equi-join, never all-pairs.
+    */
+  private[pipeline] def bucketPairs(
+      left: DataFrame, right: DataFrame, idCol: String,
+      a: String, b: String, keep: Column = lit(true)): DataFrame =
+    left.select(col("tbl"), col("bucket"), col(idCol).as(a))
+      .join(right.select(col("tbl"), col("bucket"), col(idCol).as(b)),
+        Seq("tbl", "bucket"))
+      .filter(keep)
+      .select(col(a), col(b))
+      .distinct()
+
+  /** One corpus's unordered LSH candidate pairs (vec_a < vec_b) beside
+    * its packed frame: the candidate stage of [[annDupPairs]] and
+    * [[Clustering.euclideanPairsAnn]]. Candidates depend only on
+    * (tables, bits) and the corpus, never on a threshold, so the scale
+    * sidecar prices the density law from this frame.
+    */
+  private[graft] def dupCandidates(
+      df: DataFrame, idCol: String, embCol: String,
+      tables: Int, bits: Int): (DataFrame, DataFrame) = {
+    val Seq((e, hashed)) = lshHashed(idCol, embCol, tables, bits)(df)
+    (e, bucketPairs(hashed, hashed, idCol, "vec_a", "vec_b",
+      col("vec_a") < col("vec_b")))
+  }
+
+  /** The packed columns of one side of a pair, renamed to (id, q`s`, n`s`). */
+  private def sideCols(idCol: String, id: String, s: String): Seq[Column] =
+    Seq(col(idCol).as(id), col("q").as(s"q$s"), col("nrm").as(s"n$s"))
+
+  /** (a, b, na, nb, dot) from a frame holding both sides' [[sideCols]]. */
+  private def withDot(pairs: DataFrame, a: String, b: String): DataFrame =
+    pairs.select(col(a), col(b), col("na"), col("nb"),
+      packedDot(col("qa"), col("qb")).as("dot"))
+
+  /** The exact pair scorer: (a, b) id pairs with `left`'s packed side
+    * joined on a, then `right`'s on b, and one dot per pair —
+    * (a, b, na, nb, dot).
+    */
+  private[pipeline] def pairDots(
+      pairs: DataFrame, left: DataFrame, right: DataFrame,
+      idCol: String, a: String, b: String): DataFrame =
+    withDot(pairs
+      .join(left.select(sideCols(idCol, a, "a"): _*), Seq(a))
+      .join(right.select(sideCols(idCol, b, "b"): _*), Seq(b)), a, b)
+
+  /** The cosine of a [[withDot]] pair. */
+  private def cosineScore: Column =
+    cosine(col("dot"), col("na"), col("nb")).as("cosine")
+
+  /** The [[withDot]] pairs whose [[cosine]] reaches `threshold`: (a, b, cosine). */
+  private def cosineAtLeast(
+      dots: DataFrame, a: String, b: String, threshold: Double): DataFrame =
+    dots.select(col(a), col(b), cosineScore).filter(col("cosine") >= threshold)
+
+  /** One (left × right) block of the exact all-pairs stage: the right
+    * side broadcast into a nested loop, one in-row dot per pair, the
+    * pair normalized to vec_a < vec_b, then `score` (over dot, na, nb)
+    * kept where `keep` holds. `ordered` joins on id<id (left and right
+    * are the same set — every unordered pair meets once); disjoint
+    * blocks join on id≠id (always true, but keeps the nested loop an
+    * explicit theta join).
+    */
+  private def blockPair(
+      left: DataFrame, right: DataFrame, idCol: String,
+      score: Column, keep: Column, ordered: Boolean): DataFrame = {
+    val cond =
+      if (ordered) col("vec_a") < col("vec_b") else col("vec_a") =!= col("vec_b")
+    withDot(left.select(sideCols(idCol, "vec_a", "a"): _*)
+        .join(broadcast(right.select(sideCols(idCol, "vec_b", "b"): _*)), cond),
+        "vec_a", "vec_b")
+      .select(
+        least(col("vec_a"), col("vec_b")).as("vec_a"),
+        greatest(col("vec_a"), col("vec_b")).as("vec_b"),
+        score)
+      .filter(keep)
+  }
+
+  /** The exact all-pairs stage past broadcast size: vectors id-hash into
+    * `blocks` buckets and every unordered block pair (i ≤ j) is one
+    * [[blockPair]] with only block j (≈ corpus/blocks rows) broadcast.
+    * id<id dedups within-block pairs; a cross-block pair meets in
+    * exactly one (i, j) branch, so each pair comes out once.
+    */
+  private[pipeline] def blockedPairs(
+      e: DataFrame, idCol: String, blocks: Int,
+      score: Column, keep: Column): DataFrame = {
+    require(blocks >= 1, "blocks must be >= 1")
+    val withBlk =
+      e.withColumn("_blk", pmod(xxhash64(col(idCol)), lit(blocks)).cast("int"))
+    def block(i: Int) = withBlk.filter(col("_blk") === i).drop("_blk")
+    val branches = for { i <- 0 until blocks; j <- i until blocks } yield
+      blockPair(block(i), block(j), idCol, score, keep, ordered = i == j)
+    branches.reduce(_ unionByName _)
+  }
 
   /** Exact top-k neighbors by quantized cosine for the query set
     * (`queryPred` selects query ids). Output: (qid, nid, rank, cosine),
     * self-matches excluded, ties broken by neighbor id.
     *
-    * The packed query side is broadcast into a nested-loop join, so the
-    * corpus scan stays partition-local with zero shuffles before the
-    * top-k; each (query, vector) cosine is one in-row codegen'd dot
-    * product. Top-k runs per-query through a rank window over
-    * queries × corpus rows — at extreme corpus sizes push a partial
-    * per-partition top-k first.
+    * The declared exact baseline: the [[queryBlock]] broadcasts into a
+    * nested-loop join, so the corpus scan stays partition-local with
+    * zero shuffles before the [[topK]] window over queries × corpus rows
+    * — at extreme corpus sizes push a partial per-partition top-k first.
     */
   def bruteForceKnn(
       df: DataFrame,
@@ -61,16 +217,11 @@ object Similarity {
       k: Int = 10): DataFrame = {
     val e = packedWithNorm(df, idCol, embCol)
     val q = df.filter(queryPred).select(col(idCol).as("_query_id"))
-    val qSide = e.join(q, e(idCol) === q("_query_id"), "left_semi")
-      .select(col(idCol).as("qid"), col("q").as("qq"), col("nrm").as("q_nrm"))
-    val cosine = packedDot(col("qq"), col("q")).cast("double") /
-      sqrt(col("q_nrm").cast("double") * col("nrm").cast("double"))
-    val scored = e.join(broadcast(qSide), col("qid") =!= col(idCol))
-      .select(col("qid"), col(idCol).as("nid"), cosine.as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("nid").asc)
-    scored.select(col("qid"), col("nid"), row_number().over(w).as("rank"), col("cosine"))
-      .filter(col("rank") <= k)
+    val scored = e.join(queryBlock(e, idCol, q), col("qid") =!= col(idCol))
+      .select(col("qid"), col(idCol).as("nid"),
+        cosine(packedDot(col("qq"), col("q")), col("q_nrm"), col("nrm"))
+          .as("cosine"))
+    topK(scored, "cosine", k)
   }
 
   /** k-occurrence (hubness) audit of a kNN graph: how often each
@@ -117,12 +268,10 @@ object Similarity {
     * — the scale twin of all-queries [[bruteForceKnn]], built for the
     * every-vector-is-a-query regime where [[lshCandidates]]'s
     * broadcast-the-query-buckets shape stops applying (the query side
-    * IS the corpus). Candidates meet through a SELF equi-join of the
-    * bucket frame on (tbl, bucket) — both sides shuffle-hash on the
-    * bucket key, nothing broadcasts corpus-sized state, never
-    * all-pairs by plan — then one codegen'd integer dot per surviving
-    * directed pair re-ranks and a per-query rank window keeps top-k
-    * (ties → lower neighbor id, [[bruteForceKnn]]'s rule).
+    * IS the corpus): [[bucketPairs]] of the bucket frame with itself
+    * (both sides shuffle-hash on the bucket key, nothing broadcasts
+    * corpus-sized state), then [[exactReRank]] with the unbroadcast
+    * corpus as the query side.
     *
     * Equal to `bruteForceKnn(df, …, lit(true), k)` whenever every
     * vector's true top-k shares a bucket with it in some table
@@ -140,30 +289,10 @@ object Similarity {
       k: Int = 10,
       tables: Int = 32,
       bits: Int = 2): DataFrame = {
-    require(tables >= 1 && bits >= 1, "tables and bits must be >= 1")
-    val dims = df.select(size(col(embCol))).head().getInt(0)
-    val e = packedWithNorm(df, idCol, embCol)
-    val hashed = lshBuckets(e, idCol, tables, bits, dims)
-    val cand = hashed
-      .select(col("tbl"), col("bucket"), col(idCol).as("qid"))
-      .join(hashed.select(col("tbl"), col("bucket"), col(idCol).as("nid")),
-        Seq("tbl", "bucket"))
-      .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"))
-      .distinct()
-    val cosine = packedDot(col("qq"), col("nq")).cast("double") /
-      sqrt(col("q_nrm").cast("double") * col("n_nrm").cast("double"))
-    val scored = cand
-      .join(e.select(col(idCol).as("nid"), col("q").as("nq"),
-        col("nrm").as("n_nrm")), Seq("nid"))
-      .join(e.select(col(idCol).as("qid"), col("q").as("qq"),
-        col("nrm").as("q_nrm")), Seq("qid"))
-      .select(col("qid"), col("nid"), cosine.as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("nid").asc)
-    scored.select(col("qid"), col("nid"), row_number().over(w).as("rank"),
-        col("cosine"))
-      .filter(col("rank") <= k)
+    val Seq((e, hashed)) = lshHashed(idCol, embCol, tables, bits)(df)
+    val cand = bucketPairs(hashed, hashed, idCol, "qid", "nid",
+      col("qid") =!= col("nid"))
+    exactReRank(e, idCol, asQueries(e, idCol), cand, k)
   }
 
   /** ANN-fed hubness: [[knnGraphAnn]] → [[hubnessFromKnn]] — the
@@ -206,21 +335,19 @@ object Similarity {
       floorCosine: Double = 0.2,
       recall: Double = 0.999): DataFrame = {
     val (tables, bits) = lshAutoConfig(df.count(), floorCosine, recall)
-    hubnessFromKnn(df, idCol,
-      knnGraphAnn(df, idCol, embCol, k, tables, bits))
+    hubnessAnn(df, idCol, embCol, k, tables, bits)
   }
 
   /** All pairs with quantized cosine ≥ threshold (embedding-based
     * near-duplicate detection). Exact — inherently O(corpus²) dot
-    * products, the ORACLE BASELINE at test scale; at 100 TB use [[annLsh]]
-    * candidates followed by exact re-ranking instead.
+    * products, the ORACLE BASELINE at test scale; at 100 TB use
+    * [[annDupPairs]] instead.
     *
-    * Plan: pack each vector into one array<long> row, broadcast the right
-    * side (a 1M×64-dim corpus packs to ~500 MB — beyond that, block the
-    * join), nested-loop join on id<id, and compute each dot product
-    * IN-ROW. No shuffle at all — versus the exploded-dimension
-    * formulation whose (pair × dim) hash aggregate moves 100× the data.
-    * Integer math in index order → same exact result either way.
+    * Plan: one [[blockPair]] of the whole packed corpus with itself (a
+    * 1M×64-dim corpus packs to ~500 MB of broadcast — beyond that use
+    * [[embeddingDupPairsBlocked]]). No shuffle at all — versus the
+    * exploded-dimension formulation whose (pair × dim) hash aggregate
+    * moves 100× the data.
     */
   def embeddingDupPairs(
       df: DataFrame,
@@ -228,33 +355,8 @@ object Similarity {
       embCol: String,
       threshold: Double): DataFrame = {
     val withNorm = packedWithNorm(df, idCol, embCol)
-    scoredPairs(withNorm, withNorm, idCol, threshold)
-  }
-
-  /** Thresholded cosine over one (left × right) block: broadcast the
-    * right side, nested-loop join, each dot product in-row. `ordered`
-    * joins on id<id (left and right are the same set — every unordered
-    * pair meets once); disjoint blocks join on id≠id (always true, but
-    * keeps the nested loop an explicit theta join) and the output is
-    * normalized to vec_a < vec_b, under which each pair meets once too.
-    */
-  private def scoredPairs(
-      left: DataFrame, right: DataFrame, idCol: String,
-      threshold: Double, ordered: Boolean = true): DataFrame = {
-    val a = left.select(col(idCol).as("vec_a"), col("q").as("qa"), col("nrm").as("na"))
-    val b = right.select(col(idCol).as("vec_b"), col("q").as("qb"), col("nrm").as("nb"))
-    val cond =
-      if (ordered) col("vec_a") < col("vec_b") else col("vec_a") =!= col("vec_b")
-    val cosine = col("dot").cast("double") /
-      sqrt(col("na").cast("double") * col("nb").cast("double"))
-    a.join(broadcast(b), cond)
-      .select(col("vec_a"), col("vec_b"), col("na"), col("nb"),
-        packedDot(col("qa"), col("qb")).as("dot"))
-      .select(
-        least(col("vec_a"), col("vec_b")).as("vec_a"),
-        greatest(col("vec_a"), col("vec_b")).as("vec_b"),
-        cosine.as("cosine"))
-      .filter(col("cosine") >= threshold)
+    blockPair(withNorm, withNorm, idCol, cosineScore,
+      col("cosine") >= threshold, ordered = true)
   }
 
   /** Embedding-space benchmark contamination gate — the SEMANTIC twin of
@@ -288,10 +390,10 @@ object Similarity {
     val b = packedWithNorm(bench, benchIdCol, benchEmbCol)
       .select(col(benchIdCol).as("_g_bid"), col("q").as("_g_qb"),
         col("nrm").as("_g_nb"))
-    val cosine = packedDot(col("q"), col("_g_qb")).cast("double") /
-      sqrt(col("nrm").cast("double") * col("_g_nb").cast("double"))
     c.join(broadcast(b))
-      .select(col(corpusIdCol), cosine.as("_g_cos"))
+      .select(col(corpusIdCol),
+        cosine(packedDot(col("q"), col("_g_qb")), col("nrm"), col("_g_nb"))
+          .as("_g_cos"))
       .groupBy(col(corpusIdCol))
       .agg(max(col("_g_cos")).as("max_cosine"))
       .select(col(corpusIdCol), col("max_cosine"),
@@ -299,14 +401,8 @@ object Similarity {
   }
 
   /** [[embeddingDupPairs]] past broadcast size: the promised escape hatch
-    * when the packed corpus exceeds one executor's broadcast budget.
-    * Vectors are id-hashed into `blocks` buckets; every unordered block
-    * pair (i ≤ j) runs the same broadcast nested-loop with only block j
-    * (≈ corpus/blocks rows) broadcast. Same exact output as the
-    * single-broadcast path — id<id dedups within-block pairs; a
-    * cross-block pair meets in exactly one (i, j) branch (its members
-    * live in two fixed blocks) in whichever id order, normalized to
-    * vec_a < vec_b on output.
+    * when the packed corpus exceeds one executor's broadcast budget —
+    * [[blockedPairs]], same exact output as the single-broadcast path.
     *
     * Cost is unchanged (O(n²) dots — exactness is inherently quadratic;
     * use [[annLsh]]/[[annIvf]] when approximate recall is acceptable);
@@ -319,17 +415,9 @@ object Similarity {
       idCol: String,
       embCol: String,
       threshold: Double,
-      blocks: Int = 8): DataFrame = {
-    require(blocks >= 1, "blocks must be >= 1")
-    val withNorm = packedWithNorm(df, idCol, embCol)
-      .withColumn("_blk", pmod(xxhash64(col(idCol)), lit(blocks)).cast("int"))
-    val branches = for { i <- 0 until blocks; j <- i until blocks } yield
-      scoredPairs(
-        withNorm.filter(col("_blk") === i).drop("_blk"),
-        withNorm.filter(col("_blk") === j).drop("_blk"),
-        idCol, threshold, ordered = i == j)
-    branches.reduce(_ unionByName _)
-  }
+      blocks: Int = 8): DataFrame =
+    blockedPairs(packedWithNorm(df, idCol, embCol), idCol, blocks,
+      cosineScore, col("cosine") >= threshold)
 
   /** Deterministic pseudo-random unit-ish hyperplanes (xorshift64*, fixed
     * seed — no Math.random, reproducible across runs/JVMs). One plane per
@@ -346,12 +434,10 @@ object Similarity {
     Array.fill(tables)(Array.fill(bits)(Array.fill(dims)(next())))
   }
 
-  /** Approximate top-k neighbors via random-hyperplane LSH + exact
-    * re-rank. Each vector gets `tables` bucket ids (one per hash table);
-    * each bucket id packs `bits` sign bits of plane projections. Query and
-    * corpus rows meet through an equi-join on (table, bucket) — the
-    * candidate set — then quantized cosine re-ranks candidates and keeps
-    * top-k per query.
+  /** Approximate top-k neighbors via random-hyperplane LSH:
+    * [[lshCandidates]] → [[exactReRank]] against the broadcast
+    * [[queryBlock]]. Each vector gets `tables` bucket ids (one per hash
+    * table); each bucket id packs `bits` sign bits of plane projections.
     *
     * Recall/cost knobs: more `tables` → higher recall, linearly more
     * candidates; more `bits` → smaller buckets, fewer candidates, lower
@@ -370,7 +456,7 @@ object Similarity {
     val qb = df.filter(queryPred).select(col(idCol).as("qid"))
     val candidates =
       lshCandidates(df, idCol, embCol, queryPred, tables, bits)
-    exactReRank(e, idCol, qb, candidates, k)
+    exactReRank(e, idCol, queryBlock(e, idCol, qb), candidates, k)
   }
 
   /** The quantized hyperplane constants as (tbl, bit, pos, w) rows
@@ -389,9 +475,8 @@ object Similarity {
   /** [[annLsh]]'s candidate stage alone: the (qid, nid) pairs that share
     * an LSH bucket with a query in some table, for feeding an alternate
     * re-rank kernel ([[quantizedKnnFromCandidates]] is the int8 one).
-    * Same cost shape as annLsh — shuffle-free hashing, query buckets
-    * broadcast, candidates meet through the (tbl, bucket) equi-join,
-    * never all-pairs — and the same tables/bits recall knobs.
+    * [[lshHashed]], then the query rows' buckets broadcast into the
+    * (tbl, bucket) equi-join — never all-pairs.
     */
   def lshCandidates(
       df: DataFrame,
@@ -400,11 +485,9 @@ object Similarity {
       queryPred: Column,
       tables: Int = 8,
       bits: Int = 8): DataFrame = {
-    val dims = df.select(size(col(embCol))).head().getInt(0)
-    val e = packedWithNorm(df, idCol, embCol)
-    val hashed = lshBuckets(e, idCol, tables, bits, dims)
+    val Seq((_, hashed)) = lshHashed(idCol, embCol, tables, bits)(df)
     val qb = df.filter(queryPred).select(col(idCol).as("qid"))
-    val qHashed = hashed.join(qb, hashed(idCol) === qb("qid"), "left_semi")
+    val qHashed = querySide(hashed, idCol, qb)
       .select(col(idCol).as("qid"), col("tbl"), col("bucket"))
     hashed.join(broadcast(qHashed), Seq("tbl", "bucket"))
       .filter(col("qid") =!= col(idCol))
@@ -420,7 +503,7 @@ object Similarity {
     * scaling preserves sign structure, so it's the same LSH family.
     * No shuffle — a pure projection over the packed frame.
     */
-  private[pipeline] def lshBuckets(
+  private def lshBuckets(
       e: DataFrame, idCol: String,
       tables: Int, bits: Int, dims: Int): DataFrame = {
     val ps = planes(tables, bits, dims)
@@ -437,40 +520,23 @@ object Similarity {
   }
 
   /** Exact cosine re-rank of (qid, nid) candidate pairs over the packed
-    * frame: query side broadcast, one in-row codegen'd dot per pair,
-    * top-k per query (ties → lower id).
+    * frame `e`: the neighbor side joins on nid, then `queries`
+    * ([[asQueries]], broadcast or not — the caller's plan) on qid; one
+    * in-row dot per pair; [[topK]].
     */
   private def exactReRank(
-      e: DataFrame, idCol: String, qb: DataFrame,
+      e: DataFrame, idCol: String, queries: DataFrame,
       candidates: DataFrame, k: Int): DataFrame = {
-    val qe = e.join(qb, e(idCol) === qb("qid"), "left_semi")
-      .select(col(idCol).as("qid"), col("q").as("qq"), col("nrm").as("q_nrm"))
-    val cosine = packedDot(col("qq"), col("nq")).cast("double") /
-      sqrt(col("q_nrm").cast("double") * col("n_nrm").cast("double"))
     val scored = candidates
-      .join(e.select(col(idCol).as("nid"), col("q").as("nq"), col("nrm").as("n_nrm")), Seq("nid"))
-      .join(broadcast(qe), Seq("qid"))
-      .select(col("qid"), col("nid"), cosine.as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("nid").asc)
-    scored.select(col("qid"), col("nid"), row_number().over(w).as("rank"), col("cosine"))
-      .filter(col("rank") <= k)
+      .join(e.select(col(idCol).as("nid"), col("q").as("nq"),
+        col("nrm").as("n_nrm")), Seq("nid"))
+      .join(queries, Seq("qid"))
+      .select(col("qid"), col("nid"),
+        cosine(packedDot(col("qq"), col("nq")), col("q_nrm"), col("n_nrm"))
+          .as("cosine"))
+    topK(scored, "cosine", k)
   }
 
-  /** IVF (inverted-file) approximate nearest neighbors — the second
-    * standard scale path next to [[annLsh]]: a k-means coarse quantizer
-    * partitions the corpus into `nlist` inverted lists; a query probes its
-    * `nprobe` nearest centroids and exact-re-ranks only those lists.
-    * Cost: O(rows × nlist) assignment (codegen'd integer dots against
-    * centroid literals, no shuffle) + O(queries × nprobe × rows/nlist)
-    * re-rank through the (cluster) equi-join — never all-pairs.
-    *
-    * Training is `iters` Lloyd iterations, fully deterministic: centroids
-    * initialize from an id-ordered stride sample (no RNG), assignments
-    * break ties toward the lower centroid index, and means floor-quantize.
-    * Each iteration collects nlist × dims longs to the driver — they ARE
-    * the next round's broadcast literals.
-    */
   /** Per-group centroid of an embedding column, dimension-wise: one
     * output row per (group, dim_idx) with the group's mean value at that
     * dimension and the group's vector count. posexplode multiplies rows
@@ -510,8 +576,7 @@ object Similarity {
     val ex = df.select(col(idCol),
         posexplode(col(embCol)).as(Seq("dim_idx", "_g_e")))
       .select(col(idCol), col("dim_idx").cast("bigint").as("dim_idx"),
-        floor(col("_g_e").cast("double") * lit(1000.0)).cast("long")
-          .as("_g_q"))
+        quantize(col("_g_e")).as("_g_q"))
     val stats = ex.groupBy(col("dim_idx")).agg(
       count(lit(1)).as("_g_n"),
       sum(col("_g_q")).as("_g_sm"),
@@ -546,32 +611,63 @@ object Similarity {
         lit(j).as("cluster"))
     }
 
+  /** The index of the centroid nearest the packed vector `qCol` (argmin
+    * of [[centroidScoreStructs]], lower index on ties).
+    */
+  private def nearestCentroid(cents: Array[Array[Long]], qCol: Column): Column =
+    array_min(array(centroidScoreStructs(cents, qCol): _*)).getField("cluster")
+
+  /** The packed vectors of the `n` lowest id-hashes of `e` — the
+    * reproducible spread sample that seeds Lloyd and the PQ codebooks,
+    * planned as TakeOrderedAndProject (top-k, no global sort
+    * materialization); `portable` switches the hash to the md5 ring so
+    * the oracle can replay it (q218/q224).
+    */
+  private def initSample(
+      e: DataFrame, idCol: String, n: Int, portable: Boolean): Array[Array[Long]] = {
+    val initHash =
+      if (portable) Sampling.portableHash(col(idCol))
+      else xxhash64(col(idCol))
+    e.orderBy(initHash.asc, col(idCol).asc).limit(n)
+      .select(col("q")).collect()
+      .map(_.getSeq[Long](0).toArray)
+  }
+
+  /** IVF candidates: each query (ids in `qb`) probes its `nprobe`
+    * nearest of `cents` (sorted score array), and meets the members of
+    * those inverted `lists` (id, cluster) through the broadcast cluster
+    * equi-join — never all-pairs.
+    */
+  private def ivfCandidates(
+      e: DataFrame, idCol: String, qb: DataFrame, lists: DataFrame,
+      cents: Array[Array[Long]], nprobe: Int): DataFrame = {
+    val probes = querySide(e, idCol, qb)
+      .select(col(idCol).as("qid"),
+        slice(sort_array(array(centroidScoreStructs(cents, col("q")): _*)),
+          1, nprobe).as("ps"))
+      .select(col("qid"), explode(col("ps")).as("p"))
+      .select(col("qid"), col("p.cluster").as("cluster"))
+    lists.join(broadcast(probes), Seq("cluster"))
+      .filter(col("qid") =!= col(idCol))
+      .select(col("qid"), col(idCol).as("nid"))
+      .distinct()
+  }
+
   /** Deterministic Lloyd training over the packed frame `e` — the
     * shared coarse-quantizer trainer of [[annIvf]] and [[annIvfPq]].
-    * Init is the `nlist` lowest id-hashes (a reproducible spread
-    * sample, planned as TakeOrderedAndProject — top-k, no global sort
-    * materialization); `portable` switches the hash to the md5 ring so
-    * the whole training replay is oracle-checkable (q218/q224). Each
-    * iteration assigns (argmin with index tie-break) and re-centers
-    * with floor(avg); the nlist × dims means are the bounded per-round
-    * driver collect that becomes the next round's broadcast literals.
+    * Init is [[initSample]] (`portable` makes the whole training replay
+    * oracle-checkable, q218/q224). Each iteration assigns
+    * ([[nearestCentroid]]) and re-centers with floor(avg); the
+    * nlist × dims means are the bounded per-round driver collect that
+    * becomes the next round's broadcast literals.
     */
   private def lloydTrain(
       e: DataFrame, idCol: String, nlist: Int, iters: Int,
       portable: Boolean, opName: String): Array[Array[Long]] = {
-    def assignedCluster(cents: Array[Array[Long]]): Column =
-      array_min(array(centroidScoreStructs(cents, col("q")): _*))
-        .getField("cluster")
-    val initHash =
-      if (portable) Sampling.portableHash(col(idCol))
-      else xxhash64(col(idCol))
-    var centroids = e
-      .orderBy(initHash.asc, col(idCol).asc).limit(nlist)
-      .select(col("q")).collect()
-      .map(_.getSeq[Long](0).toArray)
+    var centroids = initSample(e, idCol, nlist, portable)
     for (_ <- 0 until iters) {
       val means = e
-        .select(assignedCluster(centroids).as("cluster"),
+        .select(nearestCentroid(centroids, col("q")).as("cluster"),
           posexplode(col("q")).as(Seq("pos", "v")))
         .groupBy(col("cluster"), col("pos"))
         .agg(floor(avg(col("v"))).cast("long").as("m"))
@@ -596,6 +692,15 @@ object Similarity {
     centroids
   }
 
+  /** IVF (inverted-file) approximate nearest neighbors — the second
+    * standard scale path next to [[annLsh]]: a k-means coarse quantizer
+    * ([[lloydTrain]]) partitions the corpus into `nlist` inverted lists;
+    * each query probes its `nprobe` nearest centroids
+    * ([[ivfCandidates]]) and [[exactReRank]]s only those lists. Cost:
+    * O(rows × nlist) assignment (codegen'd integer dots against
+    * centroid literals, no shuffle) + O(queries × nprobe × rows/nlist)
+    * re-rank — never all-pairs.
+    */
   def annIvf(
       df: DataFrame,
       idCol: String,
@@ -607,28 +712,14 @@ object Similarity {
       iters: Int = 3,
       portable: Boolean = false): DataFrame = {
     val e = packedWithNorm(df, idCol, embCol)
-    def scoreStructs(cents: Array[Array[Long]]): Seq[Column] =
-      centroidScoreStructs(cents, col("q"))
-    def assigned(cents: Array[Array[Long]]): DataFrame =
-      e.select(col(idCol), col("q"), col("nrm"),
-        array_min(array(scoreStructs(cents): _*)).getField("cluster").as("cluster"))
-
     val centroids =
       lloydTrain(e, idCol, nlist, iters, portable, opName = "annIvf")
-
-    val lists = assigned(centroids).select(col(idCol), col("cluster"))
+    val lists = e.select(col(idCol), col("q"), col("nrm"),
+        nearestCentroid(centroids, col("q")).as("cluster"))
+      .select(col(idCol), col("cluster"))
     val qb = df.filter(queryPred).select(col(idCol).as("qid"))
-    // probe lists: nprobe best clusters per query via sorted score array
-    val probes = e.join(qb, e(idCol) === qb("qid"), "left_semi")
-      .select(col(idCol).as("qid"),
-        slice(sort_array(array(scoreStructs(centroids): _*)), 1, nprobe).as("ps"))
-      .select(col("qid"), explode(col("ps")).as("p"))
-      .select(col("qid"), col("p.cluster").as("cluster"))
-    val candidates = lists.join(broadcast(probes), Seq("cluster"))
-      .filter(col("qid") =!= col(idCol))
-      .select(col("qid"), col(idCol).as("nid"))
-      .distinct()
-    exactReRank(e, idCol, qb, candidates, k)
+    exactReRank(e, idCol, queryBlock(e, idCol, qb),
+      ivfCandidates(e, idCol, qb, lists, centroids, nprobe), k)
   }
 
   /** IVF-PQ — the billion-vector ANN store layout: [[annIvf]]'s coarse
@@ -649,7 +740,7 @@ object Similarity {
     * `m` codebooks train in ONE job per iteration (the subspace axis
     * rides an in-row explode, means aggregate per (m, cluster, pos);
     * the driver collect is bounded by m × ksub × d/m = d × ksub longs).
-    * Init mirrors the coarse trainer: the ksub lowest id-hashes, each
+    * Init mirrors the coarse trainer: [[initSample]] of ksub rows, each
     * sliced into its m subvectors. Codes are raw-vector encodings
     * (FAISS's non-residual IndexIVFPQ mode; residual encoding is a
     * quality refinement on the same plumbing — documented divergence).
@@ -691,25 +782,16 @@ object Similarity {
     // ---- coarse quantizer: shared deterministic Lloyd ----
     val coarse =
       lloydTrain(e, idCol, nlist, coarseIters, portable, opName = "annIvfPq")
-    def coarseCluster: Column =
-      array_min(array(centroidScoreStructs(coarse, col("q")): _*))
-        .getField("cluster")
-    val lists = e.select(col(idCol), coarseCluster.as("cluster"))
+    val lists = e.select(col(idCol), nearestCentroid(coarse, col("q")).as("cluster"))
 
     // ---- PQ codebooks: per-subspace Lloyd, all subspaces per job ----
-    val initHash =
-      if (portable) Sampling.portableHash(col(idCol))
-      else xxhash64(col(idCol))
-    val initRows = e.orderBy(initHash.asc, col(idCol).asc).limit(ksub)
-      .select(col("q")).collect().map(_.getSeq[Long](0).toArray)
+    val initRows = initSample(e, idCol, ksub, portable)
     require(initRows.length == ksub,
       s"annIvfPq: corpus smaller than ksub=$ksub")
     var books: Array[Array[Array[Long]]] = // (m)(ksub)(sub)
       Array.tabulate(m)(mi =>
         initRows.map(_.slice(mi * sub, mi * sub + sub)))
-    def codeCol(mi: Int): Column =
-      array_min(array(centroidScoreStructs(books(mi), subCol(mi)): _*))
-        .getField("cluster")
+    def codeCol(mi: Int): Column = nearestCentroid(books(mi), subCol(mi))
     for (_ <- 0 until pqIters) {
       val means = e
         .select(explode(array((0 until m).map(mi => struct(
@@ -741,18 +823,8 @@ object Similarity {
 
     // ---- probes + ADC scoring ----
     val qb = df.filter(queryPred).select(col(idCol).as("qid"))
-    val probes = e.join(qb, e(idCol) === qb("qid"), "left_semi")
-      .select(col(idCol).as("qid"),
-        slice(sort_array(array(centroidScoreStructs(coarse, col("q")): _*)),
-          1, nprobe).as("ps"))
-      .select(col("qid"), explode(col("ps")).as("p"))
-      .select(col("qid"), col("p.cluster").as("cluster"))
-    val candidates = lists.join(broadcast(probes), Seq("cluster"))
-      .filter(col("qid") =!= col(idCol))
-      .select(col("qid"), col(idCol).as("nid"))
-      .distinct()
-    val qe = e.join(qb, e(idCol) === qb("qid"), "left_semi")
-      .select(col(idCol).as("qid"), col("q").as("qq"))
+    val candidates = ivfCandidates(e, idCol, qb, lists, coarse, nprobe)
+    val qe = querySide(e, idCol, qb).select(col(idCol).as("qid"), col("q").as("qq"))
     // ADC: per subspace, look the candidate's codeword up in the 2-D
     // codebook literal and dot it with the query's subvector — integer
     // exact, so the portable replay is bit-for-bit
@@ -766,12 +838,7 @@ object Similarity {
       .join(codes.withColumnRenamed(idCol, "nid"), Seq("nid"))
       .join(broadcast(qe), Seq("qid"))
       .select(col("qid"), col("nid"), adc.as("adc_score"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_score").desc, col("nid").asc)
-    scored
-      .select(col("qid"), col("nid"), row_number().over(w).as("rank"),
-        col("adc_score"))
-      .filter(col("rank") <= k)
+    topK(scored, "adc_score", k)
   }
 
   /** SemDeDup-style semantic deduplication: drop every embedding whose
@@ -801,13 +868,10 @@ object Similarity {
       embeddingDupPairsBlocked(df, idCol, embCol, threshold, blocks))
 
   /** LSH-candidate near-duplicate pairs verified at `threshold` — the
-    * linear-cost pair stage for [[semanticDedupAnn]]. Every vector
-    * hashes into `tables` sign-pattern buckets ([[lshBuckets]] — no
-    * shuffle); candidate pairs meet through the (tbl, bucket) self
-    * equi-join on id<id, deduplicate on the pair key, and each
-    * surviving candidate pays exactly one in-row codegen'd dot for the
-    * exact-cosine verify. NEVER all-pairs: the only shuffles are the
-    * bucket join and the pair-key distinct, both O(candidates).
+    * linear-cost pair stage for [[semanticDedupAnn]]: [[dupCandidates]]
+    * (id<id bucket pairs), then [[pairDots]] for the exact-cosine
+    * verify. NEVER all-pairs: the only shuffles are the bucket join and
+    * the pair-key distinct, both O(candidates).
     *
     * Output (`vec_a` < `vec_b`, `cosine`) matches
     * [[embeddingDupPairs]]' contract — verified pairs are a SUBSET of
@@ -826,24 +890,9 @@ object Similarity {
       threshold: Double,
       tables: Int = 24,
       bits: Int = 3): DataFrame = {
-    val dims = df.select(size(col(embCol))).head().getInt(0)
-    val e = packedWithNorm(df, idCol, embCol)
-    val hashed = lshBuckets(e, idCol, tables, bits, dims)
-    val cand = hashed.select(col("tbl"), col("bucket"), col(idCol).as("vec_a"))
-      .join(hashed.select(col("tbl"), col("bucket"), col(idCol).as("vec_b")),
-        Seq("tbl", "bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"))
-      .distinct()
-    val cosine = col("dot").cast("double") /
-      sqrt(col("na").cast("double") * col("nb").cast("double"))
-    cand
-      .join(e.select(col(idCol).as("vec_a"), col("q").as("qa"), col("nrm").as("na")), Seq("vec_a"))
-      .join(e.select(col(idCol).as("vec_b"), col("q").as("qb"), col("nrm").as("nb")), Seq("vec_b"))
-      .select(col("vec_a"), col("vec_b"), col("na"), col("nb"),
-        packedDot(col("qa"), col("qb")).as("dot"))
-      .select(col("vec_a"), col("vec_b"), cosine.as("cosine"))
-      .filter(col("cosine") >= threshold)
+    val (e, cand) = dupCandidates(df, idCol, embCol, tables, bits)
+    cosineAtLeast(pairDots(cand, e, e, idCol, "vec_a", "vec_b"),
+      "vec_a", "vec_b", threshold)
   }
 
   /** CROSS-SET LSH near-duplicate pairs — the embedding twin of the
@@ -851,8 +900,9 @@ object Similarity {
     * `incrementalExactDedup`): every (incoming, corpus) pair within
     * cosine `threshold`, found through shared LSH buckets and verified
     * at the exact quantized cosine. The nightly-crawl semantic dedup:
-    * both sides are large, so neither broadcasts — candidates meet
-    * through the (tbl, bucket) equi-join, never incoming × corpus.
+    * both sides are large, so neither broadcasts — both hash with the
+    * same planes ([[lshHashed]]), candidates are their [[bucketPairs]]
+    * and [[pairDots]] verifies them, never incoming × corpus.
     * Verified candidates ⊆ exact pairs always; at recall 1.0 (the
     * fixture regime, asserted in sbt) the pair set IS the exact one.
     * The corpus never pairs with itself — only cross-set pairs emit.
@@ -868,27 +918,11 @@ object Similarity {
       threshold: Double,
       tables: Int = 24,
       bits: Int = 3): DataFrame = {
-    val dims = incoming.select(size(col(embCol))).head().getInt(0)
-    val inE = packedWithNorm(incoming, idCol, embCol)
-    val coE = packedWithNorm(corpus, idCol, embCol)
-    val inHashed = lshBuckets(inE, idCol, tables, bits, dims)
-      .select(col("tbl"), col("bucket"), col(idCol).as("in_id"))
-    val coHashed = lshBuckets(coE, idCol, tables, bits, dims)
-      .select(col("tbl"), col("bucket"), col(idCol).as("corpus_id"))
-    val cand = inHashed.join(coHashed, Seq("tbl", "bucket"))
-      .select(col("in_id"), col("corpus_id"))
-      .distinct()
-    val cosine = col("dot").cast("double") /
-      sqrt(col("na").cast("double") * col("nb").cast("double"))
-    cand
-      .join(inE.select(col(idCol).as("in_id"), col("q").as("qa"),
-        col("nrm").as("na")), Seq("in_id"))
-      .join(coE.select(col(idCol).as("corpus_id"), col("q").as("qb"),
-        col("nrm").as("nb")), Seq("corpus_id"))
-      .select(col("in_id"), col("corpus_id"), col("na"), col("nb"),
-        packedDot(col("qa"), col("qb")).as("dot"))
-      .select(col("in_id"), col("corpus_id"), cosine.as("cosine"))
-      .filter(col("cosine") >= threshold)
+    val Seq((inE, inHashed), (coE, coHashed)) =
+      lshHashed(idCol, embCol, tables, bits)(incoming, corpus)
+    val cand = bucketPairs(inHashed, coHashed, idCol, "in_id", "corpus_id")
+    cosineAtLeast(pairDots(cand, inE, coE, idCol, "in_id", "corpus_id"),
+      "in_id", "corpus_id", threshold)
   }
 
   /** Corpus-size-aware LSH configuration: the (tables, bits) pair that
@@ -1086,8 +1120,7 @@ object Similarity {
     val centroids =
       lloydTrain(e, idCol, nlist, iters, portable, opName = "semDeDup")
     val assigned = e.select(col(idCol), col("q"), col("nrm"),
-      array_min(array(centroidScoreStructs(centroids, col("q")): _*))
-        .getField("cluster").cast("long").as("cluster"))
+      nearestCentroid(centroids, col("q")).cast("long").as("cluster"))
     // mega-cluster pre-flight (scaladoc): nlist-row audit, loud fail
     val sz = assigned.groupBy(col("cluster"))
       .agg(count(lit(1)).as("_cn"))
@@ -1101,18 +1134,12 @@ object Similarity {
         "nlist (paper sizing: nlist ~ sqrt(N)) or route this corpus " +
         "through annDupPairs (LSH bounds per-row work regardless of " +
         "embedding-space hubs).")
-    val a = assigned.select(col("cluster"), col(idCol).as("vec_a"),
-      col("q").as("qa"), col("nrm").as("na"))
-    val b = assigned.select(col("cluster"), col(idCol).as("vec_b"),
-      col("q").as("qb"), col("nrm").as("nb"))
-    val cosine = col("dot").cast("double") /
-      sqrt(col("na").cast("double") * col("nb").cast("double"))
-    val pairs = a.join(b, Seq("cluster"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        col("na"), col("nb"), packedDot(col("qa"), col("qb")).as("dot"))
-      .select(col("vec_a"), col("vec_b"), cosine.as("cosine"))
-      .filter(col("cosine") >= threshold)
+    def side(id: String, s: String) =
+      assigned.select(col("cluster") +: sideCols(idCol, id, s): _*)
+    val pairs = cosineAtLeast(withDot(
+        side("vec_a", "a").join(side("vec_b", "b"), Seq("cluster"))
+          .filter(col("vec_a") < col("vec_b")), "vec_a", "vec_b"),
+      "vec_a", "vec_b", threshold)
     semanticDedupFromPairs(df, idCol, pairs)
       .join(assigned.select(col(idCol), col("cluster")), Seq(idCol))
   }
@@ -1158,9 +1185,8 @@ object Similarity {
     * IEEE-deterministic in fixed order, d6 absorbs nothing but keeps
     * the contract uniform) with an id tie-break.
     *
-    * Same broadcast nested-loop shape as [[bruteForceKnn]]: the
-    * quantized query block broadcasts, the corpus scan never
-    * reshuffles. Ranking is by inner product, not cosine — for cosine
+    * Same broadcast nested-loop shape as [[bruteForceKnn]], with the
+    * int8 query block. Ranking is by inner product, not cosine — for cosine
     * semantics L2-normalize upstream before quantizing. This is the
     * re-rank kernel; at corpus scale feed it [[annLsh]] / IVF
     * candidates instead of the full corpus, exactly as with the float
@@ -1174,19 +1200,20 @@ object Similarity {
       k: Int = 10): DataFrame = {
     val e = quantizeInt8(df, idCol, embCol)
     val q = df.filter(queryPred).select(col(idCol).as("_query_id"))
-    val qSide = e.join(q, e(idCol) === q("_query_id"), "left_semi")
-      .select(col(idCol).as("qid"), col("qv").as("qq"),
-        col("scale").as("q_scale"))
-    val score = (packedDot(col("qq"), col("qv")).cast("double") *
-      col("q_scale") * col("scale")).cast("decimal(28,6)").cast("double")
-    val scored = e.join(broadcast(qSide), col("qid") =!= col(idCol))
-      .select(col("qid"), col(idCol).as("nid"), score.as("score"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("nid").asc)
-    scored.select(col("qid"), col("nid"), row_number().over(w).as("rank"),
-        col("score"))
-      .filter(col("rank") <= k)
+    val scored = e.join(int8QueryBlock(e, idCol, q), col("qid") =!= col(idCol))
+      .select(col("qid"), col(idCol).as("nid"), int8Score)
+    topK(scored, "score", k)
   }
+
+  /** The broadcast int8 query block of `e` for the ids in `qb`: (qid, qq, q_scale). */
+  private def int8QueryBlock(e: DataFrame, idCol: String, qb: DataFrame): DataFrame =
+    broadcast(querySide(e, idCol, qb).select(col(idCol).as("qid"),
+      col("qv").as("qq"), col("scale").as("q_scale")))
+
+  /** The dequantized int8 inner product idot·scale_q·scale_n, d6. */
+  private def int8Score: Column =
+    d6(packedDot(col("qq"), col("qv")).cast("double") *
+      col("q_scale") * col("scale")).as("score")
 
   /** [[quantizedKnn]]'s integer re-rank kernel fed by a precomputed
     * (qid, nid) candidate frame — the documented ANN→SQ8-re-rank
@@ -1198,9 +1225,7 @@ object Similarity {
     * asserted per-SF in sbt); under partial recall the tail of a
     * query's list degrades first, the standard ANN trade.
     *
-    * Plan shape: the quantized query block broadcasts into the
-    * candidate join; the corpus side arrives through one hash join on
-    * nid. Nothing is all-pairs and nothing reshuffles the corpus.
+    * Plan shape: [[exactReRank]]'s, with the int8 query block and score.
     */
   def quantizedKnnFromCandidates(
       df: DataFrame,
@@ -1210,21 +1235,12 @@ object Similarity {
       k: Int = 10): DataFrame = {
     val e = quantizeInt8(df, idCol, embCol)
     val qb = candidates.select(col("qid")).distinct()
-    val qSide = e.join(qb, e(idCol) === qb("qid"), "left_semi")
-      .select(col(idCol).as("qid"), col("qv").as("qq"),
-        col("scale").as("q_scale"))
-    val score = (packedDot(col("qq"), col("qv")).cast("double") *
-      col("q_scale") * col("scale")).cast("decimal(28,6)").cast("double")
     val scored = candidates
       .join(e.select(col(idCol).as("nid"), col("qv"), col("scale")),
         Seq("nid"))
-      .join(broadcast(qSide), Seq("qid"))
-      .select(col("qid"), col("nid"), score.as("score"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("score").desc, col("nid").asc)
-    scored.select(col("qid"), col("nid"), row_number().over(w).as("rank"),
-        col("score"))
-      .filter(col("rank") <= k)
+      .join(int8QueryBlock(e, idCol, qb), Seq("qid"))
+      .select(col("qid"), col("nid"), int8Score)
+    topK(scored, "score", k)
   }
 
   /** DOMINANT PRINCIPAL COMPONENT of an embedding set — the direction
@@ -1274,7 +1290,7 @@ object Similarity {
       .select(col(idCol).as("_g_id"),
         posexplode(col(embCol)).as(Seq("_g_p", "_g_v")))
       .select(col("_g_id"), (col("_g_p") + 1).as("_g_j"),
-        floor(col("_g_v").cast("double") * 1000.0).cast("long").as("_g_q"))
+        quantize(col("_g_v")).as("_g_q"))
     val nF = e.agg(countDistinct(col("_g_id")).as("_g_n"))
     val sF = e.groupBy(col("_g_j")).agg(sum(col("_g_q")).as("_g_s"))
     val aF = e.select(col("_g_id"), col("_g_j").as("_g_ja"), col("_g_q").as("_g_qa"))
@@ -1343,9 +1359,7 @@ object Similarity {
       .collect().sortBy(_.getLong(0)).map(_.getLong(1))
     val v2 = v.map(x => x * x).sum
     val vLit = typedLit(v.toSeq)
-    val q = transform(col(embCol),
-      x => floor(x.cast("double") * lit(1000.0)).cast("long"))
-    df.select(col(idCol), q.as("_g_q"))
+    df.select(col(idCol), transform(col(embCol), quantize(_)).as("_g_q"))
       .select(col(idCol), col("_g_q"),
         graft.functions.GraftFunctions.longArrayDot(col("_g_q"), vLit)
           .as("dot_pc"))
@@ -1366,8 +1380,7 @@ object Similarity {
     * true negative, never a filtered-out positive's ghost slot.
     *
     * Output: (qid, q_label, nid, n_label, rank, cosine). Plan shape =
-    * bruteForceKnn's declared exact baseline: query block broadcast,
-    * corpus scan partition-local, per-query rank window; feed it ANN
+    * [[bruteForceKnn]]'s declared exact baseline; feed it ANN
     * candidates (the q174 pattern) when the query side stops fitting
     * in a broadcast.
     */
@@ -1378,27 +1391,17 @@ object Similarity {
       labelCol: String,
       queryPred: Column,
       k: Int = 10): DataFrame = {
-    val e = df.select(
-        col(idCol), col(labelCol),
-        transform(col(embCol),
-          v => floor(v.cast("double") * lit(1000.0)).cast("long")).as("q"))
-      .select(col(idCol), col(labelCol), col("q"),
-        packedDot(col("q"), col("q")).as("nrm"))
+    val e = packedWithNorm(df, idCol, embCol, labelCol)
     val qSide = e.filter(queryPred)
       .select(col(idCol).as("qid"), col(labelCol).as("q_label"),
         col("q").as("qq"), col("nrm").as("q_nrm"))
-    val cosine = packedDot(col("qq"), col("q")).cast("double") /
-      sqrt(col("q_nrm").cast("double") * col("nrm").cast("double"))
     val scored = e.join(broadcast(qSide),
         col("qid") =!= col(idCol) && col("q_label") =!= col(labelCol))
       .select(col("qid"), col("q_label"), col(idCol).as("nid"),
-        col(labelCol).as("n_label"), cosine.as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("q_label"), col("nid"), col("n_label"),
-        col("rank"), col("cosine"))
+        col(labelCol).as("n_label"),
+        cosine(packedDot(col("qq"), col("q")), col("q_nrm"), col("nrm"))
+          .as("cosine"))
+    topK(scored, "cosine", k)
   }
 
   /** [[hardNegatives]] fed by a candidate pair frame (`qid`, `nid`) —
@@ -1415,31 +1418,20 @@ object Similarity {
       labelCol: String,
       candidates: DataFrame,
       k: Int = 10): DataFrame = {
-    val e = df.select(
-        col(idCol), col(labelCol),
-        transform(col(embCol),
-          v => floor(v.cast("double") * lit(1000.0)).cast("long")).as("q"))
-      .select(col(idCol), col(labelCol), col("q"),
-        packedDot(col("q"), col("q")).as("nrm"))
+    val e = packedWithNorm(df, idCol, embCol, labelCol)
     val qb = candidates.select(col("qid")).distinct()
-    val qSide = e.join(qb, e(idCol) === qb("qid"), "left_semi")
+    val qSide = querySide(e, idCol, qb)
       .select(col(idCol).as("qid"), col(labelCol).as("q_label"),
         col("q").as("qq"), col("nrm").as("q_nrm"))
-    val cosine = packedDot(col("qq"), col("q")).cast("double") /
-      sqrt(col("q_nrm").cast("double") * col("nrm").cast("double"))
     val scored = candidates
       .join(e.select(col(idCol).as("nid"), col(labelCol).as("n_label"),
         col("q"), col("nrm")), Seq("nid"))
       .join(broadcast(qSide), Seq("qid"))
       .filter(col("q_label") =!= col("n_label"))
       .select(col("qid"), col("q_label"), col("nid"), col("n_label"),
-        cosine.as("cosine"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cosine").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("q_label"), col("nid"), col("n_label"),
-        col("rank"), col("cosine"))
+        cosine(packedDot(col("qq"), col("q")), col("q_nrm"), col("nrm"))
+          .as("cosine"))
+    topK(scored, "cosine", k)
   }
 
   /** Linear-time MMD² two-sample statistic (Gretton et al. 2012, JMLR
@@ -1507,8 +1499,7 @@ object Similarity {
     val cents = lloydTrain(e, idCol, nlist, iters, portable = true,
       opName = "clusterJsDivergence")
     val assigned = e.select(col(idCol),
-        array_min(array(centroidScoreStructs(cents, col("q")): _*))
-          .getField("cluster").as("cluster"))
+        nearestCentroid(cents, col("q")).as("cluster"))
       .join(u.select(col(idCol), col("_cur")), Seq(idCol))
     graft.pipeline.Stats.jsDrift(assigned, "_cur", col("cluster"))
   }
@@ -1584,8 +1575,7 @@ object Similarity {
       embCol: String): DataFrame = {
     val q = df.select(col(idCol).as("_id"),
       col(labelCol).cast("long").as("_l"),
-      transform(col(embCol),
-        v => floor(v.cast("double") * lit(1000.0)).cast("long")).as("_q"))
+      transform(col(embCol), quantize(_)).as("_q"))
     val sums = q.select(col("_l"), posexplode(col("_q"))
         .as(Seq("_d", "_x")))
       .groupBy(col("_l"), col("_d"))
@@ -1665,8 +1655,7 @@ object Similarity {
     val W = org.apache.spark.sql.expressions.Window
     val q = df.select(col(idCol).as("_id"),
       col(labelCol).cast("long").as("_l"),
-      transform(col(embCol),
-        v => floor(v.cast("double") * lit(1000.0)).cast("long")).as("_q"))
+      transform(col(embCol), quantize(_)).as("_q"))
     val sums = q.select(col("_l"), posexplode(col("_q"))
         .as(Seq("_d", "_x")))
       .groupBy(col("_l"), col("_d"))

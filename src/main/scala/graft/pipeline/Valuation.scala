@@ -53,9 +53,7 @@ object Valuation {
     def quant(df: DataFrame, prefix: String): DataFrame =
       df.select(col(idCol).as(s"${prefix}_id"),
         col(labelCol).cast("long").as(s"${prefix}_y"),
-        transform(col(embCol),
-          v => floor(v.cast("double") * lit(1000.0)).cast("long"))
-          .as(s"${prefix}_q"))
+        transform(col(embCol), Similarity.quantize(_)).as(s"${prefix}_q"))
     val tr = quant(train, "t")
     val teRaw = quant(test, "e")
     val teCount = teRaw.agg(count(lit(1)).as("_nTest"))

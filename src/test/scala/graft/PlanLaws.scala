@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference,
   Cast, ExprId, Expression, RaiseError}
-import org.apache.spark.sql.execution.{CollectLimitExec, GenerateExec,
-  GlobalLimitExec, LocalTableScanExec, RangeExec, SortExec, SparkPlan,
-  TakeOrderedAndProjectExec}
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.{CollectLimitExec, FileSourceScanExec,
+  GenerateExec, GlobalLimitExec, LocalTableScanExec, RDDScanExec, RangeExec,
+  SortExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
   ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.execution.joins.{CartesianProductExec, HashJoin}
 import org.apache.spark.sql.execution.window.WindowExec
 import scala.util.Try
 
@@ -181,4 +182,27 @@ object PlanLaws {
     plans.flatMap(_.collect {
       case w: WindowExec if w.partitionSpec.isEmpty => w
     }).filterNot(w => bounded(w.child) || guarded(w.child))
+
+  /** The heavy-entry build-side law's walk: every hash join (broadcast
+    * or shuffled) in `plans` whose build side is not [[bounded]], with
+    * that build side. A materialized intermediate (localCheckpoint →
+    * LogicalRDD, or a temp-dir parquet round-trip — q224's per-round
+    * Lloyd centroid/codebook frames, k rows by construction) also
+    * counts as bounded: shape analysis cannot cross a materialization
+    * boundary, so boundedness there is the materializing operator's
+    * documented contract. Only scans of the fixture at `fixture` count
+    * as raw corpus rows.
+    */
+  def unboundedBuildSides(plans: Seq[SparkPlan], fixture: String)
+      : Seq[(HashJoin, SparkPlan)] = {
+    val materialized: SparkPlan => Boolean = {
+      case _: RDDScanExec => true
+      case f: FileSourceScanExec =>
+        !f.relation.location.rootPaths.exists(_.toString.contains(fixture))
+      case _ => false
+    }
+    plans.flatMap(_.collect {
+      case j: HashJoin => (j, if (j.buildSide == BuildLeft) j.left else j.right)
+    }).filterNot { case (_, build) => bounded(build, materialized) }
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.PlanCorpus.staticPlans
-import graft.PlanLaws.{bounded, corpusScalingKey, rawGlobalWindows}
+import graft.PlanLaws.{corpusScalingKey, rawGlobalWindows}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan,
   TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -484,23 +484,9 @@ class PlanShapeSpec extends SparkSpec {
       "at scale regardless of AQE), and ShuffledHashJoin build sides " +
       "that do scale with the corpus are enumerated with the reason " +
       "they are safe (VERDICT r18 #6 / SCALING.md SHJ caveat)") {
-    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
-    import org.apache.spark.sql.execution.joins.HashJoin
     // bounded = every leafward path collapses (non-corpus-keyed
     // aggregate / limit / literal) before a data leaf — the class-6
-    // walk, reused for build sides, where a materialized intermediate
-    // (localCheckpoint → LogicalRDD, or a temp-dir parquet round-trip —
-    // q224's per-round Lloyd centroid/codebook frames, k rows by
-    // construction) also counts as bounded: shape analysis cannot cross
-    // a materialization boundary; boundedness there is the
-    // materializing operator's documented contract. Only scans of the
-    // FIXTURE corpus count as raw corpus rows.
-    val materialized: SparkPlan => Boolean = {
-      case _: org.apache.spark.sql.execution.RDDScanExec => true
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        !f.relation.location.rootPaths.exists(_.toString.contains(dir))
-      case _ => false
-    }
+    // walk, reused for build sides (PlanLaws.unboundedBuildSides)
     // the cost tail (≥ ~4 s in the r18 bench) — where a build-side
     // OOM would actually hurt
     val heavy = Seq("q352_dbscan_ann", "q482_dbscan_ann_auto",
@@ -532,11 +518,10 @@ class PlanShapeSpec extends SparkSpec {
     // every hash join (broadcast or shuffled) whose build side is not
     // bounded
     val unbounded = heavy.flatMap { n =>
-      PlanLaws.entry(spark, dir, n).plansNoAutoBroadcast.flatMap(_.collect {
-        case j: HashJoin =>
-          (n, j, if (j.buildSide == BuildLeft) j.left else j.right)
-      })
-    }.filterNot { case (_, _, build) => bounded(build, materialized) }
+      PlanLaws.unboundedBuildSides(
+        PlanLaws.entry(spark, dir, n).plansNoAutoBroadcast, dir)
+        .map { case (j, build) => (n, j, build) }
+    }
     val broadcastViolations = unbounded.collect {
       case (n, _: BroadcastHashJoinExec, build)
           if !broadcastSanction.contains(n) =>
@@ -548,24 +533,38 @@ class PlanShapeSpec extends SparkSpec {
     assert(broadcastViolations.isEmpty,
       s"\ncorpus-scaling BROADCAST build sides:\n  " +
         broadcastViolations.mkString("\n  "))
-    // SHJ build sides that scale with the corpus are SAFE here only
-    // because every session (bench, verify, CLI) runs AQE, which
-    // re-plans each join from REAL shuffle sizes — at 100 TB the size
-    // gate (estimate < threshold × partitions) fails for these frames
-    // and the join reverts to sort-merge; the static sf0.001 plan
-    // shows SHJ because tiny estimates pass the same gate. The
-    // enumeration below is the watch list: a NEW name appearing means
-    // a restructure moved a corpus frame onto a build side — re-check
-    // the entry against SCALING.md's SHJ caveat before sanctioning it.
-    // the r19 sweep needed ZERO sanctions: with auto-broadcast off and
-    // the SHJ preference on, every shuffled-hash build side in the
-    // heavy entries is bounded or a materialized intermediate — the
-    // muchSmaller gate picks the collapsed side everywhere
+    // SHJ build sides that scale with the corpus are SAFE only because
+    // every session (bench, verify, CLI) runs AQE, which re-plans each
+    // join from REAL shuffle sizes — at 100 TB the size gate
+    // (estimate < autoBroadcastJoinThreshold × shuffle partitions)
+    // fails for these frames and the join reverts to sort-merge. These
+    // plans are taken with the threshold at -1, where that gate never
+    // passes: no UNHINTED ShuffledHashJoin can appear here (the heavy
+    // entries plan 20 BroadcastHashJoins and 0 ShuffledHashJoins), so
+    // this arm watches `shuffle_hash`-hinted joins — its firing test
+    // below shows the walk reports one. The enumeration is the watch
+    // list: a NEW name appearing means a restructure hinted a corpus
+    // frame onto a build side — re-check the entry against SCALING.md's
+    // SHJ caveat before sanctioning it.
     val sanctioned = Set.empty[String]
     val unsanctioned = shjScaling.distinct.filterNot(sanctioned)
     assert(unsanctioned.isEmpty,
       s"\nNEW corpus-scaling ShuffledHashJoin build sides (sanction " +
         s"after review, or restructure):\n  ${unsanctioned.mkString("\n  ")}")
+  }
+
+  test("the build-side law's SHJ arm reports a shuffle_hash-hinted " +
+      "join whose build side is a raw fixture scan") {
+    import org.apache.spark.sql.functions.col
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val df = docs.select(col("doc_id"), col("text"))
+      .join(docs.select(col("doc_id")).hint("shuffle_hash"), "doc_id")
+    val hits = PlanLaws.unboundedBuildSides(
+      staticPlans(df, PlanCorpus.noAutoBroadcast), dir)
+    assert(hits.exists { case (j, build) =>
+        j.isInstanceOf[ShuffledHashJoinExec] &&
+          build.exists(_.isInstanceOf[FileSourceScanExec])
+      }, s"the walk missed the hinted shuffled-hash build side: $hits")
   }
 
   // ---- round-19: provenance hardening of the class-6 law ----

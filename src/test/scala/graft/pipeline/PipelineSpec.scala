@@ -939,6 +939,32 @@ class PipelineSpec extends SparkSpec {
     assert(ann.forall { case (q, n) => q != n })
   }
 
+  test("the LSH and top-k stages reject a bad tables/bits/k by name " +
+    "and value") {
+    // bits = 0 used to die in an empty reduceLeft, bits = 32 wrapped
+    // 1 << 32 onto bit 0 (colliding buckets), and k <= 0 or
+    // tables = 0 returned an empty frame
+    def rejects(param: String, value: Int)(build: => DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException](build)
+      assert(e.getMessage.contains(s"$param must") &&
+        e.getMessage.contains(s"got $value"), e.getMessage)
+    }
+    val (id, emb, q) = ("vec_id", "embedding", col("vec_id") < 5)
+    rejects("bits", 0)(Similarity.annLsh(embs, id, emb, q, bits = 0))
+    rejects("bits", 32)(Similarity.lshCandidates(embs, id, emb, q, bits = 32))
+    rejects("tables", 0)(Similarity.annDupPairs(embs, id, emb, 0.5, tables = 0))
+    rejects("bits", 0)(
+      Similarity.annDupPairsAcross(embs, embs, id, emb, 0.5, bits = 0))
+    rejects("bits", 40)(Similarity.semanticDedupAnn(embs, id, emb, 0.5, bits = 40))
+    rejects("tables", -1)(
+      Clustering.euclideanPairsAnn(embs, id, emb, 1000000L, tables = -1))
+    rejects("k", 0)(Similarity.bruteForceKnn(embs, id, emb, q, k = 0))
+    rejects("k", 0)(Similarity.knnGraphAnn(embs, id, emb, k = 0))
+    rejects("k", -1)(Similarity.quantizedKnn(embs, id, emb, q, k = -1))
+    rejects("k", 0)(Similarity.hardNegatives(
+      embs.withColumn("label", col("vec_id") % 2), id, emb, "label", q, k = 0))
+  }
+
   test("annIvf recall vs brute force on fixture embeddings") {
     def topSet(df: DataFrame): Set[(Long, Long)] =
       df.select("qid", "nid").collect()

@@ -117,19 +117,62 @@ class InventorySpec extends AnyFunSuite {
     // same contract as DuckDB text take a String and stay local.
     val Def = ("""^\s+(private )?(def (dec|d6|d28|dd6|d38)\b|""" +
       """val (dec|d6|d28|dd6|d38) = (\(|"decimal))""").r
-    val files = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
-    assert(files.size > 50, s"scanned only ${files.size} source files")
     val copies = for {
-      f <- files if f.getFileName.toString != "Exact.scala"
+      f <- mainSources if f.getFileName.toString != "Exact.scala"
       (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
       if Def.findFirstIn(line).isDefined && !line.contains(": String)")
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(copies.isEmpty, s"local exact-arithmetic helpers (import " +
       s"graft.pipeline.Exact instead):\n${copies.mkString("\n")}")
+  }
+
+  /** Every Scala source under src/main. */
+  private lazy val mainSources: List[java.nio.file.Path] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val files =
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    assert(files.size > 50, s"scanned only ${files.size} source files")
+    files
+  }
+
+  test("the embedding quantization grid and the per-query rank window " +
+    "are built only in Similarity's shared stages") {
+    // every kNN / ANN / near-dup operator composes Similarity.quantize
+    // and Similarity.topK; a local copy drifts from the contract the
+    // oracles replay. Exempt: the oracle-SQL text (string literals and
+    // stripMargin lines) and scalar value grids, one number per row
+    // (Stats' value/score grids, the time-series `value` grids).
+    val Quantize = """floor\((.*?)\s*\*\s*(lit\()?1000\.0\b""".r
+    val RankWindow = """partitionBy\((col\()?"qid"""".r
+    val Scalar = """col\((valueCol|scoreCol|"value")\).*""".r
+    val DefName = """^\s*(?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
+    def inString(line: String, at: Int): Boolean =
+      line.take(at).count(_ == '"') % 2 == 1
+    val copies = for {
+      f <- mainSources
+      isSimilarity = f.getFileName.toString == "Similarity.scala"
+      lines = java.nio.file.Files.readAllLines(f).asScala.toVector
+      enclosing = lines.scanLeft("") {
+        case (_, DefName(d)) => d
+        case (d, _) => d
+      }.tail
+      ((line, i), owner) <- lines.zipWithIndex.zip(enclosing)
+      code = line.trim
+      if !code.startsWith("|") && !code.startsWith("*") &&
+        !code.startsWith("//") && !code.startsWith("/*")
+      what <- Quantize.findAllMatchIn(line).collect {
+          case m if !inString(line, m.start) && (m.group(1) match {
+            case Scalar(_) => false
+            case _ => !(isSimilarity && owner == "quantize")
+          }) => "quantization"
+        }.toSeq ++ RankWindow.findAllMatchIn(line).collect {
+          case m if !inString(line, m.start) &&
+            !(isSimilarity && owner == "topK") => "rank window"
+        }
+    } yield s"$f:${i + 1}: $what: $code"
+    assert(copies.isEmpty, s"local embedding-pipeline stages (use " +
+      s"Similarity.quantize / Similarity.topK):\n${copies.mkString("\n")}")
   }
 
   test("every class-6 global-order operator in docs/SCALING.md names " +
