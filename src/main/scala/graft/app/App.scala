@@ -225,9 +225,7 @@ final class App(
     try w.runner.setup().flatMap { _ =>
       args.command match {
         case "run" =>
-          w.runner.run().flatMap { _ =>
-            if (args.withTests) w.runner.test() else Right(())
-          }
+          if (args.withTests) w.runner.runWithTests() else w.runner.run()
         case "test" => w.runner.test()
         case "compile" =>
           w.runner.compile().map { steps =>

@@ -4,6 +4,7 @@ import graft.core.{DbError, Result, TestFailed}
 import graft.core.Result.Result
 import graft.pipeline.Stage
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException
 import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
@@ -31,6 +32,12 @@ final class SparkDatabase(
 
   /** Name prefix of every staging table and temp view this layer creates. */
   private val tmpPrefix = "graft_tmp_"
+
+  /** Catalog DDL without SQL text: renames, drops, and the schema (Spark
+    * database) of a qualified name created on demand — the engine analog
+    * of the reference's `CREATE SCHEMA` feature handling.
+    */
+  private lazy val catalogDdl = new GraftSqlBridge.CatalogDdl(spark)
 
   // ---- raw SQL surface (§2a rows 1-3) ----------------------------------
 
@@ -66,7 +73,7 @@ final class SparkDatabase(
       replace: Boolean = false,
       ddl: Ddl = Ddl.empty): Result[Unit] =
     Result.attempt {
-      ensureDatabase(table)
+      catalogDdl.ensureDatabase(table)
       val mode = if (replace) SaveMode.Overwrite else SaveMode.Append
       if (!replace && spark.catalog.tableExists(table)) {
         // append aligns by name (schema reconciliation, copy.py:543-630)
@@ -109,7 +116,7 @@ final class SparkDatabase(
       ddl: Ddl = Ddl.empty,
       replace: Boolean = false): Result[Unit] =
     Result.attempt {
-      ensureDatabase(table)
+      catalogDdl.ensureDatabase(table)
       val mode = if (replace) SaveMode.Overwrite else SaveMode.ErrorIfExists
       writer(applySort(typed(spark.sql(select), ddl), ddl), ddl)
         .mode(mode).saveAsTable(table)
@@ -125,9 +132,13 @@ final class SparkDatabase(
     }.toIndexedSeq: _*)
 
   /** Full-refresh materialisation (sayn/database/__init__.py:747-787).
-    * CTAS into a tmp table then swap, so a mid-write failure never leaves
-    * a missing/partial destination (same guarantee as the reference's
-    * tmp-swap dance) and self-referencing SELECTs are safe.
+    * CTAS into a tmp table, then [[moveTable]] swaps it in: two session-
+    * catalog renames and one drop, no SQL command. A failure in the write
+    * or the swap leaves the old table readable under `table`, never a
+    * missing or partial destination (the reference's tmp-swap guarantee),
+    * and a self-referencing SELECT reads the old table while it writes the
+    * tmp one. Cached plans over `table` are un-cached by name in the swap,
+    * so readers see the new rows.
     */
   def replaceTable(
       table: String,
@@ -146,7 +157,7 @@ final class SparkDatabase(
     */
   def replaceView(view: String, select: String, ddl: Ddl = Ddl.empty): Result[Unit] =
     Result.attempt {
-      ensureDatabase(view)
+      catalogDdl.ensureDatabase(view)
       spark.sql(s"CREATE OR REPLACE VIEW $view AS $select"); ()
     }.flatMap(_ => runHooks(ddl))
 
@@ -161,7 +172,7 @@ final class SparkDatabase(
       ddl: Ddl = Ddl.empty): Result[Unit] =
     for {
       _ <- Result.attempt(spark.table(src)).flatMap(mergeDelta(_, dst, deleteKey, ddl))
-      _ <- Result.attempt { spark.sql(s"DROP TABLE IF EXISTS $src"); () }
+      _ <- Result.attempt(catalogDdl.drop(src))
     } yield ()
 
   /** Upsert the rows of `delta` into the existing table `dst` on
@@ -334,41 +345,50 @@ final class SparkDatabase(
     }
 
   /** Rename/swap (sayn/database/__init__.py:701-743,
-    * templates/move_table.sql). For table destinations, the existing
-    * destination is renamed to a backup before src takes its place, so no
-    * single failure leaves the destination absent (the reference's own swap
-    * dance); the backup is restored if the final rename throws. A view
-    * destination can't back a RENAME target, so it is dropped — but only
-    * after verifying src exists, leaving a missing-src failure with the
-    * view intact. Index recreation is a no-op on Spark. Each name is
-    * looked up once: src for existence, dst for its type.
+    * templates/move_table.sql), on the session catalog directly (see
+    * [[GraftSqlBridge.CatalogDdl]]): no SQL command is parsed or planned.
+    *
+    * Guarantee: no single failure leaves a table destination absent or
+    * partial; a failed swap leaves the old table readable under `dst`. A
+    * table destination is renamed to a backup, src is renamed to `dst`, and
+    * the backup is dropped: two renames and one drop. When the second
+    * rename throws (src missing included), the backup is renamed back
+    * first. A backup left behind by an interrupted swap makes the first
+    * rename fail with `TableAlreadyExistsException`; it is dropped and the
+    * rename retried. A view destination cannot back a rename, so it is
+    * dropped, but only after src is found, leaving a missing-src failure
+    * with the view intact. With no destination, src is renamed outright.
+    * Every name renamed away or dropped is un-cached by name first, so a
+    * cached `dst` (`CACHE TABLE`) returns the new rows after the swap.
+    * One catalog fetch answers dst's type; index recreation is a no-op on
+    * Spark.
     */
   def moveTable(src: String, dst: String): Result[Unit] =
     Result.attempt {
-      if (!tableExists(src))
-        throw new IllegalStateException(s"moveTable: source $src does not exist")
-      val backup = tmpName(dst, "backup_")
-      spark.sql(s"DROP TABLE IF EXISTS $backup")
-      val dstType = objectType(dst)
-      dstType match {
+      objectType(dst) match {
         case Some("view") =>
-          // view swap: views can't back a RENAME target; dropping is
-          // metadata-only and effectively atomic. src existence was
-          // verified above, so the rename below can only fail on
-          // catalog-level faults.
-          spark.sql(s"DROP VIEW IF EXISTS $dst")
+          if (!tableExists(src))
+            throw new IllegalStateException(s"moveTable: source $src does not exist")
+          catalogDdl.drop(dst)
+          catalogDdl.rename(src, dst)
         case Some(_) =>
-          spark.sql(s"ALTER TABLE $dst RENAME TO $backup")
+          val backup = tmpName(dst, "backup_")
+          try catalogDdl.rename(dst, backup)
+          catch {
+            case _: TableAlreadyExistsException =>
+              catalogDdl.drop(backup)
+              catalogDdl.rename(dst, backup)
+          }
+          try catalogDdl.rename(src, dst)
+          catch {
+            case e: Throwable =>
+              catalogDdl.rename(backup, dst)
+              throw e
+          }
+          catalogDdl.drop(backup)
         case None =>
+          catalogDdl.rename(src, dst)
       }
-      try spark.sql(s"ALTER TABLE $src RENAME TO $dst")
-      catch {
-        case e: Throwable =>
-          if (dstType.exists(_ != "view"))
-            spark.sql(s"ALTER TABLE $backup RENAME TO $dst")
-          throw e
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $backup"); ()
     }
 
   /** OPTIMIZE-style small-file compaction — the maintenance pass a
@@ -405,7 +425,7 @@ final class SparkDatabase(
       else {
         val tmp = tmpName(table)
         Result.attempt {
-          spark.sql(s"DROP TABLE IF EXISTS $tmp")
+          catalogDdl.drop(tmp)
           spark.table(table).coalesce(target.toInt).write.saveAsTable(tmp)
         }.flatMap(_ => moveTable(tmp, table))
           .map(_ => (before, target, rows))
@@ -565,15 +585,6 @@ final class SparkDatabase(
   def tmpName(table: String, extra: String = ""): String = {
     val parts = table.split("\\.")
     (parts.init :+ (tmpPrefix + extra + parts.last)).mkString(".")
-  }
-
-  /** Create the schema (Spark database) component on demand — the engine
-    * analog of the reference's `CREATE SCHEMA` feature handling.
-    */
-  private def ensureDatabase(table: String): Unit = {
-    val parts = table.split("\\.")
-    if (parts.length == 2)
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${parts(0)}")
   }
 
   private def applySort(df: DataFrame, ddl: Ddl): DataFrame =

@@ -1102,7 +1102,7 @@ object Stats {
     val spark = df.sparkSession
     import spark.implicits._
     val W = org.apache.spark.sql.expressions.Window
-    val shares = broadcast(designShares.toSeq.toDF("_arm", "_share"))
+    val shares = designShares.toSeq.toDF("_arm", "_share")
     val counts = df.groupBy(col(armCol).cast("string").as("_arm"))
       .agg(count(lit(1)).as("n_obs"))
       .join(shares, Seq("_arm"), "full_outer")
@@ -4084,7 +4084,8 @@ object Stats {
     * the map fail loudly too (unknown weight). Single-row strata
     * contribute NULL variance → NULL SE overall (documented).
     *
-    * Scale shape: ONE keyed aggregate against a broadcast weight map.
+    * Scale shape: ONE keyed aggregate, full-outer-joined to the weight map
+    * (a few rows; Spark cannot broadcast either side of a full outer join).
     */
   def postStratifiedMean(
       df: DataFrame,
@@ -4096,7 +4097,7 @@ object Stats {
       s"shares must sum to 1, got ${populationShares.values.sum}")
     val spark = df.sparkSession
     import spark.implicits._
-    val shares = broadcast(populationShares.toSeq.toDF("_h", "_w"))
+    val shares = populationShares.toSeq.toDF("_h", "_w")
     val x = col(xCol).cast("long")
     val per = df.groupBy(col(stratumCol).cast("string").as("_h"))
       .agg(count(lit(1)).as("_n"), sum(dec(x)).as("_s1"),

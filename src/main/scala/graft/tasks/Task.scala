@@ -150,6 +150,8 @@ trait TaskRunner {
   /** compile-only command: render SQL without executing. */
   def compile(): Result[Seq[(String, String)]] = Right(Nil)
   def test(): Result[Unit] = Right(())
+  /** `run --with-tests`: run, then test once run succeeds. */
+  def runWithTests(): Result[Unit] = run().flatMap(_ => test())
 }
 
 /** No-op DAG node (sayn/tasks/dummy.py). */

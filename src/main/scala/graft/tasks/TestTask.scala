@@ -62,6 +62,10 @@ final class TestTask extends TaskRunner {
 
   override def run(): Result[Unit] = execute()
   override def test(): Result[Unit] = execute()
+  /** The test is the task's run: under `run --with-tests` its query runs
+    * once, not once for run and again for test.
+    */
+  override def runWithTests(): Result[Unit] = execute()
 
   override def compile(): Result[Seq[(String, String)]] =
     customSql match {

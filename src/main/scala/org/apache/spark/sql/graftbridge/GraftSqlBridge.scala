@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.analysis.{NoSuchDatabaseException, NoSuchNamespaceException, NoSuchTableException}
-import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.catalyst.catalog.{CatalogDatabase, CatalogTable}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.connector.catalog.CatalogManager
 
 /** Access bridge for the `private[sql]` Column↔Expression converters —
   * the standard technique for libraries that extend Spark with custom
@@ -63,5 +65,58 @@ object GraftSqlBridge {
             _: NoSuchNamespaceException => None
       }
     }
+  }
+
+  /** Table DDL made straight on the session catalog: the catalog mutations
+    * behind `ALTER TABLE … RENAME`, `DROP TABLE`/`DROP VIEW` and
+    * `CREATE DATABASE IF NOT EXISTS`, without a SQL command to parse,
+    * analyze and plan, and without the lookups those commands add around
+    * the mutation. A name is parsed
+    * as the analyzer does (backticks, an optional database). Before a table
+    * or view is renamed away or dropped, every cached plan over it is
+    * un-cached by name (cascading to cached plans that read it) and the
+    * catalog's cached relation for it is refreshed, so no reader of the
+    * name sees the old data afterwards.
+    */
+  final class CatalogDdl(spark: org.apache.spark.sql.SparkSession) {
+    private val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    private val catalog = session.sessionState.catalog
+
+    private def ident(name: String): TableIdentifier =
+      session.sessionState.sqlParser.parseTableIdentifier(name)
+
+    private def forget(id: TableIdentifier): Unit = {
+      val q = catalog.qualifyIdentifier(id)
+      session.sharedState.cacheManager.uncacheTableOrView(session,
+        Seq(CatalogManager.SESSION_CATALOG_NAME, q.database.get, q.table),
+        cascade = true, blocking = false)
+      catalog.refreshTable(id)
+    }
+
+    /** Rename `from` to `to`: throws `NoSuchTableException` when `from` is
+      * missing and `TableAlreadyExistsException` when `to` exists.
+      */
+    def rename(from: String, to: String): Unit = {
+      val f = ident(from)
+      forget(f)
+      catalog.renameTable(f, ident(to))
+    }
+
+    /** Drop the table or view `name`; a missing name is a no-op. */
+    def drop(name: String): Unit = {
+      val id = ident(name)
+      forget(id)
+      catalog.dropTable(id, ignoreIfNotExists = true, purge = false)
+    }
+
+    /** Create the database `name` is qualified with, when it has one that
+      * does not exist yet.
+      */
+    def ensureDatabase(name: String): Unit =
+      ident(name).database.filterNot(catalog.databaseExists).foreach { db =>
+        catalog.createDatabase(
+          CatalogDatabase(db, "", catalog.getDefaultDBPath(db), Map.empty),
+          ignoreIfExists = true)
+      }
   }
 }

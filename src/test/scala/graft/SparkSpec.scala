@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.catalog.{CreateTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener}
+import org.apache.spark.sql.catalyst.plans.logical.Command
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import scala.jdk.CollectionConverters._
@@ -39,23 +43,89 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
-  /** Names of the tables created while `body` runs, in order, from the
-    * external catalog's create events (the hook the benchmark's tracer
-    * counts `catalog.create` with).
+  /** The external catalog's events (pre-events included) fired while
+    * `body` runs, in order: the hook the benchmark's tracer counts
+    * `catalog.*` with. Delivery is synchronous on the thread doing the DDL.
     */
-  def tablesCreatedBy(body: => Unit): Seq[String] = {
-    val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def catalogEventsBy(body: => Unit): Seq[ExternalCatalogEvent] = {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[ExternalCatalogEvent]()
     val listener = new ExternalCatalogEventListener {
-      override def onEvent(e: ExternalCatalogEvent): Unit = e match {
-        case CreateTableEvent(_, name) => created.add(name)
-        case _ =>
-      }
+      override def onEvent(e: ExternalCatalogEvent): Unit = events.add(e)
     }
     val catalog = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.externalCatalog
     catalog.addListener(listener)
     try body
     finally catalog.removeListener(listener)
-    created.asScala.toSeq
+    events.asScala.toSeq
+  }
+
+  /** Names of the tables created while `body` runs, in order. */
+  def tablesCreatedBy(body: => Unit): Seq[String] =
+    catalogEventsBy(body).collect { case CreateTableEvent(_, name) => name }
+
+  /** Waits (bounded) until `seen` holds, after listener delivery that
+    * runs behind on the listener bus.
+    */
+  private def await(what: String)(seen: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (!seen && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(seen, s"listener never saw $what")
+  }
+
+  /** The SQL commands (queries whose analyzed plan is a `Command`, the
+    * benchmark's `catalyst.commands`) the session ran while `body` runs,
+    * as plan strings. Delivery is asynchronous, so a marker `SET` is run
+    * before and after `body` and waited for; only what lies between the
+    * two markers counts.
+    */
+  def commandsRunBy(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      private def record(qe: QueryExecution): Unit =
+        if (qe.analyzed.isInstanceOf[Command]) seen.add(qe.analyzed.toString)
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = record(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    def at(id: String): Int = seen.asScala.toSeq.indexWhere(_.contains(id))
+    def mark(): String = {
+      val id = java.util.UUID.randomUUID.toString
+      spark.sql(s"SET graft.test.marker=$id")
+      await(s"marker $id")(at(id) >= 0)
+      id
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val before = mark()
+      body
+      val after = mark()
+      seen.asScala.toSeq.slice(at(before) + 1, at(after))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Spark jobs started in job group `group` while `body` runs. Delivery
+    * is asynchronous, so a marker job is run after `body` and waited for.
+    */
+  def jobsInGroup(group: String)(body: => Unit): Int = {
+    val marker = s"graft-test-marker-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.atomic.AtomicBoolean()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case `marker` => markerSeen.set(true)
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, "listener marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      await(s"job group $marker")(markerSeen.get)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -233,6 +233,26 @@ class AppSpec extends SparkSpec {
     assert(mkApp().run(passing).exists(_.succeeded))
   }
 
+  test("run --with-tests runs a test task's query once") {
+    db.replaceTable("t_once_src", "SELECT id FROM RANGE(10)")
+    def jobs(task: String, where: String, withTests: Boolean): (Int, Boolean) = {
+      val specs = Seq(TaskSpec(task, "g", Map(
+        "type" -> "test", "sql" -> s"SELECT * FROM {{ src('t_once_src') }} WHERE $where")))
+      var ok = false
+      val n = jobsInGroup(s"graft:$task") {
+        ok = mkApp().run(specs, RunArguments(withTests = withTests)).exists(_.succeeded)
+      }
+      (n, ok)
+    }
+    val (plain, plainOk) = jobs("t_once", "id < 0", withTests = false)
+    val (tested, testedOk) = jobs("t_once", "id < 0", withTests = true)
+    assert(plainOk && testedOk)
+    assert(plain > 0)
+    assert(tested == plain, s"$tested jobs with tests, $plain without")
+    // a failing test still fails its task under --with-tests
+    assert(!jobs("t_once_fail", "id >= 0", withTests = true)._2)
+  }
+
   test("--debug dumps the FULL violation report to compile/<group>/<task>_violations") {
     // 8 duplicated ids → 8 violation rows, but the failure error samples
     // only 5; the debug dump must carry all of them

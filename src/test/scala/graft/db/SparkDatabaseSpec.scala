@@ -298,6 +298,49 @@ class SparkDatabaseSpec extends SparkSpec {
     assert(rows(spark.table("atomic_dst")) == Set(Seq(1)))
   }
 
+  test("moveTable swaps through the catalog: no SQL command, 2 renames and 1 drop") {
+    assert(db.replaceTable("cat_src", "SELECT 1 AS x").isRight)
+    assert(db.replaceTable("cat_dst", "SELECT 99 AS x").isRight)
+    var events = Seq.empty[org.apache.spark.sql.catalyst.catalog.ExternalCatalogEvent]
+    val commands = commandsRunBy {
+      events = catalogEventsBy(assert(db.moveTable("cat_src", "cat_dst").isRight))
+    }
+    assert(commands.isEmpty, commands)
+    import org.apache.spark.sql.catalyst.catalog.{DropTableEvent, RenameTableEvent}
+    val backup = db.tmpName("cat_dst", "backup_")
+    assert(events.collect { case RenameTableEvent(_, from, to) => (from, to) } ==
+      Seq("cat_dst" -> backup, "cat_src" -> "cat_dst"))
+    assert(events.collect { case DropTableEvent(_, name) => name } == Seq(backup))
+    assert(rows(spark.table("cat_dst")) == Set(Seq(1)))
+    assert(!db.tableExists("cat_src") && !db.tableExists(backup))
+    // with no destination, the swap is one rename and still no command
+    assert(db.replaceTable("cat_src2", "SELECT 2 AS x").isRight)
+    assert(commandsRunBy(assert(db.moveTable("cat_src2", "cat_new").isRight)).isEmpty)
+    assert(rows(spark.table("cat_new")) == Set(Seq(2)))
+  }
+
+  test("a table cached with CACHE TABLE returns the new rows after a swap") {
+    assert(db.replaceTable("cached_t", "SELECT 1 AS x").isRight)
+    spark.sql("CACHE TABLE cached_t")
+    val overCache = spark.table("cached_t").filter("x > 0")
+    overCache.cache()
+    assert(rows(spark.table("cached_t")) == Set(Seq(1)))
+    assert(rows(overCache) == Set(Seq(1)))
+    assert(db.replaceTable("cached_t", "SELECT 2 AS x").isRight)
+    assert(rows(spark.table("cached_t")) == Set(Seq(2)))
+    assert(rows(spark.sql("SELECT x FROM cached_t")) == Set(Seq(2)))
+    assert(!spark.catalog.isCached("cached_t"))
+  }
+
+  test("a backup table left by an interrupted swap does not fail the next swap") {
+    assert(db.replaceTable("left_t", "SELECT 1 AS x").isRight)
+    val backup = db.tmpName("left_t", "backup_")
+    assert(db.createTable(backup, "SELECT 0 AS x").isRight)
+    assert(db.replaceTable("left_t", "SELECT 2 AS x").isRight)
+    assert(rows(spark.table("left_t")) == Set(Seq(2)))
+    assert(!db.tableExists(backup))
+  }
+
   test("bucketed tables (cluster ddl) join without a shuffle exchange") {
     val ddl = Ddl(clusterBy = Seq("id"), buckets = 4)
     assert(db.createTable("bk_left",
