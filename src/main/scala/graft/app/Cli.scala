@@ -58,9 +58,7 @@ object Cli {
         spark.sparkContext.setLogLevel(
           if (parsed.contains("debug")) "INFO" else "WARN")
 
-        val db = new SparkDatabase(spark,
-          acidMerge = sys.env.get("GRAFT_ACID_MERGE")
-            .exists(v => v == "1" || v.equalsIgnoreCase("true")))
+        val db = new SparkDatabase(spark)
         val objects = new DbObjectCompiler(
           loaded.defaultDb, loaded.stringify, loaded.prodStringify, loaded.fromProd)
         val runArgs = RunArguments(

@@ -59,6 +59,21 @@ final case class Ddl(
 object Ddl {
   val empty: Ddl = Ddl()
 
+  /** The DDL of a task config: its `ddl:` map, or a bare `columns:` list
+    * as shorthand for `ddl: {columns: ...}`; neither means no DDL. A
+    * `ddl:` that is not a map fails the config rather than dropping the
+    * task's declared columns and tests. Each type warning goes to `warn`.
+    */
+  def fromConfig(cfg: Map[String, Any], warn: String => Unit): Result[Ddl] =
+    (cfg.get("ddl").orElse(cfg.get("columns").map(c => Map("columns" -> c))) match {
+      case Some(m: Map[_, _]) => fromMap(m.asInstanceOf[Map[String, Any]])
+      case Some(other) => Left(ConfigError(s"ddl must be a map, got: $other"))
+      case None => Right(empty)
+    }).map { d =>
+      d.typeWarnings.foreach(warn)
+      d
+    }
+
   /** Parse the YAML-shaped map (columns may be plain names or maps with
     * name/type/dst_name/tests; tests may be strings or {allowed_values: []}).
     */

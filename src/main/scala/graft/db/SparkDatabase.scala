@@ -18,17 +18,7 @@ import org.apache.spark.sql.graftbridge.GraftSqlBridge
   * join selection, AQE). SQL-text entry points remain (`execute`,
   * `readData`) because user tasks are SQL-first.
   */
-final class SparkDatabase(
-    val spark: SparkSession,
-    /** Route mergeTables through transactional DELETE+INSERT SQL (the
-      * reference's own merge_tables.sql shape) instead of the
-      * partition-overwrite dance. Requires the destination to live in an
-      * ACID v2 catalog (Delta/Iceberg-style) that supports DELETE FROM;
-      * on plain parquet v1 tables Spark rejects the DELETE, so the flag
-      * defaults off. Closes the partitioned-merge commit window — see
-      * docs/ACID_MERGE.md. Enable via GRAFT_ACID_MERGE=1 on the CLI.
-      */
-    val acidMerge: Boolean = false) {
+final class SparkDatabase(val spark: SparkSession) {
 
   /** Name prefix of every staging table and temp view this layer creates. */
   private val tmpPrefix = "graft_tmp_"
@@ -204,9 +194,8 @@ final class SparkDatabase(
     * readers may observe that mix. Weaker than the unpartitioned
     * tmp+swap guarantee; the trade for not rewriting the full table.
     * Fallback (unpartitioned dst): anti-join + unionByName → tmp
-    * (written with the declared layout) → swap. With [[acidMerge]] set,
-    * the delta is merged by DELETE + INSERT statements instead (see
-    * [[mergeDeltaAcid]]).
+    * (written with the declared layout) → swap. docs/ACID_MERGE.md
+    * describes how an ACID table format would close the commit window.
     */
   def mergeDelta(
       delta: DataFrame, dst: String, deleteKey: String,
@@ -219,7 +208,6 @@ final class SparkDatabase(
   private def mergeInto(
       delta: DataFrame, dst: String, partCols: Seq[String], deleteKey: String,
       ddl: Ddl): Result[Unit] = {
-    if (acidMerge) return mergeDeltaAcid(delta, dst, deleteKey)
     val partitionMerge = Result.attempt {
       // isolated session for the partitioned path: same SparkContext,
       // SAME catalog/warehouse (SharedState), but a PRIVATE SQLConf —
@@ -297,28 +285,6 @@ final class SparkDatabase(
     }
     partitionMerge.flatMap(_.map(moveTable(_, dst)).getOrElse(Right(())))
   }
-
-  /** ACID-catalog merge: the reference's merge_tables.sql statements
-    * verbatim — DELETE dst rows whose key appears in the delta, INSERT all
-    * delta rows — each statement a catalog transaction, so readers never
-    * see the partial-partition mix the overwrite path can expose
-    * (docs/ACID_MERGE.md). The SQL addresses the delta through a session
-    * temp view, dropped afterwards. Runs only when [[acidMerge]] is set;
-    * plain parquet v1 tables reject DELETE FROM and surface a clear error.
-    */
-  private def mergeDeltaAcid(
-      delta: DataFrame, dst: String, deleteKey: String): Result[Unit] =
-    Result.attempt {
-      val view = tmpPrefix + "delta_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      delta.createOrReplaceTempView(view)
-      try {
-        val cols = spark.table(dst).columns.mkString(", ")
-        spark.sql(
-          s"DELETE FROM $dst WHERE $deleteKey IN (SELECT $deleteKey FROM $view)")
-        spark.sql(s"INSERT INTO $dst ($cols) SELECT $cols FROM $view")
-      } finally spark.catalog.dropTempView(view)
-      ()
-    }
 
   /** Incremental materialisation (sayn/database/__init__.py:819-846): the
     * SELECT, cast to the declared types, is evaluated once and staged with

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.pipeline.Exact.{dec, d28, d6}
+import graft.pipeline.Stats.{cleared, crossMoments}
 
 /** Time-series regularization: resample irregular events onto a fixed
   * grid per key, materializing empty buckets and carrying values across
@@ -842,7 +843,8 @@ object Timeseries {
     * incremental predictive value — this is).
     *
     * Sufficient statistics are EXACT decimal(38,0) raw sums over the
-    * aligned rows; the centered forms (n·Σab − Σa·Σb) stay decimal,
+    * aligned rows ([[Stats.crossMoments]], shared with [[Stats.ols2]]);
+    * the [[Stats.cleared]] centered forms stay decimal,
     * and the closed-form OLS algebra (Cramer on the 2×2 normal
     * equations) runs in ONE fixed double expression order with d6 at
     * rss_r, rss_u and f_stat — engine-replayable because every input
@@ -870,31 +872,22 @@ object Timeseries {
       .withColumn("_u", lag(col("_y"), 1).over(w))
       .withColumn("_v", lag(col("_x"), 1).over(w))
       .filter(col("_u").isNotNull)
-    val agg = lagged.groupBy(col("_k"))
-      .agg(count(lit(1)).as("_n"),
-        sum(dec(col("_y"))).as("_sy"), sum(dec(col("_u"))).as("_su"),
-        sum(dec(col("_v"))).as("_sv"),
-        sum(dec(col("_y")) * dec(col("_y"))).as("_syy"),
-        sum(dec(col("_y")) * dec(col("_u"))).as("_syu"),
-        sum(dec(col("_y")) * dec(col("_v"))).as("_syv"),
-        sum(dec(col("_u")) * dec(col("_u"))).as("_suu"),
-        sum(dec(col("_u")) * dec(col("_v"))).as("_suv"),
-        sum(dec(col("_v")) * dec(col("_v"))).as("_svv"))
+    val agg = crossMoments(lagged.groupBy(col("_k")), "_n",
+      "y", "u", "v", "yy", "yu", "yv", "uu", "uv", "vv")
     val checked = agg.withColumn("_n",
       when(col("_n") >= 4L, col("_n"))
         .otherwise(raise_error(concat(
           lit("granger: need >= 4 aligned observations, got "),
           col("_n").cast("string"))).cast("long")))
-    val nD = dec(col("_n"))
     // centered sums (×n — F is invariant to the common scaling)
-    def c2(sab: Column, sa: Column, sb: Column): Column =
-      (nD * sab - sa * sb).cast("double")
-    val syy = c2(col("_syy"), col("_sy"), col("_sy"))
-    val suy = c2(col("_syu"), col("_su"), col("_sy"))
-    val svy = c2(col("_syv"), col("_sv"), col("_sy"))
-    val suu = c2(col("_suu"), col("_su"), col("_su"))
-    val suv = c2(col("_suv"), col("_su"), col("_sv"))
-    val svv = c2(col("_svv"), col("_sv"), col("_sv"))
+    def c2(sab: String, sa: String, sb: String): Column =
+      cleared("_n", sab, sa, sb).cast("double")
+    val syy = c2("_syy", "_sy", "_sy")
+    val suy = c2("_syu", "_su", "_sy")
+    val svy = c2("_syv", "_sv", "_sy")
+    val suu = c2("_suu", "_su", "_su")
+    val suv = c2("_suv", "_su", "_sv")
+    val svv = c2("_svv", "_sv", "_sv")
     val det = suu * svv - suv * suv
     val b = (suy * svv - svy * suv) / det
     val cc = (svy * suu - suy * suv) / det

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 import graft.pipeline.Exact.{dec, d28, d6}
 
@@ -14,6 +14,23 @@ import graft.pipeline.Exact.{dec, d28, d6}
   * first-class operators with engine-portable determinism (md5-seeded
   * resampling, exact integer sufficient statistics) so results are
   * reproducible across engines and partitionings.
+  *
+  * Shared stages. Each repeated statistical step is defined once, and
+  * the operators are built from these (InventorySpec fails on a local
+  * copy of the midrank window, the cross-moment aggregate or the
+  * p-value rank):
+  *   - value cells and ranks: [[twoArmValueCells]] (0/1 arm counts per
+  *     distinct value), [[cumBelow]], [[doubledMidrank]] and
+  *     [[valueTotal]] over such a frame, [[groupRankSums]] (k groups)
+  *     and [[completeBlocks]] (per-item ranks of a block design);
+  *   - the Ansari–Bradley statistic: [[inwardScore2]],
+  *     [[inwardScoreSums]] and [[inwardScoreZ]];
+  *   - exact moments: [[crossMoments]] and [[cleared]], and the one-way
+  *     ANOVA table [[anovaSums]];
+  *   - contingency tables: [[observedCells]] and [[contingencyMargins]];
+  *   - multiple testing: [[rankedP]] over [[guardedP]];
+  *   - survival: [[durationRisk]] and the two-group [[riskSets]];
+  *   - global order: [[shardedTotalOrder]].
   */
 object Stats {
 
@@ -344,13 +361,9 @@ object Stats {
     val byVal = df
       .groupBy(col(valueCol).cast("long").as("_v"))
       .agg(count(lit(1)).as("_m"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("_v"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        -1)
-    val a = coalesce(sum(col("_m")).over(w), lit(0L))
     val agg = byVal
       .select(col("_v"), col("_m"),
-        (col("_m") * (lit(2L) * a + col("_m") + 1L)).as("_ri"))
+        (col("_m") * doubledMidrank("_v", "_m")).as("_ri"))
       .agg(
         sum(col("_m")).as("_n"),
         sum(col("_v") * col("_m")).as("_tot"),
@@ -378,9 +391,8 @@ object Stats {
     * distinct metric VALUE (the integer-metric contract bounds that
     * table by the value domain, the GK-sketch frame class — so the
     * cumulative window over it is domain-bounded, not corpus-bounded),
-    * and tied ranks are handled in DOUBLED units (2·avgRank =
-    * 2·cumBefore + t + 1 is always integral), so R₁, U₀, U₁ come out
-    * of integer sums. The normal approximation
+    * and tied ranks are handled in DOUBLED units ([[doubledMidrank]]),
+    * so R₁, U₀, U₁ come out of integer sums. The normal approximation
     *
     *   z = (2U₁ − n₀n₁) / 2σ,   σ² = n₀n₁/12 · ((n+1) − Σ(t³−t)/(n(n−1)))
     *
@@ -398,20 +410,9 @@ object Stats {
       df: DataFrame,
       armCol: String,
       valueCol: String): DataFrame = {
-    val arm = col(armCol).cast("int")
-    val byVal = df
-      .groupBy(col(valueCol).cast("long").as("_v"))
-      .agg(
-        sum(when(arm === 0, 1L).otherwise(0L)).as("_c0"),
-        sum(when(arm === 1, 1L).otherwise(0L)).as("_c1"))
-      .withColumn("_t", col("_c0") + col("_c1"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("_v"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        -1)
-    val cumBefore = coalesce(sum(col("_t")).over(w), lit(0L))
-    val rank2 = lit(2L) * cumBefore + col("_t") + 1L // 2·avg rank, exact
-    val agg = byVal
-      .select(col("_c0"), col("_c1"), col("_t"), rank2.as("_r2"))
+    val agg = twoArmValueCells(df, "mannWhitneyU", armCol, valueCol)
+      .select(col("_c0"), col("_c1"), col("_t"),
+        doubledMidrank("_x", "_t").as("_r2"))
       .agg(
         sum(col("_c0")).as("_n0"), sum(col("_c1")).as("_n1"),
         sum(col("_c1") * col("_r2")).as("_r1x2"),
@@ -498,21 +499,6 @@ object Stats {
     * Output per hypothesis: (keyCol, p_value, rank, p_adj,
     * rejected) — `rejected` = 1 iff rank ≤ k*.
     */
-  /** p-value column with the loud NULL/NaN guard shared by the
-    * multiple-testing family (ADVICE r15): Spark windows rank NULLs
-    * FIRST ascending while DuckDB ranks them LAST, so an unguarded
-    * NULL p silently shifts every rank and p_adj across engines —
-    * raise instead (the arm-flag guard convention). The guard rides
-    * the ranked p column itself, so Catalyst cannot prune it. */
-  private def guardedP(pCol: String, keyCol: String, op: String): Column = {
-    val pRaw = col(pCol).cast("double")
-    when(pRaw.isNotNull && !isnan(pRaw), pRaw)
-      .otherwise(raise_error(concat(
-        lit(s"$op: NULL/NaN p_value at key "), col(keyCol).cast("string"),
-        lit(" — Spark ranks NULLs first, DuckDB last; clean the " +
-          "hypothesis table"))).cast("double"))
-  }
-
   def bhFdr(
       df: DataFrame,
       keyCol: String,
@@ -520,14 +506,7 @@ object Stats {
       q: Double): DataFrame = {
     require(q > 0 && q < 1, s"q in (0,1), got $q")
     val W = org.apache.spark.sql.expressions.Window
-    val p = guardedP(pCol, keyCol, "bhFdr")
-    val ranked = df
-      .select(col(keyCol), p.as("p_value"))
-      .withColumn("rank", row_number()
-        .over(W.orderBy(col("p_value").asc, col(keyCol).asc)).cast("long"))
-      .withColumn("_m", count(lit(1)).over(
-        W.partitionBy(lit(1))
-          .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)))
+    val ranked = rankedP(df, keyCol, pCol, "bhFdr")
     val kStar = ranked
       .agg(coalesce(max(when(
         col("p_value") * col("_m") <= col("rank").cast("double") * q,
@@ -694,22 +673,16 @@ object Stats {
       df: DataFrame,
       aCol: String,
       bCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val wAll = W.partitionBy(lit(1))
-      .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     // the FULL r×c grid, not just observed cells: an empty cell still
     // contributes (0 − e)²/e — dropping it understates χ² (a perfect
     // 2×2 association would read V ≈ 0.71 instead of 1)
     val observed = df.groupBy(col(aCol).cast("string").as("_a"),
         col(bCol).cast("string").as("_b"))
       .agg(count(lit(1)).as("_o"))
-    val cells = observed.select(col("_a")).distinct()
+    val cells = contingencyMargins(observed.select(col("_a")).distinct()
       .crossJoin(broadcast(observed.select(col("_b")).distinct()))
       .join(observed, Seq("_a", "_b"), "left")
-      .withColumn("_o", coalesce(col("_o"), lit(0L)))
-      .withColumn("_ra", sum(col("_o")).over(W.partitionBy(col("_a"))))
-      .withColumn("_cb", sum(col("_o")).over(W.partitionBy(col("_b"))))
-      .withColumn("_n", sum(col("_o")).over(wAll))
+      .withColumn("_o", coalesce(col("_o"), lit(0L))), "_n")
     val e = col("_ra").cast("double") * col("_cb").cast("double") /
       col("_n").cast("double")
     val term = (col("_o").cast("double") - e) *
@@ -981,6 +954,24 @@ object Stats {
         .as("cum_lift"))
   }
 
+  /** The distinct-duration table of a survival estimator: one row per
+    * `duration` with its `_n` rows, `n_events`, `n_censored` and
+    * `n_risk`. At-risk = everyone with duration ≥ t, a reverse
+    * cumulative window over the distinct-duration table (discrete-scale
+    * bounded by contract).
+    */
+  private def durationRisk(df: DataFrame, durationCol: String,
+      eventCol: String): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    df.groupBy(col(durationCol).cast("long").as("duration"))
+      .agg(count(lit(1)).as("_n"),
+        sum(col(eventCol).cast("long")).as("n_events"))
+      .withColumn("n_censored", col("_n") - col("n_events"))
+      .withColumn("n_risk", sum(col("_n")).over(
+        W.partitionBy(lit(1)).orderBy(col("duration").asc)
+          .rowsBetween(W.currentRow, W.unboundedFollowing)))
+  }
+
   /** Kaplan–Meier product-limit survival curve (1958) — the churn /
     * retention-duration estimator with right-censoring done correctly
     * (naive "fraction still here at t" over-counts users who simply
@@ -1008,17 +999,7 @@ object Stats {
       durationCol: String,
       eventCol: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val byT = df.groupBy(col(durationCol).cast("long").as("duration"))
-      .agg(count(lit(1)).as("_n"),
-        sum(col(eventCol).cast("long")).as("n_events"))
-      .withColumn("n_censored", col("_n") - col("n_events"))
-    // at-risk = everyone with duration ≥ t: total minus the cumulative
-    // count of strictly-earlier rows (one window over the
-    // distinct-duration table — discrete-scale bounded by contract)
-    val wOrd = W.partitionBy(lit(1)).orderBy(col("duration").asc)
-    val nRisk = sum(col("_n")).over(
-      wOrd.rowsBetween(W.currentRow, W.unboundedFollowing))
-    val withRisk = byT.withColumn("n_risk", nRisk)
+    val withRisk = durationRisk(df, durationCol, eventCol)
     // a time where EVERYONE at risk churns sends S to exactly 0 — the
     // log domain can't carry that (ln 0); such rows contribute a NULL
     // term (skipped by the sum) and a zero flag that pins S(t) = 0
@@ -1029,7 +1010,8 @@ object Stats {
       .otherwise(log(lit(1.0) -
         col("n_events").cast("double") / col("n_risk").cast("double"))
         .cast("decimal(28,6)"))
-    val upTo = wOrd.rowsBetween(W.unboundedPreceding, W.currentRow)
+    val upTo = W.partitionBy(lit(1)).orderBy(col("duration").asc)
+      .rowsBetween(W.unboundedPreceding, W.currentRow)
     withRisk
       .withColumn("_lt", term)
       .withColumn("_z",
@@ -1064,17 +1046,11 @@ object Stats {
       durationCol: String,
       eventCol: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val byT = df.groupBy(col(durationCol).cast("long").as("duration"))
-      .agg(count(lit(1)).as("_n"),
-        sum(col(eventCol).cast("long")).as("n_events"))
-      .withColumn("n_censored", col("_n") - col("n_events"))
-    val wOrd = W.partitionBy(lit(1)).orderBy(col("duration").asc)
-    val nRisk = sum(col("_n")).over(
-      wOrd.rowsBetween(W.currentRow, W.unboundedFollowing))
-    val upTo = wOrd.rowsBetween(W.unboundedPreceding, W.currentRow)
+    val upTo = W.partitionBy(lit(1)).orderBy(col("duration").asc)
+      .rowsBetween(W.unboundedPreceding, W.currentRow)
     val term = (col("n_events").cast("double") /
       col("n_risk").cast("double")).cast("decimal(28,6)")
-    byT.withColumn("n_risk", nRisk)
+    durationRisk(df, durationCol, eventCol)
       .withColumn("cum_hazard", d6(sum(term).over(upTo).cast("double")))
       .select(col("duration"), col("n_risk"), col("n_events"),
         col("n_censored"), col("cum_hazard"))
@@ -1568,12 +1544,7 @@ object Stats {
     def rank2Map(c: String): DataFrame = {
       val byVal = df.groupBy(col(c).cast("long").as("_v"))
         .agg(count(lit(1)).as("_m"))
-      val w = org.apache.spark.sql.expressions.Window.orderBy(col("_v"))
-        .rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      byVal.select(col("_v"),
-        (lit(2L) * coalesce(sum(col("_m")).over(w), lit(0L)) +
-          col("_m") + 1L).as("_r2"))
+      byVal.select(col("_v"), doubledMidrank("_v", "_m").as("_r2"))
     }
     val rx = rank2Map(xCol).withColumnRenamed("_v", "_vx")
       .withColumnRenamed("_r2", "_rx2")
@@ -2219,6 +2190,34 @@ object Stats {
         d6(col("_ap6").cast("double")).as("avg_precision"))
   }
 
+  /** The one-way ANOVA sums of squares from per-group sufficient
+    * statistics `byG` (`_n` rows, `_s` = Σx, `_q` = Σx², exact): ONE row
+    * (k_groups, n_rows, ss_between, ss_within) with
+    * SSB = Σ_g S_g²/n_g − S²/N and SSW = Q − Σ_g S_g²/n_g. Each S_g²/n_g
+    * term is d6-rounded before the order-free decimal sum. k < 2 or
+    * N ≤ k raises, naming `op`.
+    */
+  private def anovaSums(byG: DataFrame, op: String): DataFrame = {
+    val agg = byG.agg(
+      count(lit(1)).as("_k"), sum(col("_n")).as("_nt"),
+      sum(col("_s")).as("_st"), sum(col("_q")).as("_qt"),
+      // d6-per-term decimal sum: order-free, engine-portable
+      sum((col("_s").cast("double") * col("_s").cast("double") /
+        col("_n").cast("double")).cast("decimal(28,6)")).as("_ssg6"))
+    val checked = agg.withColumn("_k",
+      when(col("_k") >= 2L && col("_nt") > col("_k"), col("_k"))
+        .otherwise(raise_error(concat(
+          lit(s"$op: need >= 2 groups and N > k, got k="),
+          col("_k").cast("string"), lit(", N="),
+          col("_nt").cast("string"))).cast("long")))
+    val nT = col("_nt").cast("double")
+    val ssb = d6(col("_ssg6").cast("double") -
+      col("_st").cast("double") * col("_st").cast("double") / nT)
+    val ssw = d6(col("_qt").cast("double") - col("_ssg6").cast("double"))
+    checked.select(col("_k").as("k_groups"),
+      col("_nt").as("n_rows"), ssb.as("ss_between"), ssw.as("ss_within"))
+  }
+
   /** One-way ANOVA over an integer metric grouped by a categorical
     * column — the k-arm generalisation of [[welchTTest]]: "do these k
     * slices (languages, sources, experiment arms) share a mean, and how
@@ -2250,24 +2249,7 @@ object Stats {
     val byG = df.groupBy(col(groupCol).cast("string").as("_g"))
       .agg(count(lit(1)).as("_n"), sum(dec(x)).as("_s"),
         sum(dec(x) * dec(x)).as("_q"))
-    val agg = byG.agg(
-      count(lit(1)).as("_k"), sum(col("_n")).as("_nt"),
-      sum(col("_s")).as("_st"), sum(col("_q")).as("_qt"),
-      // d6-per-term decimal sum: order-free, engine-portable
-      sum((col("_s").cast("double") * col("_s").cast("double") /
-        col("_n").cast("double")).cast("decimal(28,6)")).as("_ssg6"))
-    val checked = agg.withColumn("_k",
-      when(col("_k") >= 2L && col("_nt") > col("_k"), col("_k"))
-        .otherwise(raise_error(concat(
-          lit("anovaOneWay: need >= 2 groups and N > k, got k="),
-          col("_k").cast("string"), lit(", N="),
-          col("_nt").cast("string"))).cast("long")))
-    val nT = col("_nt").cast("double")
-    val ssb = d6(col("_ssg6").cast("double") -
-      col("_st").cast("double") * col("_st").cast("double") / nT)
-    val ssw = d6(col("_qt").cast("double") - col("_ssg6").cast("double"))
-    val staged = checked.select(col("_k").as("k_groups"),
-      col("_nt").as("n_rows"), ssb.as("ss_between"), ssw.as("ss_within"))
+    val staged = anovaSums(byG, "anovaOneWay")
     val dfB = (col("k_groups") - 1L).cast("double")
     val dfW = (col("n_rows") - col("k_groups")).cast("double")
     val msw = col("ss_within") / dfW
@@ -2447,9 +2429,9 @@ object Stats {
     *
     * Rank arithmetic is EXACT in [[mannWhitneyU]]'s doubled units: the
     * pooled corpus collapses to one row per (group, value), midranks
-    * come from the cumulative window over the DISTINCT-value frame
-    * (2·avgRank = 2·cumBefore + t + 1, always integral), and each
-    * group's rank sum is an exact decimal(38,0). The statistic
+    * are the [[doubledMidrank]] of the DISTINCT-value frame, and each
+    * group's rank sum is an exact decimal(38,0) ([[groupRankSums]]).
+    * The statistic
     *
     *   H = 12/(N(N+1)) · Σ_j R_j²/n_j − 3(N+1)
     *
@@ -2473,19 +2455,8 @@ object Stats {
         col(valueCol).cast("long").as("_v"))
       .agg(count(lit(1)).as("_c"))
     val byV = byGV.groupBy(col("_v")).agg(sum(col("_c")).as("_t"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("_v"))
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val ranked = byV.select(col("_v"),
-      (lit(2L) * coalesce(sum(col("_t")).over(w), lit(0L)) +
-        col("_t") + 1L).as("_r2"))
-    val tiesRow = byV.agg(
-      sum(dec(col("_t")) * dec(col("_t")) * dec(col("_t")) -
-        dec(col("_t"))).as("_ties"))
-    val byG = byGV.join(ranked, Seq("_v"))
-      .groupBy(col("_g"))
-      .agg(sum(col("_c")).as("_n"),
-        sum(dec(col("_c")) * dec(col("_r2"))).as("_r2s"))
+    val tiesRow = byV.agg(tieSum.as("_ties"))
+    val byG = groupRankSums(byGV, byV, "_v", "_n", "_r2s")
     val agg = byG.agg(
       count(lit(1)).as("_k"), sum(col("_n")).as("_nt"),
       // d6-per-group R_j²/n_j (R_j = R2_j/2): order-free decimal sum
@@ -2517,6 +2488,42 @@ object Stats {
         .as("significant"))
   }
 
+  /** The complete-block design of a k-system, n-item rank test:
+    *   - `base` (`_i` item, `_sys` system, `_v` value);
+    *   - `ranked` (`_i`, `_v`, `_r2`): the doubled midrank of each value
+    *     within its item, the per-item form of [[doubledMidrank]] (the
+    *     window partitions by item, so its frame is k-bounded);
+    *   - `tiesRow`: the 1-row tie term `_ties` = Σ_items Σ(t³ − t);
+    *   - `audit`: the 1-row block audit (`_cells`, `_maxDup`, `_n` items,
+    *     `_k` systems). n distinct items, k distinct systems and every
+    *     (item, system) exactly once ⟺ cells = n·k and no duplicate
+    *     cell; callers raise on anything else.
+    */
+  private def completeBlocks(df: DataFrame, itemCol: String,
+      systemCol: String, valueCol: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val base = df.select(col(itemCol).cast("string").as("_i"),
+      col(systemCol).cast("string").as("_sys"),
+      col(valueCol).cast("long").as("_v"))
+    val byIV = base.groupBy(col("_i"), col("_v"))
+      .agg(count(lit(1)).as("_t"))
+    val W = org.apache.spark.sql.expressions.Window
+    val w = W.partitionBy(col("_i")).orderBy(col("_v"))
+      .rowsBetween(W.unboundedPreceding, -1)
+    val ranked = byIV.select(col("_i"), col("_v"),
+      (lit(2L) * coalesce(sum(col("_t")).over(w), lit(0L)) +
+        col("_t") + 1L).as("_r2"))
+    val tiesRow = byIV.agg(coalesce(sum(
+      dec(col("_t")) * dec(col("_t")) * dec(col("_t")) - dec(col("_t"))),
+      dec(lit(0L))).as("_ties"))
+    val audit = base.groupBy(col("_i"), col("_sys"))
+      .agg(count(lit(1)).as("_dup"))
+      .agg(count(lit(1)).as("_cells"), max(col("_dup")).as("_maxDup"),
+        countDistinct(col("_i")).as("_n"),
+        countDistinct(col("_sys")).as("_k"))
+    (base, ranked, tiesRow, audit)
+  }
+
   /** Friedman rank test for k systems scored on the same n items
     * (blocks) — THE eval-table test: "n prompts each scored by k
     * models; do the models differ?" Classic repeated-measures
@@ -2546,28 +2553,8 @@ object Stats {
       itemCol: String,
       systemCol: String,
       valueCol: String): DataFrame = {
-    val base = df.select(col(itemCol).cast("string").as("_i"),
-      col(systemCol).cast("string").as("_sys"),
-      col(valueCol).cast("long").as("_v"))
-    val byIV = base.groupBy(col("_i"), col("_v"))
-      .agg(count(lit(1)).as("_t"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_i")).orderBy(col("_v"))
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val ranked = byIV.select(col("_i"), col("_v"),
-      (lit(2L) * coalesce(sum(col("_t")).over(w), lit(0L)) +
-        col("_t") + 1L).as("_r2"))
-    val tiesRow = byIV.agg(coalesce(sum(
-      dec(col("_t")) * dec(col("_t")) * dec(col("_t")) - dec(col("_t"))),
-      dec(lit(0L))).as("_ties"))
-    // complete-block audit: n distinct items, k distinct systems,
-    // every (item, system) exactly once ⟺ rows = n·k AND no dup cell
-    val audit = base.groupBy(col("_i"), col("_sys"))
-      .agg(count(lit(1)).as("_dup"))
-      .agg(count(lit(1)).as("_cells"), max(col("_dup")).as("_maxDup"),
-        countDistinct(col("_i")).as("_n"),
-        countDistinct(col("_sys")).as("_k"))
+    val (base, ranked, tiesRow, audit) =
+      completeBlocks(df, itemCol, systemCol, valueCol)
     val bySys = base.join(ranked, Seq("_i", "_v"))
       .groupBy(col("_sys"))
       .agg(sum(dec(col("_r2"))).as("_r2s"))
@@ -2762,26 +2749,8 @@ object Stats {
       itemCol: String,
       systemCol: String,
       valueCol: String): DataFrame = {
-    val base = df.select(col(itemCol).cast("string").as("_i"),
-      col(systemCol).cast("string").as("_sys"),
-      col(valueCol).cast("long").as("_v"))
-    val byIV = base.groupBy(col("_i"), col("_v"))
-      .agg(count(lit(1)).as("_t"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_i")).orderBy(col("_v"))
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val ranked = byIV.select(col("_i"), col("_v"),
-      (lit(2L) * coalesce(sum(col("_t")).over(w), lit(0L)) +
-        col("_t") + 1L).as("_r2"))
-    val tiesRow = byIV.agg(coalesce(sum(
-      dec(col("_t")) * dec(col("_t")) * dec(col("_t")) - dec(col("_t"))),
-      dec(lit(0L))).as("_ties"))
-    val audit = base.groupBy(col("_i"), col("_sys"))
-      .agg(count(lit(1)).as("_dup"))
-      .agg(count(lit(1)).as("_cells"), max(col("_dup")).as("_maxDup"),
-        countDistinct(col("_i")).as("_n"),
-        countDistinct(col("_sys")).as("_k"))
+    val (base, ranked, tiesRow, audit) =
+      completeBlocks(df, itemCol, systemCol, valueCol)
     val bySys = base.join(ranked, Seq("_i", "_v"))
       .groupBy(col("_sys"))
       .agg(sum(col("_r2")).as("_r2s"))
@@ -2869,23 +2838,7 @@ object Stats {
       .agg(sum(col("_c")).as("_n"),
         sum(dec(col("_c")) * dec(col("_z2"))).as("_s"),
         sum(dec(col("_c")) * dec(col("_z2")) * dec(col("_z2"))).as("_q"))
-    val agg = byG.agg(
-      count(lit(1)).as("_k"), sum(col("_n")).as("_nt"),
-      sum(col("_s")).as("_st"), sum(col("_q")).as("_qt"),
-      sum((col("_s").cast("double") * col("_s").cast("double") /
-        col("_n").cast("double")).cast("decimal(28,6)")).as("_ssg6"))
-    val checked = agg.withColumn("_k",
-      when(col("_k") >= 2L && col("_nt") > col("_k"), col("_k"))
-        .otherwise(raise_error(concat(
-          lit("brownForsythe: need >= 2 groups and N > k, got k="),
-          col("_k").cast("string"), lit(", N="),
-          col("_nt").cast("string"))).cast("long")))
-    val nT = col("_nt").cast("double")
-    val ssb = d6(col("_ssg6").cast("double") -
-      col("_st").cast("double") * col("_st").cast("double") / nT)
-    val ssw = d6(col("_qt").cast("double") - col("_ssg6").cast("double"))
-    val staged = checked.select(col("_k").as("k_groups"),
-      col("_nt").as("n_rows"), ssb.as("ss_between"), ssw.as("ss_within"))
+    val staged = anovaSums(byG, "brownForsythe")
     val dfB = (col("k_groups") - 1L).cast("double")
     val dfW = (col("n_rows") - col("k_groups")).cast("double")
     staged.select(col("k_groups"), col("n_rows"),
@@ -3391,9 +3344,9 @@ object Stats {
     * treatment + covariate on metrics — for any integer-valued y/x
     * (the module's exact-sufficient-stats contract; quantize first).
     *
-    * Determinism: all ten raw sums are exact decimal(38,0); the
-    * n-cleared centered forms (n·Σab − Σa·Σb) stay decimal; slopes,
-    * rss, r², σ² and each t close in ONE FIXED staged d6 chain
+    * Determinism: all ten raw sums are exact decimal(38,0)
+    * ([[crossMoments]]); the [[cleared]] centered forms stay decimal;
+    * slopes, rss, r², σ² and each t close in ONE FIXED staged d6 chain
     * (Cramer on the 2×2 normal equations; Var(b̂1) = σ²·n·s22/det in
     * the cleared basis). Collinear regressors or zero y-variance
     * answer NULL (det/syy guards); n < 4 fails loudly.
@@ -3410,30 +3363,21 @@ object Stats {
     val base = df.select(col(keyCol).as("_k"),
       col(yCol).cast("long").as("_y"),
       col(x1Col).cast("long").as("_u"), col(x2Col).cast("long").as("_v"))
-    val agg = base.groupBy(col("_k"))
-      .agg(count(lit(1)).as("_n"),
-        sum(dec(col("_y"))).as("_sy"), sum(dec(col("_u"))).as("_su"),
-        sum(dec(col("_v"))).as("_sv"),
-        sum(dec(col("_y")) * dec(col("_y"))).as("_syy"),
-        sum(dec(col("_y")) * dec(col("_u"))).as("_syu"),
-        sum(dec(col("_y")) * dec(col("_v"))).as("_syv"),
-        sum(dec(col("_u")) * dec(col("_u"))).as("_suu"),
-        sum(dec(col("_u")) * dec(col("_v"))).as("_suv"),
-        sum(dec(col("_v")) * dec(col("_v"))).as("_svv"))
+    val agg = crossMoments(base.groupBy(col("_k")), "_n",
+      "y", "u", "v", "yy", "yu", "yv", "uu", "uv", "vv")
     val checked = agg.withColumn("_n",
       when(col("_n") >= 4L, col("_n"))
         .otherwise(raise_error(concat(
           lit("ols2: need >= 4 observations, got "),
           col("_n").cast("string"))).cast("long")))
-    val nD = dec(col("_n"))
-    def c2(sab: Column, sa: Column, sb: Column): Column =
-      (nD * sab - sa * sb).cast("double")
-    val syy = c2(col("_syy"), col("_sy"), col("_sy"))
-    val s1y = c2(col("_syu"), col("_su"), col("_sy"))
-    val s2y = c2(col("_syv"), col("_sv"), col("_sy"))
-    val s11 = c2(col("_suu"), col("_su"), col("_su"))
-    val s12 = c2(col("_suv"), col("_su"), col("_sv"))
-    val s22 = c2(col("_svv"), col("_sv"), col("_sv"))
+    def c2(sab: String, sa: String, sb: String): Column =
+      cleared("_n", sab, sa, sb).cast("double")
+    val syy = c2("_syy", "_sy", "_sy")
+    val s1y = c2("_syu", "_su", "_sy")
+    val s2y = c2("_syv", "_sv", "_sy")
+    val s11 = c2("_suu", "_su", "_su")
+    val s12 = c2("_suv", "_su", "_sv")
+    val s22 = c2("_svv", "_sv", "_sv")
     val det = s11 * s22 - s12 * s12
     val ok = det > 0.0 && syy > 0.0
     val b1 = when(ok, d6((s1y * s22 - s2y * s12) / det))
@@ -3469,6 +3413,31 @@ object Stats {
       tStat(col("slope_x2"), col("_c11")).as("t_x2"))
   }
 
+  /** The two-group risk sets of a survival test: one row per event
+    * time `_t` (`_d` > 0) with its rows `_n`, group-1 rows `_n1`, events
+    * `_d` and group-1 events `_d1`, and the at-risk counts `_nr`/`_n1r`
+    * (everyone with duration ≥ t, a reverse cumulative window over the
+    * distinct-duration frame). The group flag must be 0/1 — loud,
+    * naming `op`.
+    */
+  private def riskSets(df: DataFrame, durationCol: String, eventCol: String,
+      groupCol: String, op: String): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    val g = flag01(op, "group flag", col(groupCol))
+    val byT = df
+      .select(col(durationCol).cast("long").as("_t"),
+        col(eventCol).cast("long").as("_d"), g.as("_g"))
+      .groupBy(col("_t"))
+      .agg(count(lit(1)).as("_n"), sum(col("_g")).as("_n1"),
+        sum(col("_d")).as("_d"), sum(col("_d") * col("_g")).as("_d1"))
+    val wRev = W.partitionBy(lit(1)).orderBy(col("_t").asc)
+      .rowsBetween(W.currentRow, W.unboundedFollowing)
+    byT
+      .withColumn("_nr", sum(col("_n")).over(wRev))
+      .withColumn("_n1r", sum(col("_n1")).over(wRev))
+      .filter(col("_d") > 0L)
+  }
+
   /** Two-group log-rank test (Mantel 1966) — "do these two survival
     * curves differ?", the hypothesis-test partner of [[kaplanMeier]]
     * (curve), [[nelsonAalen]] (hazard) and [[coxPh]] (model): at every
@@ -3494,20 +3463,7 @@ object Stats {
       durationCol: String,
       eventCol: String,
       groupCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val g = flag01("logRank", "group flag", col(groupCol))
-    val byT = df
-      .select(col(durationCol).cast("long").as("_t"),
-        col(eventCol).cast("long").as("_d"), g.as("_g"))
-      .groupBy(col("_t"))
-      .agg(count(lit(1)).as("_n"), sum(col("_g")).as("_n1"),
-        sum(col("_d")).as("_d"), sum(col("_d") * col("_g")).as("_d1"))
-    val wRev = W.partitionBy(lit(1)).orderBy(col("_t").asc)
-      .rowsBetween(W.currentRow, W.unboundedFollowing)
-    val risk = byT
-      .withColumn("_nr", sum(col("_n")).over(wRev))
-      .withColumn("_n1r", sum(col("_n1")).over(wRev))
-      .filter(col("_d") > 0L)
+    val risk = riskSets(df, durationCol, eventCol, groupCol, "logRank")
     val p1 = col("_n1r").cast("double") / col("_nr").cast("double")
     val eTerm = d6(col("_d").cast("double") * p1)
     val vTerm = when(col("_nr") > 1L,
@@ -3890,17 +3846,11 @@ object Stats {
       .agg(sum(when(col("_h") === 0L, col("_x")).otherwise(0L))
         .as("_a"),
         sum(when(col("_h") === 1L, col("_x")).otherwise(0L)).as("_b"))
-    val agg = per.agg(count(lit(1)).as("n_units"),
-      sum(dec(col("_a"))).as("_sa"), sum(dec(col("_b"))).as("_sb"),
-      sum(dec(col("_a")) * dec(col("_a"))).as("_saa"),
-      sum(dec(col("_b")) * dec(col("_b"))).as("_sbb"),
-      sum(dec(col("_a")) * dec(col("_b"))).as("_sab"))
-    val claa = (dec(col("n_units")) * col("_saa") -
-      col("_sa") * col("_sa")).cast("double")
-    val clbb = (dec(col("n_units")) * col("_sbb") -
-      col("_sb") * col("_sb")).cast("double")
-    val clab = (dec(col("n_units")) * col("_sab") -
-      col("_sa") * col("_sb")).cast("double")
+    val agg = crossMoments(per.groupBy(), "n_units",
+      "a", "b", "aa", "bb", "ab")
+    val claa = cleared("n_units", "_saa", "_sa", "_sa").cast("double")
+    val clbb = cleared("n_units", "_sbb", "_sb", "_sb").cast("double")
+    val clab = cleared("n_units", "_sab", "_sa", "_sb").cast("double")
     val r = when(claa > 0.0 && clbb > 0.0,
       d6(clab / sqrt(claa * clbb)))
     val staged = agg.select(col("n_units"), r.as("half_r"))
@@ -5269,21 +5219,14 @@ object Stats {
     val x = col(xCol).cast("long")
     val y = col(yCol).cast("long")
     val base = df.select(x.as("_x"), y.as("_y"))
-    val agg = base.agg(count(lit(1)).as("_n"),
-      sum(dec(col("_x"))).as("_sx"), sum(dec(col("_y"))).as("_sy"),
-      sum(dec(col("_x")) * dec(col("_x"))).as("_sxx"),
-      sum(dec(col("_x")) * dec(col("_y"))).as("_sxy"),
-      sum(dec(col("_y")) * dec(col("_y"))).as("_syy"))
+    val agg = crossMoments(base.groupBy(), "_n", "x", "y", "xx", "xy", "yy")
       .select(when(col("_n") >= 4L, col("_n"))
         .otherwise(raise_error(concat(lit("olsInfluence: n = "),
           col("_n").cast("string"), lit(" < 4"))).cast("long")).as("_n"),
         col("_sx"), col("_sy"),
-        (dec(col("_n")) * col("_sxx") - col("_sx") * col("_sx"))
-          .as("_clxx"),
-        (dec(col("_n")) * col("_sxy") - col("_sx") * col("_sy"))
-          .as("_clxy"),
-        (dec(col("_n")) * col("_syy") - col("_sy") * col("_sy"))
-          .as("_clyy"))
+        cleared("_n", "_sxx", "_sx", "_sx").as("_clxx"),
+        cleared("_n", "_sxy", "_sx", "_sy").as("_clxy"),
+        cleared("_n", "_syy", "_sy", "_sy").as("_clyy"))
     val j = base.crossJoin(broadcast(agg))
     val nD = col("_n").cast("double")
     val clxx = col("_clxx").cast("double")
@@ -5344,6 +5287,148 @@ object Stats {
       .agg(sum(when(col("_a") === 0L, 1L).otherwise(0L)).as("_c0"),
         sum(when(col("_a") === 1L, 1L).otherwise(0L)).as("_c1"))
       .withColumn("_t", col("_c0") + col("_c1"))
+
+  /** The rows of every value run below this one: over a value-cell frame
+    * (one row per distinct `x`, run length in `t`), the cumulative `Σ t`
+    * over the rows strictly before, in `x` order, and 0 on the first run.
+    * The window runs over the distinct values, never over raw rows.
+    */
+  private[pipeline] def cumBelow(x: String, t: String): Column = {
+    val W = org.apache.spark.sql.expressions.Window
+    coalesce(sum(col(t)).over(W.orderBy(col(x).asc)
+      .rowsBetween(W.unboundedPreceding, -1)), lit(0L))
+  }
+
+  /** Twice the midrank of each value run: 2·[[cumBelow]] + t + 1. A run
+    * of t tied values at positions b+1 .. b+t has average rank
+    * b + (t+1)/2, so the doubled rank is an integer and every rank sum
+    * built from it is exact.
+    */
+  private[pipeline] def doubledMidrank(x: String, t: String): Column =
+    lit(2L) * cumBelow(x, t) + col(t) + 1L
+
+  /** The total `Σ t` of a value-cell frame, on every row: a whole-frame
+    * window in the same `x` order as [[cumBelow]], so both share one
+    * sort.
+    */
+  private[pipeline] def valueTotal(x: String, t: String): Column = {
+    val W = org.apache.spark.sql.expressions.Window
+    sum(col(t)).over(W.orderBy(col(x).asc)
+      .rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
+  }
+
+  /** The tie term Σ(t³ − t) of a value-cell frame, exact in decimal. */
+  private def tieSum: Column =
+    sum(dec(col("_t")) * dec(col("_t")) * dec(col("_t")) - dec(col("_t")))
+
+  /** Per-group rank sums of a k-sample rank test: `cells` holds one row
+    * per (`_g`, `x`) with count `_c`, and `totals` the run length `_t`
+    * per `x`. Each cell joins its value's [[doubledMidrank]]; per group,
+    * `n` is the count and `r2s` the exact doubled rank sum Σ c·r₂.
+    */
+  private def groupRankSums(cells: DataFrame, totals: DataFrame, x: String,
+      n: String, r2s: String): DataFrame =
+    cells.join(totals.select(col(x), doubledMidrank(x, "_t").as("_r2")),
+        Seq(x))
+      .groupBy(col("_g"))
+      .agg(sum(col("_c")).as(n),
+        sum(dec(col("_c")) * dec(col("_r2"))).as(r2s))
+
+  /** The doubled Ansari–Bradley inward score of a value run,
+    * min(r₂, 2(n+1) − r₂), from its [[doubledMidrank]] `_r2` and the
+    * frame total `_n`: extremes score low from both ends.
+    */
+  private def inwardScore2: Column =
+    least(col("_r2"), lit(2L) * (col("_n") + 1L) - col("_r2"))
+
+  /** The Ansari–Bradley sums over value runs: `_ab2` = arm-1 score sum,
+    * `_ss` = Σ t·s₂ and `_ssq` = Σ t·s₂², all in doubled units.
+    */
+  private def inwardScoreSums: Seq[Column] = Seq(
+    sum(col("_c1") * col("_s2")).as("_ab2"),
+    sum(dec(col("_t")) * dec(col("_s2"))).as("_ss"),
+    sum(dec(col("_t")) * dec(col("_s2")) * dec(col("_s2"))).as("_ssq"))
+
+  /** Ansari–Bradley z off [[inwardScoreSums]] by the general two-sample
+    * linear-rank form: E = n₁·S/n, Var = n₁n₀(n·Σs² − S²)/(n²(n−1));
+    * zero variance answers NULL. `n`, `n0`, `n1` as doubles.
+    */
+  private def inwardScoreZ(n: Column, n0: Column, n1: Column): Column = {
+    val e2 = n1 * col("_ss").cast("double") / n
+    val var2 = n1 * n0 *
+      (n * col("_ssq").cast("double") -
+        col("_ss").cast("double") * col("_ss").cast("double")) /
+      (n * n * (n - 1.0))
+    when(var2 > 0.0, d6((col("_ab2").cast("double") - e2) / sqrt(var2)))
+  }
+
+  /** Exact cross-moments in ONE aggregate of `g`: the row count as `n`,
+    * then per term, in the caller's order, `_s<term>`: a one-letter term
+    * `a` sums dec(`_a`), a two-letter term `ab` sums dec(`_a`)·dec(`_b`).
+    * Every sum is an exact decimal(38,0), so it is order-free.
+    */
+  private[graft] def crossMoments(g: RelationalGroupedDataset, n: String,
+      terms: String*): DataFrame =
+    g.agg(count(lit(1)).as(n), terms.map { t =>
+      sum(t.map(c => dec(col(s"_$c"))).reduce(_ * _)).as(s"_s$t")
+    }: _*)
+
+  /** The cleared cross-moment n·Σab − Σa·Σb = n²·cov(a, b) of
+    * [[crossMoments]] columns: exact, and free of the 1/n a mean would
+    * round.
+    */
+  private[graft] def cleared(n: String, sab: String, sa: String,
+      sb: String): Column =
+    dec(col(n)) * col(sab) - col(sa) * col(sb)
+
+  /** Observed contingency cells: the count `_o` per (`_a`, `_b`). */
+  private def observedCells(df: DataFrame, a: Column, b: Column): DataFrame =
+    df.select(a.as("_a"), b.as("_b"))
+      .groupBy(col("_a"), col("_b")).agg(count(lit(1)).as("_o"))
+
+  /** Contingency `cells` (`_a`, `_b`, count `_o`) with the row margin
+    * `_ra`, the column margin `_cb` and the grand total `n` on every
+    * cell, as windows over the r·c-bounded cell frame.
+    */
+  private def contingencyMargins(cells: DataFrame, n: String): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    cells
+      .withColumn("_ra", sum(col("_o")).over(W.partitionBy(col("_a"))))
+      .withColumn("_cb", sum(col("_o")).over(W.partitionBy(col("_b"))))
+      .withColumn(n, sum(col("_o")).over(W.partitionBy(lit(1))
+        .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)))
+  }
+
+  /** p-value column with the loud NULL/NaN guard shared by the
+    * multiple-testing family (ADVICE r15): Spark windows rank NULLs
+    * FIRST ascending while DuckDB ranks them LAST, so an unguarded
+    * NULL p silently shifts every rank and p_adj across engines —
+    * raise instead (the arm-flag guard convention). The guard rides
+    * the ranked p column itself, so Catalyst cannot prune it. */
+  private def guardedP(pCol: String, keyCol: String, op: String): Column = {
+    val pRaw = col(pCol).cast("double")
+    when(pRaw.isNotNull && !isnan(pRaw), pRaw)
+      .otherwise(raise_error(concat(
+        lit(s"$op: NULL/NaN p_value at key "), col(keyCol).cast("string"),
+        lit(" — Spark ranks NULLs first, DuckDB last; clean the " +
+          "hypothesis table"))).cast("double"))
+  }
+
+  /** The hypothesis table of the multiple-testing family: (keyCol,
+    * [[guardedP]] as `p_value`, `rank` = row_number over (p, key) —
+    * deterministic under tied p — and the hypothesis count `_m`). Both
+    * windows run over the report-sized hypothesis table.
+    */
+  private def rankedP(df: DataFrame, keyCol: String, pCol: String,
+      op: String): DataFrame = {
+    val W = org.apache.spark.sql.expressions.Window
+    df.select(col(keyCol), guardedP(pCol, keyCol, op).as("p_value"))
+      .withColumn("rank", row_number()
+        .over(W.orderBy(col("p_value").asc, col(keyCol).asc)).cast("long"))
+      .withColumn("_m", count(lit(1)).over(
+        W.partitionBy(lit(1))
+          .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)))
+  }
 
   /** Cohen's d / Hedges' g standardized effect size between two arms
     * (Cohen 1988; Hedges 1981) — the "how BIG is the difference"
@@ -5674,14 +5759,7 @@ object Stats {
       alpha: Double): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha in (0,1), got $alpha")
     val W = org.apache.spark.sql.expressions.Window
-    val p = guardedP(pCol, keyCol, "holmBonferroni")
-    val ranked = df
-      .select(col(keyCol), p.as("p_value"))
-      .withColumn("rank", row_number()
-        .over(W.orderBy(col("p_value").asc, col(keyCol).asc)).cast("long"))
-      .withColumn("_m", count(lit(1)).over(
-        W.partitionBy(lit(1))
-          .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)))
+    val ranked = rankedP(df, keyCol, pCol, "holmBonferroni")
     // k* = rank just before the first step-down failure (m if none)
     val kStar = ranked
       .agg(coalesce(min(when(
@@ -5712,9 +5790,8 @@ object Stats {
     *
     * NEVER the pair join: the pair counts assemble from the VALUE
     * CELL frame (one row per distinct metric value — midrank
-    * machinery shared with the Mann–Whitney chain): with doubled
-    * midranks r₂ = 2·(cum below) + ties + 1, Σ over arm-1 cells of
-    * c₁·r₂ gives 2·R₁, and 2·U₁ = 2·R₁ − n₁(n₁+1) is an exact
+    * machinery shared with the Mann–Whitney chain): with the
+    * [[doubledMidrank]] r₂, Σ over arm-1 cells of c₁·r₂ gives 2·R₁, and 2·U₁ = 2·R₁ − n₁(n₁+1) is an exact
     * integer, so δ = (2·U₁ − n₀n₁)/(n₀n₁) is one exact rational →
     * ONE d6 (CL likewise). Arms must be 0/1 — loud otherwise; an
     * empty arm is loud (no pairs to compare).
@@ -5726,11 +5803,8 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
     val cells = twoArmValueCells(df, "cliffsDelta", armCol, xCol)
-      .withColumn("_cb", coalesce(sum(col("_t"))
-        .over(W.orderBy(col("_x").asc)
-          .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("_cb", cumBelow("_x", "_t"))
     val agg = cells.agg(
       sum(col("_c0")).as("_n0"), sum(col("_c1")).as("_n1"),
       sum(dec(col("_c1")) * dec(lit(2L) * col("_cb") + col("_t") + 1L))
@@ -5758,8 +5832,8 @@ object Stats {
 
   /** Single-instrument IV / two-stage-least-squares estimator
     * (Wright 1928; the Wald 1940 grouping estimator when z is
-    * binary): β_IV = S_zy / S_zx over cleared cross-moments
-    * S_ab = n·Σab − Σa·Σb — the causal slope of y on x when x is
+    * binary): β_IV = S_zy / S_zx over the [[cleared]] cross-moments
+    * S_ab — the causal slope of y on x when x is
     * endogenous but z moves x and touches y ONLY through x. Also
     * emits the first-stage slope π = S_zx/S_zz and the first-stage
     * F = (n−2)·S_zx² / (S_zz·S_xx − S_zx²) with the Staiger–Stock
@@ -5783,27 +5857,18 @@ object Stats {
       yCol: String): DataFrame = {
     val base = df.select(col(zCol).cast("long").as("_z"),
       col(xCol).cast("long").as("_x"), col(yCol).cast("long").as("_y"))
-    val agg = base.agg(count(lit(1)).as("_n"),
-      sum(dec(col("_z"))).as("_sz"), sum(dec(col("_x"))).as("_sx"),
-      sum(dec(col("_y"))).as("_sy"),
-      sum(dec(col("_z")) * dec(col("_z"))).as("_szz"),
-      sum(dec(col("_x")) * dec(col("_x"))).as("_sxx"),
-      sum(dec(col("_z")) * dec(col("_x"))).as("_szx"),
-      sum(dec(col("_z")) * dec(col("_y"))).as("_szy"))
+    val agg = crossMoments(base.groupBy(), "_n",
+      "z", "x", "y", "zz", "xx", "zx", "zy")
     val n = when(col("_n") >= 3L, col("_n"))
       .otherwise(raise_error(concat(lit("ivEstimator: "),
         col("_n").cast("string"),
         lit(" rows (< 3) — no df for the first-stage F")))
         .cast("long"))
     val g = agg.select(n.as("n"),
-      (dec(col("_n")) * col("_szz") - col("_sz") * col("_sz"))
-        .as("_Szz"),
-      (dec(col("_n")) * col("_sxx") - col("_sx") * col("_sx"))
-        .as("_Sxx"),
-      (dec(col("_n")) * col("_szx") - col("_sz") * col("_sx"))
-        .as("_Szx"),
-      (dec(col("_n")) * col("_szy") - col("_sz") * col("_sy"))
-        .as("_Szy"))
+      cleared("_n", "_szz", "_sz", "_sz").as("_Szz"),
+      cleared("_n", "_sxx", "_sx", "_sx").as("_Sxx"),
+      cleared("_n", "_szx", "_sz", "_sx").as("_Szx"),
+      cleared("_n", "_szy", "_sz", "_sy").as("_Szy"))
     val rel = col("_Szx") =!= lit(0L).cast("decimal(38,0)")
     val fDen = (col("_Szz") * col("_Sxx") - col("_Szx") * col("_Szx"))
       .cast("double")
@@ -5850,12 +5915,9 @@ object Stats {
       yCol: String): DataFrame = {
     val base = df.select(col(xCol).cast("long").as("_x"),
       col(yCol).cast("long").as("_y"))
-    val agg = base.agg(count(lit(1)).as("_n"),
-      sum(dec(col("_x"))).as("_sx"), sum(dec(col("_y"))).as("_sy"),
-      sum(dec(col("_x")) * dec(col("_x"))).as("_sxx"),
-      sum(dec(col("_x")) * dec(col("_y"))).as("_sxy"))
-    val sxxC = (dec(col("_n")) * col("_sxx") - col("_sx") * col("_sx"))
-    val sxyC = (dec(col("_n")) * col("_sxy") - col("_sx") * col("_sy"))
+    val agg = crossMoments(base.groupBy(), "_n", "x", "y", "xx", "xy")
+    val sxxC = cleared("_n", "_sxx", "_sx", "_sx")
+    val sxyC = cleared("_n", "_sxy", "_sx", "_sy")
     val params = agg.select(col("_n"), col("_sx"), col("_sy"),
       when(sxxC =!= lit(0L).cast("decimal(38,0)"), sxxC)
         .otherwise(raise_error(
@@ -6237,8 +6299,7 @@ object Stats {
     *
     * Determinism: the caller supplies exact per-unit integer sums;
     * ONE aggregate collects exact decimal sufficient stats; R̂ is one
-    * d6; the cleared covariances S_ab = n·Σab − Σa·Σb stay exact
-    * decimal and the variance chain closes in a fixed double order →
+    * d6; the [[cleared]] covariances S_ab stay exact decimal and the variance chain closes in a fixed double order →
     * d6 se; the CI uses the caller's z (default 1.959964, the corpus
     * convention). ΣY = 0 is loud (no ratio); n < 2 is loud; zero
     * variance answers se = 0 with a degenerate CI.
@@ -6254,11 +6315,7 @@ object Stats {
     require(z > 0, s"z must be positive, got $z")
     val base = df.select(col(numCol).cast("long").as("_x"),
       col(denCol).cast("long").as("_y"))
-    val agg = base.agg(count(lit(1)).as("_n"),
-      sum(dec(col("_x"))).as("_sx"), sum(dec(col("_y"))).as("_sy"),
-      sum(dec(col("_x")) * dec(col("_x"))).as("_sxx"),
-      sum(dec(col("_x")) * dec(col("_y"))).as("_sxy"),
-      sum(dec(col("_y")) * dec(col("_y"))).as("_syy"))
+    val agg = crossMoments(base.groupBy(), "_n", "x", "y", "xx", "xy", "yy")
     val n = when(col("_n") >= 2L, col("_n"))
       .otherwise(raise_error(concat(lit("ratioMetricCI: "),
         col("_n").cast("string"), lit(" units (< 2)"))).cast("long"))
@@ -6267,12 +6324,9 @@ object Stats {
         lit("ratioMetricCI: denominator total is zero — no ratio"))
         .cast("decimal(38,0)"))
     val g = agg.select(n.as("n"), col("_sx"), sy.as("_sy2"),
-      (dec(col("_n")) * col("_sxx") - col("_sx") * col("_sx"))
-        .as("_Sxx"),
-      (dec(col("_n")) * col("_sxy") - col("_sx") * col("_sy"))
-        .as("_Sxy"),
-      (dec(col("_n")) * col("_syy") - col("_sy") * col("_sy"))
-        .as("_Syy"))
+      cleared("_n", "_sxx", "_sx", "_sx").as("_Sxx"),
+      cleared("_n", "_sxy", "_sx", "_sy").as("_Sxy"),
+      cleared("_n", "_syy", "_sy", "_sy").as("_Syy"))
     val nD = col("n").cast("double")
     val r = d6(col("_sx").cast("double") / col("_sy2").cast("double"))
     val yBar = col("_sy2").cast("double") / nD
@@ -6603,18 +6657,13 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       xCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
     val base = df.select(col(groupCol).as("_g"),
       col(xCol).cast("long").as("_x"))
-    val wBefore = W.orderBy(col("_x").asc)
-      .rowsBetween(W.unboundedPreceding, -1)
-    val wFrame = W.orderBy(col("_x").asc)
-      .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     // the lower-median value run: cumBefore < ⌈n/2⌉ ≤ cumBefore + t
     val med = base.groupBy(col("_x"))
       .agg(count(lit(1)).as("_t"))
-      .withColumn("_cb", coalesce(sum(col("_t")).over(wBefore), lit(0L)))
-      .withColumn("_n", sum(col("_t")).over(wFrame))
+      .withColumn("_cb", cumBelow("_x", "_t"))
+      .withColumn("_n", valueTotal("_x", "_t"))
       .filter(col("_cb") < expr("(_n + 1) div 2") &&
         col("_cb") + col("_t") >= expr("(_n + 1) div 2"))
       .select(col("_x").as("_med"))
@@ -6674,40 +6723,18 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val byVal = twoArmValueCells(df, "ansariBradley", armCol, xCol)
-    val wBefore = W.orderBy(col("_x").asc)
-      .rowsBetween(W.unboundedPreceding, -1)
-    val wFrame = W.orderBy(col("_x").asc)
-      .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    // doubled midrank of the run (2·rank + ties − 1 of the old
-    // row-level window = 2·cumBefore + t + 1, exact) and the inward
-    // doubled score — both constant per value run
-    val cells = byVal
-      .withColumn("_r2", lit(2L) *
-        coalesce(sum(col("_t")).over(wBefore), lit(0L)) +
-        col("_t") + 1L)
-      .withColumn("_n", sum(col("_t")).over(wFrame))
-      .withColumn("_s2",
-        least(col("_r2"), lit(2L) * (col("_n") + 1L) - col("_r2")))
+    // the doubled midrank and inward score are constant per value run
+    val cells = twoArmValueCells(df, "ansariBradley", armCol, xCol)
+      .withColumn("_r2", doubledMidrank("_x", "_t"))
+      .withColumn("_n", valueTotal("_x", "_t"))
+      .withColumn("_s2", inwardScore2)
     val agg = cells.agg(max(col("_n")).as("n"),
-      sum(col("_c1")).as("n1"),
-      sum(col("_c0")).as("n0"),
-      sum(col("_c1") * col("_s2")).as("_ab2"),
-      sum(dec(col("_t")) * dec(col("_s2"))).as("_ss"),
-      sum(dec(col("_t")) * dec(col("_s2")) * dec(col("_s2")))
-        .as("_ssq"))
-    val nD = col("n").cast("double")
-    val e2 = col("n1").cast("double") *
-      col("_ss").cast("double") / nD
-    val var2 = col("n1").cast("double") * col("n0").cast("double") *
-      (nD * col("_ssq").cast("double") -
-        col("_ss").cast("double") * col("_ss").cast("double")) /
-      (nD * nD * (nD - 1.0))
+      sum(col("_c1")).as("n1") +: sum(col("_c0")).as("n0") +:
+        inwardScoreSums: _*)
     val staged = agg.select(col("n"), col("n0"), col("n1"),
       d6(col("_ab2").cast("double") / 2.0).as("ab_stat"),
-      when(var2 > 0.0,
-        d6((col("_ab2").cast("double") - e2) / sqrt(var2))).as("z"))
+      inwardScoreZ(col("n").cast("double"), col("n0").cast("double"),
+        col("n1").cast("double")).as("z"))
     staged
       .withColumn("p_value", when(col("z").isNotNull,
         d6(normalTwoSidedP(col("z")))))
@@ -6735,21 +6762,14 @@ object Stats {
       yCol: String): DataFrame = {
     val base = df.select(col(xCol).cast("long").as("_x"),
       col(yCol).cast("long").as("_y"))
-    val agg = base.agg(count(lit(1)).as("_n"),
-      sum(dec(col("_x"))).as("_sx"), sum(dec(col("_y"))).as("_sy"),
-      sum(dec(col("_x")) * dec(col("_x"))).as("_sxx"),
-      sum(dec(col("_x")) * dec(col("_y"))).as("_sxy"),
-      sum(dec(col("_y")) * dec(col("_y"))).as("_syy"))
+    val agg = crossMoments(base.groupBy(), "_n", "x", "y", "xx", "xy", "yy")
     val n = when(col("_n") >= 2L, col("_n"))
       .otherwise(raise_error(concat(lit("linConcordance: "),
         col("_n").cast("string"), lit(" rows (< 2)"))).cast("long"))
     val g = agg.select(n.as("n"), col("_sx"), col("_sy"),
-      (dec(col("_n")) * col("_sxx") - col("_sx") * col("_sx"))
-        .as("_Sxx"),
-      (dec(col("_n")) * col("_sxy") - col("_sx") * col("_sy"))
-        .as("_Sxy"),
-      (dec(col("_n")) * col("_syy") - col("_sy") * col("_sy"))
-        .as("_Syy"))
+      cleared("_n", "_sxx", "_sx", "_sx").as("_Sxx"),
+      cleared("_n", "_sxy", "_sx", "_sy").as("_Sxy"),
+      cleared("_n", "_syy", "_sy", "_sy").as("_Syy"))
     // cleared mean gap: n²(x̄−ȳ)² = (Σx−Σy)²·1 — scaled n² like the S's
     val gap = (col("_sx") - col("_sy")) * (col("_sx") - col("_sy"))
     val den = (col("_Sxx") + col("_Syy") + gap).cast("double")
@@ -6976,14 +6996,9 @@ object Stats {
       q: Double): DataFrame = {
     require(q > 0 && q < 1, s"q in (0,1), got $q")
     val W = org.apache.spark.sql.expressions.Window
-    val p = guardedP(pCol, keyCol, "byFdr")
     val wAll = W.partitionBy(lit(1))
       .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    val ranked = df
-      .select(col(keyCol), p.as("p_value"))
-      .withColumn("rank", row_number()
-        .over(W.orderBy(col("p_value").asc, col(keyCol).asc)).cast("long"))
-      .withColumn("_m", count(lit(1)).over(wAll))
+    val ranked = rankedP(df, keyCol, pCol, "byFdr")
       .withColumn("_c", sum(d28(d6(lit(1.0) /
         col("rank").cast("double")))).over(wAll).cast("double"))
     val scaled = col("p_value") * col("_m").cast("double") * col("_c")
@@ -7266,15 +7281,8 @@ object Stats {
       df: DataFrame,
       raterACol: String,
       raterBCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val wAll = W.partitionBy(lit(1))
-      .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    val cells = df.select(col(raterACol).cast("long").as("_a"),
-        col(raterBCol).cast("long").as("_b"))
-      .groupBy(col("_a"), col("_b")).agg(count(lit(1)).as("_o"))
-      .withColumn("_ra", sum(col("_o")).over(W.partitionBy(col("_a"))))
-      .withColumn("_cb", sum(col("_o")).over(W.partitionBy(col("_b"))))
-      .withColumn("_n", sum(col("_o")).over(wAll))
+    val cells = contingencyMargins(observedCells(df,
+      col(raterACol).cast("long"), col(raterBCol).cast("long")), "_n")
     val d2 = dec(col("_a") - col("_b")) * dec(col("_a") - col("_b"))
     val agg = cells.agg(max(col("_n")).as("n_items"),
       sum(d2 * dec(col("_o"))).as("_num"),
@@ -7683,13 +7691,11 @@ object Stats {
     val byVal = df.select(col(xCol).cast("long").as("_x"))
       .groupBy(col("_x"))
       .agg(count(lit(1)).as("_t"))
-    val wBefore = W.orderBy(col("_x").asc)
-      .rowsBetween(W.unboundedPreceding, -1)
     val wFrame = W.orderBy(col("_x").asc)
       .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     val cells = byVal
-      .withColumn("_cb", coalesce(sum(col("_t")).over(wBefore), lit(0L)))
-      .withColumn("_n", sum(col("_t")).over(wFrame))
+      .withColumn("_cb", cumBelow("_x", "_t"))
+      .withColumn("_n", valueTotal("_x", "_t"))
       .withColumn("_s", sum(dec(col("_x")) * dec(col("_t")))
         .over(wFrame))
       .withColumn("_q", sum(dec(col("_x")) * dec(col("_x")) *
@@ -7765,15 +7771,8 @@ object Stats {
       df: DataFrame,
       aCol: String,
       bCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val wAll = W.partitionBy(lit(1))
-      .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    val cells = df.select(col(aCol).cast("string").as("_a"),
-        col(bCol).cast("string").as("_b"))
-      .groupBy(col("_a"), col("_b")).agg(count(lit(1)).as("_o"))
-      .withColumn("_ra", sum(col("_o")).over(W.partitionBy(col("_a"))))
-      .withColumn("_cb", sum(col("_o")).over(W.partitionBy(col("_b"))))
-      .withColumn("_nn", sum(col("_o")).over(wAll))
+    val cells = contingencyMargins(observedCells(df,
+        col(aCol).cast("string"), col(bCol).cast("string")), "_nn")
       .withColumn("_term", d6(lit(2.0) * col("_o").cast("double") *
         log((dec(col("_o")) * dec(col("_nn"))).cast("double") /
           (dec(col("_ra")) * dec(col("_cb"))).cast("double"))))
@@ -7904,16 +7903,11 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val byVal = twoArmValueCells(df, "brunnerMunzel", armCol, xCol)
-    val wBefore = W.orderBy(col("_x").asc)
-      .rowsBetween(W.unboundedPreceding, -1)
-    // doubled midranks per value run: 2·avgRank = 2·cumBefore + t + 1
-    // (= 2·rank + tieCount − 1 of the old row-level windows — exact)
-    val cells = byVal
-      .withColumn("_cbt", coalesce(sum(col("_t")).over(wBefore), lit(0L)))
-      .withColumn("_cb0", coalesce(sum(col("_c0")).over(wBefore), lit(0L)))
-      .withColumn("_cb1", coalesce(sum(col("_c1")).over(wBefore), lit(0L)))
+    // pooled and within-arm doubled midranks per value run
+    val cells = twoArmValueCells(df, "brunnerMunzel", armCol, xCol)
+      .withColumn("_cbt", cumBelow("_x", "_t"))
+      .withColumn("_cb0", cumBelow("_x", "_c0"))
+      .withColumn("_cb1", cumBelow("_x", "_c1"))
       .withColumn("_gr2", lit(2L) * col("_cbt") + col("_t") + 1L)
       .withColumn("_q20",
         col("_gr2") - (lit(2L) * col("_cb0") + col("_c0") + 1L))
@@ -8166,17 +8160,9 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val byVal = twoArmValueCells(df, "cucconiTest", armCol, xCol)
-    val wBefore = W.orderBy(col("_x").asc)
-      .rowsBetween(W.unboundedPreceding, -1)
-    val wFrame = W.orderBy(col("_x").asc)
-      .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    val cells = byVal
-      .withColumn("_r2", lit(2L) *
-        coalesce(sum(col("_t")).over(wBefore), lit(0L)) +
-        col("_t") + 1L)
-      .withColumn("_n", sum(col("_t")).over(wFrame))
+    val cells = twoArmValueCells(df, "cucconiTest", armCol, xCol)
+      .withColumn("_r2", doubledMidrank("_x", "_t"))
+      .withColumn("_n", valueTotal("_x", "_t"))
       .withColumn("_k2", lit(2L) * (col("_n") + 1L) - col("_r2"))
     val agg = cells.agg(max(col("_n")).as("_nr"),
       sum(col("_c0")).as("_n0"), sum(col("_c1")).as("_n1"),
@@ -8249,28 +8235,14 @@ object Stats {
       df: DataFrame,
       armCol: String,
       xCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val byVal = twoArmValueCells(df, "lepageTest", armCol, xCol)
-    val wBefore = W.orderBy(col("_x").asc)
-      .rowsBetween(W.unboundedPreceding, -1)
-    val wFrame = W.orderBy(col("_x").asc)
-      .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    val cells = byVal
-      .withColumn("_r2", lit(2L) *
-        coalesce(sum(col("_t")).over(wBefore), lit(0L)) +
-        col("_t") + 1L)
-      .withColumn("_n", sum(col("_t")).over(wFrame))
-      .withColumn("_s2",
-        least(col("_r2"), lit(2L) * (col("_n") + 1L) - col("_r2")))
+    val cells = twoArmValueCells(df, "lepageTest", armCol, xCol)
+      .withColumn("_r2", doubledMidrank("_x", "_t"))
+      .withColumn("_n", valueTotal("_x", "_t"))
+      .withColumn("_s2", inwardScore2)
     val agg = cells.agg(max(col("_n")).as("_nr"),
-      sum(col("_c0")).as("_n0"), sum(col("_c1")).as("_n1"),
-      sum(dec(col("_c1")) * dec(col("_r2"))).as("_r1x2"),
-      sum(dec(col("_t")) * dec(col("_t")) * dec(col("_t")) -
-        dec(col("_t"))).as("_ties"),
-      sum(col("_c1") * col("_s2")).as("_ab2"),
-      sum(dec(col("_t")) * dec(col("_s2"))).as("_ss"),
-      sum(dec(col("_t")) * dec(col("_s2")) * dec(col("_s2")))
-        .as("_ssq"))
+      Seq(sum(col("_c0")).as("_n0"), sum(col("_c1")).as("_n1"),
+        sum(dec(col("_c1")) * dec(col("_r2"))).as("_r1x2"),
+        tieSum.as("_ties")) ++ inwardScoreSums: _*)
     val guarded = agg.select(
       when(col("_n0") >= 1L && col("_n1") >= 1L, col("_n0"))
         .otherwise(raise_error(concat(
@@ -8289,17 +8261,8 @@ object Stats {
       ((n + 1.0) - col("_ties").cast("double") / (n * (n - 1.0)))
     val zW = when(varU > 0.0,
       d6((u1x2.cast("double") - n0 * n1) / (lit(2.0) * sqrt(varU))))
-    // Ansari–Bradley component — ansariBradley's exact chain verbatim
-    val nD = col("_n").cast("double")
-    val e2 = n1 * col("_ss").cast("double") / nD
-    val var2 = n1 * n0 *
-      (nD * col("_ssq").cast("double") -
-        col("_ss").cast("double") * col("_ss").cast("double")) /
-      (nD * nD * (nD - 1.0))
-    val zA = when(var2 > 0.0,
-      d6((col("_ab2").cast("double") - e2) / sqrt(var2)))
-    val staged = guarded.select(col("n_a"), col("n_b"),
-      zW.as("z_wilcoxon"), zA.as("z_ansari"))
+    val staged = guarded.select(col("n_a"), col("n_b"), zW.as("z_wilcoxon"),
+      inwardScoreZ(col("_n").cast("double"), n0, n1).as("z_ansari"))
     staged
       .withColumn("lepage_l",
         when(col("z_wilcoxon").isNotNull && col("z_ansari").isNotNull,
@@ -8335,20 +8298,8 @@ object Stats {
       durationCol: String,
       eventCol: String,
       groupCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
-    val g = flag01("gehanWilcoxon", "group flag", col(groupCol))
-    val byT = df
-      .select(col(durationCol).cast("long").as("_t"),
-        col(eventCol).cast("long").as("_d"), g.as("_g"))
-      .groupBy(col("_t"))
-      .agg(count(lit(1)).as("_n"), sum(col("_g")).as("_n1"),
-        sum(col("_d")).as("_d"), sum(col("_d") * col("_g")).as("_d1"))
-    val wRev = W.partitionBy(lit(1)).orderBy(col("_t").asc)
-      .rowsBetween(W.currentRow, W.unboundedFollowing)
-    val risk = byT
-      .withColumn("_nr", sum(col("_n")).over(wRev))
-      .withColumn("_n1r", sum(col("_n1")).over(wRev))
-      .filter(col("_d") > 0L)
+    val risk = riskSets(df, durationCol, eventCol, groupCol,
+      "gehanWilcoxon")
     val p1 = col("_n1r").cast("double") / col("_nr").cast("double")
     val uTerm = d6(col("_nr").cast("double") *
       (col("_d1").cast("double") - col("_d").cast("double") * p1))
@@ -8408,7 +8359,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       xCol: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
     // NULL group raises loudly (ADVICE r17: a NULL group would inflate
     // N and the tie term while vanishing from every output pair — both
     // `<` orderings fail — silently deflating all z's; the file's
@@ -8423,20 +8373,8 @@ object Stats {
       .groupBy(col("_g"), col("_x"))
       .agg(count(lit(1)).as("_c"))
     val byVal = cells.groupBy(col("_x")).agg(sum(col("_c")).as("_t"))
-    val wBefore = W.orderBy(col("_x").asc)
-      .rowsBetween(W.unboundedPreceding, -1)
-    val withR2 = byVal
-      .withColumn("_r2", lit(2L) *
-        coalesce(sum(col("_t")).over(wBefore), lit(0L)) +
-        col("_t") + 1L)
-    val tot = byVal.agg(sum(col("_t")).as("_N"),
-      sum(dec(col("_t")) * dec(col("_t")) * dec(col("_t")) -
-        dec(col("_t"))).as("_T"))
-    val perG = cells
-      .join(withR2.select(col("_x"), col("_r2")), Seq("_x"))
-      .groupBy(col("_g"))
-      .agg(sum(col("_c")).as("_ng"),
-        sum(dec(col("_c")) * dec(col("_r2"))).as("_sr"))
+    val tot = byVal.agg(sum(col("_t")).as("_N"), tieSum.as("_T"))
+    val perG = groupRankSums(cells, byVal, "_x", "_ng", "_sr")
       .withColumn("_rbar",
         d6(col("_sr").cast("double") /
           (lit(2.0) * col("_ng").cast("double"))))
@@ -8507,15 +8445,7 @@ object Stats {
       s"lambdaPermille in [1,999], got $lambdaPermille")
     val W = org.apache.spark.sql.expressions.Window
     val lam = lambdaPermille.toDouble / 1000.0
-    val p = guardedP(pCol, keyCol, "storeyQValues")
-    val ranked = df
-      .select(col(keyCol), p.as("p_value"))
-      .withColumn("rank", row_number()
-        .over(W.orderBy(col("p_value").asc, col(keyCol).asc))
-        .cast("long"))
-      .withColumn("_m", count(lit(1)).over(
-        W.partitionBy(lit(1))
-          .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)))
+    val ranked = rankedP(df, keyCol, pCol, "storeyQValues")
       .withColumn("_tail", sum((col("p_value") > lam).cast("long"))
         .over(W.partitionBy(lit(1))
           .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)))

@@ -69,14 +69,8 @@ final class CopyTask extends TaskRunner {
     (src, dst) match {
       case (Some(s0), Some(d0)) =>
         sourceRef = s0
-        val ddlResult = cfg.get("ddl")
-          .orElse(cfg.get("columns").map(c => Map("columns" -> c))) match {
-          case Some(m: Map[_, _]) => Ddl.fromMap(m.asInstanceOf[Map[String, Any]])
-          case _ => Right(Ddl.empty)
-        }
-        ddlResult.flatMap { d =>
+        Ddl.fromConfig(cfg, ctx.track.warn).flatMap { d =>
           ddl = d
-          d.typeWarnings.foreach(ctx.track.warn)
           for {
             s1 <- ctx.compile(s0)
             d1 <- ctx.compile(d0)

@@ -49,13 +49,8 @@ final class SqlTask(isAutoSql: Boolean) extends TaskRunner {
 
     firstPass.flatMap { _ =>
       validate().flatMap { _ =>
-        val ddlMap = cfg.get("ddl").orElse(cfg.get("columns").map(c => Map("columns" -> c)))
-        (ddlMap match {
-          case Some(m: Map[_, _]) => Ddl.fromMap(m.asInstanceOf[Map[String, Any]])
-          case _ => Right(Ddl.empty)
-        }).flatMap { d =>
+        Ddl.fromConfig(cfg, ctx.track.warn).flatMap { d =>
           ddl = d
-          d.typeWarnings.foreach(ctx.track.warn)
           // yaml values are templated too (task_wrapper.py:128-249), then
           // the destination resolves through out() (autosql.py:184-210)
           destination match {

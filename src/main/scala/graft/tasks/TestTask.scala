@@ -20,14 +20,8 @@ final class TestTask extends TaskRunner {
     this.ctx = ctx
     customSql = cfg.get("sql").orElse(cfg.get("file_contents")).map(_.toString)
     val tableRef = cfg.get("table").map(_.toString)
-    val ddlResult = cfg.get("ddl")
-      .orElse(cfg.get("columns").map(c => Map("columns" -> c))) match {
-      case Some(m: Map[_, _]) => Ddl.fromMap(m.asInstanceOf[Map[String, Any]])
-      case _ => Right(Ddl.empty)
-    }
-    ddlResult.flatMap { d =>
+    Ddl.fromConfig(cfg, ctx.track.warn).flatMap { d =>
       ddl = d
-      d.typeWarnings.foreach(ctx.track.warn)
       (customSql, tableRef) match {
         case (Some(_), _) => Right(())
         case (None, Some(t)) =>

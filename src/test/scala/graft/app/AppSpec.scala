@@ -222,6 +222,29 @@ class AppSpec extends SparkSpec {
     assert(report.statuses("independent") == TaskStatus.Succeeded)
   }
 
+  test("a ddl that is not a map fails its task's config, naming ddl") {
+    // a ddl given as a list of names (not {columns: [...]}) would
+    // otherwise drop the declared column tests without a word
+    val base = Map("materialisation" -> "table", "sql" -> "SELECT 1 AS id")
+    val specs = Seq(
+      TaskSpec("ddl_list", "g", base ++ Map("type" -> "autosql",
+        "destination" -> "ddl_list_dst",
+        "ddl" -> Seq(Map("name" -> "id", "tests" -> Seq("unique"))))),
+      TaskSpec("ddl_text", "g", Map("type" -> "test",
+        "sql" -> "SELECT 1 WHERE 1 = 0", "ddl" -> "id")),
+      TaskSpec("ddl_columns", "g", base ++ Map("type" -> "autosql",
+        "destination" -> "ddl_columns_dst", "columns" -> Seq("id"))))
+    val Right(report) = mkApp().run(specs)
+    Seq("ddl_list", "ddl_text").foreach { n =>
+      assert(report.statuses(n) == TaskStatus.Failed, n)
+      assert(report.errors(n).kind == "config", report.errors(n))
+      assert(report.errors(n).msg.contains("ddl must be a map"),
+        report.errors(n))
+    }
+    assert(report.statuses("ddl_columns") == TaskStatus.Succeeded,
+      report.errors)
+  }
+
   test("test task: custom sql failing surfaces offending rows") {
     db.replaceTable("t_src", "SELECT 1 AS x UNION ALL SELECT -1")
     val failing = Seq(TaskSpec("t_fail", "g", Map(

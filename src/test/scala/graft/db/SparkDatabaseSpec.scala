@@ -275,21 +275,6 @@ class SparkDatabaseSpec extends SparkSpec {
     assert(plan.split("Expand").length - 1 == 1, plan)
   }
 
-  test("acidMerge flag routes to DELETE+INSERT and fails loudly on v1 tables") {
-    // no ACID catalog is bundled, so on plain parquet the DELETE FROM
-    // must surface Spark's v2-tables error — loud misconfiguration, not
-    // silent degradation (docs/ACID_MERGE.md)
-    val acidDb = new SparkDatabase(spark, acidMerge = true)
-    assert(acidDb.replaceTable("acid_dst", "SELECT id, 'old' AS v FROM RANGE(4)").isRight)
-    assert(acidDb.replaceTable("acid_src", "SELECT 1 AS id, 'new' AS v").isRight)
-    val r = acidDb.mergeTables("acid_src", "acid_dst", "id")
-    assert(r.isLeft)
-    assert(r.left.exists(_.toString.toLowerCase.contains("delete")))
-    // destination untouched, source not dropped
-    assert(spark.table("acid_dst").count() == 4)
-    assert(acidDb.tableExists("acid_src"))
-  }
-
   test("moveTable keeps the destination alive when the rename fails") {
     assert(db.replaceTable("atomic_dst", "SELECT 1 AS x").isRight)
     // src missing → ALTER TABLE RENAME throws → backup must be restored

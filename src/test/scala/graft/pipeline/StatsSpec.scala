@@ -143,6 +143,21 @@ class StatsSpec extends SparkSpec {
     assert(e2.getMessage.contains("mannWhitneyU"))
   }
 
+  test("mannWhitneyU rejects an arm value that is not 0/1") {
+    // an arm of 2 or NULL would otherwise fall out of both arms unseen
+    Seq[Option[Int]](Some(2), None).foreach { bad =>
+      val df = Seq((Some(0), 1L), (Some(0), 2L), (Some(1), 3L), (Some(1), 4L),
+        (bad, 5L)).toDF("arm", "v")
+      val e = intercept[Exception] {
+        Stats.mannWhitneyU(df, "arm", "v").collect()
+      }
+      // flag01 renders a NULL arm as a NULL message, so only 2 is named
+      if (bad.isDefined)
+        assert(e.getMessage.contains("mannWhitneyU: arm flag 2 is not 0/1"),
+          e.getMessage)
+    }
+  }
+
   test("passAtK matches the closed-form combinatorics") {
     // problem 1: n=4, c=2 → pass@1 = 1 − C(2,1)/C(4,1)·… product form:
     // 1 − (2/4) = 0.5; pass@3 = 1 − (2·1·0)/(4·3·2) = 1.0

@@ -175,6 +175,77 @@ class InventorySpec extends AnyFunSuite {
       s"Similarity.quantize / Similarity.topK):\n${copies.mkString("\n")}")
   }
 
+  test("the cumulative-below midrank window, the exact cross-moment " +
+    "aggregate and the p-value rank are built only in Stats' shared " +
+    "stages") {
+    // every rank test, moment estimator and multiple-testing adjustment
+    // composes Stats.cumBelow/doubledMidrank, Stats.crossMoments and
+    // Stats.rankedP; a local copy drifts from the one the oracles
+    // replay. Code is matched per enclosing def with whitespace removed,
+    // so a copy split over lines is still found. Exempt: comments, the
+    // oracle-SQL text (stripMargin lines and string literals) and the
+    // stages' own bodies. The per-item window of completeBlocks is the
+    // one partitioned form.
+    val MidrankWindow = """coalesce\(sum\(col\("_(t|m|c0|c1)"\)\)\.over\(""".r
+    val PRank = """row_number\(\)\.over\(\w+\.orderBy\(col\("p_value"\)""".r
+    // an aggregate of a count and nothing but Σdec(a) as `_sa` and
+    // Σdec(a)·dec(b) as `_sab`, at least one of them a product
+    val Moment = ("""sum\(dec\(col\("_(\w)"\)\)""" +
+      """(?:\*dec\(col\("_(\w)"\)\))?\)\.as\("_s(\w+)"\)""").r
+    val MomentAgg = ("""\.agg\(count\(lit\(1\)\)\.as\("\w+"\)(?:,""" +
+      Moment.regex + """)+\)""").r
+    def crossMoments(agg: String): Boolean = {
+      val terms = Moment.findAllMatchIn(agg).toSeq
+      terms.exists(_.group(2) != null) && terms.forall(t =>
+        t.group(3) == t.group(1) + Option(t.group(2)).getOrElse(""))
+    }
+    val DefName = """^\s*(?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
+    val stages = Set("completeBlocks", "rankedP")
+    def inString(text: String, at: Int): Boolean =
+      text.take(at).count(_ == '"') % 2 == 1
+    val copies = for {
+      f <- mainSources
+      isStats = f.getFileName.toString == "Stats.scala"
+      lines = java.nio.file.Files.readAllLines(f).asScala.toVector
+      enclosing = lines.scanLeft("") {
+        case (_, DefName(d)) => d
+        case (d, _) => d
+      }.tail
+      code = lines.zipWithIndex.zip(enclosing).collect {
+        case ((line, i), owner) if {
+            val t = line.trim
+            !t.startsWith("|") && !t.startsWith("*") &&
+              !t.startsWith("//") && !t.startsWith("/*")
+          } =>
+          val cut = line.indexOf("//")
+          val kept =
+            if (cut >= 0 && !inString(line, cut)) line.take(cut) else line
+          (owner, i, kept.filterNot(_.isWhitespace))
+      }
+      (owner, group) <-
+        code.foldRight(List.empty[(String, List[(Int, String)])]) {
+          case ((o, i, c), (o2, g) :: rest) if o == o2 =>
+            (o, (i, c) :: g) :: rest
+          case ((o, i, c), acc) => (o, List((i, c))) :: acc
+        }
+      if !(isStats && stages(owner))
+      text = group.map(_._2).mkString
+      lineAt = group.scanLeft(0)(_ + _._2.length).tail.zip(group.map(_._1))
+      (at, what) <- (MidrankWindow.findAllMatchIn(text).map(m =>
+          (m.start, "midrank window")) ++
+        PRank.findAllMatchIn(text).map(m => (m.start, "p-value rank")) ++
+        MomentAgg.findAllMatchIn(text).collect {
+          case m if crossMoments(m.matched) =>
+            (m.start, "cross-moment aggregate")
+        }).toSeq
+      if !inString(text, at)
+      line = lineAt.collectFirst { case (end, i) if at < end => i }.get
+    } yield s"$f:${line + 1}: $what: ${lines(line).trim}"
+    assert(copies.isEmpty, s"local statistical stages (use Stats.cumBelow" +
+      s" / doubledMidrank / crossMoments / rankedP):\n" +
+      copies.distinct.mkString("\n"))
+  }
+
   test("every class-6 global-order operator in docs/SCALING.md names " +
     "a sanctioned shape whose evidence exists in its source") {
     // class-6 lockstep (VERDICT r16 #2): the table row IS the promise
