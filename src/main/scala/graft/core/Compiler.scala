@@ -8,14 +8,15 @@ import scala.collection.mutable
   *
   *   - `{{ expression }}` substitution over parameters and globals
   *     (`full_load`, `start_dt`, `end_dt`, `task.name`, `task.group`)
-  *     plus the three macros `src('obj')`, `out('obj')`,
-  *     `config(key=value, ...)`;
+  *     plus the built-in calls `src('obj')`, `out('obj')`,
+  *     `config(key=value, ...)` and `range(stop)` /
+  *     `range(start, stop[, step])`;
   *   - control flow: `{% if cond %}` / `{% elif %}` / `{% else %}` /
   *     `{% endif %}` and `{% for x in seq %}` / `{% endfor %}` with Jinja's
   *     `loop.index/index0/first/last/length` variables;
-  *   - filter pipes in interpolations: `{{ x | default('d') | upper }}` —
-  *     default (incl. boolean mode), join, upper, lower, trim, replace,
-  *     capitalize, title, length/count, first, last;
+  *   - filter pipes: `x | default('d') | upper` — default (incl. boolean
+  *     mode), join, upper, lower, trim, replace, capitalize, title,
+  *     length/count, first, last, int, float, abs, round, min, max;
   *   - `{% macro name(arg, arg2='default') %}` … `{% endmacro %}` with
   *     positional/keyword/default arguments and definition-scope closure;
   *   - cross-file composition via the Context loader: `{% include 'f' %}`
@@ -23,16 +24,29 @@ import scala.collection.mutable
   *     the file's macros/assignments), `{% from 'f' import a, b as c %}`
   *     and namespaced `{% import 'f' as ns %}` with dotted access
   *     (`{{ ns.macro(...) }}`, `{{ ns.var }}`);
+  *   - `{% set var = expr %}` assignments;
   *   - `{% raw %} … {% endraw %}` verbatim blocks (template syntax
   *     inside passes through untouched — the escape hatch for SQL that
   *     itself contains `{{`);
   *   - `{# comments #}` (dropped).
   *
+  * Every expression position — `{{ }}`, `{% set %}`, `{% if %}`/`{% elif
+  * %}`, the `{% for %}` iterable, include/import paths, macro defaults,
+  * call and filter arguments — is one [[Expr]] grammar, parsed into an
+  * AST when it is first evaluated and walked by one evaluator, so the
+  * same text means the same value wherever it appears. Filters bind to
+  * the operand on their left, tighter than arithmetic and comparison
+  * (`xs | length > 2`); `and`/`or` skip their right operand as Python
+  * does, so a skipped `src()` records no lineage and a skipped division
+  * raises nothing.
+  *
   * Conditions follow Python/Jinja semantics: truthiness (None/false/""/0/
-  * empty list are falsy), `== != < <= > >=`, `in`/`not in`, `not`, `and`,
-  * `or`, parentheses; an undefined variable evaluates as None (Jinja's
-  * falsy Undefined) rather than erroring, because reference projects guard
-  * optional parameters with bare `{% if flag %}`.
+  * empty list are falsy). An undefined name is Jinja's Undefined: an
+  * error in `{{ }}` unless piped into `default`, false under `is
+  * defined`, and None (falsy) everywhere else, because reference
+  * projects guard optional parameters with bare `{% if flag %}`. In a
+  * call or filter argument a bare name with no binding is its own text
+  * (`src(schema.table)`).
   */
 object Compiler {
 
@@ -58,15 +72,16 @@ object Compiler {
 
   private sealed trait Node
   private final case class Text(s: String) extends Node
-  private final case class Interp(expr: String) extends Node
+  private final case class Interp(expr: Expr.Src) extends Node
   private final case class IfNode(
-      branches: Seq[(String, Seq[Node])], elseBody: Seq[Node]) extends Node
+      branches: Seq[(Expr.Src, Seq[Node])], elseBody: Seq[Node]) extends Node
   private final case class ForNode(
-      varName: String, iterExpr: String, body: Seq[Node]) extends Node
-  private final case class SetNode(varName: String, expr: String) extends Node
+      varName: String, iter: Expr.Src, body: Seq[Node]) extends Node
+  private final case class SetNode(varName: String, expr: Expr.Src) extends Node
   private final case class MacroNode(
-      name: String, params: Seq[(String, Option[Any])], body: Seq[Node]) extends Node
-  private final case class IncludeNode(pathExpr: String) extends Node
+      name: String, params: Seq[(String, Option[Expr.Ast])],
+      body: Seq[Node]) extends Node
+  private final case class IncludeNode(path: Expr.Src) extends Node
   /** `names = None` imports every macro/assignment; `Some(ns)` is the
     * `{% from %}` form restricted to those `(source, boundAs)` pairs —
     * `boundAs` differs from `source` under `{% from 'f' import a as b %}`.
@@ -75,14 +90,15 @@ object Compiler {
     * with dotted access (`{{ ns.macro(...) }}`, `{{ ns.var }}`).
     */
   private final case class ImportNode(
-      pathExpr: String, names: Option[Seq[(String, String)]],
+      path: Expr.Src, names: Option[Seq[(String, String)]],
       alias: Option[String] = None) extends Node
 
   /** A defined `{% macro %}`, stored in the template scope like any other
-    * value; closes over its definition scope (Jinja semantics).
+    * value; closes over its definition scope (Jinja semantics). Defaults
+    * are expressions, evaluated against that scope at each call.
     */
   private final case class MacroDef(
-      name: String, params: Seq[(String, Option[Any])], body: Seq[Node],
+      name: String, params: Seq[(String, Option[Expr.Ast])], body: Seq[Node],
       defScope: Map[String, Any]) {
     override def toString: String = s"<macro $name>"
   }
@@ -164,7 +180,7 @@ object Compiler {
       while (i < toks.length) {
         toks(i) match {
           case TText(s) => out += Text(s); i += 1
-          case TInterp(e) => out += Interp(e); i += 1
+          case TInterp(e) => out += Interp(new Expr.Src(e)); i += 1
           case TTag(tag) =>
             val keyword = tag.split("\\s+", 2).head
             if (stop.contains(keyword)) return Right((out.toSeq, Some(tag)))
@@ -185,7 +201,7 @@ object Compiler {
                 i += 1
                 val SetHeader = "^([a-zA-Z_][a-zA-Z0-9_]*)\\s*=\\s*(.+)$".r
                 tag.stripPrefix("set").trim match {
-                  case SetHeader(v, e) => out += SetNode(v, e)
+                  case SetHeader(v, e) => out += SetNode(v, new Expr.Src(e))
                   case other => return Left(ParseError(
                     s"malformed set tag: {% set $other %} (expected {% set var = expr %})"))
                 }
@@ -197,7 +213,7 @@ object Compiler {
                 }
               case "include" =>
                 i += 1
-                out += IncludeNode(tag.stripPrefix("include").trim)
+                out += IncludeNode(new Expr.Src(tag.stripPrefix("include").trim))
               case "import" =>
                 i += 1
                 val header = tag.stripPrefix("import").trim
@@ -207,14 +223,14 @@ object Compiler {
                   // bind under the single name `ns`, reached via dotted
                   // access — Jinja module semantics
                   case NsHeader(path, ns) =>
-                    out += ImportNode(path.trim, None, Some(ns))
+                    out += ImportNode(new Expr.Src(path.trim), None, Some(ns))
                   case _ if header.split("\\s+").contains("as") =>
                     return Left(ParseError(
                       s"malformed import tag: {% import $header %} " +
                         "(expected {% import 'file' %} or " +
                         "{% import 'file' as ns %})"))
                   case _ =>
-                    out += ImportNode(header, None)
+                    out += ImportNode(new Expr.Src(header), None)
                 }
               case "from" =>
                 i += 1
@@ -238,7 +254,7 @@ object Compiler {
                     parsed.collectFirst { case Left(e) => e } match {
                       case Some(e) => return Left(e)
                       case None =>
-                        out += ImportNode(path.trim,
+                        out += ImportNode(new Expr.Src(path.trim),
                           Some(parsed.collect { case Right(p) => p }))
                     }
                   case other => return Left(ParseError(
@@ -256,7 +272,7 @@ object Compiler {
     }
 
     def parseIf(firstCond: String): Result[Node] = {
-      val branches = mutable.ArrayBuffer.empty[(String, Seq[Node])]
+      val branches = mutable.ArrayBuffer.empty[(Expr.Src, Seq[Node])]
       var cond = firstCond
       var elseBody: Seq[Node] = Nil
       var closed = false
@@ -264,7 +280,7 @@ object Compiler {
         parseBlock(Set("elif", "else", "endif")) match {
           case Left(e) => return Left(e)
           case Right((body, Some(tag))) =>
-            branches += ((cond, body))
+            branches += ((new Expr.Src(cond), body))
             i += 1 // consume the stop tag
             val kw = tag.split("\\s+", 2).head
             kw match {
@@ -291,7 +307,8 @@ object Compiler {
         case ForHeader(v, iterExpr) =>
           parseBlock(Set("endfor")) match {
             case Left(e) => Left(e)
-            case Right((body, Some(_))) => i += 1; Right(ForNode(v, iterExpr, body))
+            case Right((body, Some(_))) =>
+              i += 1; Right(ForNode(v, new Expr.Src(iterExpr), body))
             case Right((_, None)) =>
               Left(ParseError("unclosed {% for %}: missing {% endfor %}"))
           }
@@ -301,77 +318,36 @@ object Compiler {
       }
     }
 
-    def parseMacro(header: String): Result[Node] = {
-      val MacroHeader = "^([a-zA-Z_][a-zA-Z0-9_]*)\\s*\\((.*)\\)$".r
-      header match {
-        case MacroHeader(name, sig) =>
-          if (Set("src", "out", "config").contains(name))
-            return Left(ParseError(
-              s"macro name '$name' shadows a built-in template function"))
-          parseMacroSignature(sig).flatMap { params =>
-            parseBlock(Set("endmacro")) match {
-              case Left(e) => Left(e)
-              case Right((body, Some(_))) =>
-                i += 1; Right(MacroNode(name, params, body))
-              case Right((_, None)) =>
-                Left(ParseError("unclosed {% macro %}: missing {% endmacro %}"))
-            }
+    /** The header `name(a, b='x', c=3)` is a call expression: its
+      * arguments, in declaration order, are the parameters — a bare
+      * name, or `name=default` with the default kept as an expression.
+      */
+    def parseMacro(header: String): Result[Node] = Expr.parse(header) match {
+      case Right(Expr.Call(name, args)) if !name.contains('.') =>
+        if (Set("src", "out", "config").contains(name))
+          return Left(ParseError(
+            s"macro name '$name' shadows a built-in template function"))
+        Result.sequence(args.map {
+          case (None, Expr.Name(p)) if !p.contains('.') => Right((p, None))
+          case (Some(p), default) => Right((p, Some(default)))
+          case _ => Left(ParseError(s"bad macro parameter in '{% macro $header %}'"))
+        }).flatMap { params =>
+          parseBlock(Set("endmacro")) match {
+            case Left(e) => Left(e)
+            case Right((body, Some(_))) =>
+              i += 1; Right(MacroNode(name, params, body))
+            case Right((_, None)) =>
+              Left(ParseError("unclosed {% macro %}: missing {% endmacro %}"))
           }
-        case _ => Left(ParseError(s"malformed macro tag: {% macro $header %} " +
-          "(expected {% macro name(arg, arg2='default') %})"))
-      }
+        }
+      case _ => Left(ParseError(s"malformed macro tag: {% macro $header %} " +
+        "(expected {% macro name(arg, arg2='default') %})"))
     }
 
     parseBlock(Set.empty).flatMap {
       case (nodes, None) => Right(nodes)
       case (_, Some(tag)) => Left(ParseError(s"unexpected '{% $tag %}'"))
     }
-  }
-
-  /** Ordered macro parameter list: `a, b='x', c=3` — declaration order
-    * matters for positional binding, so this is not parseArgs (whose kw
-    * map loses interleaving).
-    */
-  private def parseMacroSignature(
-      sig: String): Result[Seq[(String, Option[Any])]] = {
-    val Plain = "^([a-zA-Z_][a-zA-Z0-9_]*)$".r
-    val WithDefault = "(?s)^([a-zA-Z_][a-zA-Z0-9_]*)\\s*=\\s*(.+)$".r
-    if (sig.trim.isEmpty) Right(Nil)
-    else Result.sequence(splitTopLevel(sig, ',').map(_.trim).map {
-      case Plain(n) => Right((n, None: Option[Any]))
-      case WithDefault(n, v) =>
-        parseArgs(v).flatMap {
-          case (Seq(one), kw) if kw.isEmpty => Right((n, Some(one): Option[Any]))
-          case _ => Left(ParseError(s"bad default for macro arg '$n': $v"))
-        }
-      case other => Left(ParseError(s"bad macro parameter '$other'"))
-    })
-  }
-
-  /** Split on a top-level separator, honoring quotes/parens/brackets. */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val parts = mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (quote != 0) {
-        cur.append(c)
-        if (c == '\\' && i + 1 < s.length) { cur.append(s(i + 1)); i += 1 }
-        else if (c == quote) quote = 0
-      } else c match {
-        case '\'' | '"' => quote = c; cur.append(c)
-        case '(' | '[' => depth += 1; cur.append(c)
-        case ')' | ']' => depth -= 1; cur.append(c)
-        case x if x == sep && depth == 0 => parts += cur.result(); cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    parts += cur.result()
-    parts.toSeq
   }
 
   // ---- renderer ----------------------------------------------------------
@@ -400,10 +376,8 @@ object Compiler {
       val piece: Result[String] = n match {
         case Text(s) => Right(s)
         case SetNode(v, e) =>
-          Expr.eval(e, scope) match {
-            case Right(value) =>
-              scope += (v -> value); definedKeys += v; Right("")
-            case Left(err) => Left(err)
+          value(e, ctx, scope).map { x =>
+            scope += (v -> x); definedKeys += v; ""
           }
         case MacroNode(mName, params, body) =>
           // closes over the CURRENT scope (Jinja semantics); visible to
@@ -412,22 +386,27 @@ object Compiler {
           scope += (mName -> MacroDef(mName, params, body, scope))
           definedKeys += mName
           Right("")
-        case Interp(e) => evalExpr(e, ctx, scope)
+        case Interp(e) =>
+          e.ast.flatMap(eval(_, scope, ctx, e.text)).flatMap {
+            case Expr.Undefined =>
+              Left(ParseError(s"undefined template variable '${e.text}'"))
+            case x => Right(renderValue(x))
+          }
         case IfNode(branches, elseBody) =>
           // Jinja semantics: conditions evaluate strictly in order and the
           // FIRST error propagates — a malformed guard must not be masked
           // by a later branch matching (a typo'd condition would silently
           // change the emitted SQL otherwise)
-          def choose(bs: Seq[(String, Seq[Node])]): Result[String] = bs match {
+          def choose(bs: Seq[(Expr.Src, Seq[Node])]): Result[String] = bs match {
             case (cond, body) +: rest =>
-              Expr.eval(cond, scope).flatMap(v =>
+              value(cond, ctx, scope).flatMap(v =>
                 if (Expr.truthy(v)) render(body, ctx, scope, depth)
                 else choose(rest))
             case _ => render(elseBody, ctx, scope, depth)
           }
           choose(branches)
-        case ForNode(v, iterExpr, body) =>
-          Expr.eval(iterExpr, scope).flatMap {
+        case ForNode(v, iter, body) =>
+          value(iter, ctx, scope).flatMap {
             case items: Seq[_] =>
               val n = items.length
               items.zipWithIndex.foldLeft(Right(""): Result[String]) {
@@ -443,19 +422,19 @@ object Compiler {
                   }
               }
             case other => Left(ParseError(
-              s"for-loop iterable '$iterExpr' is not a list (got " +
+              s"for-loop iterable '${iter.text}' is not a list (got " +
                 s"${if (other == null) "none" else other.getClass.getSimpleName})"))
           }
-        case IncludeNode(pathExpr) =>
+        case IncludeNode(path) =>
           // rendered with the CURRENT scope (Jinja include semantics);
           // scope changes inside the included file do not leak back
-          loadTemplate(pathExpr, ctx, scope)
+          loadTemplate(path, ctx, scope)
             .flatMap { case (_, nodes2) => render(nodes2, ctx, scope, depth + 1) }
-        case ImportNode(pathExpr, names, alias) =>
+        case ImportNode(path, names, alias) =>
           // Jinja import semantics: the imported template renders against
           // the GLOBAL context only (not the including scope), its output
           // is discarded, and its macros/assignments enter this scope
-          loadTemplate(pathExpr, ctx, scope).flatMap { case (path, nodes2) =>
+          loadTemplate(path, ctx, scope).flatMap { case (p, nodes2) =>
             renderScope(nodes2, ctx, ctx.params, depth + 1).flatMap {
               case (_, imported, importedKeys) =>
                 (names, alias) match {
@@ -478,7 +457,7 @@ object Compiler {
                       case (src, _) if !importedKeys.contains(src) => src
                     }
                     if (missing.nonEmpty)
-                      Left(ParseError(s"template '$path' does not define: " +
+                      Left(ParseError(s"template '$p' does not define: " +
                         missing.mkString(", ")))
                     else {
                       ns.foreach { case (src, alias) =>
@@ -505,9 +484,9 @@ object Compiler {
     * context loader, and parse the template.
     */
   private def loadTemplate(
-      pathExpr: String, ctx: Context,
+      path: Expr.Src, ctx: Context,
       scope: Map[String, Any]): Result[(String, Seq[Node])] =
-    Expr.eval(pathExpr, scope).flatMap {
+    value(path, ctx, scope).flatMap {
       case p: String =>
         ctx.loader(p) match {
           case Some(text) => parseTemplate(text).map((p, _))
@@ -519,39 +498,116 @@ object Compiler {
         s"include/import path must be a string, got: $other"))
     }
 
-  // dotted head names resolve through lookup(), so a namespaced-import
-  // macro ({{ ns.macro(...) }}) calls like a flat one
-  private val CallRe = "^([a-zA-Z_][a-zA-Z0-9_.]*)\\((.*)\\)$".r
+  // ---- the expression evaluator -------------------------------------------
 
-  /** An unquoted macro argument: `src(tbl)` references the template
-    * variable `tbl` (Jinja semantics); if no such variable exists the word
-    * is kept as a literal string (back-compat with `src(schema.table)`
-    * written unquoted).
+  /** An expression in a control position (`set`, `if`, `for`, include
+    * paths): an undefined result reads as None.
     */
-  private[core] final case class BareWord(word: String)
+  private def value(e: Expr.Src, ctx: Context, scope: Map[String, Any]): Result[Any] =
+    e.ast.flatMap(eval(_, scope, ctx, e.text)).map(Expr.orNone)
 
-  private def resolveArg(
-      v: Any, scope: Map[String, Any], ctx: Context,
-      isKwargValue: Boolean = false): Any =
-    v match {
-      case BareWord(w) => lookup(w, scope) match {
-        case Some(value) =>
-          // Dotted bare words are the back-compat LITERAL shape
-          // (src(schema.table) written unquoted), and keyword-argument
-          // values are conventionally literals too
-          // (config(materialisation=table)) — when a template variable
-          // shadows either, its meaning changes with the data, so surface
-          // it. Plain positional identifiers (src(s) in a for-loop) are
-          // ordinary Jinja variable references: no warning.
-          if (w.contains('.') || isKwargValue)
-            ctx.warn(s"macro argument '$w' resolved to template variable " +
-              s"'${renderValue(value)}'; quote it ('$w') to keep the literal")
-          value
-        case None => w
-      }
-      case xs: Seq[_] => xs.map(resolveArg(_, scope, ctx, isKwargValue))
-      case other => other
+  /** The one evaluator. Returns [[Expr.Undefined]] for an unbound name
+    * (and for `first`/`last` of an empty sequence); every operator, list
+    * item and argument reads that as None, while `{{ }}`, `default` and
+    * `is defined` tell it apart. `src` is the expression text, for
+    * messages.
+    */
+  private def eval(
+      e: Expr.Ast, scope: Map[String, Any], ctx: Context,
+      src: String): Result[Any] = {
+    def go(e: Expr.Ast): Result[Any] = e match {
+      case Expr.Lit(v) => Right(v)
+      case Expr.Name(p) => Right(lookup(p, scope).getOrElse(Expr.Undefined))
+      case Expr.ListOf(items) => Result.sequence(items.map(defined))
+      // Python short-circuit: the result is an operand, and the right
+      // one is evaluated only when the left does not decide
+      case Expr.Binary("and", l, r) =>
+        defined(l).flatMap(v => if (Expr.truthy(v)) defined(r) else Right(v))
+      case Expr.Binary("or", l, r) =>
+        defined(l).flatMap(v => if (Expr.truthy(v)) Right(v) else defined(r))
+      case Expr.Binary(op, l, r) =>
+        for (a <- defined(l); b <- defined(r); v <- Expr.binary(op, a, b, src))
+          yield v
+      case Expr.Unary(op, x) => defined(x).flatMap(Expr.unary(op, _, src))
+      case Expr.Test(x, name, negate) =>
+        go(x).flatMap(Expr.test(name, _, src)).map(_ != negate)
+      case Expr.Filter(x, name, args) =>
+        go(x).flatMap { v =>
+          arguments(args, scope, ctx, src).flatMap {
+            case (pos, kw) if kw.isEmpty =>
+              applyFilter(Some(v).filter(_ != Expr.Undefined), name, pos, src)
+                .map(_.getOrElse(Expr.Undefined))
+            case _ => Left(ParseError(
+              s"filter '$name' takes no keyword arguments in '$src'"))
+          }
+        }
+      case Expr.Call(fn, args) => call(fn, args, scope, ctx, src)
     }
+    def defined(e: Expr.Ast): Result[Any] = go(e).map(Expr.orNone)
+    go(e)
+  }
+
+  /** A call or filter argument. A bare name with no binding is its own
+    * text (`src(schema.table)` written unquoted), inside list literals
+    * too. A dotted name or a keyword-argument value that DOES resolve
+    * warns: both are conventionally literals, so a template variable
+    * silently changing their meaning is the data-dependent hazard. A
+    * plain positional name (`src(s)` in a for-loop) is an ordinary
+    * variable reference: no warning. `literal = false` (range) reads an
+    * argument as any other expression.
+    */
+  private def argument(
+      a: Expr.Ast, kw: Boolean, scope: Map[String, Any], ctx: Context,
+      src: String, literal: Boolean = true): Result[Any] = a match {
+    case Expr.Name(w) if literal => Right(lookup(w, scope) match {
+      case Some(v) =>
+        if (w.contains('.') || kw)
+          ctx.warn(s"macro argument '$w' resolved to template variable " +
+            s"'${renderValue(v)}'; quote it ('$w') to keep the literal")
+        v
+      case None => w
+    })
+    case Expr.ListOf(items) if literal =>
+      Result.sequence(items.map(argument(_, kw, scope, ctx, src)))
+    case other => eval(other, scope, ctx, src).map(Expr.orNone)
+  }
+
+  private def arguments(
+      args: Seq[(Option[String], Expr.Ast)], scope: Map[String, Any],
+      ctx: Context, src: String,
+      literal: Boolean = true): Result[(Seq[Any], Map[String, Any])] =
+    Result.sequence(args.map { case (k, a) =>
+      argument(a, k.isDefined, scope, ctx, src, literal).map(k -> _)
+    }).map { vs =>
+      (vs.collect { case (None, v) => v }, vs.collect { case (Some(k), v) => k -> v }.toMap)
+    }
+
+  /** The call targets: the built-ins `src`, `out`, `config`, then a
+    * macro in scope (dotted for a namespaced import), then `range`.
+    */
+  private def call(
+      fn: String, args: Seq[(Option[String], Expr.Ast)],
+      scope: Map[String, Any], ctx: Context, src: String): Result[Any] = {
+    def bound = arguments(args, scope, ctx, src)
+    fn match {
+      case "src" | "out" => bound.flatMap {
+        case (Seq(one: String), _) => Right(if (fn == "src") ctx.src(one) else ctx.out(one))
+        case _ => Left(ParseError(s"$fn() takes one string argument: '$src'"))
+      }
+      case "config" => bound.flatMap {
+        case (Seq(), kw) => if (ctx.allowConfig) ctx.config(kw); Right("")
+        case _ => Left(ParseError(s"config() takes only keyword arguments: '$src'"))
+      }
+      case _ => lookup(fn, scope) match {
+        case Some(m: MacroDef) =>
+          bound.flatMap { case (pos, kw) => callMacro(m, pos, kw, ctx, src) }
+        case _ if fn == "range" =>
+          arguments(args, scope, ctx, src, literal = false)
+            .flatMap { case (pos, kw) => Expr.range(pos, kw, src) }
+        case _ => Left(ParseError(s"unknown template function '$fn' in '$src'"))
+      }
+    }
+  }
 
   /** Jinja filter battery (the constructs real reference projects pipe
     * through; sayn/utils/compiler.py exposes full Jinja). `value` is
@@ -565,7 +621,7 @@ object Compiler {
     def defined: Result[Any] = value match {
       case Some(v) => Right(v)
       case None => Left(ParseError(
-        s"undefined value piped into '$name' in '{{ $expr }}'"))
+        s"undefined value piped into '$name' in '$expr'"))
     }
     (name, args) match {
       // Jinja |default: replaces undefined; with boolean=true, any falsy
@@ -577,12 +633,12 @@ object Compiler {
           case _ => d
         }))
       case ("default", Seq()) =>
-        Left(ParseError(s"default() needs a value in '{{ $expr }}'"))
+        Left(ParseError(s"default() needs a value in '$expr'"))
       case ("join", sep) if sep.size <= 1 =>
         defined.flatMap {
           case xs: Seq[_] =>
             Right(Some(xs.map(str).mkString(sep.headOption.fold("")(str))))
-          case _ => Left(ParseError(s"join expects a list in '{{ $expr }}'"))
+          case _ => Left(ParseError(s"join expects a list in '$expr'"))
         }
       case ("upper", Seq()) => defined.map(v => Some(str(v).toUpperCase))
       case ("lower", Seq()) => defined.map(v => Some(str(v).toLowerCase))
@@ -597,7 +653,7 @@ object Compiler {
           case xs: Seq[_] => Right(Some(xs.length.toLong))
           case s: String => Right(Some(s.length.toLong))
           case m: Map[_, _] => Right(Some(m.size.toLong))
-          case _ => Left(ParseError(s"length of non-sequence in '{{ $expr }}'"))
+          case _ => Left(ParseError(s"length of non-sequence in '$expr'"))
         }
       // numeric filters. |int / |float follow Jinja: unconvertible input
       // yields the default (0 / 0.0, overridable); |round(n) rounds
@@ -617,7 +673,7 @@ object Compiler {
         case n: Int => Right(Some(math.abs(n.toLong)))
         case d: Double => Right(Some(math.abs(d)))
         case b: BigDecimal => Right(Some(b.abs))
-        case _ => Left(ParseError(s"abs of non-number in '{{ $expr }}'"))
+        case _ => Left(ParseError(s"abs of non-number in '$expr'"))
       }
       case ("round", rest) if rest.size <= 1 =>
         defined.flatMap { v =>
@@ -625,14 +681,14 @@ object Compiler {
           toDouble(v) match {
             case Some(d) => Right(Some(BigDecimal(d)
               .setScale(prec, BigDecimal.RoundingMode.HALF_UP).toDouble))
-            case None => Left(ParseError(s"round of non-number in '{{ $expr }}'"))
+            case None => Left(ParseError(s"round of non-number in '$expr'"))
           }
         }
       case ("min", Seq()) | ("max", Seq()) => defined.flatMap {
         case xs: Seq[_] if xs.nonEmpty =>
           val nums = xs.map(x => toDouble(x))
           if (nums.exists(_.isEmpty))
-            Left(ParseError(s"$name of non-numeric list in '{{ $expr }}'"))
+            Left(ParseError(s"$name of non-numeric list in '$expr'"))
           else {
             val pairs = xs.zip(nums.map(_.get))
             val best =
@@ -640,21 +696,21 @@ object Compiler {
             Right(Some(best._1))
           }
         case xs: Seq[_] =>
-          Left(ParseError(s"$name of empty list in '{{ $expr }}'"))
-        case _ => Left(ParseError(s"$name expects a list in '{{ $expr }}'"))
+          Left(ParseError(s"$name of empty list in '$expr'"))
+        case _ => Left(ParseError(s"$name expects a list in '$expr'"))
       }
       case ("first", Seq()) => defined.flatMap {
         case xs: Seq[_] => Right(xs.headOption)
         case s: String => Right(s.headOption.map(_.toString))
-        case _ => Left(ParseError(s"first of non-sequence in '{{ $expr }}'"))
+        case _ => Left(ParseError(s"first of non-sequence in '$expr'"))
       }
       case ("last", Seq()) => defined.flatMap {
         case xs: Seq[_] => Right(xs.lastOption)
         case s: String => Right(s.lastOption.map(_.toString))
-        case _ => Left(ParseError(s"last of non-sequence in '{{ $expr }}'"))
+        case _ => Left(ParseError(s"last of non-sequence in '$expr'"))
       }
       case (other, _) => Left(ParseError(
-        s"unknown or mis-applied filter '$other' in '{{ $expr }}'"))
+        s"unknown or mis-applied filter '$other' in '$expr'"))
     }
   }
 
@@ -680,86 +736,9 @@ object Compiler {
     case _ => None
   }
 
-  private val FilterRe = "^([a-zA-Z_][a-zA-Z0-9_]*)(?:\\((.*)\\))?$".r
-
-  private def evalExpr(
-      expr: String, ctx: Context, scope: Map[String, Any]): Result[String] = {
-    // filter pipes; `||` never appears in `{{ }}` context (SQL concat
-    // lives in the SQL text, not inside interpolations)
-    val pipes = splitTopLevel(expr, '|').map(_.trim)
-    val head = pipes.head
-    // head value: Some = defined, None = undefined (only |default may
-    // consume an undefined head — Jinja's Undefined-with-default idiom)
-    val headValue: Result[Option[Any]] = head match {
-      case CallRe(fn, argStr) =>
-        parseArgs(argStr).flatMap { case (pos0, kw0) =>
-          val pos = pos0.map(resolveArg(_, scope, ctx))
-          val kw = kw0.map { case (k, v) =>
-            k -> resolveArg(v, scope, ctx, isKwargValue = true)
-          }
-          fn match {
-            case "src" =>
-              pos match {
-                case Seq(one: String) => Right(Some(ctx.src(one)))
-                case _ => Left(ParseError(s"src() takes one string argument: {{ $expr }}"))
-              }
-            case "out" =>
-              pos match {
-                case Seq(one: String) => Right(Some(ctx.out(one)))
-                case _ => Left(ParseError(s"out() takes one string argument: {{ $expr }}"))
-              }
-            case "config" =>
-              if (pos.nonEmpty)
-                Left(ParseError(s"config() takes only keyword arguments: {{ $expr }}"))
-              else {
-                if (ctx.allowConfig) ctx.config(kw)
-                Right(Some(""))
-              }
-            case other => lookup(other, scope) match {
-              case Some(m: MacroDef) =>
-                callMacro(m, pos, kw, ctx, expr).map(Some(_))
-              case _ =>
-                // expression-level builtins (range): evaluate the whole
-                // head as an expression before declaring it unknown
-                Expr.eval(head, scope) match {
-                  case Right(v) => Right(Some(v))
-                  case Left(_) =>
-                    Left(ParseError(s"unknown template function '$other'"))
-                }
-            }
-          }
-        }
-      case path =>
-        if (path.matches("[A-Za-z_][A-Za-z0-9_.]*")) Right(lookup(path, scope))
-        else
-          // not a bare variable path: a full expression head, e.g.
-          // `{{ a + b }}` / `{{ n * 2 - 1 }}` — Jinja evaluates these
-          // anywhere, not only inside {% if %}/{% set %}
-          Expr.eval(path, scope).map(v => Some(v))
-    }
-    val piped = pipes.tail.foldLeft(headValue) { (acc, f) =>
-      acc.flatMap { v =>
-        f match {
-          case FilterRe(name, argStr) =>
-            (Option(argStr) match {
-              case Some(a) => parseArgs(a).map(_._1.map(resolveArg(_, scope, ctx)))
-              case None => Right(Nil)
-            }).flatMap(args => applyFilter(v, name, args, expr))
-          case other =>
-            Left(ParseError(s"malformed filter '$other' in '{{ $expr }}'"))
-        }
-      }
-    }
-    piped.flatMap {
-      case Some(v) => Right(renderValue(v))
-      case None => Left(ParseError(s"undefined template variable '${pipes.head}'" +
-        (if (pipes.size > 1) s" in '{{ $expr }}'" else "")))
-    }
-  }
-
   /** Invoke a user macro: bind call args to declared params in order
-    * (positional, then keyword, then signature defaults — defaults may be
-    * bare words resolved against the definition scope), render the body
+    * (positional, then keyword, then signature defaults — defaults are
+    * arguments evaluated against the definition scope), render the body
     * with the definition scope extended by the bindings.
     */
   private def callMacro(
@@ -768,23 +747,24 @@ object Compiler {
     val names = m.params.map(_._1)
     if (pos.length > names.length)
       return Left(ParseError(
-        s"macro '${m.name}' takes ${names.length} argument(s): {{ $expr }}"))
+        s"macro '${m.name}' takes ${names.length} argument(s): '$expr'"))
     val unknown = kw.keySet -- names.toSet
     if (unknown.nonEmpty)
       return Left(ParseError(s"macro '${m.name}' has no argument " +
-        s"'${unknown.toSeq.sorted.head}': {{ $expr }}"))
+        s"'${unknown.toSeq.sorted.head}': '$expr'"))
     val bound = m.params.zipWithIndex.map { case ((p, dflt), idx) =>
       if (idx < pos.length)
         if (kw.contains(p))
           Left(ParseError(
-            s"macro '${m.name}' argument '$p' given twice: {{ $expr }}"))
+            s"macro '${m.name}' argument '$p' given twice: '$expr'"))
         else Right(p -> pos(idx))
       else kw.get(p) match {
         case Some(v) => Right(p -> v)
         case None => dflt match {
-          case Some(d) => Right(p -> resolveArg(d, m.defScope, ctx))
+          case Some(d) =>
+            argument(d, kw = false, m.defScope, ctx, expr).map(p -> _)
           case None => Left(ParseError(
-            s"macro '${m.name}' missing argument '$p': {{ $expr }}"))
+            s"macro '${m.name}' missing argument '$p': '$expr'"))
         }
       }
     }
@@ -792,7 +772,7 @@ object Compiler {
       .flatMap(bs => render(m.body, ctx, m.defScope ++ bs))
   }
 
-  private[core] def lookup(path: String, params: Map[String, Any]): Option[Any] =
+  private def lookup(path: String, params: Map[String, Any]): Option[Any] =
     path.split("\\.", -1).toList match {
       case head :: rest =>
         rest.foldLeft(params.get(head)) {
@@ -808,120 +788,57 @@ object Compiler {
     case null => ""
     case other => other.toString
   }
-
-  /** Parse a macro argument list: positional literals and key=value pairs.
-    * Literals: 'str', "str", numbers, true/false, [list, of, literals].
-    */
-  private[core] def parseArgs(s: String): Result[(Seq[Any], Map[String, Any])] = {
-    val pos = mutable.ArrayBuffer.empty[Any]
-    val kw = mutable.LinkedHashMap.empty[String, Any]
-    var i = 0
-    val n = s.length
-
-    def skipWs(): Unit = while (i < n && s(i).isWhitespace) i += 1
-
-    def parseValue(): Result[Any] = {
-      skipWs()
-      if (i >= n) return Left(ParseError(s"unexpected end of arguments in '$s'"))
-      s(i) match {
-        case '\'' | '"' =>
-          val quote = s(i); i += 1
-          val sb = new StringBuilder
-          while (i < n && s(i) != quote) {
-            if (s(i) == '\\' && i + 1 < n) { sb.append(s(i + 1)); i += 2 }
-            else { sb.append(s(i)); i += 1 }
-          }
-          if (i >= n) return Left(ParseError(s"unterminated string in '$s'"))
-          i += 1
-          Right(sb.result())
-        case '[' =>
-          i += 1
-          val items = mutable.ArrayBuffer.empty[Any]
-          skipWs()
-          if (i < n && s(i) == ']') { i += 1; return Right(items.toSeq) }
-          var done = false
-          while (!done) {
-            parseValue() match {
-              case Right(v) => items += v
-              case l @ Left(_) => return l
-            }
-            skipWs()
-            if (i < n && s(i) == ',') { i += 1 }
-            else if (i < n && s(i) == ']') { i += 1; done = true }
-            else return Left(ParseError(s"malformed list in '$s'"))
-          }
-          Right(items.toSeq)
-        case _ =>
-          val start = i
-          while (i < n && !",=)]".contains(s(i)) && !s(i).isWhitespace) i += 1
-          val tok = s.substring(start, i)
-          tok.toLowerCase match {
-            case "true" => Right(true)
-            case "false" => Right(false)
-            case "none" | "null" => Right(null)
-            case num if num.matches("-?\\d+") => Right(num.toLong)
-            case num if num.matches("-?\\d*\\.\\d+") => Right(num.toDouble)
-            case "" => Left(ParseError(s"empty argument token in '$s'"))
-            // bare word → template-variable reference, resolved (or kept
-            // as a literal string) by the caller against the live scope
-            case _ => Right(BareWord(tok))
-          }
-      }
-    }
-
-    skipWs()
-    while (i < n) {
-      // try key= lookahead
-      val keyStart = i
-      var j = i
-      while (j < n && (s(j).isLetterOrDigit || s(j) == '_')) j += 1
-      var k = j
-      while (k < n && s(k).isWhitespace) k += 1
-      if (j > keyStart && k < n && s(k) == '=' && (k + 1 >= n || s(k + 1) != '=')) {
-        val key = s.substring(keyStart, j)
-        i = k + 1
-        parseValue() match {
-          case Right(v) => kw(key) = v
-          case Left(e) => return Left(e)
-        }
-      } else {
-        parseValue() match {
-          case Right(v) => pos += v
-          case Left(e) => return Left(e)
-        }
-      }
-      skipWs()
-      if (i < n) {
-        if (s(i) != ',')
-          return Left(ParseError(s"expected ',' at position $i in '$s'"))
-        i += 1
-        skipWs()
-      }
-    }
-    Right((pos.toSeq, kw.toMap))
-  }
 }
 
-/** Condition/iterable expression evaluator for template control flow —
-  * the Jinja-expression subset reference projects use: literals, variable
-  * paths, lists, comparisons, membership, boolean algebra, parentheses,
-  * arithmetic (`+ - * / %` with Python semantics: true division, floor
-  * modulo, string/list concatenation, string repetition — use
-  * `{% set %}` to bind computed values for `{{ }}` output),
-  * and Jinja tests (`x is defined`, `is not none`, `is number`, `is
-  * string`, `is boolean`, `is mapping`, `is sequence`, `is iterable`,
-  * `is even/odd`, `is true/false`). Python semantics: truthiness,
-  * numeric cross-type equality (1 == 1.0), undefined → None (falsy);
-  * `is defined` tests scope presence, so a variable explicitly set to
-  * none IS defined (sayn/utils/compiler.py:31-135 exposes full Jinja —
-  * these tests are the constructs real projects hit first).
+/** The template expression language — one grammar for every position
+  * (Jinja's precedence, loosest first):
+  *
+  *   or → and → not → comparison (`== != < <= > >=`, `in`, `not in`,
+  *   `is [not] test`) → `+ -` → `* / %` → unary `- +` → filter pipe
+  *   `e | f` / `e | f(args)` → primary: literal, dotted name, call
+  *   `name(pos…, key=value…)`, `( … )`, `[ … ]`.
+  *
+  * Literals: 'str' / "str" (backslash escapes the next character),
+  * integers, decimals (`.5` too), and — in any letter case — `true`,
+  * `false`, `none`, `null`. Python semantics: truthiness, numeric
+  * cross-type equality (1 == 1.0), arithmetic with true division,
+  * floor modulo, string/list concatenation and string repetition.
+  * Jinja tests: `defined`, `undefined`, `none`, `number`, `string`,
+  * `boolean`, `mapping`, `sequence`, `iterable`, `even`, `odd`, `true`,
+  * `false` (sayn/utils/compiler.py:31-135 exposes full Jinja — these are
+  * the constructs real projects hit first).
+  *
+  * [[Expr.parse]] builds the AST; `Compiler.eval` walks it. The pure
+  * operators the evaluator applies live here.
   */
 private[core] object Expr {
 
-  private sealed trait Tok
-  private final case class TLit(v: Any) extends Tok
-  private final case class TPath(p: String) extends Tok
-  private final case class TOp(op: String) extends Tok
+  sealed trait Ast
+  final case class Lit(v: Any) extends Ast
+  /** A variable, possibly dotted (`task.name`, `ns.var`). */
+  final case class Name(path: String) extends Ast
+  final case class ListOf(items: Seq[Ast]) extends Ast
+  /** `op` is `-`, `+` or `not`. */
+  final case class Unary(op: String, arg: Ast) extends Ast
+  /** `op` is `and`, `or`, a comparison, `in`, `not in` or arithmetic. */
+  final case class Binary(op: String, l: Ast, r: Ast) extends Ast
+  final case class Test(arg: Ast, name: String, negate: Boolean) extends Ast
+  /** `args` in source order; a keyword argument carries its key. */
+  final case class Call(fn: String, args: Seq[(Option[String], Ast)]) extends Ast
+  final case class Filter(arg: Ast, name: String, args: Seq[(Option[String], Ast)])
+      extends Ast
+
+  /** What an unbound name evaluates to (Jinja's Undefined). */
+  case object Undefined
+
+  def orNone(v: Any): Any = if (v == Undefined) null else v
+
+  /** An expression's text, parsed when it is first evaluated: a malformed
+    * expression in a branch never taken is never reported.
+    */
+  final class Src(val text: String) {
+    lazy val ast: Result[Ast] = parse(text)
+  }
 
   def truthy(v: Any): Boolean = v match {
     case null => false
@@ -935,424 +852,378 @@ private[core] object Expr {
     case _ => true
   }
 
-  def eval(expr: String, scope: Map[String, Any]): Result.Result[Any] =
-    lex(expr).flatMap { toks =>
-      val p = new Parser(toks, scope, expr)
-      p.parseOr().flatMap { v =>
-        if (p.atEnd) Right(v)
-        else Left(ParseError(s"trailing tokens in expression '$expr'"))
-      }
-    }
+  // ---- lexer and parser ----------------------------------------------------
 
-  private def lex(s: String): Result.Result[Vector[Tok]] = {
+  private sealed trait Tok
+  private final case class TLit(v: Any) extends Tok {
+    override def toString: String = if (v == null) "none" else s"'$v'"
+  }
+  private final case class TName(p: String) extends Tok {
+    override def toString: String = s"'$p'"
+  }
+  private final case class TOp(op: String) extends Tok {
+    override def toString: String = s"'$op'"
+  }
+
+  /** A parse failure; caught in [[parse]], never escapes it. */
+  private final class Fail(msg: String) extends Exception(msg, null, false, false)
+
+  def parse(s: String): Result[Ast] =
+    try {
+      val p = new Parser(lex(s), s)
+      val ast = p.expr()
+      if (p.atEnd) Right(ast)
+      else Left(ParseError(s"trailing tokens in expression '$s'"))
+    } catch { case f: Fail => Left(ParseError(f.getMessage)) }
+
+  private val Words = Set("and", "or", "not", "in", "is")
+  private val TwoCharOps = Set("==", "!=", "<=", ">=")
+  private val OneCharOps = "<>()[],+-*/%|="
+
+  private def lex(s: String): Vector[Tok] = {
     val out = Vector.newBuilder[Tok]
+    def scan(from: Int, ok: Char => Boolean): Int = {
+      var j = from
+      while (j < s.length && ok(s(j))) j += 1
+      j
+    }
+    def digitAt(j: Int) = j < s.length && s(j).isDigit
     var i = 0
-    val n = s.length
-    while (i < n) {
+    while (i < s.length) {
       val c = s(i)
       if (c.isWhitespace) i += 1
       else if (c == '\'' || c == '"') {
         val sb = new StringBuilder; i += 1
-        while (i < n && s(i) != c) {
-          if (s(i) == '\\' && i + 1 < n) { sb.append(s(i + 1)); i += 2 }
-          else { sb.append(s(i)); i += 1 }
+        while (i < s.length && s(i) != c) {
+          if (s(i) == '\\' && i + 1 < s.length) i += 1
+          sb.append(s(i)); i += 1
         }
-        if (i >= n) return Left(ParseError(s"unterminated string in '$s'"))
+        if (i >= s.length) throw new Fail(s"unterminated string in '$s'")
         i += 1
         out += TLit(sb.result())
-      } else if (c.isDigit ||
-        (c == '-' && i + 1 < n && s(i + 1).isDigit &&
-          // '-' is a sign only at expression/operator position
-          (out.result().lastOption match {
-            case Some(TLit(_)) | Some(TPath(_)) | Some(TOp(")")) | Some(TOp("]")) => false
-            case _ => true
-          }))) {
-        val start = i
-        i += 1
-        while (i < n && (s(i).isDigit || s(i) == '.')) i += 1
-        val tok = s.substring(start, i)
-        out += TLit(if (tok.contains('.')) tok.toDouble else tok.toLong)
+      } else if (c.isDigit || (c == '.' && digitAt(i + 1))) {
+        val int = scan(i, _.isDigit)
+        val end = if (int < s.length && s(int) == '.' && digitAt(int + 1))
+          scan(int + 1, _.isDigit) else int
+        val tok = s.substring(i, end)
+        out += TLit(if (end > int) tok.toDouble else tok.toLongOption.getOrElse(
+          throw new Fail(s"integer $tok out of range in '$s'")))
+        i = end
       } else if (c.isLetter || c == '_') {
-        val start = i
-        while (i < n && (s(i).isLetterOrDigit || s(i) == '_' || s(i) == '.')) i += 1
-        s.substring(start, i) match {
-          case "true" | "True" => out += TLit(true)
-          case "false" | "False" => out += TLit(false)
-          case "none" | "None" | "null" => out += TLit(null)
-          case "and" | "or" | "not" | "in" | "is" => out += TOp(s.substring(start, i))
-          case path => out += TPath(path)
-        }
+        val end = scan(i, ch => ch.isLetterOrDigit || ch == '_' || ch == '.')
+        val w = s.substring(i, end)
+        out += (w.toLowerCase match {
+          case "true" => TLit(true)
+          case "false" => TLit(false)
+          case "none" | "null" => TLit(null)
+          case _ if Words(w) => TOp(w)
+          case _ => TName(w)
+        })
+        i = end
       } else {
-        val two = if (i + 1 < n) s.substring(i, i + 2) else ""
-        two match {
-          case "==" | "!=" | "<=" | ">=" => out += TOp(two); i += 2
-          case _ =>
-            c match {
-              case '<' | '>' | '(' | ')' | '[' | ']' | ',' |
-                  '+' | '-' | '*' | '/' | '%' =>
-                out += TOp(c.toString); i += 1
-              case other =>
-                return Left(ParseError(s"unexpected '$other' in expression '$s'"))
-            }
-        }
+        val two = s.slice(i, i + 2)
+        val op =
+          if (TwoCharOps(two)) two
+          else if (OneCharOps.indexOf(c) >= 0) c.toString
+          else throw new Fail(s"unexpected '$c' in expression '$s'")
+        out += TOp(op)
+        i += op.length
       }
     }
-    Right(out.result())
+    out.result()
   }
 
-  private final class Parser(
-      toks: Vector[Tok], scope: Map[String, Any], src: String) {
+  private val Comparisons = Set("==", "!=", "<", "<=", ">", ">=")
+
+  /** Recursive descent, one method per precedence level. */
+  private final class Parser(toks: Vector[Tok], src: String) {
     private var i = 0
     def atEnd: Boolean = i >= toks.length
-    private def peek: Option[Tok] = toks.lift(i)
-    private def peekOp(op: String): Boolean = peek.contains(TOp(op))
-    private def take(): Tok = { val t = toks(i); i += 1; t }
+    private def at(op: String): Boolean = toks.lift(i).contains(TOp(op))
+    private def eat(op: String): Boolean = at(op) && { i += 1; true }
+    private def fail(what: String): Nothing =
+      throw new Fail(s"$what in expression '$src'")
+    private def next(): Tok =
+      if (atEnd) fail("unexpected end") else { i += 1; toks(i - 1) }
+    private def expect(op: String): Unit = if (!eat(op)) fail(s"missing '$op'")
 
-    def parseOr(): Result.Result[Any] =
-      parseAnd().flatMap { first =>
-        var acc = first
-        var err: Option[GraftError] = None
-        while (err.isEmpty && peekOp("or")) {
-          take()
-          // Python short-circuit: return first truthy operand's value
-          parseAnd() match {
-            case Right(v) => if (!truthy(acc)) acc = v
-            case Left(e) => err = Some(e)
+    def expr(): Ast = {
+      var l = and()
+      while (eat("or")) l = Binary("or", l, and())
+      l
+    }
+
+    private def and(): Ast = {
+      var l = not()
+      while (eat("and")) l = Binary("and", l, not())
+      l
+    }
+
+    private def not(): Ast = if (eat("not")) Unary("not", not()) else compare()
+
+    private def compare(): Ast = {
+      val l = add()
+      toks.lift(i) match {
+        case Some(TOp(op)) if Comparisons(op) || op == "in" =>
+          i += 1; Binary(op, l, add())
+        case Some(TOp("not")) if toks.lift(i + 1).contains(TOp("in")) =>
+          i += 2; Binary("not in", l, add())
+        case Some(TOp("is")) =>
+          i += 1
+          val negate = eat("not")
+          if (atEnd) fail("missing test after 'is'")
+          next() match {
+            case TName(name) => Test(l, name, negate)
+            case TLit(null) => Test(l, "none", negate)
+            case TLit(b: Boolean) => Test(l, b.toString, negate)
+            case other => fail(s"unknown test $other after 'is'")
           }
-        }
-        err.map(Left(_)).getOrElse(Right(acc))
-      }
-
-    private def parseAnd(): Result.Result[Any] =
-      parseNot().flatMap { first =>
-        var acc = first
-        var err: Option[GraftError] = None
-        while (err.isEmpty && peekOp("and")) {
-          take()
-          parseNot() match {
-            case Right(v) => if (truthy(acc)) acc = v
-            case Left(e) => err = Some(e)
-          }
-        }
-        err.map(Left(_)).getOrElse(Right(acc))
-      }
-
-    private def parseNot(): Result.Result[Any] =
-      if (peekOp("not")) { take(); parseNot().map(v => !truthy(v)) }
-      else parseCmp()
-
-    private def parseCmp(): Result.Result[Any] = {
-      // a BARE path on the left is remembered so `is defined` can test
-      // presence in scope rather than the (undefined → None) value —
-      // Jinja distinguishes a variable set to none from a missing one
-      val leftPath = peek match {
-        case Some(TPath(p)) => Some(p)
-        case _ => None
-      }
-      parseAdd().flatMap { left =>
-        peek match {
-          case Some(TOp(op)) if Set("==", "!=", "<", "<=", ">", ">=").contains(op) =>
-            take()
-            parseAdd().map(right => compare(op, left, right))
-          case Some(TOp("in")) =>
-            take()
-            parseAdd().map(right => isIn(left, right))
-          case Some(TOp("not")) if toks.lift(i + 1).contains(TOp("in")) =>
-            take(); take()
-            parseAdd().map(right => !isIn(left, right))
-          case Some(TOp("is")) =>
-            take()
-            val negate = if (peekOp("not")) { take(); true } else false
-            val tested: Result.Result[Boolean] =
-              if (atEnd) Left(ParseError(s"missing test after 'is' in '$src'"))
-              else take() match {
-                case TPath(name) => applyTest(name, left, leftPath)
-                case TLit(null) => applyTest("none", left, leftPath)
-                // Jinja `is true` / `is false`: exact boolean identity
-                case TLit(b: Boolean) => Right(left == b)
-                case other =>
-                  Left(ParseError(s"unknown test '$other' after 'is' in '$src'"))
-              }
-            tested.map(b => if (negate) !b else b)
-          case _ => Right(left)
-        }
+        case _ => l
       }
     }
 
-    /** Jinja tests (the `x is <test>` construct). `defined`/`undefined`
-      * consult the SCOPE (a bare path resolves its presence; any other
-      * operand is a value and thus defined); the rest test the value.
-      * `number` is true for booleans too — Python's bool is an int
-      * subclass and Jinja inherits that; `sequence` matches anything
-      * indexable with a length (lists, strings, mappings), exactly as
-      * Jinja's does.
+    private def add(): Ast = {
+      var l = mul()
+      while (at("+") || at("-")) l = Binary(next().asInstanceOf[TOp].op, l, mul())
+      l
+    }
+
+    private def mul(): Ast = {
+      var l = unary(filters = true)
+      while (at("*") || at("/") || at("%"))
+        l = Binary(next().asInstanceOf[TOp].op, l, unary(filters = true))
+      l
+    }
+
+    /** Jinja: a filter after a signed operand takes the signed value
+      * (`-x | abs` is `(-x) | abs`).
       */
-    private def applyTest(
-        name: String, left: Any, leftPath: Option[String]): Result.Result[Boolean] = {
-      def defined: Boolean = leftPath match {
-        case Some(p) => Compiler.lookup(p, scope).isDefined
-        case None => true
+    private def unary(filters: Boolean): Ast = {
+      val e =
+        if (at("-") || at("+")) Unary(next().asInstanceOf[TOp].op, unary(filters = false))
+        else primary()
+      if (filters) filtered(e) else e
+    }
+
+    private def filtered(e: Ast): Ast =
+      if (!eat("|")) e
+      else next() match {
+        case TName(f) => filtered(Filter(e, f, if (eat("(")) args() else Nil))
+        case other => fail(s"malformed filter $other")
       }
-      name match {
-        case "defined" => Right(defined)
-        case "undefined" => Right(!defined)
-        case "none" => Right(left == null)
-        case "number" => Right(left match {
-          case _: Long | _: Int | _: Double | _: Boolean => true
-          case _ => false
-        })
-        case "string" => Right(left.isInstanceOf[String])
-        case "boolean" => Right(left.isInstanceOf[Boolean])
-        case "mapping" => Right(left.isInstanceOf[Map[_, _]])
-        case "sequence" => Right(left match {
-          case _: Seq[_] | _: String | _: Map[_, _] => true
-          case _ => false
-        })
-        case "iterable" => Right(left match {
-          case _: Seq[_] | _: String | _: Map[_, _] => true
-          case _ => false
-        })
-        case "even" | "odd" => left match {
-          case n: Long => Right(if (name == "even") n % 2 == 0 else n % 2 != 0)
-          case n: Int => Right(if (name == "even") n % 2 == 0 else n % 2 != 0)
-          case other => Left(ParseError(
-            s"test '$name' needs an integer, got '$other' in '$src'"))
-        }
-        case other => Left(ParseError(s"unknown test '$other' in '$src'"))
+
+    private def primary(): Ast = next() match {
+      case TLit(v) => Lit(v)
+      case TName(p) => if (eat("(")) Call(p, args()) else Name(p)
+      case TOp("(") => val e = expr(); expect(")"); e
+      case TOp("[") => ListOf(items("]")(expr()))
+      case other => fail(s"unexpected $other")
+    }
+
+    /** `(` already taken: `pos…, key=value…` up to `)`. */
+    private def args(): Seq[(Option[String], Ast)] = items(")") {
+      toks.lift(i) match {
+        case Some(TName(k)) if !k.contains('.') && toks.lift(i + 1).contains(TOp("=")) =>
+          i += 2; (Some(k), expr())
+        case _ => (None, expr())
       }
     }
 
-    // ---- arithmetic (Python semantics) ------------------------------------
-    // precedence: cmp > add/sub > mul/div/mod > unary minus > primary
-
-    private def parseAdd(): Result.Result[Any] =
-      parseMul().flatMap { first =>
-        var acc: Result.Result[Any] = Right(first)
-        while (acc.isRight && (peekOp("+") || peekOp("-"))) {
-          val op = take().asInstanceOf[TOp].op
-          acc = acc.flatMap(l => parseMul().flatMap(r => arith(op, l, r)))
-        }
-        acc
+    private def items[A](close: String)(item: => A): Seq[A] = {
+      val out = Vector.newBuilder[A]
+      if (!eat(close)) {
+        out += item
+        while (eat(",")) out += item
+        expect(close)
       }
+      out.result()
+    }
+  }
 
-    private def parseMul(): Result.Result[Any] =
-      parseUnary().flatMap { first =>
-        var acc: Result.Result[Any] = Right(first)
-        while (acc.isRight && (peekOp("*") || peekOp("/") || peekOp("%"))) {
-          val op = take().asInstanceOf[TOp].op
-          acc = acc.flatMap(l => parseUnary().flatMap(r => arith(op, l, r)))
-        }
-        acc
-      }
+  // ---- operators (Python semantics) ----------------------------------------
 
-    private def parseUnary(): Result.Result[Any] =
-      if (peekOp("-")) {
-        take()
-        parseUnary().flatMap {
-          case n: Long => Right(-n)
-          case n: Int => Right(-n.toLong)
-          case n: Double => Right(-n)
-          case b: Boolean => Right(if (b) -1L else 0L)
-          case other => Left(ParseError(
-            s"unary '-' needs a number, got '$other' in '$src'"))
-        }
-      } else if (peekOp("+")) {
-        take()
-        parseUnary().flatMap {
-          case n @ (_: Long | _: Int | _: Double | _: Boolean) => Right(n)
-          case other => Left(ParseError(
-            s"unary '+' needs a number, got '$other' in '$src'"))
-        }
-      } else parsePrimary()
+  def unary(op: String, v: Any, src: String): Result[Any] = (op, v) match {
+    case ("not", _) => Right(!truthy(v))
+    case ("-", n: Long) => Right(-n)
+    case ("-", n: Int) => Right(-n.toLong)
+    case ("-", n: Double) => Right(-n)
+    case ("-", b: Boolean) => Right(if (b) -1L else 0L)
+    case ("+", n @ (_: Long | _: Int | _: Double | _: Boolean)) => Right(n)
+    case _ => Left(ParseError(s"unary '$op' needs a number, got '$v' in '$src'"))
+  }
 
-    /** Python arithmetic: ints stay ints except true division (always
-      * float, like Python 3); mixed numeric widens to float; `%` follows
-      * the DIVISOR's sign (floorMod, the Python rule — Java's % follows
-      * the dividend); booleans count as 0/1 (bool is an int subclass);
-      * `+` concatenates strings and lists; `*` repeats a string by an
-      * int count. Division/modulo by zero is a template error, not an
-      * exception.
-      */
-    private def arith(op: String, l: Any, r: Any): Result.Result[Any] = {
-      def asLong(v: Any): Option[Long] = v match {
-        case n: Long => Some(n)
-        case n: Int => Some(n.toLong)
-        case b: Boolean => Some(if (b) 1L else 0L)
-        case _ => None
+  def binary(op: String, l: Any, r: Any, src: String): Result[Any] = op match {
+    case "in" => Right(isIn(l, r))
+    case "not in" => Right(!isIn(l, r))
+    case _ if Comparisons(op) => Right(compare(op, l, r))
+    case _ => arith(op, l, r, src)
+  }
+
+  /** Jinja tests (the `x is <test>` construct). `defined`/`undefined`
+    * ask whether the operand is bound; the rest test the value, an
+    * unbound operand reading as None. `number` is true for booleans too
+    * — Python's bool is an int subclass and Jinja inherits that;
+    * `sequence` matches anything indexable with a length (lists,
+    * strings, mappings), exactly as Jinja's does; `true`/`false` are
+    * boolean identity, not truthiness.
+    */
+  def test(name: String, v: Any, src: String): Result[Boolean] = {
+    val x = orNone(v)
+    name match {
+      case "defined" => Right(v != Undefined)
+      case "undefined" => Right(v == Undefined)
+      case "none" => Right(x == null)
+      case "true" | "false" => Right(x == (name == "true"))
+      case "number" => Right(x match {
+        case _: Long | _: Int | _: Double | _: Boolean => true
+        case _ => false
+      })
+      case "string" => Right(x.isInstanceOf[String])
+      case "boolean" => Right(x.isInstanceOf[Boolean])
+      case "mapping" => Right(x.isInstanceOf[Map[_, _]])
+      case "sequence" | "iterable" => Right(x match {
+        case _: Seq[_] | _: String | _: Map[_, _] => true
+        case _ => false
+      })
+      case "even" | "odd" => x match {
+        case n: Long => Right((n % 2 == 0) == (name == "even"))
+        case n: Int => Right((n % 2 == 0) == (name == "even"))
+        case other => Left(ParseError(
+          s"test '$name' needs an integer, got '$other' in '$src'"))
       }
-      def pyFmod(a: Double, b: Double): Double = {
-        val m = a % b
-        if (m != 0.0 && ((m < 0) != (b < 0))) m + b else m
+      case other => Left(ParseError(s"unknown test '$other' in '$src'"))
+    }
+  }
+
+  /** Jinja's range() global: 1-3 integer arguments, exclusive stop,
+    * Python step semantics — the loop-count idiom `{% for i in range(n)
+    * %}`. A typo'd bound must not materialize a billion-element list:
+    * the length is counted in BigInt BEFORE building the range
+    * (NumericRange itself throws past Int.MaxValue elements).
+    */
+  def range(pos: Seq[Any], kw: Map[String, Any], src: String): Result[Any] = {
+    val bounds = if (kw.nonEmpty) None else pos.map(asLong) match {
+      case Seq(Some(stop)) => Some((0L, stop, 1L))
+      case Seq(Some(st), Some(stop)) => Some((st, stop, 1L))
+      case Seq(Some(st), Some(stop), Some(step)) if step != 0 => Some((st, stop, step))
+      case _ => None
+    }
+    bounds match {
+      case None => Left(ParseError(
+        s"range() takes 1-3 integer arguments (step != 0) in '$src'"))
+      case Some((st, stop, step)) =>
+        val d = BigInt(stop) - BigInt(st)
+        val n =
+          if (step > 0) (d + step - 1).max(0) / step
+          else (d + step + 1).min(0) / step
+        if (n > 1000000) Left(ParseError(
+          s"range() over 1e6 elements in '$src' (got $n)"))
+        else Right((st until stop by step).toVector)
+    }
+  }
+
+  private def asLong(v: Any): Option[Long] = v match {
+    case n: Long => Some(n)
+    case n: Int => Some(n.toLong)
+    case _ => None
+  }
+
+  /** Python arithmetic: ints stay ints except true division (always
+    * float, like Python 3); mixed numeric widens to float; `%` follows
+    * the DIVISOR's sign (floorMod, the Python rule — Java's % follows
+    * the dividend); booleans count as 0/1 (bool is an int subclass);
+    * `+` concatenates strings and lists; `*` repeats a string by an
+    * int count. Division/modulo by zero is a template error, not an
+    * exception.
+    */
+  private def arith(op: String, l: Any, r: Any, src: String): Result[Any] = {
+    def int(v: Any): Option[Long] = v match {
+      case b: Boolean => Some(if (b) 1L else 0L)
+      case _ => asLong(v)
+    }
+    def pyFmod(a: Double, b: Double): Double = {
+      val m = a % b
+      if (m != 0.0 && ((m < 0) != (b < 0))) m + b else m
+    }
+    def byZero = Left(ParseError(
+      s"${if (op == "/") "division" else "modulo"} by zero in '$src'"))
+    (int(l), int(r)) match {
+      case (Some(a), Some(b)) => op match {
+        case "+" => Right(a + b)
+        case "-" => Right(a - b)
+        case "*" => Right(a * b)
+        case "/" => if (b == 0) byZero else Right(a.toDouble / b.toDouble)
+        case "%" => if (b == 0) byZero else Right(math.floorMod(a, b))
       }
-      (asLong(l), asLong(r)) match {
+      case _ => (num(l), num(r)) match {
         case (Some(a), Some(b)) => op match {
           case "+" => Right(a + b)
           case "-" => Right(a - b)
           case "*" => Right(a * b)
-          case "/" =>
-            if (b == 0) Left(ParseError(s"division by zero in '$src'"))
-            else Right(a.toDouble / b.toDouble) // Python 3 true division
-          case "%" =>
-            if (b == 0) Left(ParseError(s"modulo by zero in '$src'"))
-            else Right(math.floorMod(a, b))
+          case "/" => if (b == 0.0) byZero else Right(a / b)
+          case "%" => if (b == 0.0) byZero else Right(pyFmod(a, b))
         }
-        case _ => (num(l), num(r)) match {
-          case (Some(a), Some(b)) => op match {
-            case "+" => Right(a + b)
-            case "-" => Right(a - b)
-            case "*" => Right(a * b)
-            case "/" =>
-              if (b == 0.0) Left(ParseError(s"division by zero in '$src'"))
-              else Right(a / b)
-            case "%" =>
-              if (b == 0.0) Left(ParseError(s"modulo by zero in '$src'"))
-              else Right(pyFmod(a, b))
-          }
-          case _ => (op, l, r) match {
-            case ("+", a: String, b: String) => Right(a + b)
-            case ("+", a: Seq[_], b: Seq[_]) => Right(a ++ b)
-            case ("*", a: String, _) if asLong(r).isDefined =>
-              Right(a * math.max(0L, asLong(r).get).toInt)
-            case ("*", _, b: String) if asLong(l).isDefined =>
-              Right(b * math.max(0L, asLong(l).get).toInt)
-            case _ => Left(ParseError(
-              s"unsupported operand types for '$op' in '$src': '$l', '$r'"))
-          }
+        case _ => (op, l, r) match {
+          case ("+", a: String, b: String) => Right(a + b)
+          case ("+", a: Seq[_], b: Seq[_]) => Right(a ++ b)
+          case ("*", a: String, _) if int(r).isDefined =>
+            Right(a * math.max(0L, int(r).get).toInt)
+          case ("*", _, b: String) if int(l).isDefined =>
+            Right(b * math.max(0L, int(l).get).toInt)
+          case _ => Left(ParseError(
+            s"unsupported operand types for '$op' in '$src': '$l', '$r'"))
         }
       }
     }
+  }
 
-    private def parsePrimary(): Result.Result[Any] = peek match {
-      case Some(TLit(v)) => take(); Right(v)
-      case Some(TPath("range")) if toks.lift(i + 1).contains(TOp("(")) =>
-        take(); take()
-        // Jinja's range() global: 1-3 integer args, exclusive stop,
-        // Python step semantics — the loop-count idiom `{% for i in
-        // range(n) %}`
-        val args = mutable.ArrayBuffer.empty[Any]
-        var err: Option[GraftError] = None
-        var done = peekOp(")")
-        if (done) take()
-        while (!done && err.isEmpty) {
-          parseOr() match {
-            case Right(v) => args += v
-            case Left(e) => err = Some(e)
-          }
-          if (err.isEmpty) {
-            if (peekOp(",")) take()
-            else if (peekOp(")")) { take(); done = true }
-            else err = Some(ParseError(s"malformed range() in '$src'"))
-          }
-        }
-        err.map(Left(_)).getOrElse {
-          def asL(v: Any): Option[Long] = v match {
-            case n: Long => Some(n); case n: Int => Some(n.toLong); case _ => None
-          }
-          val r = args.toSeq.map(asL) match {
-            case Seq(Some(stop)) => Right((0L, stop, 1L))
-            case Seq(Some(st), Some(stop)) => Right((st, stop, 1L))
-            case Seq(Some(st), Some(stop), Some(step)) if step != 0 =>
-              Right((st, stop, step))
-            case _ => Left(ParseError(
-              s"range() takes 1-3 integer arguments (step != 0) in '$src'"))
-          }
-          // a typo'd bound must not materialize a billion-element list;
-          // count in BigInt BEFORE building the range — NumericRange
-          // itself throws past Int.MaxValue elements, which would escape
-          // compile()'s Result contract as an exception
-          r.flatMap { case (st, stop, step) =>
-            val d = BigInt(stop) - BigInt(st)
-            val n =
-              if (step > 0) (d + step - 1).max(0) / step
-              else (d + step + 1).min(0) / step
-            if (n > 1000000) Left(ParseError(
-              s"range() over 1e6 elements in '$src' (got $n)"))
-            else Right((st until stop by step).toVector)
-          }
-        }
-      case Some(TPath(p)) =>
-        take()
-        // undefined → None (Jinja Undefined is falsy; guards like
-        // {% if optional_flag %} must not error)
-        Right(Compiler.lookup(p, scope).orNull)
-      case Some(TOp("(")) =>
-        take()
-        parseOr().flatMap { v =>
-          if (peekOp(")")) { take(); Right(v) }
-          else Left(ParseError(s"missing ')' in expression '$src'"))
-        }
-      case Some(TOp("[")) =>
-        take()
-        val items = mutable.ArrayBuffer.empty[Any]
-        if (peekOp("]")) { take(); Right(items.toSeq) }
-        else {
-          var err: Option[GraftError] = None
-          var done = false
-          while (!done && err.isEmpty) {
-            parseOr() match {
-              case Right(v) => items += v
-              case Left(e) => err = Some(e)
-            }
-            if (err.isEmpty) {
-              if (peekOp(",")) take()
-              else if (peekOp("]")) { take(); done = true }
-              else err = Some(ParseError(s"malformed list in expression '$src'"))
-            }
-          }
-          err.map(Left(_)).getOrElse(Right(items.toSeq))
-        }
-      case other =>
-        Left(ParseError(s"unexpected ${other.getOrElse("end")} in expression '$src'"))
+  private def num(v: Any): Option[Double] = v match {
+    case n: Long => Some(n.toDouble)
+    case n: Int => Some(n.toDouble)
+    case n: Double => Some(n)
+    case b: Boolean => Some(if (b) 1.0 else 0.0) // Python: bool ⊂ int
+    case _ => None
+  }
+
+  private def compare(op: String, l: Any, r: Any): Boolean = {
+    val eq = (num(l), num(r)) match {
+      case (Some(a), Some(b)) => a == b
+      case _ => l == r
     }
-
-    private def num(v: Any): Option[Double] = v match {
-      case n: Long => Some(n.toDouble)
-      case n: Int => Some(n.toDouble)
-      case n: Double => Some(n)
-      case b: Boolean => Some(if (b) 1.0 else 0.0) // Python: bool ⊂ int
-      case _ => None
+    op match {
+      case "==" => eq
+      case "!=" => !eq
+      case _ =>
+        val ord: Option[Int] = (num(l), num(r)) match {
+          case (Some(a), Some(b)) => Some(a.compare(b))
+          case _ => (l, r) match {
+            case (a: String, b: String) => Some(a.compareTo(b))
+            case _ => None
+          }
+        }
+        ord.exists { c =>
+          op match {
+            case "<" => c < 0
+            case "<=" => c <= 0
+            case ">" => c > 0
+            case ">=" => c >= 0
+          }
+        }
     }
+  }
 
-    private def compare(op: String, l: Any, r: Any): Boolean = {
-      val eq = (num(l), num(r)) match {
+  private def isIn(l: Any, r: Any): Boolean = r match {
+    case xs: Seq[_] => xs.exists { x =>
+      (num(l), num(x)) match {
         case (Some(a), Some(b)) => a == b
-        case _ => l == r
-      }
-      op match {
-        case "==" => eq
-        case "!=" => !eq
-        case _ =>
-          val ord: Option[Int] = (num(l), num(r)) match {
-            case (Some(a), Some(b)) => Some(a.compare(b))
-            case _ => (l, r) match {
-              case (a: String, b: String) => Some(a.compareTo(b))
-              case _ => None
-            }
-          }
-          ord.exists { c =>
-            op match {
-              case "<" => c < 0
-              case "<=" => c <= 0
-              case ">" => c > 0
-              case ">=" => c >= 0
-            }
-          }
+        case _ => x == l
       }
     }
-
-    private def isIn(l: Any, r: Any): Boolean = r match {
-      case xs: Seq[_] => xs.exists { x =>
-        (num(l), num(x)) match {
-          case (Some(a), Some(b)) => a == b
-          case _ => x == l
-        }
-      }
-      case s: String => l match {
-        case ls: String => s.contains(ls)
-        case _ => false
-      }
-      case m: Map[_, _] => m.asInstanceOf[Map[Any, Any]].contains(l)
+    case s: String => l match {
+      case ls: String => s.contains(ls)
       case _ => false
     }
+    case m: Map[_, _] => m.asInstanceOf[Map[Any, Any]].contains(l)
+    case _ => false
   }
 }

@@ -424,11 +424,15 @@ object Stats {
     val u0x2 = lit(2L) * col("_n0") * col("_n1") - u1x2
     val varU = n0 * n1 / 12.0 *
       ((n + 1.0) - col("_ties").cast("double") / (n * (n - 1.0)))
-    val z = (u1x2.cast("double") - n0 * n1) / (lit(2.0) * sqrt(varU))
-    val guard = when(col("_n0") >= 1L && col("_n1") >= 1L &&
-        col("_ties") < (col("_n0") + col("_n1")) *
-          (col("_n0") + col("_n1")) * (col("_n0") + col("_n1")) -
-          (col("_n0") + col("_n1")), col("_n0"))
+    val ok = col("_n0") >= 1L && col("_n1") >= 1L &&
+      col("_ties") < (col("_n0") + col("_n1")) *
+        (col("_n0") + col("_n1")) * (col("_n0") + col("_n1")) -
+        (col("_n0") + col("_n1"))
+    // gated by the guard's condition: with σ = 0 the division would
+    // raise DIVIDE_BY_ZERO before the guard could name the cause
+    val z = when(ok,
+      (u1x2.cast("double") - n0 * n1) / (lit(2.0) * sqrt(varU)))
+    val guard = when(ok, col("_n0"))
       .otherwise(raise_error(concat(
         lit("mannWhitneyU: need both arms non-empty and at least two "),
         lit("distinct metric values (sigma would be 0); got n_a="),
@@ -1460,13 +1464,14 @@ object Stats {
     * Scale shape: one value-keyed aggregate (map-side combined), then
     * the cumulative window over the DISTINCT-value frame — the same
     * value-grouped-runs discipline as [[mannWhitneyU]] (bounded by the
-    * metric's cardinality, not the corpus). Empty arms fail loudly.
+    * metric's cardinality, not the corpus). Empty arms, and an arm
+    * that is not 0/1 (NULL included), fail loudly.
     */
   def ksTest(
       df: DataFrame,
       armCol: String,
       valueCol: String): DataFrame = {
-    val arm = col(armCol).cast("int")
+    val arm = flag01("ksTest", "arm flag", col(armCol), "int")
     val byVal = df
       .groupBy(col(valueCol).cast("long").as("_v"))
       .agg(
@@ -4149,7 +4154,7 @@ object Stats {
       df: DataFrame,
       armCol: String,
       valueCol: String): DataFrame = {
-    val arm = col(armCol).cast("int")
+    val arm = flag01("kuiperTest", "arm flag", col(armCol), "int")
     val byVal = df
       .groupBy(col(valueCol).cast("long").as("_v"))
       .agg(sum(when(arm === 0, 1L).otherwise(0L)).as("_c0"),
@@ -5263,15 +5268,16 @@ object Stats {
       .drop("_mse")
   }
 
-  /** `c` as a 0/1 flag of type `as`; any other value fails the query
-    * loudly with `<fn>: <what> <value> is not 0/1`. (The optimizer drops
-    * the second cast to `long` of the default.)
+  /** `c` as a 0/1 flag of type `as`; any other value, NULL included,
+    * fails the query loudly with `<fn>: <what> <value> is not 0/1` (a
+    * NULL shows as `NULL`). (The optimizer drops the second cast to
+    * `long` of the default.)
     */
   private def flag01(fn: String, what: String, c: Column,
       as: String = "long"): Column =
     when(c.cast("long").isin(0L, 1L), c.cast("long").cast(as))
-      .otherwise(raise_error(concat(lit(s"$fn: $what "), c.cast("string"),
-        lit(" is not 0/1"))).cast(as))
+      .otherwise(raise_error(concat(lit(s"$fn: $what "),
+        coalesce(c.cast("string"), lit("NULL")), lit(" is not 0/1"))).cast(as))
 
   /** The value-grouped frame of a two-arm rank test (the `mannWhitneyU`
     * discipline, docs/SCALING.md class 6): one row per distinct `_x`

@@ -65,6 +65,26 @@ class AppSpec extends SparkSpec {
       Seq("b3", "Gohan vs Vegeta", "Gohan")))
   }
 
+  test("a src() read through {% set %} gets its implicit DAG edge") {
+    object MakeSetSrc extends UserTask {
+      override def run(ctx: TaskContext): Result[Unit] =
+        ctx.out("set_src").flatMap(t =>
+          db.loadDataFrame(Seq(1, 2).toDF("x"), t, replace = true))
+    }
+    // the reader is listed first: only the lineage edge orders it last
+    val specs = Seq(
+      TaskSpec("set_reader", "g", Map(
+        "type" -> "autosql", "materialisation" -> "table",
+        "destination" -> "set_reader_out",
+        "sql" -> "{% set t = src('set_src') %}SELECT x FROM {{ t }}")),
+      TaskSpec("set_maker", "g", Map("type" -> "user",
+        "outputs" -> Seq("set_src"))))
+    val Right(report) = mkApp(Map("set_maker" -> MakeSetSrc)).run(specs)
+    assert(report.succeeded, report.errors)
+    assert(report.order == Seq("set_maker", "set_reader"))
+    assert(rows(spark.table("set_reader_out")) == Set(Seq(1), Seq(2)))
+  }
+
   test("autosql view materialisation") {
     db.replaceTable("view_base", "SELECT 1 AS x UNION ALL SELECT 2")
     val specs = Seq(TaskSpec("a_view", "g", Map(

@@ -384,9 +384,77 @@ class CompilerSpec extends AnyFunSuite {
   }
 
   test("arg parser: numbers, bools, lists, mixed kwargs") {
-    val Right((pos, kw)) = Compiler.parseArgs("'a', 1, key=2.5, flag=true, xs=['p','q']")
-    assert(pos == Seq("a", 1L))
-    assert(kw == Map("key" -> 2.5, "flag" -> true, "xs" -> Seq("p", "q")))
+    // the call's arguments reach config() through a macro that forwards
+    // its positionals as one list and its keywords as they are
+    var got = Map.empty[String, Any]
+    val ctx = Context(config = got = _, allowConfig = true)
+    val t = "{% macro m(p0, p1, key, flag, xs) %}" +
+      "{{ config(pos=[p0, p1], key=key, flag=flag, xs=xs) }}{% endmacro %}" +
+      "{{ m('a', 1, key=2.5, flag=true, xs=['p','q']) }}"
+    assert(Compiler.compile(t, ctx) == Right(""))
+    assert(got("pos") == Seq("a", 1L))
+    assert(got - "pos" == Map("key" -> 2.5, "flag" -> true, "xs" -> Seq("p", "q")))
+  }
+
+  test("one expression grammar: every position gives the same value") {
+    val prefix = "{% macro show(x) %}{{ x }}{% endmacro %}" +
+      "{% macro twice(v) %}{{ v }}{{ v }}{% endmacro %}"
+    def ctx(want: Any) = Context(
+      params = Map("n" -> 2L, "xs" -> Seq("a", "b", "c"), "want" -> want),
+      src = s => s"dev_$s")
+    val table = Seq[(String, Any)](
+      "src('x')" -> "dev_x",
+      "twice(n + 1)" -> "33",
+      "'abc' | upper" -> "ABC",
+      "xs | join('-')" -> "a-b-c",
+      "missing | default('d')" -> "d",
+      "xs | length > 2" -> true,
+      "-n | abs" -> 2L,
+      "range(n) | length" -> 2L,
+      "[n, 'b'] | first" -> 2L,
+      "(n + 1) * 2 % 4" -> 2L,
+      "n / 4" -> 0.5,
+      ".5" -> 0.5,
+      "'a' in xs and n > 1" -> true,
+      "true" -> true, "True" -> true, "TRUE" -> true,
+      "false" -> false, "False" -> false, "FALSE" -> false,
+      "none" -> null, "None" -> null, "NONE" -> null, "null" -> null)
+    for ((e, want) <- table) {
+      val shown = if (want == null) "" else want.toString
+      val positions = Seq(
+        s"{{ $e }}" -> shown,
+        s"{% set v = $e %}{{ v }}" -> shown,
+        s"{% if ($e) == want %}Y{% else %}N{% endif %}" -> "Y",
+        s"{{ show($e) }}" -> shown,
+        s"{{ 'q' | replace('q', $e) }}" -> shown)
+      for ((t, expected) <- positions)
+        assert(Compiler.compile(prefix + t, ctx(want)) == Right(expected),
+          s"position $t")
+    }
+  }
+
+  test("malformed expressions are template errors, not exceptions") {
+    for (e <- Seq("1.2.3", "99999999999999999999", "m(", "x is", "[1, 2",
+        "'open", "x |", "src(a=)", "x = 1", "", "x ?? 1"))
+      assert(Compiler.compile(s"{{ $e }}", Context(Map("x" -> 1L))).isLeft, e)
+  }
+
+  test("and/or evaluate their right operand only when Python would") {
+    var srcs = List.empty[String]
+    var configured = false
+    val ctx = Context(params = Map("d" -> 0L),
+      src = { s => srcs ::= s; s }, config = _ => configured = true,
+      allowConfig = true)
+    def run(t: String) = Compiler.compile(t, ctx)
+    assert(run("{% if d != 0 and 10 / d > 1 %}A{% else %}B{% endif %}") == Right("B"))
+    assert(run("{% if d == 0 or 10 / d > 1 %}A{% else %}B{% endif %}") == Right("A"))
+    assert(run("{% if false and src('x') %}A{% endif %}" +
+      "{% if true or src('y') %}B{% endif %}") == Right("B"))
+    assert(run("{{ d and config(a=1) }}") == Right("0"))
+    assert(srcs.isEmpty && !configured)
+    // the result is the deciding operand, as in Python
+    assert(run("{{ d or 'x' }}|{{ 1 and src('z') }}") == Right("x|z"))
+    assert(srcs == List("z"))
   }
 
   // ---- include / import (cross-file composition via Context.loader) ----

@@ -151,10 +151,34 @@ class StatsSpec extends SparkSpec {
       val e = intercept[Exception] {
         Stats.mannWhitneyU(df, "arm", "v").collect()
       }
-      // flag01 renders a NULL arm as a NULL message, so only 2 is named
-      if (bad.isDefined)
-        assert(e.getMessage.contains("mannWhitneyU: arm flag 2 is not 0/1"),
-          e.getMessage)
+      val shown = bad.fold("NULL")(_.toString)
+      assert(e.getMessage.contains(s"mannWhitneyU: arm flag $shown is not 0/1"),
+        e.getMessage)
+    }
+  }
+
+  test("mannWhitneyU names its degenerate-input guard, not a division by zero") {
+    for (df <- Seq(Seq((0, 1L), (0, 2L)), Seq((0, 5L), (0, 5L), (1, 5L)))) {
+      val e = intercept[Exception] {
+        Stats.mannWhitneyU(df.toDF("arm", "v"), "arm", "v").collect()
+      }
+      assert(e.getMessage.contains("need both arms non-empty"), e.getMessage)
+    }
+  }
+
+  test("ksTest and kuiperTest reject an arm value that is not 0/1") {
+    // an arm of 2 or NULL would otherwise fall out of both arms unseen
+    Seq[(Option[Int], String)](Some(2) -> "2", None -> "NULL").foreach {
+      case (bad, shown) =>
+        val df = Seq((Some(0), 1L), (Some(0), 2L), (Some(1), 3L), (Some(1), 4L),
+          (bad, 5L)).toDF("arm", "v")
+        Seq("ksTest" -> (Stats.ksTest _),
+          "kuiperTest" -> (Stats.kuiperTest _)).foreach {
+          case (fn, op) =>
+            val e = intercept[Exception](op(df, "arm", "v").collect())
+            assert(e.getMessage.contains(s"$fn: arm flag $shown is not 0/1"),
+              e.getMessage)
+        }
     }
   }
 
