@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException
 import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The engine's single "warehouse connection": every ETL/materialisation
   * operator from SURVEY §2a, executed through the Spark session catalog.
@@ -62,18 +63,22 @@ final class SparkDatabase(val spark: SparkSession) {
       table: String,
       replace: Boolean = false,
       ddl: Ddl = Ddl.empty): Result[Unit] =
-    Result.attempt {
-      catalogDdl.ensureDatabase(table)
-      val mode = if (replace) SaveMode.Overwrite else SaveMode.Append
-      if (!replace && spark.catalog.tableExists(table)) {
-        // append aligns by name (schema reconciliation, copy.py:543-630)
-        val cols = spark.table(table).columns
-        df.select(cols.map(col).toIndexedSeq: _*)
-          .write.mode(mode).insertInto(table)
-      } else {
-        writer(applySort(df, ddl), ddl).mode(mode).saveAsTable(table)
-      }
+    Result.attempt(destination(table)).flatMap {
+      case Some(t) if !replace => appendTo(df, table, t)
+      case current =>
+        Result.attempt {
+          if (current.isEmpty) catalogDdl.ensureDatabase(table)
+          val mode = if (replace) SaveMode.Overwrite else SaveMode.Append
+          writer(applySort(df, ddl), ddl).mode(mode).saveAsTable(table)
+        }
     }
+
+  /** Append `df` to the existing table `table` (catalog entry `t`),
+    * aligned by name (schema reconciliation, copy.py:543-630).
+    */
+  private[graft] def appendTo(df: DataFrame, table: String, t: CatalogTable): Result[Unit] =
+    Result.attempt(df.select(t.schema.fieldNames.map(col).toIndexedSeq: _*)
+      .write.mode(SaveMode.Append).insertInto(table))
 
   /** Row-wise load used by user tasks (the reference's `load_data`,
     * sayn/database/__init__.py:513-587).
@@ -98,18 +103,17 @@ final class SparkDatabase(val spark: SparkSession) {
     *
     * Post hooks are NOT fired here: the materialisation entry points
     * (`replaceTable`/`replaceView`/`mergeQuery`) run them exactly once,
-    * after the destination swap, so hooks never observe a tmp table.
+    * after the new content is published, so hooks never observe a tmp
+    * table.
     */
   def createTable(
       table: String,
       select: String,
-      ddl: Ddl = Ddl.empty,
-      replace: Boolean = false): Result[Unit] =
+      ddl: Ddl = Ddl.empty): Result[Unit] =
     Result.attempt {
       catalogDdl.ensureDatabase(table)
-      val mode = if (replace) SaveMode.Overwrite else SaveMode.ErrorIfExists
       writer(applySort(typed(spark.sql(select), ddl), ddl), ddl)
-        .mode(mode).saveAsTable(table)
+        .mode(SaveMode.ErrorIfExists).saveAsTable(table)
     }
 
   /** Declared types → casts, declared order → projection; the frame as
@@ -121,34 +125,50 @@ final class SparkDatabase(val spark: SparkSession) {
       c.dataType.fold(col(c.name))(t => col(c.name).cast(Ddl.sparkType(t)).as(c.name))
     }.toIndexedSeq: _*)
 
-  /** Full-refresh materialisation (sayn/database/__init__.py:747-787).
-    * CTAS into a tmp table, then [[moveTable]] swaps it in: two session-
-    * catalog renames and one drop, no SQL command. A failure in the write
-    * or the swap leaves the old table readable under `table`, never a
-    * missing or partial destination (the reference's tmp-swap guarantee),
-    * and a self-referencing SELECT reads the old table while it writes the
-    * tmp one. Cached plans over `table` are un-cached by name in the swap,
-    * so readers see the new rows.
+  /** Full-refresh materialisation (sayn/database/__init__.py:747-787):
+    * the SELECT, cast to the declared types, is written by [[publish]].
+    * A same-schema rewrite of a managed parquet table swaps its directory
+    * and costs at most one metastore mutation (the statistics update);
+    * anything else is a tmp-table CTAS swapped in by the catalog renames
+    * of [[moveTable]]. Either way a failure in the write or the swap
+    * leaves the old table readable under `table`, never a missing or
+    * partial destination (the reference's tmp-swap guarantee), and a
+    * self-referencing SELECT reads the old rows while it writes the new
+    * ones. Cached plans over `table` are un-cached by name, so readers see
+    * the new rows. One catalog fetch for `table`.
     */
   def replaceTable(
       table: String,
       select: String,
-      ddl: Ddl = Ddl.empty): Result[Unit] = {
-    val tmp = tmpName(table)
-    for {
-      _ <- createTable(tmp, select, ddl, replace = true)
-      _ <- moveTable(tmp, table)
-      _ <- runHooks(ddl)
-    } yield ()
-  }
+      ddl: Ddl = Ddl.empty): Result[Unit] =
+    Result.attempt(destination(table)).flatMap(replaceTable(table, select, ddl, _))
+
+  /** [[replaceTable]] once `table`'s catalog entry is known (from
+    * [[destination]]).
+    */
+  private[graft] def replaceTable(
+      table: String, select: String, ddl: Ddl,
+      current: Option[CatalogTable]): Result[Unit] =
+    Result.attempt(typed(spark.sql(select), ddl))
+      .flatMap(publish(_, table, ddl, current))
+      .flatMap(_ => runHooks(ddl))
 
   /** (Re)create a view over the compiled SELECT
-    * (sayn/database/__init__.py:789-817).
+    * (sayn/database/__init__.py:789-817). An existing view is replaced
+    * with `ALTER VIEW … AS`, one catalog mutation (`CREATE OR REPLACE
+    * VIEW` is a drop and a create); any other name is created, its
+    * database first when missing.
     */
   def replaceView(view: String, select: String, ddl: Ddl = Ddl.empty): Result[Unit] =
     Result.attempt {
-      catalogDdl.ensureDatabase(view)
-      spark.sql(s"CREATE OR REPLACE VIEW $view AS $select"); ()
+      lookup(view) match {
+        case Some(t) if t.tableType == CatalogTableType.VIEW && t.identifier.database.isDefined =>
+          spark.sql(s"ALTER VIEW $view AS $select")
+        case current =>
+          if (current.isEmpty) catalogDdl.ensureDatabase(view)
+          spark.sql(s"CREATE OR REPLACE VIEW $view AS $select")
+      }
+      ()
     }.flatMap(_ => runHooks(ddl))
 
   /** Upsert src into dst on `deleteKey`: delete matching dst rows, insert
@@ -172,7 +192,7 @@ final class SparkDatabase(val spark: SparkSession) {
     * [[graft.pipeline.Stage.materialize]]. A live query would be
     * re-evaluated per read — twice-drawn non-deterministic keys, or a
     * self-referencing SELECT that sees dst mid-merge. dst's partition
-    * columns come from one catalog fetch.
+    * columns come from one catalog fetch, which the write reuses.
     *
     * Scale path: when the destination is partitioned, only the partitions
     * touched by the delta are rewritten (dynamic partition overwrite) —
@@ -192,23 +212,28 @@ final class SparkDatabase(val spark: SparkSession) {
     * Spark's job commit — a failure mid-commit can leave a subset of
     * touched partitions replaced while others are stale, and concurrent
     * readers may observe that mix. Weaker than the unpartitioned
-    * tmp+swap guarantee; the trade for not rewriting the full table.
-    * Fallback (unpartitioned dst): anti-join + unionByName → tmp
-    * (written with the declared layout) → swap. docs/ACID_MERGE.md
-    * describes how an ACID table format would close the commit window.
+    * publish guarantee; the trade for not rewriting the full table.
+    * Unpartitioned dst: anti-join + unionByName, written by [[publish]]
+    * with the declared layout — a directory swap when the merged schema
+    * is dst's, else a tmp table swapped in by [[moveTable]].
+    * docs/ACID_MERGE.md describes how an ACID table format would close
+    * the commit window.
     */
   def mergeDelta(
       delta: DataFrame, dst: String, deleteKey: String,
       ddl: Ddl = Ddl.empty): Result[Unit] =
-    Result.attempt(lookup(dst).getOrElse(
+    Result.attempt(destination(dst).getOrElse(
       throw new IllegalStateException(s"mergeDelta: destination $dst does not exist")))
-      .flatMap(t => mergeInto(delta, dst, t.partitionColumnNames, deleteKey, ddl))
+      .flatMap(mergeDelta(delta, dst, _, deleteKey, ddl))
 
-  /** [[mergeDelta]] once dst's partition columns are known. */
-  private def mergeInto(
-      delta: DataFrame, dst: String, partCols: Seq[String], deleteKey: String,
+  /** [[mergeDelta]] once dst's catalog entry `t` is known (from
+    * [[destination]]).
+    */
+  private[graft] def mergeDelta(
+      delta: DataFrame, dst: String, t: CatalogTable, deleteKey: String,
       ddl: Ddl): Result[Unit] = {
-    val partitionMerge = Result.attempt {
+    val partCols = t.partitionColumnNames
+    Result.attempt {
       // isolated session for the partitioned path: same SparkContext,
       // SAME catalog/warehouse (SharedState), but a PRIVATE SQLConf —
       // dynamic partition overwrite is scoped to this merge and can
@@ -271,19 +296,15 @@ final class SparkDatabase(val spark: SparkSession) {
             spark.sql(s"ALTER TABLE $dst DROP IF EXISTS PARTITION ($spec)")
           }
         } finally merged.unpersist()
-        None
+        Result.ok(())
       } else {
         val merged = dstDf
           .join(srcAligned, Seq(deleteKey), "left_anti")
           .unionByName(srcAligned)
         // distinct stage name: a caller's src table may be tmpName(dst)
-        val tmp = tmpName(dst, "merge_")
-        writer(applySort(merged, ddl), ddl)
-          .mode(SaveMode.Overwrite).saveAsTable(tmp)
-        Some(tmp)
+        publish(merged, dst, ddl, Some(t), "merge_")
       }
-    }
-    partitionMerge.flatMap(_.map(moveTable(_, dst)).getOrElse(Right(())))
+    }.flatten
   }
 
   /** Incremental materialisation (sayn/database/__init__.py:819-846): the
@@ -293,26 +314,36 @@ final class SparkDatabase(val spark: SparkSession) {
     * self-referencing SELECT safe and keeps non-deterministic keys
     * consistent between the delete and the insert. Creates the
     * destination outright when missing; one catalog fetch answers both
-    * that and dst's partition layout.
+    * that and dst's partition layout, and the write reuses it.
     */
   def mergeQuery(
       table: String,
       select: String,
       deleteKey: String,
       ddl: Ddl = Ddl.empty): Result[Unit] =
-    Result.attempt(lookup(table)).flatMap {
-      case None => replaceTable(table, select, ddl)
-      case Some(t) =>
-        for {
-          delta <- Result.attempt(Stage.materialize(typed(spark.sql(select), ddl)))
-          _ <- mergeInto(delta, table, t.partitionColumnNames, deleteKey, ddl)
-          _ <- runHooks(ddl)
-        } yield ()
+    Result.attempt(destination(table)).flatMap {
+      case None => replaceTable(table, select, ddl, None)
+      case Some(t) => mergeQuery(table, select, deleteKey, ddl, t)
     }
+
+  /** [[mergeQuery]] into the existing `table`, catalog entry `t` (from
+    * [[destination]]).
+    */
+  private[graft] def mergeQuery(
+      table: String, select: String, deleteKey: String, ddl: Ddl,
+      t: CatalogTable): Result[Unit] =
+    for {
+      delta <- Result.attempt(Stage.materialize(typed(spark.sql(select), ddl)))
+      _ <- mergeDelta(delta, table, t, deleteKey, ddl)
+      _ <- runHooks(ddl)
+    } yield ()
 
   /** Rename/swap (sayn/database/__init__.py:701-743,
     * templates/move_table.sql), on the session catalog directly (see
     * [[GraftSqlBridge.CatalogDdl]]): no SQL command is parsed or planned.
+    * The public rename, and the swap of [[publish]]'s catalog path; a
+    * same-schema rewrite of a managed parquet table swaps directories
+    * instead and never comes here.
     *
     * Guarantee: no single failure leaves a table destination absent or
     * partial; a failed swap leaves the old table readable under `dst`. A
@@ -330,40 +361,149 @@ final class SparkDatabase(val spark: SparkSession) {
     * Spark.
     */
   def moveTable(src: String, dst: String): Result[Unit] =
+    Result.attempt(swap(src, dst, lookup(dst)))
+
+  /** [[moveTable]] once dst's catalog entry is known. */
+  private def swap(src: String, dst: String, current: Option[CatalogTable]): Unit =
+    current.map(_.tableType) match {
+      case Some(CatalogTableType.VIEW) =>
+        if (!tableExists(src))
+          throw new IllegalStateException(s"moveTable: source $src does not exist")
+        catalogDdl.drop(dst)
+        catalogDdl.rename(src, dst)
+      case Some(_) =>
+        val backup = tmpName(dst, "backup_")
+        try catalogDdl.rename(dst, backup)
+        catch {
+          case _: TableAlreadyExistsException =>
+            catalogDdl.drop(backup)
+            catalogDdl.rename(dst, backup)
+        }
+        try catalogDdl.rename(src, dst)
+        catch {
+          case e: Throwable =>
+            catalogDdl.rename(backup, dst)
+            throw e
+        }
+        catalogDdl.drop(backup)
+      case None =>
+        catalogDdl.rename(src, dst)
+    }
+
+  /** The one write primitive behind every full rewrite of `dst`
+    * ([[replaceTable]], the unpartitioned merge, [[compactTable]] and
+    * `CopyTask`'s full copy); `current` is dst's catalog entry from
+    * [[destination]], fetched once by the caller, which also repaired
+    * what a killed publish left behind. `stage` is `merge_` for a merge,
+    * whose source may be the tmp table `graft_tmp_<dst>`.
+    *
+    * Fast path, when dst is a managed, unpartitioned, unbucketed parquet
+    * table, `ddl` asks for no partitioning or bucketing, and dst's catalog
+    * schema is `df`'s schema taken as nullable: `df` is written as plain
+    * parquet into the sibling directory `graft_tmp_<stage><t>` of dst's
+    * directory `<t>`, dst's directory is renamed to `graft_tmp_backup_<t>`,
+    * the staging directory is renamed into place (the backup is renamed
+    * back when that throws), and the backup is deleted. dst is then
+    * un-cached and refreshed by name and its statistics updated as Spark's
+    * own insert does: no create, rename or drop, at most one AlterTable
+    * (on Hive), and the data stays at dst's managed path. A failed write
+    * deletes the staging directory and leaves dst as it was.
+    *
+    * Otherwise (no dst, a view, a partitioned, bucketed or external
+    * table, a schema change) `df` is written with the declared layout to
+    * the tmp table `graft_tmp_<stage><dst>` and swapped in by the catalog
+    * renames of [[moveTable]].
+    *
+    * A directory rename is a metadata operation on HDFS and a local disk
+    * but a copy on an object store without atomic rename, as the managed
+    * rename of the catalog path already is. A process killed between the
+    * two renames leaves dst's directory missing, so readers see an empty
+    * table until [[destination]] repairs it at dst's next write.
+    */
+  private[graft] def publish(
+      df: DataFrame, dst: String, ddl: Ddl, current: Option[CatalogTable],
+      stage: String = ""): Result[Unit] =
     Result.attempt {
-      objectType(dst) match {
-        case Some("view") =>
-          if (!tableExists(src))
-            throw new IllegalStateException(s"moveTable: source $src does not exist")
-          catalogDdl.drop(dst)
-          catalogDdl.rename(src, dst)
-        case Some(_) =>
-          val backup = tmpName(dst, "backup_")
-          try catalogDdl.rename(dst, backup)
-          catch {
-            case _: TableAlreadyExistsException =>
-              catalogDdl.drop(backup)
-              catalogDdl.rename(dst, backup)
-          }
-          try catalogDdl.rename(src, dst)
+      val frame = applySort(df, ddl)
+      current.filter(t => swappable(t) && ddl.partitionBy.isEmpty &&
+          ddl.clusterBy.isEmpty && t.schema == GraftSqlBridge.asNullable(df.schema)) match {
+        case Some(t) =>
+          val dir = new Path(t.location)
+          val fs = dir.getFileSystem(catalogDdl.hadoopConf)
+          val staging = sibling(dir, stage)
+          val backup = sibling(dir, "backup_")
+          fs.delete(staging, true)
+          try frame.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+          catch { case e: Throwable => fs.delete(staging, true); throw e }
+          val hadDir = fs.exists(dir)
+          if (hadDir) rename(fs, dir, backup)
+          try rename(fs, staging, dir)
           catch {
             case e: Throwable =>
-              catalogDdl.rename(backup, dst)
+              if (hadDir) rename(fs, backup, dir)
+              fs.delete(staging, true)
               throw e
           }
-          catalogDdl.drop(backup)
+          fs.delete(backup, true)
+          catalogDdl.replaced(t)
         case None =>
-          catalogDdl.rename(src, dst)
+          if (current.isEmpty) catalogDdl.ensureDatabase(dst)
+          val tmp = tmpName(dst, stage)
+          writer(frame, ddl).mode(SaveMode.Overwrite).saveAsTable(tmp)
+          swap(tmp, dst, current)
       }
     }
+
+  /** A table whose content [[publish]] can replace by swapping its
+    * directory: managed, unpartitioned, unbucketed parquet.
+    */
+  private def swappable(t: CatalogTable): Boolean =
+    t.tableType == CatalogTableType.MANAGED && t.storage.locationUri.isDefined &&
+      t.provider.exists(_.equalsIgnoreCase("parquet")) &&
+      t.partitionColumnNames.isEmpty && t.bucketSpec.isEmpty
+
+  /** `graft_tmp_<extra><name>` next to the table directory `dir`. */
+  private def sibling(dir: Path, extra: String): Path =
+    new Path(dir.getParent, tmpPrefix + extra + dir.getName)
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"could not rename $from to $to")
+
+  /** The catalog entry of a write's destination, from one fetch. For a
+    * table [[publish]] can swap, the directories of a publish killed
+    * midway are repaired first, before the write reads dst: with dst's
+    * directory missing (killed between the two renames) the backup is
+    * renamed back, and with it present a leftover backup is deleted (a
+    * backup table left by an interrupted [[moveTable]] is dropped). One
+    * file-system call when nothing was left behind. A leftover staging
+    * directory is deleted by the next [[publish]] of its stage.
+    */
+  private[graft] def destination(name: String): Option[CatalogTable] = {
+    val current = lookup(name)
+    current.filter(swappable).foreach { t =>
+      val dir = new Path(t.location)
+      val fs = dir.getFileSystem(catalogDdl.hadoopConf)
+      val backup = sibling(dir, "backup_")
+      if (fs.exists(backup)) {
+        if (!fs.exists(dir)) rename(fs, backup, dir)
+        else {
+          catalogDdl.drop(tmpName(name, "backup_"))
+          fs.delete(backup, true)
+        }
+        catalogDdl.refresh(t)
+      }
+    }
+    current
+  }
 
   /** OPTIMIZE-style small-file compaction — the maintenance pass a
     * lakehouse runs after incremental appends fragment a table into
     * thousands of tiny files (each append under [[mergeTables]] /
     * [[loadDataFrame]] commits its own files; small files tax every
     * subsequent scan with per-file open/footer costs). Rewrites the
-    * table into ceil(rows / targetRowsPerFile) files through the same
-    * tmp+swap as [[replaceTable]], so a mid-compaction failure never
+    * table into ceil(rows / targetRowsPerFile) files through
+    * [[publish]], like [[replaceTable]], so a mid-compaction failure never
     * loses the destination.
     *
     * The rewrite uses coalesce, NOT repartition: compaction only ever
@@ -381,21 +521,16 @@ final class SparkDatabase(val spark: SparkSession) {
     if (targetRowsPerFile <= 0)
       Left(DbError(s"targetRowsPerFile must be positive, got $targetRowsPerFile"))
     else Result.attempt {
+      val current = destination(table)
       val df = spark.table(table)
       val before = df.inputFiles.length.toLong
       val rows = df.count()
       val target = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile)
-      (before, rows, target)
-    }.flatMap { case (before, rows, target) =>
+      (current, before, rows, target)
+    }.flatMap { case (current, before, rows, target) =>
       if (before <= target) Result.ok((before, before, rows))
-      else {
-        val tmp = tmpName(table)
-        Result.attempt {
-          catalogDdl.drop(tmp)
-          spark.table(table).coalesce(target.toInt).write.saveAsTable(tmp)
-        }.flatMap(_ => moveTable(tmp, table))
-          .map(_ => (before, target, rows))
-      }
+      else publish(spark.table(table).coalesce(target.toInt), table, Ddl.empty, current)
+        .map(_ => (before, target, rows))
     }
   }
 
@@ -417,7 +552,7 @@ final class SparkDatabase(val spark: SparkSession) {
   def objectType(name: String): Option[String] =
     lookup(name).map(t => if (t.tableType == CatalogTableType.VIEW) "view" else "table")
 
-  private def lookup(name: String): Option[CatalogTable] =
+  private[graft] def lookup(name: String): Option[CatalogTable] =
     GraftSqlBridge.catalogTable(spark, name)
 
   def tableSchema(name: String): Option[org.apache.spark.sql.types.StructType] =

@@ -63,7 +63,7 @@ object EtlShapes extends QueryFile {
       |UNION ALL SELECT o_orderkey, o_custkey, o_totalprice FROM src""".stripMargin
 
   /** q23: full `CopyTask` run — path source, declared columns with
-    * rename + cast (`dst_name`, copy.py:625-630), tmp+swap write — then
+    * rename + cast (`dst_name`, copy.py:625-630), a published write — then
     * read the destination back.
     */
   def q23Copy(s: SparkSession, dir: String): DataFrame = {
@@ -315,7 +315,7 @@ object EtlShapes extends QueryFile {
   /** q72: the script/materialisation chain end-to-end — a multi-statement
     * `execute` (quote/comment-aware splitting: the quoted ';' and the
     * comment must survive), a CTAS reading the first statement's output,
-    * a `replaceTable` tmp+swap, and a `replaceView` — then the view is
+    * a `replaceTable` publish, and a `replaceView` — then the view is
     * read back. Upgrades execute/create_table/replace_table/replace_view
     * from ScalaTest-only to driver-checked.
     */
@@ -512,7 +512,7 @@ object EtlShapes extends QueryFile {
 
   /** q188: small-file compaction — a lineitem projection written
     * deliberately fragmented (48 files), then `compactTable` rewrites
-    * it to ~3 files via the tmp+swap path, and the destination reads
+    * it to ~3 files through the publish swap, and the destination reads
     * back content-identical (the oracle only cares that compaction is
     * LOSSLESS; the file-count mechanics are asserted in
     * SparkDatabaseSpec).

@@ -4,7 +4,8 @@ import graft.core.{ConfigError, Result}
 import graft.core.Result.Result
 import graft.db.{ColumnDdl, Ddl}
 import graft.pipeline.Stage
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.functions._
 
 /** Table replication with full / incremental / append modes
@@ -138,12 +139,12 @@ final class CopyTask extends TaskRunner {
       }
     } else ctx.spark.table(resolvedSrc)
 
-  /** Column set: declared DDL wins; else destination schema (incremental
-    * task whose destination exists, minus engine columns) or source schema
-    * — copy.py:543-630. `dst_name` renames apply on the way through
-    * (copy.py:625-630).
+  /** Column set: declared DDL wins; else destination schema (`dst`: the
+    * catalog entry of an incremental task's existing destination, minus
+    * engine columns) or source schema — copy.py:543-630. `dst_name`
+    * renames apply on the way through (copy.py:625-630).
     */
-  private def projectColumns(src: DataFrame, dstExists: Boolean): Result[DataFrame] = {
+  private def projectColumns(src: DataFrame, dst: Option[CatalogTable]): Result[DataFrame] = {
     val srcCols = src.columns.toSet
     if (ddl.columns.nonEmpty) {
       val missing = ddl.columns.map(_.name).filterNot(srcCols.contains)
@@ -155,8 +156,8 @@ final class CopyTask extends TaskRunner {
         val typed = c.dataType.map(t => base.cast(Ddl.sparkType(t))).getOrElse(base)
         typed.as(c.dstName.getOrElse(c.name))
       }.toIndexedSeq: _*))
-    } else if (dstExists) {
-      val dstCols = ctx.spark.table(resolvedDst).columns
+    } else if (dst.isDefined) {
+      val dstCols = dst.get.schema.fieldNames
         .filterNot(_.startsWith("_graft")) // engine columns excluded (copy.py:566-573)
       val missing = dstCols.filterNot(srcCols.contains)
       if (missing.nonEmpty)
@@ -191,55 +192,59 @@ final class CopyTask extends TaskRunner {
       case _ => df
     }
 
-  override def run(): Result[Unit] = {
-    // one catalog probe per run, and none for a plain full copy
-    val dstExists = incrementalKey.isDefined && ctx.db.tableExists(resolvedDst)
-    val mode =
-      if (!dstExists || ctx.runArgs.fullLoad) "full"
-      else if (append) "append"
-      else "inc"
+  override def run(): Result[Unit] =
+    // one catalog fetch per run, handed down to the write
+    Result.attempt(ctx.db.destination(resolvedDst)).flatMap { current =>
+      // an existing destination steers only an incremental copy
+      val dst = current.filter(_ => incrementalKey.isDefined)
+      val mode =
+        if (dst.isEmpty || ctx.runArgs.fullLoad) "full"
+        else if (append) "append"
+        else "inc"
 
-    ctx.track.startStep(s"copy_$mode")
-    val out = runMode(mode, dstExists)
-    ctx.track.finishCurrentStep(out.isRight)
-    out
-  }
+      ctx.track.startStep(s"copy_$mode")
+      val out = runMode(mode, current, dst)
+      ctx.track.finishCurrentStep(out.isRight)
+      out
+    }
 
-  private def runMode(mode: String, dstExists: Boolean): Result[Unit] = {
+  private def runMode(
+      mode: String, current: Option[CatalogTable],
+      dst: Option[CatalogTable]): Result[Unit] = {
     Result.attempt(readSource()).flatMap { src0 =>
       mode match {
         case "full" =>
-          projectColumns(src0, dstExists).flatMap { projected =>
+          projectColumns(src0, dst).flatMap { projected =>
             val stamped =
               if (append) projected.withColumn(loadTsColumn, current_timestamp())
               else projected
-            // tmp + swap so readers never see a partial table (copy.py:428-479)
-            val tmp = ctx.db.tmpName(resolvedDst)
-            ctx.db.loadDataFrame(stamped, tmp, replace = true, ddl)
-              .flatMap(_ => ctx.db.moveTable(tmp, resolvedDst))
+            // published whole, so readers never see a partial table
+            // (copy.py:428-479)
+            ctx.db.publish(stamped, resolvedDst, ddl, current)
           }
         case "append" =>
-          projectColumns(applyWatermark(src0), dstExists).flatMap { projected =>
-            ctx.db.loadDataFrame(
+          projectColumns(applyWatermark(src0), dst).flatMap { projected =>
+            ctx.db.appendTo(
               projected.withColumn(loadTsColumn, current_timestamp()),
-              resolvedDst, replace = false)
+              resolvedDst, dst.get)
           }
         case "inc" =>
           maxMergeRows match {
             case None =>
-              projectColumns(applyWatermark(src0), dstExists).flatMap(mergeChunk)
-            case Some(limit) => chunkedMerge(limit)
+              projectColumns(applyWatermark(src0), dst).flatMap(mergeChunk(_, dst.get))
+            case Some(limit) => chunkedMerge(limit, dst.get)
           }
       }
     }
   }
 
   /** Stage the chunk once (it reads the destination's watermark, and the
-    * merge reads it several times), then merge it in; no tmp table.
+    * merge reads it several times), then merge it into `dst`, the
+    * destination's catalog entry; no tmp table.
     */
-  private def mergeChunk(chunk: DataFrame): Result[Unit] =
+  private def mergeChunk(chunk: DataFrame, dst: CatalogTable): Result[Unit] =
     Result.attempt(Stage.materialize(chunk)).flatMap(
-      ctx.db.mergeDelta(_, resolvedDst, dstIncrementalKeyOrDelete, ddl))
+      ctx.db.mergeDelta(_, resolvedDst, dst, dstIncrementalKeyOrDelete, ddl))
 
   private def dstIncrementalKeyOrDelete: String =
     deleteKey.map { k =>
@@ -254,13 +259,13 @@ final class CopyTask extends TaskRunner {
     * Each chunk is cached so the count and the merge share one execution
     * of the global-sort plan instead of running it twice.
     */
-  private def chunkedMerge(limit: Int): Result[Unit] = {
+  private def chunkedMerge(limit: Int, dst: CatalogTable): Result[Unit] = {
     var iterations = 0
     var done = false
     var result: Result[Unit] = Right(())
     while (!done && iterations < 100 && result.isRight) {
       result = Result.attempt(readSource()).flatMap { src0 =>
-        projectColumns(applyWatermark(src0), dstExists = true).flatMap { projected =>
+        projectColumns(applyWatermark(src0), Some(dst)).flatMap { projected =>
           val key = dstIncrementalKey.get
           val chunk = projected.orderBy(col(key).asc_nulls_first).limit(limit)
             .cache()
@@ -269,7 +274,7 @@ final class CopyTask extends TaskRunner {
             if (n == 0) { done = true; Right(()) }
             else {
               if (n < limit) done = true
-              mergeChunk(chunk)
+              mergeChunk(chunk, dst)
             }
           } finally chunk.unpersist()
         }

@@ -3,6 +3,7 @@ package graft.tasks
 import graft.core.{ConfigError, Result}
 import graft.core.Result.Result
 import graft.db.Ddl
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 
 /** The `autosql`/`sql` task family: a templated SELECT (or script)
   * materialised as view / table / incremental merge / raw script
@@ -100,17 +101,18 @@ final class SqlTask(isAutoSql: Boolean) extends TaskRunner {
         case "script" =>
           ctx.track.startStep("execute_sql")
           ctx.db.execute(sql)
+        case "incremental" if ctx.runArgs.fullLoad =>
+          ctx.track.startStep("load_table")
+          ctx.db.replaceTable(resolvedDst, sql, ddl)
         case "incremental" =>
-          // one catalog fetch decides; none under --full-load
-          Result.attempt(ctx.runArgs.fullLoad ||
-            !ctx.db.objectType(resolvedDst).contains("table")).flatMap { reload =>
-            if (reload) {
-              ctx.track.startStep("load_table")
-              ctx.db.replaceTable(resolvedDst, sql, ddl)
-            } else {
+          // one catalog fetch decides, and the write reuses it
+          Result.attempt(ctx.db.destination(resolvedDst)).flatMap {
+            case Some(t) if t.tableType != CatalogTableType.VIEW =>
               ctx.track.startStep("merge_table")
-              ctx.db.mergeQuery(resolvedDst, sql, deleteKey.get, ddl)
-            }
+              ctx.db.mergeQuery(resolvedDst, sql, deleteKey.get, ddl, t)
+            case current =>
+              ctx.track.startStep("load_table")
+              ctx.db.replaceTable(resolvedDst, sql, ddl, current)
           }
         case "table" =>
           ctx.track.startStep("load_table")

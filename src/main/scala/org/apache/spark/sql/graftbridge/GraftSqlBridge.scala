@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.catalog.{CatalogDatabase, CatalogTable}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.connector.catalog.CatalogManager
+import org.apache.spark.sql.execution.command.CommandUtils
 
 /** Access bridge for the `private[sql]` Column↔Expression converters —
   * the standard technique for libraries that extend Spark with custom
@@ -67,6 +68,13 @@ object GraftSqlBridge {
     }
   }
 
+  /** `schema` with every field nullable, nested fields included: the
+    * schema a data source table stores for what it was written from
+    * (`StructType.asNullable` is `private[spark]`).
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Table DDL made straight on the session catalog: the catalog mutations
     * behind `ALTER TABLE … RENAME`, `DROP TABLE`/`DROP VIEW` and
     * `CREATE DATABASE IF NOT EXISTS`, without a SQL command to parse,
@@ -91,6 +99,27 @@ object GraftSqlBridge {
         Seq(CatalogManager.SESSION_CATALOG_NAME, q.database.get, q.table),
         cascade = true, blocking = false)
       catalog.refreshTable(id)
+    }
+
+    /** The session's Hadoop configuration, for the file system of a table
+      * location.
+      */
+    def hadoopConf: org.apache.hadoop.conf.Configuration =
+      session.sessionState.newHadoopConf()
+
+    /** After `t`'s files changed under it: un-cache and refresh it by
+      * name, as before a rename.
+      */
+    def refresh(t: CatalogTable): Unit = forget(t.identifier)
+
+    /** After `t`'s files were replaced in place: [[refresh]] it, then
+      * update its statistics as Spark's own insert does (on Hive one
+      * AlterTable, which recomputes `totalSize` from the new files; with
+      * no statistics stored, none).
+      */
+    def replaced(t: CatalogTable): Unit = {
+      refresh(t)
+      CommandUtils.updateTableStats(session, t)
     }
 
     /** Rename `from` to `to`: throws `NoSuchTableException` when `from` is

@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.catalog.{CreateTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.catalyst.catalog.{AlterTableEvent, CreateTableEvent, DropTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener, RenameTableEvent}
 import org.apache.spark.sql.catalyst.plans.logical.Command
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -19,13 +21,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val base = java.nio.file.Files.createTempDirectory("graft_test_")
 
+  /** Whether the session runs on the Hive catalog (a Derby metastore
+    * under the suite's directory), as `graft run` and the benchmark do.
+    * The first session of a JVM fixes its catalog for the JVM, so a suite
+    * that sets this runs in a forked JVM of its own (build.sbt's
+    * `Test / testGrouping`); every other suite shares the in-memory one.
+    */
+  protected def hiveCatalog: Boolean = false
+
   lazy val spark: SparkSession = {
-    val s = Session.builder("local[4]", 4)
+    val b = Session.builder("local[4]", 4)
       .appName(getClass.getSimpleName)
       .config("spark.sql.warehouse.dir", base.resolve("warehouse").toString)
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=${base.resolve("metastore")};create=true")
-      .getOrCreate()
+    if (hiveCatalog) b
+      .config("spark.hadoop.hive.exec.scratchdir", base.resolve("hive-scratch").toString)
+      .config("spark.hadoop.hive.exec.local.scratchdir", base.resolve("hive-local").toString)
+      .enableHiveSupport()
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -63,6 +77,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Names of the tables created while `body` runs, in order. */
   def tablesCreatedBy(body: => Unit): Seq[String] =
     catalogEventsBy(body).collect { case CreateTableEvent(_, name) => name }
+
+  /** The table mutations among `events`, in order, as the benchmark's
+    * `catalog.*` counters name them: create, drop, rename, alter.
+    */
+  def mutations(events: Seq[ExternalCatalogEvent]): Seq[String] = events.collect {
+    case _: CreateTableEvent => "create"
+    case _: DropTableEvent => "drop"
+    case _: RenameTableEvent => "rename"
+    case _: AlterTableEvent => "alter"
+  }
+
+  /** The directory of table `name`, from its catalog entry. */
+  def tableDir(name: String): Path =
+    new Path(GraftSqlBridge.catalogTable(spark, name).get.location)
+
+  def fileSystem(p: Path): FileSystem = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The `graft_tmp_*` directories that belong to table `name`, beside
+    * its directory: staging and backup directories of a publish, and the
+    * directories of tmp and backup tables.
+    */
+  def tmpDirsOf(name: String): Seq[String] = {
+    val dir = tableDir(name)
+    fileSystem(dir).listStatus(dir.getParent).map(_.getPath.getName)
+      .filter(n => n.startsWith("graft_tmp_") && n.endsWith(dir.getName)).toSeq
+  }
 
   /** Waits (bounded) until `seen` holds, after listener delivery that
     * runs behind on the listener bus.

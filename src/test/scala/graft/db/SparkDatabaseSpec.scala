@@ -2,6 +2,7 @@ package graft.db
 
 import graft.SparkSpec
 import graft.core.TestFailed
+import org.apache.hadoop.fs.{FileUtil, Path}
 
 class SparkDatabaseSpec extends SparkSpec {
 
@@ -75,6 +76,19 @@ class SparkDatabaseSpec extends SparkSpec {
     assert(rows(spark.table("rep_t")) == Set(Seq(2)))
   }
 
+  test("replaceView replaces an existing view with one AlterTable") {
+    assert(db.replaceTable("alter_v_src", "SELECT 1 AS x").isRight)
+    assert(db.replaceView("alter_v", "SELECT x FROM alter_v_src").isRight)
+    val events = catalogEventsBy(assert(
+      db.replaceView("alter_v", "SELECT x, x * 10 AS y FROM alter_v_src").isRight))
+    assert(mutations(events) == Seq("alter"), events)
+    assert(rows(spark.table("alter_v")) == Set(Seq(1, 10)))
+    // a missing view is created, not altered
+    val created = catalogEventsBy(assert(
+      db.replaceView("alter_v_new", "SELECT x FROM alter_v_src").isRight))
+    assert(mutations(created) == Seq("create"), created)
+  }
+
   test("replaceView creates and replaces") {
     assert(db.replaceTable("view_src", "SELECT 1 AS x").isRight)
     assert(db.replaceView("v1", "SELECT * FROM view_src").isRight)
@@ -105,17 +119,19 @@ class SparkDatabaseSpec extends SparkSpec {
     assert(rows(spark.table("mq_t")) == Set(Seq(1, "b")))
   }
 
-  test("mergeQuery stages the delta: one table created, no tmp table left") {
+  test("mergeQuery stages the delta: no table created, no tmp table left") {
     assert(db.replaceTable("stage_t", "SELECT id, 'old' AS v FROM RANGE(5)").isRight)
     val created = tablesCreatedBy {
       assert(db.mergeQuery("stage_t",
         "SELECT id, 'new' AS v FROM RANGE(3, 8)", "id").isRight)
     }
-    // only the merged table that is swapped in — the SELECT is staged in
-    // memory, not in a graft_tmp_stage_t catalog table
-    assert(created.filter(_.endsWith("stage_t")) == Seq("graft_tmp_merge_stage_t"))
+    // the SELECT is staged in memory, not in a graft_tmp_stage_t catalog
+    // table, and the same-schema merge is published by a directory swap,
+    // not through a graft_tmp_merge_stage_t table
+    assert(created.isEmpty, created)
     assert(!spark.catalog.listTables().collect()
       .exists(t => t.name.startsWith("graft_tmp_") && t.name.endsWith("stage_t")))
+    assert(tmpDirsOf("stage_t").isEmpty)
     assert(rows(spark.table("stage_t")) ==
       (0L until 3L).map(i => Seq(i, "old")).toSet ++
         (3L until 8L).map(i => Seq(i, "new")))
@@ -324,6 +340,62 @@ class SparkDatabaseSpec extends SparkSpec {
     assert(db.replaceTable("left_t", "SELECT 2 AS x").isRight)
     assert(rows(spark.table("left_t")) == Set(Seq(2)))
     assert(!db.tableExists(backup))
+  }
+
+  test("a publish whose frame fails mid-write keeps the old rows, leaves no directory") {
+    assert(db.replaceTable("fail_t", "SELECT id FROM RANGE(3)").isRight)
+    val dir = tableDir("fail_t")
+    val r = db.replaceTable("fail_t",
+      "SELECT CASE WHEN id = 2 THEN raise_error('boom') ELSE id END AS id FROM RANGE(5)")
+    assert(r.isLeft, r)
+    assert(r.left.exists(_.toString.contains("boom")), r)
+    assert(rows(spark.table("fail_t")) == Set(Seq(0L), Seq(1L), Seq(2L)))
+    assert(tableDir("fail_t") == dir)
+    assert(tmpDirsOf("fail_t").isEmpty, tmpDirsOf("fail_t"))
+  }
+
+  /** Leave behind what a publish of `t` killed after its staging write
+    * and its first rename leaves: staging and backup directories, with
+    * dst's own directory moved into the backup (`dstPresent = false`) or
+    * copied there (`dstPresent = true`, as if killed before the backup's
+    * delete). `stage` names the staging directory: `merge_` for a merge.
+    */
+  private def killedPublish(t: String, dstPresent: Boolean, stage: String = ""): Unit = {
+    val dir = tableDir(t)
+    val fs = fileSystem(dir)
+    val backup = new Path(dir.getParent, s"graft_tmp_backup_${dir.getName}")
+    val staging = new Path(dir.getParent, s"graft_tmp_$stage${dir.getName}")
+    if (dstPresent)
+      assert(FileUtil.copy(fs, dir, fs, backup, false, fs.getConf))
+    else assert(fs.rename(dir, backup))
+    fs.create(new Path(staging, "part-00000-partial.parquet")).close()
+    assert(tmpDirsOf(t).size == 2)
+  }
+
+  test("a killed publish's directories are repaired by the next write (dst present)") {
+    assert(db.replaceTable("killed_t", "SELECT 1 AS x").isRight)
+    killedPublish("killed_t", dstPresent = true)
+    assert(db.replaceTable("killed_t", "SELECT x + 1 AS x FROM killed_t").isRight)
+    assert(rows(spark.table("killed_t")) == Set(Seq(2)))
+    assert(tmpDirsOf("killed_t").isEmpty, tmpDirsOf("killed_t"))
+  }
+
+  test("a killed publish's directories are repaired by the next write (dst missing)") {
+    assert(db.replaceTable("killed2_t", "SELECT 1 AS x").isRight)
+    killedPublish("killed2_t", dstPresent = false)
+    // until the next write, readers see an empty table (the kill window)
+    spark.catalog.refreshTable("killed2_t")
+    assert(spark.table("killed2_t").count() == 0)
+    // the next write restores the backup before it reads the table, so a
+    // self-referencing SELECT sees the old rows
+    assert(db.replaceTable("killed2_t", "SELECT x + 1 AS x FROM killed2_t").isRight)
+    assert(rows(spark.table("killed2_t")) == Set(Seq(2)))
+    assert(tmpDirsOf("killed2_t").isEmpty, tmpDirsOf("killed2_t"))
+    // and a merge after a kill keeps every old row
+    killedPublish("killed2_t", dstPresent = false, stage = "merge_")
+    assert(db.mergeQuery("killed2_t", "SELECT 5 AS x", "x").isRight)
+    assert(rows(spark.table("killed2_t")) == Set(Seq(2), Seq(5)))
+    assert(tmpDirsOf("killed2_t").isEmpty, tmpDirsOf("killed2_t"))
   }
 
   test("bucketed tables (cluster ddl) join without a shuffle exchange") {
