@@ -1,5 +1,6 @@
 package graft
 
+import graft.db.ParquetSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
@@ -186,11 +187,11 @@ object ScaleStress {
     val marker = Paths.get(out, s"_GRAFT_SCALE_F$factor")
     if (Files.exists(marker)) return
     replicated.foreach { n =>
-      replicate(spark.read.parquet(s"$base/$n.parquet"), n, factor)
+      replicate(ParquetSource.read(spark, s"$base/$n.parquet"), n, factor)
         .write.mode("overwrite").parquet(s"$out/$n.parquet")
     }
     copied.foreach { n =>
-      spark.read.parquet(s"$base/$n.parquet")
+      ParquetSource.read(spark, s"$base/$n.parquet")
         .write.mode("overwrite").parquet(s"$out/$n.parquet")
     }
     Files.createDirectories(Paths.get(out))

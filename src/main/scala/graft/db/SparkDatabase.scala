@@ -56,7 +56,10 @@ final class SparkDatabase(val spark: SparkSession) {
   /** Bulk load a DataFrame into a table. Replaces the reference's
     * batched-INSERT and four warehouse-native bulk paths
     * (sayn/database/__init__.py:513-587) with one distributed parquet
-    * write — bulk by construction, no driver-side batching.
+    * write — bulk by construction, no driver-side batching. An existing
+    * table is appended to, or with `replace` rewritten by [[publish]], so
+    * a frame that fails mid-write leaves the old table readable; a
+    * missing one is created.
     */
   def loadDataFrame(
       df: DataFrame,
@@ -65,9 +68,10 @@ final class SparkDatabase(val spark: SparkSession) {
       ddl: Ddl = Ddl.empty): Result[Unit] =
     Result.attempt(destination(table)).flatMap {
       case Some(t) if !replace => appendTo(df, table, t)
-      case current =>
+      case current @ Some(_) => publish(df, table, ddl, current)
+      case None =>
         Result.attempt {
-          if (current.isEmpty) catalogDdl.ensureDatabase(table)
+          catalogDdl.ensureDatabase(table)
           val mode = if (replace) SaveMode.Overwrite else SaveMode.Append
           writer(applySort(df, ddl), ddl).mode(mode).saveAsTable(table)
         }
@@ -215,7 +219,10 @@ final class SparkDatabase(val spark: SparkSession) {
     * publish guarantee; the trade for not rewriting the full table.
     * Unpartitioned dst: anti-join + unionByName, written by [[publish]]
     * with the declared layout — a directory swap when the merged schema
-    * is dst's, else a tmp table swapped in by [[moveTable]].
+    * is dst's, else a tmp table swapped in by [[moveTable]]. The anti-join
+    * broadcasts a staged delta whose measured size (its checkpoint blocks
+    * or files) is at most `spark.sql.autoBroadcastJoinThreshold`, so dst
+    * is not shuffled; any other delta is planned from its estimate.
     * docs/ACID_MERGE.md describes how an ACID table format would close
     * the commit window.
     */
@@ -298,8 +305,14 @@ final class SparkDatabase(val spark: SparkSession) {
         } finally merged.unpersist()
         Result.ok(())
       } else {
+        // a staged delta inherits its query's size estimate, however few
+        // rows it holds; its measured size decides the broadcast
+        val threshold = GraftSqlBridge.broadcastThreshold(spark)
+        val deltaSide =
+          if (GraftSqlBridge.checkpointedBytes(delta).exists(_ <= threshold)) broadcast(srcAligned)
+          else srcAligned
         val merged = dstDf
-          .join(srcAligned, Seq(deleteKey), "left_anti")
+          .join(deltaSide, Seq(deleteKey), "left_anti")
           .unionByName(srcAligned)
         // distinct stage name: a caller's src table may be tmpName(dst)
         publish(merged, dst, ddl, Some(t), "merge_")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.{Entry, QueryFile}
+import graft.db.ParquetSource
 import graft.streaming.{Event, Streaming}
 import java.nio.file.{Files, Paths}
 
@@ -41,7 +42,7 @@ object StreamingEntries extends QueryFile {
     * footer says.
     */
   private def stagedSchema(s: SparkSession, staged: String): StructType =
-    s.read.parquet(staged).schema
+    ParquetSource.read(s, staged).schema
 
   /** Stage the fixture events plus one sentinel event per user into a
     * fresh directory for the file-stream source. Staged dirs are
@@ -511,7 +512,7 @@ object StreamingEntries extends QueryFile {
     @volatile var current: Option[String] = None
     val upsert: (DataFrame, Long) => Unit = { (batch, id) =>
       val acc = current match {
-        case Some(p) => batch.sparkSession.read.parquet(p).unionByName(batch)
+        case Some(p) => ParquetSource.read(batch.sparkSession, p).unionByName(batch)
         case None => batch
       }
       val next = root.resolve(s"v$id").toString
@@ -526,7 +527,7 @@ object StreamingEntries extends QueryFile {
       .option("checkpointLocation", ckpt.toString).start()
     try q.awaitTermination()
     finally deleteRecursively(ckpt)
-    s.read.parquet(current.getOrElse(sys.error("q89: no micro-batch ran")))
+    ParquetSource.read(s, current.getOrElse(sys.error("q89: no micro-batch ran")))
   }
 
   /** Fixture plus ONE far-future sentinel row (not per-user): enough to
@@ -672,7 +673,7 @@ object StreamingEntries extends QueryFile {
         .incrementalExactDedup(corpus, batch, "doc_id", "text")
       val acc = current match {
         case Some(p) =>
-          val old = sp.read.parquet(p)
+          val old = ParquetSource.read(sp, p)
           old.select(col("content_hash"), col("keep_id").as("_o_keep"),
               col("n_copies").as("_o_n"))
             .join(survived.select(col("content_hash"),
@@ -695,7 +696,7 @@ object StreamingEntries extends QueryFile {
       .option("checkpointLocation", ckpt.toString).start()
     try q.awaitTermination()
     finally deleteRecursively(ckpt)
-    s.read.parquet(current.getOrElse(sys.error("q131: no micro-batch ran")))
+    ParquetSource.read(s, current.getOrElse(sys.error("q131: no micro-batch ran")))
   }
 
   /** Stage documents as FOUR id-range shard files with strictly

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.db.ParquetSource
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{
@@ -14,7 +15,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetSource.read(spark, s"$dir/$name.parquet")
 
   /** Register every fixture table as a temp view for spark.sql queries. */
   def registerAll(spark: SparkSession, dir: String): Unit =

@@ -2,7 +2,7 @@ package graft.tasks
 
 import graft.core.{ConfigError, Result}
 import graft.core.Result.Result
-import graft.db.{ColumnDdl, Ddl}
+import graft.db.{ColumnDdl, Ddl, ParquetSource}
 import graft.pipeline.Stage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
@@ -105,8 +105,10 @@ final class CopyTask extends TaskRunner {
     s.startsWith("jdbc:") ||
       s.contains("/") || s.matches("^(parquet|csv|json|orc):.*")
 
-  /** Schema inference for csv/json scans the file; cache the inferred
+  /** Schema inference for csv/json/orc scans the file; cache the inferred
     * schema so repeated reads (chunked merges, setup+run) scan data once.
+    * A parquet source (`parquet:path` or a bare path) needs no cache: its
+    * schema is one footer, read on the driver by [[ParquetSource]].
     */
   private var inferredSchema: Option[org.apache.spark.sql.types.StructType] = None
 
@@ -127,7 +129,8 @@ final class CopyTask extends TaskRunner {
       driver.fold(reader)(d => reader.option("driver", d)).load()
     } else if (isPath(resolvedSrc)) {
       resolvedSrc.split(":", 2) match {
-        case Array(fmt, path) if Seq("parquet", "csv", "json", "orc").contains(fmt) =>
+        case Array("parquet", path) => ParquetSource.read(ctx.spark, path)
+        case Array(fmt, path) if Seq("csv", "json", "orc").contains(fmt) =>
           val reader = ctx.spark.read.format(fmt).option("header", "true")
           val df = inferredSchema match {
             case Some(s) => reader.schema(s).load(path)
@@ -135,7 +138,7 @@ final class CopyTask extends TaskRunner {
           }
           inferredSchema = Some(df.schema)
           df
-        case _ => ctx.spark.read.parquet(resolvedSrc)
+        case _ => ParquetSource.read(ctx.spark, resolvedSrc)
       }
     } else ctx.spark.table(resolvedSrc)
 

@@ -7,7 +7,11 @@ import org.apache.spark.sql.catalyst.catalog.{CatalogDatabase, CatalogTable}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.connector.catalog.CatalogManager
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.command.CommandUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.storage.RDDBlockId
+import org.apache.spark.util.HadoopFSUtils
 
 /** Access bridge for the `private[sql]` Column↔Expression converters —
   * the standard technique for libraries that extend Spark with custom
@@ -67,6 +71,67 @@ object GraftSqlBridge {
       }
     }
   }
+
+  /** Whether Spark's file listing skips the file or directory `name`:
+    * `_`- and `.`-prefixed names (`_SUCCESS`, `.crc` files, `_temporary`)
+    * and `._COPYING_` files, but not the parquet summary files
+    * `_metadata` and `_common_metadata`.
+    */
+  def hiddenPath(name: String): Boolean = HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The schema Spark's parquet inference reads from `file` when it reads
+    * one footer (`ParquetFileFormat.mergeSchemasInParallel` for one file,
+    * without the job it runs it in): the footer without row groups,
+    * converted by Spark's own `readSchemaFromFooter` with the converter
+    * that inference builds from the session's conf, so NTZ timestamps,
+    * nanos-as-long and a stored Spark schema read as Spark reads them.
+    */
+  def parquetFooterSchema(
+      spark: org.apache.spark.sql.SparkSession,
+      file: org.apache.hadoop.fs.FileStatus): org.apache.spark.sql.types.StructType = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val conf = state.conf
+    val metadata = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, state.newHadoopConf()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, metadata),
+      new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
+  }
+
+  /** `spark.sql.autoBroadcastJoinThreshold` in bytes (-1: off). */
+  def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+
+  /** The bytes `df` holds, measured, when it is a checkpointed frame (its
+    * plan a `LogicalRDD` over a checkpointed RDD): the memory and disk
+    * size of its blocks as the block manager master records them for a
+    * local checkpoint, the size of its files for a reliable one. None for
+    * any other frame. Driver-side lookups only, no Spark job.
+    */
+  def checkpointedBytes(df: org.apache.spark.sql.DataFrame): Option[Long] =
+    df.queryExecution.logical match {
+      case r: LogicalRDD if r.rdd.isCheckpointed =>
+        r.rdd.getCheckpointFile match {
+          case Some(dir) =>
+            val path = new org.apache.hadoop.fs.Path(dir)
+            Some(path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+              .getContentSummary(path).getLength)
+          case None =>
+            val id = r.rdd.id
+            Some(org.apache.spark.SparkEnv.get.blockManager.master.getStorageStatus
+              .iterator.flatMap(_.rddBlocks).collect {
+                case (RDDBlockId(`id`, _), s) => s.memSize + s.diskSize
+              }.sum)
+        }
+      case _ => None
+    }
 
   /** `schema` with every field nullable, nested fields included: the
     * schema a data source table stores for what it was written from

@@ -115,15 +115,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The SQL commands (queries whose analyzed plan is a `Command`, the
     * benchmark's `catalyst.commands`) the session ran while `body` runs,
-    * as plan strings. Delivery is asynchronous, so a marker `SET` is run
-    * before and after `body` and waited for; only what lies between the
-    * two markers counts.
+    * as plan strings.
     */
-  def commandsRunBy(body: => Unit): Seq[String] = {
+  def commandsRunBy(body: => Unit): Seq[String] =
+    queriesRunBy(qe => Some(qe.analyzed).collect { case c: Command => c.toString })(body)
+
+  /** The executed plans of the queries the session ran while `body` runs,
+    * as plan strings: a write's plan as it finally ran, with AQE's final
+    * plan below it.
+    */
+  def executedPlansBy(body: => Unit): Seq[String] =
+    queriesRunBy(qe => Some(qe.executedPlan.toString))(body)
+
+  /** `describe` of each query the session ran while `body` runs, where
+    * defined. Delivery is asynchronous, so a marker `SET` is run before
+    * and after `body` and waited for; only what lies between the two
+    * markers counts.
+    */
+  private def queriesRunBy(describe: QueryExecution => Option[String])(body: => Unit): Seq[String] = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
-      private def record(qe: QueryExecution): Unit =
-        if (qe.analyzed.isInstanceOf[Command]) seen.add(qe.analyzed.toString)
+      private def record(qe: QueryExecution): Unit = {
+        val marker = Some(qe.analyzed.toString).filter(_.contains("graft.test.marker"))
+        marker.orElse(describe(qe)).foreach(seen.add)
+      }
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = record(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
     }

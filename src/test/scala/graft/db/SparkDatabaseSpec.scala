@@ -2,7 +2,9 @@ package graft.db
 
 import graft.SparkSpec
 import graft.core.TestFailed
+import graft.pipeline.Stage
 import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 
 class SparkDatabaseSpec extends SparkSpec {
 
@@ -352,6 +354,61 @@ class SparkDatabaseSpec extends SparkSpec {
     assert(rows(spark.table("fail_t")) == Set(Seq(0L), Seq(1L), Seq(2L)))
     assert(tableDir("fail_t") == dir)
     assert(tmpDirsOf("fail_t").isEmpty, tmpDirsOf("fail_t"))
+  }
+
+  test("loadDataFrame replace with a frame that fails mid-write keeps the old rows") {
+    assert(db.loadDataFrame(spark.range(3).toDF("id"), "load_fail_t", replace = true).isRight)
+    val dir = tableDir("load_fail_t")
+    // one partition: the failing task is the write's only task, so no
+    // task of the failed job is left running when its output is deleted
+    val r = db.loadDataFrame(spark.sql(
+      "SELECT CASE WHEN id = 2 THEN raise_error('boom') ELSE id END AS id FROM RANGE(0, 5, 1, 1)"),
+      "load_fail_t", replace = true)
+    assert(r.isLeft, r)
+    assert(r.left.exists(_.toString.contains("boom")), r)
+    assert(rows(spark.table("load_fail_t")) == Set(Seq(0L), Seq(1L), Seq(2L)))
+    assert(tableDir("load_fail_t") == dir)
+    assert(tmpDirsOf("load_fail_t").isEmpty, tmpDirsOf("load_fail_t"))
+  }
+
+  /** The delta's measured bytes and the anti-join plans of the merge of a
+    * staged 100-row delta into a 2,000-row table under a broadcast
+    * threshold of `threshold` bytes, after checking the rows it leaves. The delta is a join of two
+    * ranges, which Spark estimates as the product of its sides: far over
+    * 64 KB, however few bytes it holds.
+    */
+  private def mergePlans(table: String, threshold: Long): (Long, Seq[String]) = {
+    assert(db.replaceTable(table, "SELECT id AS k, id AS v FROM RANGE(2000)").isRight)
+    val delta = Stage.materialize(spark.sql(
+      "SELECT a.id * 20 AS k, -b.id AS v FROM RANGE(100) a JOIN RANGE(100) b ON a.id = b.id"))
+    assert(delta.queryExecution.optimizedPlan.stats.sizeInBytes > 64 * 1024)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, threshold)
+    val plans =
+      try executedPlansBy(assert(db.mergeDelta(delta, table, "k").isRight))
+      finally spark.conf.set(key, prev)
+    assert(spark.table(table).count() == 2000)
+    assert(spark.table(table).where("v < 0").count() == 99)
+    (GraftSqlBridge.checkpointedBytes(delta).get, plans.filter(_.contains("LeftAnti")))
+  }
+
+  test("an unpartitioned merge broadcasts a staged delta measured under the threshold") {
+    val (bytes, plans) = mergePlans("bc_small_t", 64 * 1024)
+    assert(bytes <= 64 * 1024 && plans.nonEmpty, bytes)
+    plans.foreach { p =>
+      assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti, BuildRight"), p)
+      assert(!p.contains("Exchange hashpartitioning"), p)
+    }
+  }
+
+  test("an unpartitioned merge plans a staged delta measured over the threshold as before") {
+    val (bytes, plans) = mergePlans("bc_large_t", 1024)
+    assert(bytes > 1024 && plans.nonEmpty, bytes)
+    plans.foreach { p =>
+      assert(!p.contains("BroadcastHashJoin"), p)
+      assert(p.contains("Exchange hashpartitioning"), p)
+    }
   }
 
   /** Leave behind what a publish of `t` killed after its staging write

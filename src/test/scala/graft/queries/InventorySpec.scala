@@ -246,6 +246,41 @@ class InventorySpec extends AnyFunSuite {
       copies.distinct.mkString("\n"))
   }
 
+  test("every batch parquet read goes through ParquetSource") {
+    // spark.read.parquet(path) starts a schema-inference job per read;
+    // ParquetSource reads the same footer on the driver with no job.
+    // Code is matched per file with whitespace removed, so a read chained
+    // over lines is still found. Exempt: comments, string literals, writes
+    // and streams (readStream.…parquet(…) takes its schema explicitly),
+    // and ParquetSource itself.
+    val Args = """\((?:[^()]|\([^()]*\))*\)"""
+    val Read = ("""(?<![\w$])read(?:\.parquet\(|(?:\.\w+""" + Args +
+      """)*\.format\("parquet"\)(?:\.\w+""" + Args + """)*\.load\()""").r
+    def inString(text: String, at: Int): Boolean =
+      text.take(at).count(_ == '"') % 2 == 1
+    val reads = for {
+      f <- mainSources if f.getFileName.toString != "ParquetSource.scala"
+      lines = java.nio.file.Files.readAllLines(f).asScala.toVector
+      code = lines.zipWithIndex.collect {
+        case (line, i) if {
+            val t = line.trim
+            !t.startsWith("|") && !t.startsWith("*") &&
+              !t.startsWith("//") && !t.startsWith("/*")
+          } =>
+          val cut = line.indexOf("//")
+          val kept =
+            if (cut >= 0 && !inString(line, cut)) line.take(cut) else line
+          (i, kept.filterNot(_.isWhitespace))
+      }
+      text = code.map(_._2).mkString
+      lineAt = code.scanLeft(0)(_ + _._2.length).tail.zip(code.map(_._1))
+      m <- Read.findAllMatchIn(text).toSeq if !inString(text, m.start)
+      line = lineAt.collectFirst { case (end, i) if m.start < end => i }.get
+    } yield s"$f:${line + 1}: ${lines(line).trim}"
+    assert(reads.isEmpty, "parquet reads outside graft.db.ParquetSource " +
+      s"(use ParquetSource.read):\n${reads.mkString("\n")}")
+  }
+
   test("every class-6 global-order operator in docs/SCALING.md names " +
     "a sanctioned shape whose evidence exists in its source") {
     // class-6 lockstep (VERDICT r16 #2): the table row IS the promise
