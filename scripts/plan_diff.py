@@ -20,9 +20,16 @@ shape, so pass several parent runs.
 
 Prints the header count and `failed:` lines of every log, the entries
 that matched only up to the in-line permutation, and the entries that
-differ (with the first differing line); exits 1 if any entry differs or
-is missing from one side.
+differ, each with its first differing line and an operator-count line:
+parent → change counts of Exchange, BroadcastExchange, Window, Sort,
+each join (operator and join type) and HashAggregate, read from the
+numbered operator details of the first parent run. When the counts of
+every operator (these and all others) agree, the line reads
+"operators unchanged" — an alias-only move; otherwise any other
+operator whose count moved follows under "other". Exits 1 if any entry
+differs or is missing from one side.
 """
+import collections
 import re
 import sys
 
@@ -36,6 +43,9 @@ NORMALISE = [
     (re.compile(r"(codegen id : |WholeStageCodegen \()[0-9]+"), r"\1N"),
 ]
 HEADER = re.compile(r"^==== (\S+) ====$")
+OPERATOR = re.compile(r"^\([0-9]+\) (\w+)")
+JOIN_TYPE = re.compile(r"^Join type\s*: (\w+)")
+NAMED = ["Exchange", "BroadcastExchange", "Window", "Sort", "HashAggregate"]
 
 
 def normalise(line):
@@ -60,6 +70,49 @@ def entries(path):
         while lines and not lines[-1].strip():
             lines.pop()
     return plans
+
+
+def operators(lines):
+    """Counter of physical operators in one entry's plan, from its
+    numbered details (`(12) HashAggregate [codegen id : 3]`); a join
+    counts as `<operator> <join type>`."""
+    ops, join = collections.Counter(), None
+    for line in lines:
+        m = OPERATOR.match(line)
+        if m:
+            if join:
+                ops[join] += 1
+            name = m.group(1)
+            join = name if name.endswith("Join") or name == "CartesianProduct" \
+                else None
+            if not join:
+                ops[name] += 1
+            continue
+        m = JOIN_TYPE.match(line)
+        if m and join:
+            ops[f"{join} {m.group(1)}"] += 1
+            join = None
+    if join:
+        ops[join] += 1
+    return ops
+
+
+def operator_line(parent, change):
+    """The parent → change operator-count line of one entry."""
+    before, after = operators(parent), operators(change)
+    joins = sorted(k for k in before.keys() | after.keys()
+                   if k.split(" ")[0].endswith("Join") or
+                   k == "CartesianProduct")
+    named = [f"{k} {before[k]}" if before[k] == after[k]
+             else f"{k} {before[k]} → {after[k]}" for k in NAMED + joins]
+    if before == after:
+        return f"operators unchanged ({', '.join(named)})"
+    other = sorted(k for k in before.keys() | after.keys()
+                   if k not in NAMED and k not in joins
+                   and before[k] != after[k])
+    moved = "; other: " + ", ".join(
+        f"{k} {before[k]} → {after[k]}" for k in other) if other else ""
+    return f"operators: {', '.join(named)}{moved}"
 
 
 def permuted(a, b):
@@ -93,7 +146,7 @@ def main(argv):
     names = set(change).union(*parents)
     missing = sorted(n for n in names
                      if n not in change or any(n not in p for p in parents))
-    noise, differ = [], []
+    noise, differ, unchanged = [], [], 0
     for name in sorted(set(change) - set(missing)):
         results = [compare(change[name], p[name]) for p in parents]
         if "same" in results:
@@ -103,16 +156,19 @@ def main(argv):
             continue
         i = results[0]
         first = parents[0][name]
+        ops = operator_line(first, change[name])
+        unchanged += ops.startswith("operators unchanged")
         differ.append(
             f"{name} (line {i + 1})\n"
             f"    parent: {first[i] if i < len(first) else '<end>'}\n"
             f"    change: "
-            f"{change[name][i] if i < len(change[name]) else '<end>'}")
+            f"{change[name][i] if i < len(change[name]) else '<end>'}\n"
+            f"    {ops}")
     print(f"matched up to the in-line Expand permutation: "
           f"{', '.join(noise) or 'none'}")
     if missing:
         print(f"missing from a log: {', '.join(missing)}")
-    print(f"differ: {len(differ)}")
+    print(f"differ: {len(differ)} ({unchanged} with operators unchanged)")
     for d in differ:
         print(f"  {d}")
     sys.exit(1 if differ or missing else 0)

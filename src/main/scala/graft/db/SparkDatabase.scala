@@ -446,8 +446,19 @@ final class SparkDatabase(val spark: SparkSession) {
           val staging = sibling(dir, stage)
           val backup = sibling(dir, "backup_")
           fs.delete(staging, true)
+          // the write runs under its own job tag: when it fails, tasks of
+          // its cancelled job can still be running and would recreate
+          // `_temporary/…` under a staging directory deleted at once
+          val sc = spark.sparkContext
+          val tag = s"graft-publish-${java.util.UUID.randomUUID}"
+          sc.addJobTag(tag)
           try frame.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-          catch { case e: Throwable => fs.delete(staging, true); throw e }
+          catch {
+            case e: Throwable =>
+              GraftSqlBridge.awaitTaggedTasks(sc, tag, failedWriteWaitMs)
+              fs.delete(staging, true)
+              throw e
+          } finally sc.removeJobTag(tag)
           val hadDir = fs.exists(dir)
           if (hadDir) rename(fs, dir, backup)
           try rename(fs, staging, dir)
@@ -466,6 +477,11 @@ final class SparkDatabase(val spark: SparkSession) {
           swap(tmp, dst, current)
       }
     }
+
+  /** How long a failed staging write's tasks may take to end before
+    * [[publish]] deletes the staging directory anyway.
+    */
+  private val failedWriteWaitMs = 30000L
 
   /** A table whose content [[publish]] can replace by swapping its
     * directory: managed, unpartitioned, unbucketed parquet.

@@ -49,7 +49,7 @@ object Attributes {
       df: DataFrame, idCol: String, textCol: String,
       stopwords: Seq[String] = Seq("the", "a")): DataFrame = {
     val stops = typedLit(stopwords)
-    val toks = filter(split(col(textCol), " "), t => t =!= "")
+    val toks = TextStats.wordArray(col(textCol))
     val n = size(toks).cast("long")
     def frac4(num: Column): Column =
       when(n > 0L, floor(lit(10000L) * num / n).cast("long"))

@@ -91,10 +91,8 @@ object Classifier {
       df: DataFrame, idCol: String, textCol: String, labelCol: Column,
       nBuckets: Int, salt: String): DataFrame = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    val toks = df
-      .select(col(idCol), labelCol.cast("long").as("y"),
-        explode(split(col(textCol), " ")).as("tok"))
-      .filter(col("tok") =!= "")
+    val toks = TextStats
+      .wordRows(df, textCol, Seq(col(idCol), labelCol.cast("long").as("y")))
       .withColumn("_b", Sampling.portableHash(col("tok"), salt) % nBuckets)
     toks.groupBy(col(idCol), col("y"), col("_b"))
       .agg(count(lit(1)).as("_c"))
@@ -315,10 +313,8 @@ object Classifier {
 
   private def toks(df: DataFrame, idCol: String, textCol: String,
       labelCol: String): DataFrame =
-    df.select(col(idCol).as("_id"),
-        col(labelCol).cast("string").as("_l"),
-        explode(split(col(textCol), " ")).as("_tok"))
-      .filter(col("_tok") =!= "")
+    TextStats.wordRows(df, textCol,
+      Seq(col(idCol).as("_id"), col(labelCol).cast("string").as("_l")), "_tok")
 
   /** Multinomial Naive Bayes model over whitespace tokens with add-one
     * (Laplace) smoothing — the fastText-style MULTI-CLASS companion to

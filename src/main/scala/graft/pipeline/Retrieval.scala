@@ -48,9 +48,7 @@ object Retrieval {
     // score contribution; bag-of-words queries weight by repetition
     // upstream, not here
     val terms = queryTerms.distinct
-    val toks = docs
-      .select(col(idCol), explode(split(col(textCol), " ")).as("tok"))
-      .filter(col("tok") =!= "")
+    val toks = TextStats.wordRows(docs, textCol, Seq(col(idCol)))
     // per-doc length over ALL tokens (dl), before the query-term filter
     val dl = toks.groupBy(col(idCol)).agg(count(lit(1)).as("_g_dl"))
     val stats = dl.agg(
@@ -95,9 +93,7 @@ object Retrieval {
       textCol: String,
       vocabSize: Int): DataFrame = {
     require(vocabSize > 0, s"vocabSize must be positive, got $vocabSize")
-    val toks = docs
-      .select(col(idCol), explode(split(col(textCol), " ")).as("tok"))
-      .filter(col("tok") =!= "")
+    val toks = TextStats.wordRows(docs, textCol, Seq(col(idCol)))
     val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("_g_cnt"))
       .orderBy(col("_g_cnt").desc, col("tok"))
       .limit(vocabSize)
@@ -134,8 +130,7 @@ object Retrieval {
     require(dims >= 1, s"dims must be >= 1, got $dims")
     val dim = conv(substring(md5(col("tok").cast("binary")), 1, 8), 16, 10)
       .cast("long") % dims
-    df.select(col(idCol), explode(split(col(textCol), " ")).as("tok"))
-      .filter(col("tok") =!= "")
+    TextStats.wordRows(df, textCol, Seq(col(idCol)))
       .select(col(idCol), dim.as("dim"), col("tok"))
       .groupBy(col(idCol), col("dim"))
       .agg(count(lit(1)).as("weight"),
@@ -222,9 +217,7 @@ object Retrieval {
       .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
       .toDF("query_id", "term")
     val terms = queries.flatMap(_._2).distinct
-    val toks = docs
-      .select(col(idCol), explode(split(col(textCol), " ")).as("tok"))
-      .filter(col("tok") =!= "")
+    val toks = TextStats.wordRows(docs, textCol, Seq(col(idCol)))
     val dl = toks.groupBy(col(idCol)).agg(count(lit(1)).as("_g_dl"))
     val stats = dl.agg(
       count(lit(1)).cast("double").as("_g_ndocs"),
@@ -403,14 +396,9 @@ object Retrieval {
       refCol: String,
       n: Int): DataFrame = {
     def grams(c: org.apache.spark.sql.Column) = {
-      val toks = split(c, " ")
+      val toks = TextStats.tokenArray(c)
       if (n == 1) toks
-      else {
-        val m = size(toks) - (n - 1)
-        when(m > 0, transform(sequence(lit(0), m - 1),
-          i => array_join(slice(toks, i + 1, lit(n)), " ")))
-          .otherwise(expr("CAST(array() AS ARRAY<STRING>)"))
-      }
+      else TextStats.sliceNgrams(toks, size(toks) - (n - 1), n, " ")
     }
     val g = df.select(col(idCol).as("_id"),
       grams(col(candCol)).as("_cg"), grams(col(refCol)).as("_rg"))
@@ -484,7 +472,7 @@ object Retrieval {
     val stats = perN.groupBy(col("_id"))
       .agg(aggCols.head, aggCols.tail: _*)
     val refLen = df.select(col(idCol).as("_id"),
-      size(split(col(refCol), " ")).cast("long").as("ref_len"))
+      size(TextStats.tokenArray(col(refCol))).cast("long").as("ref_len"))
     val c = col("cand_len").cast("double")
     val r = col("ref_len").cast("double")
     val logBp = when(col("cand_len") >= col("ref_len"), lit(0.0))
@@ -541,31 +529,21 @@ object Retrieval {
       beta: Double = 2.0): DataFrame = {
     require(maxN >= 1 && maxN <= 8, s"maxN in [1, 8], got $maxN")
     require(beta > 0, s"beta must be > 0, got $beta")
-    // STAGED char arrays: the split must materialize ONCE per row —
-    // inlined into the transform lambda it would re-split the whole
-    // string at EVERY gram position (O(len²) per doc; the round-12
-    // bench read 23s for this entry from exactly that). The lambda
-    // body references the array attribute, and the position bound
-    // ALSO references it (least(m, size(chars)) — semantically a
-    // no-op since size ≥ length ≥ m), so CollapseProject sees two
-    // uses of a non-cheap alias and cannot push the split back into
-    // the per-element path.
+    // STAGED char arrays, bound once per row (TextStats' n-gram
+    // condition): with the split inlined into the gram lambda the
+    // round-12 bench read 23 s for this entry. TextStats.charNgrams
+    // reads the bound array twice, so CollapseProject cannot push the
+    // split back into the per-element path.
     val staged = Stage.materialize(df.select(col(idCol).as("_id"),
       regexp_replace(col(candCol), " ", "").as("_cs"),
       regexp_replace(col(refCol), " ", "").as("_rs"))
       .select(col("_id"), col("_cs"), col("_rs"),
-        split(col("_cs"), "").as("_cch"), split(col("_rs"), "").as("_rch")))
-    def charGrams(sAttr: org.apache.spark.sql.Column,
-        chAttr: org.apache.spark.sql.Column, n: Int) = {
-      val m = least(length(sAttr) - (n - 1), size(chAttr))
-      when(m > 0, transform(sequence(lit(1), m),
-        i => array_join(slice(chAttr, i, lit(n)), "")))
-        .otherwise(expr("CAST(array() AS ARRAY<STRING>)"))
-    }
+        TextStats.charArray(col("_cs")).as("_cch"),
+        TextStats.charArray(col("_rs")).as("_rch")))
     val perN = (1 to maxN).map { n =>
       val g = staged.select(col("_id"),
-        charGrams(col("_cs"), col("_cch"), n).as("_cg"),
-        charGrams(col("_rs"), col("_rch"), n).as("_rg"))
+        TextStats.charNgrams(col("_cs"), col("_cch"), n).as("_cg"),
+        TextStats.charNgrams(col("_rs"), col("_rch"), n).as("_rg"))
       val ex = g.select(col("_id"), lit(1L).as("_c"),
           explode(col("_cg")).as("_gram"))
         .unionByName(g.select(col("_id"), lit(0L).as("_c"),
@@ -816,10 +794,9 @@ object Retrieval {
       refCol: String,
       hypCol: String): DataFrame = {
     val alphabet = (0x21 to 0x7E).map(_.toChar).mkString // 94 chars
-    def toks(c: org.apache.spark.sql.Column) =
-      filter(split(c, " "), t => t =!= "")
-    val base = df.select(col(idCol), toks(col(refCol)).as("_r"),
-      toks(col(hypCol)).as("_h"))
+    val base = df.select(col(idCol),
+      TextStats.wordArray(col(refCol)).as("_r"),
+      TextStats.wordArray(col(hypCol)).as("_h"))
     val withVocab = base.withColumn("_v",
       array_sort(array_distinct(concat(col("_r"), col("_h")))))
     val guarded = withVocab.withColumn("_v",

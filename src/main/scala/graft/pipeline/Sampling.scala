@@ -399,8 +399,7 @@ object Sampling {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     require(alpha > 0, s"alpha must be > 0 (smoothing), got $alpha")
     def toks(df: DataFrame, keep: Column*): DataFrame =
-      df.select(keep :+ explode(split(col(textCol), " ")).as("tok"): _*)
-        .filter(col("tok") =!= "")
+      TextStats.wordRows(df, textCol, keep)
         .withColumn("_b", portableHash(col("tok"), salt) % nBuckets)
     val rawT = toks(raw, col(idCol))
     // ONE tagged union-aggregate instead of joining two per-side count

@@ -3155,7 +3155,7 @@ object Stats {
       keyCol: String,
       textCol: String): DataFrame = {
     val tok = df.select(col(keyCol).as("_k"),
-      explode(expr(s"filter(split($textCol, ' '), w -> w != '')"))
+      explode(expr(TextStats.wordArraySql(textCol)))
         .as("_t"))
     val tc = tok.groupBy(col("_k"), col("_t"))
       .agg(count(lit(1)).as("_c"))

@@ -203,7 +203,7 @@ object SuffixArray {
     // slice is O(initOrder); values are identical by construction.
     val sfx = df
       .filter(length(col(textCol)) > 0)
-      .withColumn("_chars", split(col(textCol), ""))
+      .withColumn("_chars", TextStats.charArray(col(textCol)))
       .select(col(idCol).as("_d"),
         explode(sequence(lit(1), length(col(textCol)))).as("_p"),
         col("_chars"))

@@ -228,7 +228,7 @@ object TextClean {
     val stops = typedLit(stopwords)
     val lines = split(col(textCol), "\n")
     def keep(line: Column): Column = {
-      val toks = filter(split(line, " "), t => t =!= "")
+      val toks = TextStats.wordArray(line)
       val nStop = size(filter(toks, t => array_contains(stops, t)))
       (length(line) >= minChars) &&
         (nStop.cast("long") * stopDen >= size(toks).cast("long") * stopNum)
@@ -236,7 +236,7 @@ object TextClean {
     // bind the filtered array ONCE (ADVICE r10): the keep() filter runs a
     // per-token stopword scan over every line, and deriving n_kept and
     // content_text from one bound column doesn't rely on codegen
-    // subexpression elimination (the _toks discipline from shingles)
+    // subexpression elimination (TextStats' bound-array condition)
     df.withColumn("n_lines", size(lines).cast("long"))
       .withColumn("_kept", filter(lines, keep _))
       .withColumn("n_kept", size(col("_kept")).cast("long"))

@@ -103,20 +103,19 @@ object TextDedup {
     * duplicate (id, shingle) pairs downstream.
     */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    // materialize the token array FIRST: referencing split(...) inside the
-    // transform lambda re-evaluates the split per element_at call
-    // (n × grams × per row) — binding it to a column evaluates it once
-    val toks = col("_toks")
-    // guard: sequence(1, 0) runs DESCENDING in Spark, so short docs need
-    // an explicit empty start list
-    val starts = when(size(toks) >= n, sequence(lit(1), size(toks) - (n - 1)))
-      .otherwise(array().cast("array<int>"))
-    val grams = transform(
-      starts,
-      i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*))
-    df.select(col(idCol), split(col(textCol), " ").as("_toks"))
+    val grams = TextStats.wordNgrams(col("_toks"), n)
+    df.select(col(idCol), TextStats.tokenArray(col(textCol)).as("_toks"))
       .select(col(idCol), explode(array_distinct(grams)).as("shingle"))
   }
+
+  /** The shingle rows of `sh` whose shingle occurs in at most
+    * `maxShingleDocs` documents ([[TextStats.docFreq]] over the distinct
+    * (document, shingle) rows): stop-shingle pruning of candidate
+    * generation.
+    */
+  private def dfPruned(sh: DataFrame, maxShingleDocs: Int): DataFrame =
+    sh.join(TextStats.docFreq(sh, "shingle", "df")
+      .filter(col("df") <= maxShingleDocs).select(col("shingle")), "shingle")
 
   /** Exact pairwise n-gram Jaccard similarity ≥ `threshold` via an
     * inverted-index join: pairs meet on a shared shingle (equi-join, so it
@@ -153,9 +152,7 @@ object TextDedup {
         .agg(count(lit(1)).as("n_common"))
       joinSizesAndFilter(inter, sizes, idCol, threshold)
     } else {
-      val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= maxShingleDocs).select(col("shingle"))
-      val pruned = sh.join(dfreq, "shingle")
+      val pruned = dfPruned(sh, maxShingleDocs)
       val candidates = pruned.select(col(idCol).as("doc_a"), col("shingle"))
         .join(pruned.select(col(idCol).as("doc_b"), col("shingle")), Seq("shingle"))
         .filter(col("doc_a") < col("doc_b"))
@@ -202,10 +199,7 @@ object TextDedup {
           .groupBy(col("doc_a"), col("doc_b"))
           .agg(count(lit(1)).as("n_common"))
       } else {
-        val pruned = sh.join(
-          sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-            .filter(col("df") <= maxShingleDocs).select(col("shingle")),
-          "shingle")
+        val pruned = dfPruned(sh, maxShingleDocs)
         val candidates = pruned
           .select(col(idCol).as("doc_a"), col("shingle"))
           .join(pruned.select(col(idCol).as("doc_b"), col("shingle")),
@@ -260,7 +254,7 @@ object TextDedup {
       threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0,1], got $threshold")
-    val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("_g_df"))
+    val dfreq = TextStats.docFreq(sh, "shingle", "_g_df")
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("_g_df"), col("shingle"))
     val ranked = sh.join(dfreq, "shingle")
@@ -679,11 +673,7 @@ object TextDedup {
       minShared: Int = 1,
       maxShingleDocs: Int = 500): DataFrame = {
     val kept =
-      if (maxShingleDocs == Int.MaxValue) sh
-      else sh.join(
-        sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxShingleDocs).select(col("shingle")),
-        "shingle")
+      if (maxShingleDocs == Int.MaxValue) sh else dfPruned(sh, maxShingleDocs)
     kept.select(col(idCol).as("doc_a"), col("shingle"))
       .join(kept.select(col(idCol).as("doc_b"), col("shingle")), Seq("shingle"))
       .filter(col("doc_a") < col("doc_b"))
@@ -796,7 +786,8 @@ object TextDedup {
     */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol),
-      graft.functions.SimHash64.simhash64(split(col(textCol), " ")).as("simhash"))
+      graft.functions.SimHash64.simhash64(TextStats.tokenArray(col(textCol)))
+        .as("simhash"))
 
   /** Near-duplicate pairs by SimHash hamming distance ≤ `maxHamming`,
     * bucketed by pigeonhole: split the 64-bit fingerprint into
@@ -817,8 +808,7 @@ object TextDedup {
     * per document.
     */
   def simhashPortable(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tk = df.select(col(idCol), explode(split(col(textCol), " ")).as("tok"))
-      .filter(col("tok") =!= "")
+    val tk = TextStats.wordRows(df, textCol, Seq(col(idCol)))
     def half(from: Int): Column =
       conv(substring(md5(col("tok").cast("binary")), from, 8), 16, 10)
         .cast("long")
@@ -954,9 +944,8 @@ object TextDedup {
       textCol: String,
       minLineChars: Int = 5): DataFrame = {
     // staged projections: the split lines and the filtered array each
-    // materialize ONCE per row — referencing the raw split() inside the
-    // lambda would re-split the text per element (sharedNgramFraction's
-    // measured lesson), and `kept` feeds two output columns
+    // bind to a column once per row (the bound-array condition in the
+    // TextStats scaladoc), and `kept` feeds two output columns
     val lines = col("_g_lines")
     val kept = filter(lines, (x, i) =>
       length(x) < minLineChars || array_position(lines, x) === i + 1)
@@ -1037,13 +1026,9 @@ object TextDedup {
     require(k >= 1 && window >= 1, "k and window must be positive")
     val runLen = k + window - 1
     def rgrams(df: DataFrame, outId: String): DataFrame = {
-      val toks = col("_g_toks")
-      val starts =
-        when(size(toks) >= runLen, sequence(lit(1), size(toks) - (runLen - 1)))
-          .otherwise(array().cast("array<int>"))
-      val grams = transform(starts,
-        i => concat_ws(" ", (0 until runLen).map(j => element_at(toks, i + j)): _*))
-      df.select(col(idCol).as(outId), split(col(textCol), " ").as("_g_toks"))
+      val grams = TextStats.wordNgrams(col("_g_toks"), runLen)
+      df.select(col(idCol).as(outId),
+          TextStats.tokenArray(col(textCol)).as("_g_toks"))
         .select(col(outId), explode(array_distinct(grams)).as("_g_run"))
     }
     val fpDocs = TextStats.fingerprints(docs, idCol, textCol, k, window)

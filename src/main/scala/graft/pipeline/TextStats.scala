@@ -11,6 +11,45 @@ import graft.pipeline.Exact.{dec, d28, d6}
   * every aggregate shuffles on the document id (or the (lang, source)
   * rollup key), so the plans are a single exchange each at any scale.
   *
+  * Tokenization stages. Every operator in the corpus that tokenizes
+  * `documents.text` (here, in [[TextDedup]], [[Retrieval]],
+  * [[Classifier]], [[Sampling]], [[TextClean]], [[Attributes]],
+  * [[SuffixArray]], [[Stats]] and the query files) composes the stages
+  * defined once below, tokenize → n-gram → count. The split is one
+  * single space (the corpus contract), and each stage names its
+  * empty-token rule:
+  *   - token arrays: [[tokenArray]] keeps the `""` that leading,
+  *     trailing and doubled spaces and empty text produce;
+  *     [[wordArray]] (and its SQL-text spelling [[wordArraySql]]) drops
+  *     them with an in-row array `filter`;
+  *   - token rows: [[tokenRows]] / [[tokens]] explode the token array
+  *     (empties kept), [[wordRows]] adds one row `Filter` dropping `""`,
+  *     and [[posWordRows]] is [[wordRows]] with each token's position in
+  *     the full array (a dropped `""` leaves a gap in the positions);
+  *   - [[bigramStream]]: the within-document adjacent-pair stream over
+  *     positioned non-empty token rows — a `lead(tok, 1)` window keyed
+  *     by the document, so a pair never crosses two documents;
+  *   - in-row n-grams: [[gramStarts]] (the 1-based start positions,
+  *     empty for an array shorter than n) and [[wordNgrams]] /
+  *     [[wordNgramsAt]] (a `transform` over the starts joining n
+  *     consecutive tokens); [[sliceNgrams]] is the slice-and-join form
+  *     over a count of starts;
+  *   - characters: [[charArray]] (`split(text, "")`, one element per
+  *     codepoint) and [[charNgrams]];
+  *   - counts: [[docFreq]] (rows per term of a frame holding one row
+  *     per (document, term)) and [[vocabSize]] (distinct tokens).
+  * The row stages are a Generate in the plan; the array and n-gram
+  * stages are in-row expressions with no exchange; [[bigramStream]] is
+  * one document-keyed window. An InventorySpec lint fails on a
+  * tokenizing `split` anywhere else in src/main.
+  *
+  * One condition holds for every in-row n-gram: bind the token array to
+  * a column (a `select(… .as("_toks"))` one projection before) and let
+  * the `transform` lambda read that column. With the `split` inlined in
+  * the lambda, Spark re-splits the whole text at every element it
+  * reads — O(len²) per document; chrF once spent 23 s on one entry
+  * that way (see [[Retrieval.chrF]]).
+  *
   * Division discipline: every ratio is integer-count / integer-count
   * computed once at the end (one double division is bit-deterministic;
   * summing doubles is not) — the same rule as the decimal discipline in
@@ -18,11 +57,127 @@ import graft.pipeline.Exact.{dec, d28, d6}
   */
 object TextStats {
 
-  /** One row per token occurrence: (idCol…, tok). Single-space split —
-    * the corpus contract; swap the delimiter regex per corpus.
+  // ---- the tokenization stages ----
+
+  /** The token array with empties kept: `split(text, " ")`. Leading,
+    * trailing and doubled spaces each leave a `""` element, empty text
+    * is `[""]` and NULL text is NULL. In-row.
     */
+  def tokenArray(text: Column): Column = split(text, " ")
+
+  /** The non-empty token array: [[tokenArray]] through an in-row array
+    * `filter` dropping every `""` (one Column-API lambda). Empty text
+    * gives `[]`; NULL text is NULL.
+    */
+  def wordArray(text: Column): Column = filter(tokenArray(text), t => t =!= "")
+
+  /** [[wordArray]] in SQL text, for the operators that compose it into
+    * a larger SQL expression (`aggregate`, `slice`). Its lambda is the
+    * named SQL variable `w`, where the Column-API form takes a fresh
+    * variable from Spark's JVM-wide counter; the two spellings plan
+    * the same rows but print differently.
+    */
+  def wordArraySql(textCol: String): String =
+    s"filter(split($textCol, ' '), w -> w != '')"
+
+  /** Token rows with empties kept: the `keep` columns and one row per
+    * [[tokenArray]] element, named `tok` (a Generate). Empty text
+    * yields one `""` row; NULL text yields no row.
+    */
+  def tokenRows(df: DataFrame, textCol: String, keep: Seq[Column],
+      tok: String = "tok"): DataFrame =
+    df.select(keep :+ explode(tokenArray(col(textCol))).as(tok): _*)
+
+  /** [[tokenRows]] keeping the named columns. */
   def tokens(df: DataFrame, textCol: String, keep: String*): DataFrame =
-    df.select(keep.map(col) :+ explode(split(col(textCol), " ")).as("tok"): _*)
+    tokenRows(df, textCol, keep.map(col))
+
+  /** Non-empty token rows: [[tokenRows]] then one row `Filter` on
+    * `tok != ""`.
+    */
+  def wordRows(df: DataFrame, textCol: String, keep: Seq[Column],
+      tok: String = "tok"): DataFrame =
+    tokenRows(df, textCol, keep, tok).filter(col(tok) =!= "")
+
+  /** Positioned non-empty token rows: `posexplode` of [[tokenArray]]
+    * into (`pos`, `tok`), then one row `Filter` on `tok != ""`. `pos` is
+    * the 0-based position in the full array, so the dropped empties
+    * leave gaps.
+    */
+  def posWordRows(df: DataFrame, textCol: String, keep: Seq[Column],
+      pos: String = "_g_pos", tok: String = "tok"): DataFrame =
+    df.select(keep :+ posexplode(tokenArray(col(textCol))).as(Seq(pos, tok)): _*)
+      .filter(col(tok) =!= "")
+
+  /** The within-document adjacent-pair stream: on positioned token rows
+    * (normally [[posWordRows]], so only non-empty tokens pair), `next`
+    * is the following token of the same `doc` by `pos` — one `lead` over
+    * a `doc`-keyed window, an exchange on the document — and rows with
+    * no next token are dropped. A pair never crosses two documents.
+    */
+  def bigramStream(toks: DataFrame, doc: Seq[Column], pos: String = "_g_pos",
+      tok: String = "tok", next: String = "_g_next"): DataFrame = {
+    val w = Window.partitionBy(doc: _*).orderBy(col(pos))
+    toks.withColumn(next, lead(col(tok), 1).over(w))
+      .filter(col(next).isNotNull)
+  }
+
+  /** The 1-based start positions of the n-grams of token array `toks`,
+    * empty when it holds fewer than `n` tokens. The guard is needed:
+    * `sequence(1, 0)` runs DESCENDING in Spark.
+    */
+  def gramStarts(toks: Column, n: Int): Column =
+    when(size(toks) >= n, sequence(lit(1), size(toks) - (n - 1)))
+      .otherwise(array().cast("array<int>"))
+
+  /** In-row word n-grams of the bound token array `toks`: n tokens
+    * joined by one space at each of [[gramStarts]], in order (duplicates
+    * kept). `toks` must be a bound column, see the scaladoc above.
+    */
+  def wordNgrams(toks: Column, n: Int): Column =
+    wordNgramsAt(toks, n, gramStarts(toks, n))(identity)
+
+  /** [[wordNgrams]] at the given start positions, with `each` applied to
+    * every gram inside the same lambda (a hash, say).
+    */
+  def wordNgramsAt(toks: Column, n: Int, starts: Column)(
+      each: Column => Column): Column =
+    transform(starts, i =>
+      each(concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*)))
+
+  /** The slice-and-join n-grams of array `arr`: for the first `m` start
+    * positions, `n` elements joined by `sep`; empty when `m` ≤ 0 (the
+    * same DESCENDING-sequence guard as [[gramStarts]]).
+    */
+  def sliceNgrams(arr: Column, m: Column, n: Int, sep: String): Column =
+    when(m > 0, transform(sequence(lit(1), m),
+      i => array_join(slice(arr, i, lit(n)), sep)))
+      .otherwise(expr("CAST(array() AS ARRAY<STRING>)"))
+
+  /** The character array `split(text, "")`: one element per codepoint;
+    * empty text is `[""]` and NULL text is NULL. In-row.
+    */
+  def charArray(text: Column): Column = split(text, "")
+
+  /** Char n-grams of string `s` from its bound [[charArray]] `chars`.
+    * The start count reads both (`least(length(s) − (n−1), size(chars))`,
+    * equal in value); the second use of the bound array is what keeps
+    * the optimizer from inlining the split into the lambda.
+    */
+  def charNgrams(s: Column, chars: Column, n: Int): Column =
+    sliceNgrams(chars, least(length(s) - (n - 1), size(chars)), n, "")
+
+  /** Document frequency: the row count per `term` of a frame holding one
+    * row per (document, term), named `as`. A hash aggregate.
+    */
+  def docFreq(docTerms: DataFrame, term: String, as: String): DataFrame =
+    docTerms.groupBy(col(term)).agg(count(lit(1)).as(as))
+
+  /** Vocabulary size: the distinct `tok` values of token rows as a 1-row
+    * double column `as`.
+    */
+  def vocabSize(toks: DataFrame, as: String, tok: String = "tok"): DataFrame =
+    toks.agg(countDistinct(col(tok)).cast("double").as(as))
 
   /** Per-document top-k TF-IDF terms: term frequency in the document,
     * document frequency across the corpus, `tf_idf = tf · ln(N/df)`, and
@@ -44,10 +199,10 @@ object TextStats {
   def topTermsTfIdf(
       df: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame = {
     require(k > 0, "k must be positive")
-    val toks = tokens(df, textCol, idCol).filter(col("tok") =!= "")
+    val toks = wordRows(df, textCol, Seq(col(idCol)))
     val tf = toks.groupBy(col(idCol), col("tok").as("term"))
       .agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val dfreq = docFreq(tf, "term", "df")
     val nDocs = df.select(countDistinct(col(idCol)).as("n_docs"))
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("tf").desc, col("df").asc, col("term").asc)
@@ -84,7 +239,7 @@ object TextStats {
     * tf·ln(N/df) discipline).
     */
   def unigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = tokens(df, textCol, idCol).filter(col("tok") =!= "")
+    val toks = wordRows(df, textCol, Seq(col(idCol)))
     val counts = toks.groupBy(col("tok")).agg(count(lit(1)).as("_g_cnt"))
     val total = counts.agg(sum(col("_g_cnt")).as("_g_total"))
     toks.join(counts, "tok")
@@ -137,7 +292,7 @@ object TextStats {
       maxSymbolShare: Double = 0.1,
       maxDigitShare: Double = 0.15): DataFrame = {
     val t = col(textCol)
-    val toks = filter(split(t, " "), x => x =!= "")
+    val toks = wordArray(t)
     val nTok = size(toks).cast("long")
     val sumLen = aggregate(transform(toks, x => length(x)), lit(0),
       (a, x) => a + x)
@@ -188,22 +343,10 @@ object TextStats {
     def cnt(script: String) =
       length(regexp_replace(t, s"[^\\p{Is$script}]", "")).cast("long")
     val nDigit = length(regexp_replace(t, "[^0-9]", "")).cast("long")
-    df.select(col(idCol), length(t).cast("long").as("n_chars"),
+    scriptShares(df.select(col(idCol), length(t).cast("long").as("n_chars"),
         cnt("Latin").as("n_latin"), cnt("Cyrillic").as("n_cyrillic"),
         cnt("Greek").as("n_greek"), cnt("Han").as("n_han"),
-        nDigit.as("n_digit"))
-      .select(col(idCol), col("n_chars"), col("n_latin"),
-        col("n_cyrillic"), col("n_greek"), col("n_han"), col("n_digit"),
-        d6(col("n_latin").cast("double") / col("n_chars")).as("latin_share"),
-        d6(col("n_cyrillic").cast("double") / col("n_chars"))
-          .as("cyrillic_share"),
-        when(col("n_latin") >= col("n_cyrillic") &&
-            col("n_latin") >= col("n_greek") &&
-            col("n_latin") >= col("n_han"), lit("latin"))
-          .when(col("n_cyrillic") >= col("n_greek") &&
-            col("n_cyrillic") >= col("n_han"), lit("cyrillic"))
-          .when(col("n_greek") >= col("n_han"), lit("greek"))
-          .otherwise(lit("han")).as("dominant_script"))
+        nDigit.as("n_digit")), idCol)
   }
 
   /** [[scriptMix]] through the codegen'd single-pass
@@ -215,27 +358,32 @@ object TextStats {
     */
   def scriptMixFast(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val c = graft.functions.ScriptCounts.scriptCounts(col(textCol))
-    df.select(col(idCol), c.as("_g_sc"))
+    scriptShares(df.select(col(idCol), c.as("_g_sc"))
       .select(col(idCol),
         element_at(col("_g_sc"), 1).as("n_chars"),
         element_at(col("_g_sc"), 2).as("n_latin"),
         element_at(col("_g_sc"), 3).as("n_cyrillic"),
         element_at(col("_g_sc"), 4).as("n_greek"),
         element_at(col("_g_sc"), 5).as("n_han"),
-        element_at(col("_g_sc"), 6).as("n_digit"))
-      .select(col(idCol), col("n_chars"), col("n_latin"),
-        col("n_cyrillic"), col("n_greek"), col("n_han"), col("n_digit"),
-        d6(col("n_latin").cast("double") / col("n_chars")).as("latin_share"),
-        d6(col("n_cyrillic").cast("double") / col("n_chars"))
-          .as("cyrillic_share"),
-        when(col("n_latin") >= col("n_cyrillic") &&
-            col("n_latin") >= col("n_greek") &&
-            col("n_latin") >= col("n_han"), lit("latin"))
-          .when(col("n_cyrillic") >= col("n_greek") &&
-            col("n_cyrillic") >= col("n_han"), lit("cyrillic"))
-          .when(col("n_greek") >= col("n_han"), lit("greek"))
-          .otherwise(lit("han")).as("dominant_script"))
+        element_at(col("_g_sc"), 6).as("n_digit")), idCol)
   }
+
+  /** [[scriptMix]]'s output from its per-script counts: the latin and
+    * cyrillic shares and the dominant-script label.
+    */
+  private def scriptShares(counts: DataFrame, idCol: String): DataFrame =
+    counts.select(col(idCol), col("n_chars"), col("n_latin"),
+      col("n_cyrillic"), col("n_greek"), col("n_han"), col("n_digit"),
+      d6(col("n_latin").cast("double") / col("n_chars")).as("latin_share"),
+      d6(col("n_cyrillic").cast("double") / col("n_chars"))
+        .as("cyrillic_share"),
+      when(col("n_latin") >= col("n_cyrillic") &&
+          col("n_latin") >= col("n_greek") &&
+          col("n_latin") >= col("n_han"), lit("latin"))
+        .when(col("n_cyrillic") >= col("n_greek") &&
+          col("n_cyrillic") >= col("n_han"), lit("cyrillic"))
+        .when(col("n_greek") >= col("n_han"), lit("greek"))
+        .otherwise(lit("han")).as("dominant_script"))
 
   /** Corpus-level top-k bigram collocations by pointwise mutual
     * information: pmi(x,y) = ln( p(xy) / (p(x)·p(y)) ) with p(xy) over
@@ -260,17 +408,11 @@ object TextStats {
       topK: Int = 50): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val toks = df
-      .select(col(idCol),
-        posexplode(split(col(textCol), " ")).as(Seq("_g_pos", "tok")))
-      .filter(col("tok") =!= "")
+    val toks = posWordRows(df, textCol, Seq(col(idCol)))
     val nt = toks.agg(count(lit(1)).cast("double").as("_g_nt"))
     val ct = toks.groupBy(col("tok"))
       .agg(count(lit(1)).cast("double").as("_g_c"))
-    val w = Window.partitionBy(col(idCol)).orderBy(col("_g_pos"))
-    val bi = toks
-      .withColumn("_g_next", lead(col("tok"), 1).over(w))
-      .filter(col("_g_next").isNotNull)
+    val bi = bigramStream(toks, Seq(col(idCol)))
       .select(col("tok").as("tok_a"), col("_g_next").as("tok_b"))
     val nb = bi.agg(count(lit(1)).cast("double").as("_g_nb"))
     val c12 = bi.groupBy(col("tok_a"), col("tok_b"))
@@ -295,19 +437,13 @@ object TextStats {
       textCol: String,
       addK: Double = 0.5): DataFrame = {
     require(addK > 0, s"addK must be positive, got $addK")
-    val toks = df
-      .select(col(idCol),
-        posexplode(split(col(textCol), " ")).as(Seq("_g_pos", "tok")))
-      .filter(col("tok") =!= "")
-    val w = Window.partitionBy(col(idCol)).orderBy(col("_g_pos"))
-    val bi = toks
-      .withColumn("_g_next", lead(col("tok"), 1).over(w))
-      .filter(col("_g_next").isNotNull)
+    val toks = posWordRows(df, textCol, Seq(col(idCol)))
+    val bi = bigramStream(toks, Seq(col(idCol)))
       .select(col(idCol), col("tok"), col("_g_next"))
     val c12 = bi.groupBy(col("tok"), col("_g_next"))
       .agg(count(lit(1)).as("_g_c12"))
     val c1 = bi.groupBy(col("tok")).agg(count(lit(1)).as("_g_c1"))
-    val vocab = toks.agg(countDistinct(col("tok")).cast("double").as("_g_v"))
+    val vocab = vocabSize(toks, "_g_v")
     val p =
       (col("_g_c12").cast("double") + lit(addK)) /
         (col("_g_c1").cast("double") + lit(addK) * col("_g_v"))
@@ -319,6 +455,18 @@ object TextStats {
         count(lit(1)).as("n_bigrams"),
         (sum(log(p)) / count(lit(1))).as("avg_logprob"))
   }
+
+  /** (doc, tok, _g_next): the [[bigramStream]] of `d`'s non-empty tokens,
+    * documents keyed by `doc`.
+    */
+  private def docBigrams(d: DataFrame, doc: String, textCol: String): DataFrame =
+    bigramStream(posWordRows(d, textCol, Seq(col(doc))), Seq(col(doc)))
+      .select(col(doc), col("tok"), col("_g_next"))
+
+  /** [[docBigrams]] of a model corpus, each row its own document. */
+  private def modelBigrams(model: DataFrame, textCol: String): DataFrame =
+    docBigrams(model.select(
+      monotonically_increasing_id().as("_g_mid"), col(textCol)), "_g_mid", textCol)
 
   /** HELD-OUT bigram scoring — CCNet's "score the crawl against a clean
     * LM" step: the smoothed bigram model is estimated on `model` (the
@@ -341,30 +489,15 @@ object TextStats {
       textCol: String,
       addK: Double = 0.5): DataFrame = {
     require(addK > 0, s"addK must be positive, got $addK")
-    def bigrams(d: DataFrame, keep: Seq[String]): DataFrame = {
-      val toks = d
-        .select(keep.map(col) :+
-          posexplode(split(col(textCol), " ")).as(Seq("_g_pos", "tok")): _*)
-        .filter(col("tok") =!= "")
-      val w = Window.partitionBy(keep.map(col): _*).orderBy(col("_g_pos"))
-      toks
-        .withColumn("_g_next", lead(col("tok"), 1).over(w))
-        .filter(col("_g_next").isNotNull)
-        .select(keep.map(col) :+ col("tok") :+ col("_g_next"): _*)
-    }
-    val mb = bigrams(model.select(
-      monotonically_increasing_id().as("_g_mid"), col(textCol)), Seq("_g_mid"))
+    val mb = modelBigrams(model, textCol)
     val c12 = mb.groupBy(col("tok"), col("_g_next"))
       .agg(count(lit(1)).as("_g_c12"))
     val c1 = mb.groupBy(col("tok")).agg(count(lit(1)).as("_g_c1"))
-    val vocab = model
-      .select(explode(split(col(textCol), " ")).as("tok"))
-      .filter(col("tok") =!= "")
-      .agg(countDistinct(col("tok")).cast("double").as("_g_v"))
+    val vocab = vocabSize(wordRows(model, textCol, Nil), "_g_v")
     val p =
       (coalesce(col("_g_c12"), lit(0L)).cast("double") + lit(addK)) /
         (coalesce(col("_g_c1"), lit(0L)).cast("double") + lit(addK) * col("_g_v"))
-    bigrams(df, Seq(idCol))
+    docBigrams(df, idCol, textCol)
       .join(c12, Seq("tok", "_g_next"), "left")
       .join(c1, Seq("tok"), "left")
       .crossJoin(broadcast(vocab))
@@ -404,19 +537,7 @@ object TextStats {
       df: DataFrame,
       idCol: String,
       textCol: String): DataFrame = {
-    def bigrams(d: DataFrame, keep: Seq[String]): DataFrame = {
-      val toks = d
-        .select(keep.map(col) :+
-          posexplode(split(col(textCol), " ")).as(Seq("_g_pos", "tok")): _*)
-        .filter(col("tok") =!= "")
-      val w = Window.partitionBy(keep.map(col): _*).orderBy(col("_g_pos"))
-      toks
-        .withColumn("_g_next", lead(col("tok"), 1).over(w))
-        .filter(col("_g_next").isNotNull)
-        .select(keep.map(col) :+ col("tok") :+ col("_g_next"): _*)
-    }
-    val mb = bigrams(model.select(
-      monotonically_increasing_id().as("_g_mid"), col(textCol)), Seq("_g_mid"))
+    val mb = modelBigrams(model, textCol)
     val c12 = mb.groupBy(col("tok"), col("_g_next"))
       .agg(count(lit(1)).as("_g_c12"))
     // context stats from the bigram-type table: c(v), N1+(v·)
@@ -426,10 +547,7 @@ object TextStats {
     val pre = c12.groupBy(col("_g_next"))
       .agg(count(lit(1)).as("_g_n1pre"))
     val tv = c12.agg(count(lit(1)).cast("double").as("_g_t"))
-      .crossJoin(model
-        .select(explode(split(col(textCol), " ")).as("tok"))
-        .filter(col("tok") =!= "")
-        .agg(countDistinct(col("tok")).cast("double").as("_g_v")))
+      .crossJoin(vocabSize(wordRows(model, textCol, Nil), "_g_v"))
     val pcont = (coalesce(col("_g_n1pre"), lit(0L)).cast("double") + lit(1.0)) /
       (col("_g_t") + col("_g_v"))
     val p = when(col("_g_c1").isNull, pcont)
@@ -438,7 +556,7 @@ object TextStats {
           lit(0.0)) +
           lit(0.75) * col("_g_n1post").cast("double") * pcont) /
           col("_g_c1").cast("double"))
-    bigrams(df, Seq(idCol))
+    docBigrams(df, idCol, textCol)
       .join(c12, Seq("tok", "_g_next"), "left")
       .join(ctx, Seq("tok"), "left")
       .join(pre, Seq("_g_next"), "left")
@@ -468,7 +586,7 @@ object TextStats {
       .filter(col("sentence") =!= "")
       .withColumn("n_chars", length(col("sentence")).cast("long"))
       .withColumn("n_tokens",
-        size(filter(split(col("sentence"), " "), t => t =!= "")).cast("long"))
+        size(wordArray(col("sentence"))).cast("long"))
   }
 
   /** Per-document token statistics: token count, distinct count, average
@@ -480,7 +598,7 @@ object TextStats {
   def tokenStats(df: DataFrame, idCol: String, textCol: String, keep: String*): DataFrame = {
     val toks = col("_toks")
     val lenSum = aggregate(transform(toks, t => length(t)), lit(0), (a, x) => a + x)
-    df.select((idCol +: keep).map(col) :+ split(col(textCol), " ").as("_toks"): _*)
+    df.select((idCol +: keep).map(col) :+ tokenArray(col(textCol)).as("_toks"): _*)
       .select(
         (idCol +: keep).map(col) ++ Seq(
           size(toks).cast("long").as("n_tokens"),
@@ -545,7 +663,7 @@ object TextStats {
     val stopArr = typedlit(stopwords)
     val perDoc = df
       .select((idCol +: charsCol +: groupCols).distinct.map(col) :+
-        split(col(textCol), " ").as("_toks"): _*)
+        tokenArray(col(textCol)).as("_toks"): _*)
       .select((idCol +: charsCol +: groupCols).distinct.map(col) ++ Seq(
         size(toks).cast("long").as("n_tokens"),
         size(filter(toks, t => array_contains(stopArr, t))).cast("long").as("n_stop")): _*)
@@ -588,14 +706,11 @@ object TextStats {
           greatest(s.getField("best"), run2).as("best"))
       },
       s => s.getField("best"))
-    val bigramStarts = when(size(toks) >= 2, sequence(lit(1), size(toks) - 1))
-      .otherwise(array().cast("array<int>"))
-    val bigrams = transform(bigramStarts,
-      i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1)))
+    val bigrams = wordNgrams(toks, 2)
     val nSymbol =
       length(col(textCol)) -
         length(regexp_replace(col(textCol), "[^A-Za-z0-9 ]", ""))
-    df.select(col(idCol), col(textCol), split(col(textCol), " ").as("_toks"))
+    df.select(col(idCol), col(textCol), tokenArray(col(textCol)).as("_toks"))
       .select(col(idCol), col(textCol), col("_toks"), bigrams.as("_bigrams"))
       .select(col(idCol),
         size(toks).cast("long").as("n_tokens"),
@@ -772,8 +887,6 @@ object TextStats {
       k: Int = 5, window: Int = 4, portable: Boolean = false): DataFrame = {
     val toks = col("_toks")
     val hArr = col("_hashes")
-    val starts = when(size(toks) >= k, sequence(lit(1), size(toks) - (k - 1)))
-      .otherwise(array().cast("array<int>"))
     // positional k-gram hashes (duplicates preserved — winnowing windows
     // are positional). `portable` swaps xxhash64 for the 32-bit md5
     // prefix — bit-identical across engines, so the gram → window-min →
@@ -783,17 +896,14 @@ object TextStats {
       if (portable)
         conv(substring(md5(g.cast("binary")), 1, 8), 16, 10).cast("long")
       else xxhash64(g)
-    val gramHashes = transform(
-      starts,
-      i => gramHash(
-        concat_ws(" ", (0 until k).map(j => element_at(toks, i + j)): _*)))
+    val gramHashes = wordNgramsAt(toks, k, gramStarts(toks, k))(gramHash)
     val winStarts = when(size(hArr) >= window,
       sequence(lit(1), size(hArr) - (window - 1)))
       .otherwise(when(size(hArr) > 0, sequence(lit(1), lit(1)))
         .otherwise(array().cast("array<int>")))
     val mins = transform(winStarts,
       w => array_min(slice(hArr, w, least(lit(window), size(hArr)))))
-    df.select(col(idCol), split(col(textCol), " ").as("_toks"))
+    df.select(col(idCol), tokenArray(col(textCol)).as("_toks"))
       .select(col(idCol), gramHashes.as("_hashes"))
       .select(col(idCol), explode(array_distinct(mins)).as("fingerprint"))
   }
@@ -819,18 +929,11 @@ object TextStats {
       idCol: String,
       textCol: String,
       n: Int = 8): DataFrame = {
-    // staged projections so the token array materializes ONCE per row —
-    // inlining split() into the transform lambda would re-split the
-    // text at every element_at (O(len²) per doc; fingerprints' lesson)
     val toks = col("_g_toks")
-    val starts = when(size(toks) >= n, sequence(lit(1), size(toks) - (n - 1)))
-      .otherwise(array().cast("array<int>"))
-    val grams = array_distinct(transform(col("_g_starts"), i =>
-      md5(concat_ws(" ",
-        (0 until n).map(j => element_at(toks, i + j)): _*))))
+    val grams = array_distinct(wordNgramsAt(toks, n, col("_g_starts"))(md5))
     val exploded = df
-      .select(col(idCol), split(col(textCol), " ").as("_g_toks"))
-      .select(col(idCol), toks, starts.as("_g_starts"))
+      .select(col(idCol), tokenArray(col(textCol)).as("_g_toks"))
+      .select(col(idCol), toks, gramStarts(toks, n).as("_g_starts"))
       .select(col(idCol), explode(grams).as("_g_gh"))
     val dfreq = exploded.groupBy(col("_g_gh"))
       .agg(countDistinct(col(idCol)).as("_g_ndocs"))
@@ -871,9 +974,7 @@ object TextStats {
     */
   def bpePairStats(df: DataFrame, textCol: String, topK: Int = 50): DataFrame = {
     require(topK >= 1, "topK must be positive")
-    val wc = df
-      .select(explode(split(col(textCol), " ")).as("word"))
-      .filter(length(col("word")) > 0)
+    val wc = wordRows(df, textCol, Nil, "word")
       .groupBy("word").agg(count(lit(1)).as("_g_n"))
     val starts =
       when(length(col("word")) >= 2, sequence(lit(1), length(col("word")) - 1))
@@ -975,9 +1076,7 @@ object TextStats {
   def bpeTrain(df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = df.sparkSession
-    val vocab = df
-      .select(explode(split(col(textCol), " ")).as("word"))
-      .filter(length(col("word")) > 0)
+    val vocab = wordRows(df, textCol, Nil, "word")
       .groupBy("word").agg(count(lit(1)).as("n"))
       .select(
         transform(sequence(lit(1), length(col("word"))),
@@ -1060,9 +1159,7 @@ object TextStats {
       df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = df.sparkSession
-    val vocab = df
-      .select(explode(split(col(textCol), " ")).as("word"))
-      .filter(length(col("word")) > 0)
+    val vocab = wordRows(df, textCol, Nil, "word")
       .groupBy("word").agg(count(lit(1)).as("n"))
       .select(
         transform(sequence(lit(1), length(col("word"))), i =>
@@ -1173,8 +1270,8 @@ object TextStats {
     require(maxWordLen < 32, "backpointer encoding needs word length < 32")
     val spark = df.sparkSession
     import spark.implicits._
-    val words = df.select(explode(split(col(textCol), " ")).as("word"))
-      .filter(length(col("word")) > 0 && length(col("word")) <= maxWordLen)
+    val words = wordRows(df, textCol, Nil, "word")
+      .filter(length(col("word")) <= maxWordLen)
       .groupBy("word").agg(count(lit(1)).as("n"))
       .persist()
     try {
@@ -1304,7 +1401,7 @@ object TextStats {
     require(maxWordLen < 32, "piece-count encoding needs word length < 32")
     val INF = 1000000000000L
     val cm = typedlit(costs)
-    val allWords = filter(split(col(textCol), " "), w => length(w) > lit(0))
+    val allWords = wordArray(col(textCol))
     val okWords = filter(allWords, w => length(w) <= lit(maxWordLen))
     def finalEnc(w: Column): Column = {
       val dp = aggregate(sequence(lit(1), length(w)), array(lit(0L)),
@@ -1371,15 +1468,10 @@ object TextStats {
       steps: Int = 12): DataFrame = {
     require(seeds >= 1 && steps >= 1, s"need seeds/steps >= 1")
     // empty tokens (multi-space / empty docs) are dropped BEFORE the
-    // adjacency window — the bm25MultiTopK tokenization convention —
-    // so "" never enters the seed ranking or the transition table
-    val tk = df.select(col(idCol).as("_d"),
-        posexplode(split(col(textCol), " ")).as(Seq("_pos", "_tok")))
-      .filter(col("_tok") =!= "")
-    val bg = tk.withColumn("_nxt",
-        lead(col("_tok"), 1).over(
-          Window.partitionBy(col("_d")).orderBy(col("_pos"))))
-      .filter(col("_nxt").isNotNull)
+    // adjacency window, so "" never enters the seed ranking or the
+    // transition table
+    val tk = posWordRows(df, textCol, Seq(col(idCol).as("_d")), "_pos", "_tok")
+    val bg = bigramStream(tk, Seq(col("_d")), "_pos", "_tok", "_nxt")
     val bestNext = bg.groupBy(col("_tok"), col("_nxt"))
       .agg(count(lit(1)).as("_c"))
       .withColumn("_rn", row_number().over(
@@ -1455,7 +1547,7 @@ object TextStats {
     def sentinel(k: Column): Column =
       concat(lit("<extra_id_"), k.cast("string"), lit(">"))
     val stage = df
-      .withColumn("_toks", split(col(textCol), " "))
+      .withColumn("_toks", tokenArray(col(textCol)))
       .withColumn("_n", size(col("_toks")).cast("long"))
       .withColumn("_info", transform(
         when(col("_n") > 0,
@@ -1612,7 +1704,6 @@ object TextStats {
       textCol: String,
       points: Int = 8): DataFrame = {
     require(points >= 3 && points <= 64, s"points in [3, 64], got $points")
-    val dsum = (c: Column) => sum(c.cast("decimal(28,6)")).cast("double")
     val bounds = df.agg(min(col(idCol)).cast("long").as("_mn"),
       (max(col(idCol)).cast("long") + 1L).as("_mx"))
     // integer `div` keeps thresholds exact (the Analytics
@@ -1624,10 +1715,7 @@ object TextStats {
     val nCols = (1 to points).map(j =>
       sum(when(col("_d") < thr(j), 1L).otherwise(0L)).as(s"_n$j"))
     val nAgg = docs.agg(nCols.head, nCols.tail: _*)
-    val toks = df
-      .select(col(idCol).cast("long").as("_d"),
-        explode(split(col(textCol), " ")).as("_tok"))
-      .filter(col("_tok") =!= "")
+    val toks = wordRows(df, textCol, Seq(col(idCol).cast("long").as("_d")), "_tok")
       .crossJoin(broadcast(bounds))
     val vCols = (1 to points).map(j =>
       countDistinct(when(col("_d") < thr(j), col("_tok"))).as(s"_v$j"))
@@ -1641,22 +1729,33 @@ object TextStats {
     val xy = pts
       .select(d6(log(col("_nd").cast("double"))).as("_x"),
         d6(log(col("_vc").cast("double"))).as("_y"))
+    lnLnFit(xy, "n_points", "beta", "ln_k")
+  }
+
+  /** Least squares of `_y` on `_x` (both d6-rounded logs): d6 cross
+    * products, decimal sums, and one row (`n`, `slope`, `intercept`,
+    * r2) — the fit [[heapsFit]] and [[zipfFit]] share.
+    */
+  private def lnLnFit(xy: DataFrame, n: String, slope: String,
+      intercept: String): DataFrame = {
+    val dsum = (c: Column) => sum(c.cast("decimal(28,6)")).cast("double")
+    val agg = xy
       .select(col("_x"), col("_y"),
         d6(col("_x") * col("_y")).as("_xy"),
         d6(col("_x") * col("_x")).as("_xx"),
         d6(col("_y") * col("_y")).as("_yy"))
-    val agg = xy.agg(
-      count(lit(1)).cast("double").as("_n"),
-      dsum(col("_x")).as("_sx"), dsum(col("_y")).as("_sy"),
-      dsum(col("_xy")).as("_sxy"), dsum(col("_xx")).as("_sxx"),
-      dsum(col("_yy")).as("_syy"))
+      .agg(
+        count(lit(1)).cast("double").as("_n"),
+        dsum(col("_x")).as("_sx"), dsum(col("_y")).as("_sy"),
+        dsum(col("_xy")).as("_sxy"), dsum(col("_xx")).as("_sxx"),
+        dsum(col("_yy")).as("_syy"))
     val cov = col("_n") * col("_sxy") - col("_sx") * col("_sy")
     val vx = col("_n") * col("_sxx") - col("_sx") * col("_sx")
     val vy = col("_n") * col("_syy") - col("_sy") * col("_sy")
     agg.select(
-      col("_n").cast("long").as("n_points"),
-      d6(cov / vx).as("beta"),
-      d6((col("_sy") - (cov / vx) * col("_sx")) / col("_n")).as("ln_k"),
+      col("_n").cast("long").as(n),
+      d6(cov / vx).as(slope),
+      d6((col("_sy") - (cov / vx) * col("_sx")) / col("_n")).as(intercept),
       d6(cov * cov / (vx * vy)).as("r2"))
   }
 
@@ -1686,10 +1785,7 @@ object TextStats {
       textCol: String,
       topR: Int = 200): DataFrame = {
     require(topR >= 3, s"topR must be >= 3, got $topR")
-    val dsum = (c: Column) => sum(c.cast("decimal(28,6)")).cast("double")
-    val top = df
-      .select(explode(split(col(textCol), " ")).as("tok"))
-      .filter(col("tok") =!= "")
+    val top = wordRows(df, textCol, Nil)
       .groupBy(col("tok")).agg(count(lit(1)).as("f"))
       .orderBy(col("f").desc, col("tok").asc)
       .limit(topR)
@@ -1699,23 +1795,7 @@ object TextStats {
       .withColumn("_r", row_number().over(w).cast("double"))
       .select(d6(log(col("_r"))).as("_x"),
         d6(log(col("f").cast("double"))).as("_y"))
-      .select(col("_x"), col("_y"),
-        d6(col("_x") * col("_y")).as("_xy"),
-        d6(col("_x") * col("_x")).as("_xx"),
-        d6(col("_y") * col("_y")).as("_yy"))
-    val agg = xy.agg(
-      count(lit(1)).cast("double").as("_n"),
-      dsum(col("_x")).as("_sx"), dsum(col("_y")).as("_sy"),
-      dsum(col("_xy")).as("_sxy"), dsum(col("_xx")).as("_sxx"),
-      dsum(col("_yy")).as("_syy"))
-    val cov = col("_n") * col("_sxy") - col("_sx") * col("_sy")
-    val vx = col("_n") * col("_sxx") - col("_sx") * col("_sx")
-    val vy = col("_n") * col("_syy") - col("_sy") * col("_sy")
-    agg.select(
-      col("_n").cast("long").as("n_ranks"),
-      d6(cov / vx).as("slope"),
-      d6((col("_sy") - (cov / vx) * col("_sx")) / col("_n")).as("intercept"),
-      d6(cov * cov / (vx * vy)).as("r2"))
+    lnLnFit(xy, "n_ranks", "slope", "intercept")
   }
 
   /** Distinct-n diversity (Li et al. 2016, "A Diversity-Promoting
@@ -1747,14 +1827,9 @@ object TextStats {
     require(maxN >= 1 && maxN <= 8, s"maxN must be in [1,8], got $maxN")
     val toks = col("_g_toks")
     val perN = (1 to maxN).map { n =>
-      val starts =
-        when(size(toks) >= n, sequence(lit(1), size(toks) - (n - 1)))
-          .otherwise(array().cast("array<int>"))
-      val grams = transform(col("_g_starts"), i =>
-        md5(concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*)))
-      df.select(col(groupCol),
-          filter(split(col(textCol), " "), t => length(t) > 0).as("_g_toks"))
-        .select(col(groupCol), toks, starts.as("_g_starts"))
+      val grams = wordNgramsAt(toks, n, col("_g_starts"))(md5)
+      df.select(col(groupCol), wordArray(col(textCol)).as("_g_toks"))
+        .select(col(groupCol), toks, gramStarts(toks, n).as("_g_starts"))
         .select(col(groupCol), explode_outer(grams).as("_g_gh"))
         .groupBy(col(groupCol))
         .agg(
@@ -1800,14 +1875,8 @@ object TextStats {
       minCount: Int = 5): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
-    val toks = df
-      .select(col(idCol),
-        posexplode(split(col(textCol), " ")).as(Seq("_g_pos", "tok")))
-      .filter(col("tok") =!= "")
-    val w = Window.partitionBy(col(idCol)).orderBy(col("_g_pos"))
-    val bi = toks
-      .withColumn("_g_next", lead(col("tok"), 1).over(w))
-      .filter(col("_g_next").isNotNull)
+    val toks = posWordRows(df, textCol, Seq(col(idCol)))
+    val bi = bigramStream(toks, Seq(col(idCol)))
     val c12 = bi.groupBy(col("tok").as("w1"), col("_g_next").as("w2"))
       .agg(count(lit(1)).as("n_pair"))
     val uni = toks.groupBy(col("tok")).agg(count(lit(1)).as("n_tok"))
@@ -1901,8 +1970,7 @@ object TextStats {
       textCol: String): DataFrame = {
     val terms = df
       .select(col(groupCol).as("_grp"),
-        explode(filter(split(col(textCol), " "),
-          t => length(t) > 0)).as("_tok"))
+        explode(wordArray(col(textCol))).as("_tok"))
       .groupBy(col("_grp"), md5(col("_tok")).as("_th"))
       .agg(count(lit(1)).as("_m"))
     val spectrum = terms.groupBy(col("_grp"), col("_m"))
@@ -1958,8 +2026,7 @@ object TextStats {
     require(alpha0 > 0, s"alpha0 must be positive, got $alpha0")
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val flagged = df.select(col(flagCol).cast("boolean").as("_a"),
-      explode(filter(split(col(textCol), " "),
-        t => length(t) > 0)).as("term"))
+      explode(wordArray(col(textCol))).as("term"))
     val counts = flagged.groupBy(col("term"))
       .agg(sum(when(col("_a"), 1L).otherwise(0L)).as("n_a"),
         sum(when(col("_a"), 0L).otherwise(1L)).as("n_b"))
@@ -2008,8 +2075,7 @@ object TextStats {
       textCol: String): DataFrame = {
     val vocab = df
       .select(col(groupCol).as("_grp"),
-        explode(filter(split(col(textCol), " "),
-          t => length(t) > 0)).as("_tok"))
+        explode(wordArray(col(textCol))).as("_tok"))
       .select(col("_grp"), md5(col("_tok")).as("_th"))
       .distinct()
     val sizes = vocab.groupBy(col("_grp")).agg(count(lit(1)).as("n"))
@@ -2061,10 +2127,8 @@ object TextStats {
       topK: Int = 30): DataFrame = {
     require(window >= 2, s"window must be >= 2, got $window")
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val toks = df
-      .select(col(idCol).as("_g_id"),
-        posexplode(split(col(textCol), " ")).as(Seq("_g_pos", "tok")))
-      .filter(col("tok") =!= "" && !col("tok").isInCollection(stopwords))
+    val toks = posWordRows(df, textCol, Seq(col(idCol).as("_g_id")))
+      .filter(!col("tok").isInCollection(stopwords))
     val w = Window.partitionBy(col("_g_id")).orderBy(col("_g_pos"))
     val seq = toks.withColumn("_g_rn", row_number().over(w))
     val wLead = Window.partitionBy(col("_g_id")).orderBy(col("_g_rn"))
@@ -2115,8 +2179,7 @@ object TextStats {
     val docs = df.select(col(idCol), y.as("_y"), col(textCol))
     val presence = docs
       .select(col(idCol), col("_y"),
-        explode(array_distinct(filter(split(col(textCol), " "),
-          t => t =!= ""))).as("tok"))
+        explode(array_distinct(wordArray(col(textCol)))).as("tok"))
     val perTok = presence.groupBy(col("tok"))
       .agg(sum(when(col("_y") === 1, 1L).otherwise(0L)).as("_a"),
         sum(when(col("_y") === 0, 1L).otherwise(0L)).as("_b"))
@@ -2174,9 +2237,7 @@ object TextStats {
       maxR: Int = 10): DataFrame = {
     require(maxR >= 1, s"maxR must be >= 1, got $maxR")
     val spark = df.sparkSession
-    val toks = df
-      .select(explode(split(col(textCol), " ")).as("tok"))
-      .filter(col("tok") =!= "")
+    val toks = wordRows(df, textCol, Nil)
     val counts = toks.groupBy(col("tok")).agg(count(lit(1)).as("_r"))
     val spectrum = counts.groupBy(col("_r")).agg(count(lit(1)).as("_nr"))
     val nTot = toks.agg(count(lit(1)).as("_n"))
@@ -2228,10 +2289,7 @@ object TextStats {
       topK: Int = 30): DataFrame = {
     require(maxPhraseLen >= 1, s"maxPhraseLen must be >= 1, got $maxPhraseLen")
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val toks = df
-      .select(col(idCol).as("_g_id"),
-        posexplode(split(col(textCol), " ")).as(Seq("_g_pos", "tok")))
-      .filter(col("tok") =!= "")
+    val toks = posWordRows(df, textCol, Seq(col(idCol).as("_g_id")))
       .withColumn("_g_stop", col("tok").isInCollection(stopwords))
     val w = Window.partitionBy(col("_g_id")).orderBy(col("_g_pos"))
     // run id = number of stopwords seen so far: constant inside each
@@ -2249,9 +2307,8 @@ object TextStats {
       .filter(col("_g_len") <= maxPhraseLen)
     // word stats over ALL candidate INSTANCES (RAKE's freq/deg count
     // every occurrence), phrase score over DISTINCT phrase texts
-    val instWords = phrases
-      .select(col("phrase"), col("_g_len"),
-        explode(split(col("phrase"), " ")).as("_g_w"))
+    val instWords =
+      tokenRows(phrases, "phrase", Seq(col("phrase"), col("_g_len")), "_g_w")
     val wordScore = instWords
       .groupBy(col("_g_w"))
       .agg(sum(col("_g_len")).as("_g_deg"), count(lit(1)).as("_g_freq"))
@@ -2261,9 +2318,8 @@ object TextStats {
     val dist = phrases
       .groupBy(col("phrase"))
       .agg(count(lit(1)).as("n_occurrences"))
-    val phraseScore = dist
-      .select(col("phrase"), col("n_occurrences"),
-        explode(split(col("phrase"), " ")).as("_g_w"))
+    val phraseScore =
+      tokenRows(dist, "phrase", Seq(col("phrase"), col("n_occurrences")), "_g_w")
       .join(wordScore, Seq("_g_w"))
       .groupBy(col("phrase"))
       .agg(first(col("n_occurrences")).as("n_occurrences"),
@@ -2305,9 +2361,7 @@ object TextStats {
       topM: Int = 30,
       maxAuthors: Int = 1000): DataFrame = {
     require(topM >= 1, s"topM must be >= 1, got $topM")
-    val tk = df.select(col(authorCol).cast("string").as("_a"),
-        explode(split(col(textCol), " ")).as("_w"))
-      .filter(col("_w") =!= "")
+    val tk = wordRows(df, textCol, Seq(col(authorCol).cast("string").as("_a")), "_w")
     val counts = tk.groupBy(col("_a"), col("_w"))
       .agg(count(lit(1)).as("_c"))
     val authorTotals = counts.groupBy(col("_a"))
@@ -2391,7 +2445,7 @@ object TextStats {
       textCol: String): DataFrame = {
     val syl = (w: String) =>
       s"greatest(1, size(regexp_extract_all(lower($w), '[aeiouy]+', 0)))"
-    val words = s"filter(split($textCol, ' '), w -> w != '')"
+    val words = wordArraySql(textCol)
     val staged = df.select(col(idCol),
       expr(s"size($words)").cast("long").as("n_words"),
       greatest(lit(1L),
@@ -2453,8 +2507,7 @@ object TextStats {
       textCol: String,
       maxTokens: Int = 200): DataFrame = {
     require(maxTokens >= 10, s"maxTokens must be >= 10, got $maxTokens")
-    val toks = s"slice(filter(split($textCol, ' '), w -> w != ''), " +
-      s"1, $maxTokens)"
+    val toks = s"slice(${wordArraySql(textCol)}, 1, $maxTokens)"
     // fold state: (f factors, seg distinct-token array, st seg tokens)
     def pass(arr: String): String =
       s"aggregate($arr, " +
@@ -2531,7 +2584,7 @@ object TextStats {
       minCount: Long = 5L): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     val toks = df.select(slicePred.cast("int").as("_in"),
-      explode(expr(s"filter(split($textCol, ' '), w -> w != '')"))
+      explode(expr(wordArraySql(textCol)))
         .as("tok"))
     val tp = toks.groupBy(col("tok"))
       .agg(sum(col("_in").cast("long")).as("n_a"),
@@ -2608,7 +2661,7 @@ object TextStats {
       minCount: Long = 5L): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     val toks = df.select(col(idCol).as("_d"),
-      explode(expr(s"filter(split($textCol, ' '), w -> w != '')"))
+      explode(expr(wordArraySql(textCol)))
         .as("tok"))
     val td = toks.groupBy(col("tok"), col("_d"))
       .agg(count(lit(1)).as("_c"))
@@ -2634,7 +2687,7 @@ object TextStats {
       minCount: Long = 5L): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     val toks = df.select(col(partCol).cast("string").as("_p"),
-      explode(expr(s"filter(split($textCol, ' '), w -> w != '')"))
+      explode(expr(wordArraySql(textCol)))
         .as("tok"))
     val tp = toks.groupBy(col("tok"), col("_p"))
       .agg(count(lit(1)).as("_n"))
@@ -2691,7 +2744,7 @@ object TextStats {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val W = org.apache.spark.sql.expressions.Window
     val toks = df.select(col(idCol).as("_d"),
-        posexplode(expr(s"filter(split($textCol, ' '), w -> w != '')"))
+        posexplode(expr(wordArraySql(textCol)))
           .as(Seq("_p", "_t")))
     val w = W.partitionBy(col("_d")).orderBy(col("_p"))
     val leads = toks.select(

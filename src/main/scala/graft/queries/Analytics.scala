@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{Entry, QueryFile}
 import graft.functions.ByteEntropy
 import graft.ops.{Profile, ZOrder}
-import graft.pipeline.Behavior
+import graft.pipeline.{Behavior, TextStats}
 import graft.pipeline.Exact.d6
 
 /** Behavioral-analytics and data-quality profiling entries: funnel /
@@ -170,11 +170,11 @@ object Analytics extends QueryFile {
 
   // q108: corpus character histogram — the alphabet/charset QA snapshot
   // (mojibake and encoding junk surface as unexpected symbols). Spark's
-  // split(text, '') keeps a trailing '' (Java split, limit −1), DuckDB's
-  // string_split does not — hence the explicit filter.
+  // split(text, '') gives [''] for empty text — hence the explicit
+  // filter.
   def q108CharHistogram(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
-      .select(explode(split(col("text"), "")).as("ch"))
+      .select(explode(TextStats.charArray(col("text"))).as("ch"))
       .filter(col("ch") =!= "")
       .groupBy(col("ch"))
       .agg(count(lit(1)).as("n_occurrences"))
@@ -6000,7 +6000,7 @@ object Analytics extends QueryFile {
   // pass. Oracle replays the conditional sums per grid point.
   def q425ThresholdSweep(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents").select(col("n_chars"),
-      size(filter(split(col("text"), " "), x => length(x) > 0))
+      size(TextStats.wordArray(col("text")))
         .cast("long").as("n_toks"))
     graft.pipeline.Sampling.thresholdSweep(d, "n_chars", "n_toks",
       Seq(0L, 200L, 400L, 600L, 800L, 1000L))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{Entry, QueryFile}
 import graft.functions.NfcNormalize
 import graft.ops.Graph
-import graft.pipeline.{Behavior, Retrieval, Sampling, TextDedup}
+import graft.pipeline.{Behavior, Retrieval, Sampling, TextDedup, TextStats}
 import graft.pipeline.Exact.d6
 
 /** Corpus-curation entries (round 8): retrieval scoring, Unicode key
@@ -492,9 +492,8 @@ object Corpus extends QueryFile {
   // ordered 3-way self-join; the operator's degree-ordered orientation
   // must land on the same per-node counts.
   def q138Triangles(s: SparkSession, dir: String): DataFrame = {
-    val toks = t(s, dir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .filter(col("tok") =!= "").distinct()
+    val toks = TextStats.wordRows(t(s, dir, "documents"), "text",
+      Seq(col("doc_id"))).distinct()
     val a = toks.select(col("doc_id"), col("tok").as("tok_a"))
     val b = toks.select(col("doc_id"), col("tok").as("tok_b"))
     val pairs = a.join(b, "doc_id")
@@ -1075,9 +1074,7 @@ object Corpus extends QueryFile {
   // estimate path.
   def q162CountMin(s: SparkSession, dir: String): DataFrame =
     graft.functions.CountMin.estimates(
-      t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("tok"))
-        .filter(col("tok") =!= ""),
+      TextStats.wordRows(t(s, dir, "documents"), "text", Nil),
       "tok")
 
   // q221: the PORTABLE Count-Min twin — q162's sketch on the md5-ring
@@ -1090,9 +1087,7 @@ object Corpus extends QueryFile {
   // form stays the fast production default (rows-only by design).
   def q221CountMinPortable(s: SparkSession, dir: String): DataFrame =
     graft.functions.CountMin.estimates(
-      t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("tok"))
-        .filter(col("tok") =!= ""),
+      TextStats.wordRows(t(s, dir, "documents"), "text", Nil),
       "tok", depth = 4, width = 16, portable = true)
 
   val q221Sql: String =
@@ -1120,9 +1115,7 @@ object Corpus extends QueryFile {
   // (see HeavyHitters.heavyHittersPortable scaladoc).
   def q222HeavyHittersPortable(s: SparkSession, dir: String): DataFrame =
     graft.functions.HeavyHitters.heavyHittersPortable(
-      t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("tok"))
-        .filter(col("tok") =!= ""),
+      TextStats.wordRows(t(s, dir, "documents"), "text", Nil),
       "tok", k = 8)
 
   val q222Sql: String =
@@ -2105,7 +2098,7 @@ object Corpus extends QueryFile {
   // Learnability is pinned in PipelineSpec (accuracy beats the
   // majority class by a wide floor; centered-vs-uncentered measured).
   private[queries] def q225Label: Column = {
-    val toks = filter(split(col("text"), " "), t => t =!= "")
+    val toks = TextStats.wordArray(col("text"))
     val stopCnt = size(filter(toks, t => t.isin("the", "a")))
     lit(10000L) * stopCnt >= lit(640L) * size(toks)
   }
@@ -2633,7 +2626,7 @@ object Corpus extends QueryFile {
   // is two scans of nothing but the agg output at any corpus size.
   def q170CorpusReport(s: SparkSession, dir: String): DataFrame = {
     val perDoc = t(s, dir, "documents").select(col("lang"), col("n_chars"),
-      size(filter(split(col("text"), " "), t => t =!= ""))
+      size(TextStats.wordArray(col("text")))
         .cast("long").as("n_toks"))
     val g = perDoc.groupBy(col("lang")).agg(
       count(lit(1)).as("n_docs"),
@@ -3083,7 +3076,7 @@ object Corpus extends QueryFile {
     val planted = concat(col("content_text"), lit(" reach-"),
       col("doc_id").cast("string"), lit("@ex.com"))
     val scr = tc.scrubPii(ded.withColumn("_w", planted), "_w")
-    val toks = filter(split(col("scrubbed_text"), " "), x => x =!= "")
+    val toks = TextStats.wordArray(col("scrubbed_text"))
     val gated = scr.withColumn("n_tokens", size(toks).cast("long"))
       .filter(col("n_tokens") >= 12)
     Sampling.hashSplit(gated, "doc_id",
@@ -3457,9 +3450,7 @@ object Corpus extends QueryFile {
     val qt = q247Queries
       .flatMap { case (q, ts) => ts.map(term => (q, term)) }
       .toDF("query_id", "term")
-    val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .filter(col("tok") =!= "")
+    val tf = TextStats.wordRows(docs, "text", Seq(col("doc_id")))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("_tf"))
     val qrels = tf.join(broadcast(qt), col("tok") === col("term"))
@@ -3825,6 +3816,19 @@ object Corpus extends QueryFile {
       |LEFT JOIN tstr ts ON d.doc_id = ts.doc_id
       |LEFT JOIN st ON d.doc_id = st.doc_id""".stripMargin
 
+  // The (doc_id, cand, ref) pairs the q258/q261/q269 eval entries
+  // score: every 5th doc and its first ⌊n/3⌋ tokens (empties kept) with
+  // every 7th one swapped for 'the'.
+  private def candRefPairs(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents").filter(col("doc_id") % 5 === 0)
+    val toks = TextStats.tokenArray(col("text"))
+    val k = greatest(lit(1), floor(size(toks) / lit(3.0)).cast("int"))
+    val candToks = transform(slice(toks, lit(1), k),
+      (tk, i) => when(i % 7 === 3, lit("the")).otherwise(tk))
+    docs.select(col("doc_id"),
+      array_join(candToks, " ").as("cand"), col("text").as("ref"))
+  }
+
   // q258: ROUGE-1/ROUGE-2 summarization-eval metrics — every 5th doc
   // paired with a derived "summary" (its first ⌊n/3⌋ tokens with every
   // 7th one swapped for 'the', so precision is non-degenerate and
@@ -3832,13 +3836,7 @@ object Corpus extends QueryFile {
   // candidate derivation, both gram multisets, clipped matches and
   // the identical fixed-order ratio arithmetic.
   def q258RougeEval(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").filter(col("doc_id") % 5 === 0)
-    val toks = split(col("text"), " ")
-    val k = greatest(lit(1), floor(size(toks) / lit(3.0)).cast("int"))
-    val candToks = transform(slice(toks, lit(1), k),
-      (tk, i) => when(i % 7 === 3, lit("the")).otherwise(tk))
-    val pairs = docs.select(col("doc_id"),
-      array_join(candToks, " ").as("cand"), col("text").as("ref"))
+    val pairs = candRefPairs(s, dir)
     val r1 = graft.pipeline.Retrieval
       .rougeN(pairs, "doc_id", "cand", "ref", 1).withColumn("n", lit(1L))
     val r2 = graft.pipeline.Retrieval
@@ -3963,13 +3961,7 @@ object Corpus extends QueryFile {
   // gram multisets (lead-chain n-grams), the clipped counts, the
   // decimal-summed d6-ln terms, and the identical bp/exp arithmetic.
   def q261BleuEval(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").filter(col("doc_id") % 5 === 0)
-    val toks = split(col("text"), " ")
-    val k = greatest(lit(1), floor(size(toks) / lit(3.0)).cast("int"))
-    val candToks = transform(slice(toks, lit(1), k),
-      (tk, i) => when(i % 7 === 3, lit("the")).otherwise(tk))
-    val pairs = docs.select(col("doc_id"),
-      array_join(candToks, " ").as("cand"), col("text").as("ref"))
+    val pairs = candRefPairs(s, dir)
     graft.pipeline.Retrieval.bleuN(pairs, "doc_id", "cand", "ref", maxN = 4)
   }
 
@@ -4178,13 +4170,7 @@ object Corpus extends QueryFile {
   // four char-gram multisets by substring enumeration, and replays the
   // clipped counts + the d6 F_n terms + the decimal-summed mean.
   def q269Chrf(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").filter(col("doc_id") % 5 === 0)
-    val toks = split(col("text"), " ")
-    val k = greatest(lit(1), floor(size(toks) / lit(3.0)).cast("int"))
-    val candToks = transform(slice(toks, lit(1), k),
-      (tk, i) => when(i % 7 === 3, lit("the")).otherwise(tk))
-    val pairs = docs.select(col("doc_id"),
-      array_join(candToks, " ").as("cand"), col("text").as("ref"))
+    val pairs = candRefPairs(s, dir)
     graft.pipeline.Retrieval.chrF(pairs, "doc_id", "cand", "ref",
       maxN = 4, beta = 2.0)
   }
@@ -4398,7 +4384,7 @@ object Corpus extends QueryFile {
   // the single waterline division and both d6 outputs.
   def q273Unimax(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(col("lang"),
-      size(filter(split(col("text"), " "), t => length(t) > 0))
+      size(TextStats.wordArray(col("text")))
         .cast("long").as("n_toks"))
     graft.pipeline.Sampling.unimaxBudgets(docs, "lang", "n_toks",
       totalBudget = 30000L, maxEpochs = 2)
@@ -4864,7 +4850,7 @@ object Corpus extends QueryFile {
   // full-outer multiset min and the F1 arithmetic.
   def q292TokenF1(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val toks = filter(split(col("text"), " "), t => length(t) > 0)
+    val toks = TextStats.wordArray(col("text"))
     val half = array_join(
       slice(toks, lit(1),
         greatest(lit(1), floor(size(toks) / 2).cast("int"))), " ")
@@ -5213,7 +5199,7 @@ object Corpus extends QueryFile {
   // alphabet and calls DuckDB's levenshtein: token edits ≡ char edits
   // ≡ BYTE edits (DuckDB's unit) in the single-byte regime.
   def q323Wer(s: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(col("text"), " "), t => t =!= "")
+    val toks = TextStats.wordArray(col("text"))
     val hyp = filter(
       transform(toks, (t, i) =>
         when((i + 1) % 11 === 0, lit("zzz"))

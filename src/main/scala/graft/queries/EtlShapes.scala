@@ -36,6 +36,25 @@ object EtlShapes extends QueryFile {
     }
   }
 
+  /** Runs one `CopyTask` as task `name` (config → setup → run, failing on
+    * the first error) and reads its `destination` back through the
+    * object resolver.
+    */
+  private def runCopy(s: SparkSession, name: String,
+      cfg: Map[String, Any]): DataFrame = {
+    val objects = new DbObjectCompiler("spark")
+    val ctx = new TaskContext(name, "verify", new SparkDatabase(s), objects,
+      Map.empty, RunArguments())
+    val task = new CopyTask
+    (for {
+      _ <- task.config(ctx, cfg)
+      _ <- task.setup()
+      _ <- task.run()
+    } yield ()).left.foreach(fail)
+    s.table(objects.fromString(cfg("destination").toString)
+      .map(objects.outValue).fold(fail, identity))
+  }
+
   /** q22: upsert semantics of `mergeTables` (anti-join + insert on the
     * delete key, templates/merge_tables.sql:1-12): dst = orders, src =
     * every 7th order with a changed price; result keeps unmatched dst rows
@@ -67,27 +86,15 @@ object EtlShapes extends QueryFile {
     * read the destination back.
     */
   def q23Copy(s: SparkSession, dir: String): DataFrame = {
-    val db = new SparkDatabase(s)
-    val objects = new DbObjectCompiler("spark")
-    val ctx = new TaskContext("q23_copy", "verify", db, objects, Map.empty, RunArguments())
     dropPhysical(s, "q23_copy_dst",
       "graft_tmp_q23_copy_dst", "graft_tmp_backup_q23_copy_dst")
-    val task = new CopyTask
-    val cfg = Map[String, Any](
+    runCopy(s, "q23_copy", Map[String, Any](
       "source" -> s"parquet:$dir/orders.parquet",
       "destination" -> "q23_copy_dst",
       "columns" -> Seq(
         Map("name" -> "o_orderkey", "dst_name" -> "order_id"),
         Map("name" -> "o_totalprice", "type" -> "double", "dst_name" -> "amount"),
-        Map("name" -> "o_orderpriority", "dst_name" -> "priority")))
-    (for {
-      _ <- task.config(ctx, cfg)
-      _ <- task.setup()
-      _ <- task.run()
-    } yield ()).left.foreach(fail)
-    val resolved = objects.fromString("q23_copy_dst")
-      .map(objects.outValue).fold(fail, identity)
-    s.table(resolved)
+        Map("name" -> "o_orderpriority", "dst_name" -> "priority"))))
   }
 
   val q23Sql: String =
@@ -117,14 +124,9 @@ object EtlShapes extends QueryFile {
     })
 
   def q77CopyCsv(s: SparkSession, dir: String): DataFrame = {
-    val db = new SparkDatabase(s)
-    val objects = new DbObjectCompiler("spark")
-    val ctx = new TaskContext("q77_copy_csv", "verify", db, objects, Map.empty,
-      RunArguments())
     dropPhysical(s, "q77_csv_dst",
       "graft_tmp_q77_csv_dst", "graft_tmp_backup_q77_csv_dst")
-    val task = new CopyTask
-    val cfg = Map[String, Any](
+    runCopy(s, "q77_copy_csv", Map[String, Any](
       "source" -> s"csv:${stageCsv(s, dir)}",
       "destination" -> "q77_csv_dst",
       "columns" -> Seq(
@@ -132,15 +134,7 @@ object EtlShapes extends QueryFile {
         Map("name" -> "o_orderkey", "type" -> "bigint", "dst_name" -> "order_id"),
         Map("name" -> "o_custkey", "type" -> "bigint", "dst_name" -> "cust_id"),
         Map("name" -> "o_orderstatus", "dst_name" -> "status"),
-        Map("name" -> "o_totalprice", "type" -> "double", "dst_name" -> "amount")))
-    (for {
-      _ <- task.config(ctx, cfg)
-      _ <- task.setup()
-      _ <- task.run()
-    } yield ()).left.foreach(fail)
-    val resolved = objects.fromString("q77_csv_dst")
-      .map(objects.outValue).fold(fail, identity)
-    s.table(resolved)
+        Map("name" -> "o_totalprice", "type" -> "double", "dst_name" -> "amount"))))
   }
 
   val q77Sql: String =
@@ -171,29 +165,16 @@ object EtlShapes extends QueryFile {
     })
 
   def q109CopyJsonl(s: SparkSession, dir: String): DataFrame = {
-    val db = new SparkDatabase(s)
-    val objects = new DbObjectCompiler("spark")
-    val ctx = new TaskContext("q109_copy_jsonl", "verify", db, objects,
-      Map.empty, RunArguments())
     dropPhysical(s, "q109_jsonl_dst",
       "graft_tmp_q109_jsonl_dst", "graft_tmp_backup_q109_jsonl_dst")
-    val task = new CopyTask
-    val cfg = Map[String, Any](
+    runCopy(s, "q109_copy_jsonl", Map[String, Any](
       "source" -> s"json:${stageJsonl(s, dir)}",
       "destination" -> "q109_jsonl_dst",
       "columns" -> Seq(
         Map("name" -> "o_orderkey", "type" -> "bigint", "dst_name" -> "order_id"),
         Map("name" -> "o_custkey", "type" -> "bigint", "dst_name" -> "cust_id"),
         Map("name" -> "o_orderstatus", "dst_name" -> "status"),
-        Map("name" -> "o_totalprice", "type" -> "double", "dst_name" -> "amount")))
-    (for {
-      _ <- task.config(ctx, cfg)
-      _ <- task.setup()
-      _ <- task.run()
-    } yield ()).left.foreach(fail)
-    val resolved = objects.fromString("q109_jsonl_dst")
-      .map(objects.outValue).fold(fail, identity)
-    s.table(resolved)
+        Map("name" -> "o_totalprice", "type" -> "double", "dst_name" -> "amount"))))
   }
 
   val q109Sql: String = q77Sql // same projection contract as the CSV twin
@@ -219,29 +200,16 @@ object EtlShapes extends QueryFile {
     })
 
   def q143CopyOrc(s: SparkSession, dir: String): DataFrame = {
-    val db = new SparkDatabase(s)
-    val objects = new DbObjectCompiler("spark")
-    val ctx = new TaskContext("q143_copy_orc", "verify", db, objects,
-      Map.empty, RunArguments())
     dropPhysical(s, "q143_orc_dst",
       "graft_tmp_q143_orc_dst", "graft_tmp_backup_q143_orc_dst")
-    val task = new CopyTask
-    val cfg = Map[String, Any](
+    runCopy(s, "q143_copy_orc", Map[String, Any](
       "source" -> s"orc:${stageOrc(s, dir)}",
       "destination" -> "q143_orc_dst",
       "columns" -> Seq(
         Map("name" -> "o_orderkey", "type" -> "bigint", "dst_name" -> "order_id"),
         Map("name" -> "o_custkey", "type" -> "bigint", "dst_name" -> "cust_id"),
         Map("name" -> "o_orderstatus", "dst_name" -> "status"),
-        Map("name" -> "o_totalprice", "type" -> "double", "dst_name" -> "amount")))
-    (for {
-      _ <- task.config(ctx, cfg)
-      _ <- task.setup()
-      _ <- task.run()
-    } yield ()).left.foreach(fail)
-    val resolved = objects.fromString("q143_orc_dst")
-      .map(objects.outValue).fold(fail, identity)
-    s.table(resolved)
+        Map("name" -> "o_totalprice", "type" -> "double", "dst_name" -> "amount"))))
   }
 
   val q143Sql: String = q77Sql // same projection contract as the CSV twin
@@ -255,9 +223,6 @@ object EtlShapes extends QueryFile {
     * stale. Final state is pure SQL for the oracle.
     */
   def q33CopyIncremental(s: SparkSession, dir: String): DataFrame = {
-    val db = new SparkDatabase(s)
-    val objects = new DbObjectCompiler("spark")
-    val ctx = new TaskContext("q33_copy_inc", "verify", db, objects, Map.empty, RunArguments())
     dropPhysical(s, "q33_src", "q33_dst",
       "graft_tmp_q33_dst", "graft_tmp_merge_q33_dst", "graft_tmp_backup_q33_dst")
     val src = Tables(s, dir, "orders")
@@ -267,18 +232,9 @@ object EtlShapes extends QueryFile {
     src.filter(col("upd") < 50)
       .withColumn("o_totalprice", lit(0.0))
       .write.mode("overwrite").saveAsTable("q33_dst")
-    val task = new CopyTask
-    val cfg = Map[String, Any](
+    runCopy(s, "q33_copy_inc", Map[String, Any](
       "source" -> "q33_src", "destination" -> "q33_dst",
-      "incremental_key" -> "upd", "delete_key" -> "o_orderkey")
-    (for {
-      _ <- task.config(ctx, cfg)
-      _ <- task.setup()
-      _ <- task.run()
-    } yield ()).left.foreach(fail)
-    val resolved = objects.fromString("q33_dst")
-      .map(objects.outValue).fold(fail, identity)
-    s.table(resolved)
+      "incremental_key" -> "upd", "delete_key" -> "o_orderkey"))
   }
 
   val q33Sql: String =
@@ -418,29 +374,16 @@ object EtlShapes extends QueryFile {
     })
 
   def q135CopyJdbc(s: SparkSession, dir: String): DataFrame = {
-    val db = new SparkDatabase(s)
-    val objects = new DbObjectCompiler("spark")
-    val ctx = new TaskContext("q135_copy_jdbc", "verify", db, objects,
-      Map.empty, RunArguments())
     dropPhysical(s, "q135_jdbc_dst",
       "graft_tmp_q135_jdbc_dst", "graft_tmp_backup_q135_jdbc_dst")
-    val task = new CopyTask
-    val cfg = Map[String, Any](
+    runCopy(s, "q135_copy_jdbc", Map[String, Any](
       "source" -> s"${stageDerby(s, dir)}|SUPPLIER",
       "destination" -> "q135_jdbc_dst",
       "columns" -> Seq(
         Map("name" -> "s_suppkey", "type" -> "bigint", "dst_name" -> "supp_id"),
         Map("name" -> "s_name", "dst_name" -> "name"),
         Map("name" -> "s_nationkey", "type" -> "bigint", "dst_name" -> "nation_id"),
-        Map("name" -> "s_acctbal", "type" -> "double", "dst_name" -> "balance")))
-    (for {
-      _ <- task.config(ctx, cfg)
-      _ <- task.setup()
-      _ <- task.run()
-    } yield ()).left.foreach(fail)
-    val resolved = objects.fromString("q135_jdbc_dst")
-      .map(objects.outValue).fold(fail, identity)
-    s.table(resolved)
+        Map("name" -> "s_acctbal", "type" -> "double", "dst_name" -> "balance"))))
   }
 
   val q135Sql: String =
@@ -475,10 +418,6 @@ object EtlShapes extends QueryFile {
     })
 
   def q136CopyJdbcIncremental(s: SparkSession, dir: String): DataFrame = {
-    val db = new SparkDatabase(s)
-    val objects = new DbObjectCompiler("spark")
-    val ctx = new TaskContext("q136_copy_jdbc_inc", "verify", db, objects,
-      Map.empty, RunArguments())
     dropPhysical(s, "q136_jdbc_dst", "graft_tmp_q136_jdbc_dst",
       "graft_tmp_merge_q136_jdbc_dst", "graft_tmp_backup_q136_jdbc_dst")
     // stale destination: watermark values < 50 with zeroed prices
@@ -488,19 +427,10 @@ object EtlShapes extends QueryFile {
       .filter(col("upd") < 50)
       .withColumn("o_totalprice", lit(0.0))
       .write.mode("overwrite").saveAsTable("q136_jdbc_dst")
-    val task = new CopyTask
-    val cfg = Map[String, Any](
+    runCopy(s, "q136_copy_jdbc_inc", Map[String, Any](
       "source" -> s"${stageDerbyInc(s, dir)}|ORDERS_SRC",
       "destination" -> "q136_jdbc_dst",
-      "incremental_key" -> "upd", "delete_key" -> "o_orderkey")
-    (for {
-      _ <- task.config(ctx, cfg)
-      _ <- task.setup()
-      _ <- task.run()
-    } yield ()).left.foreach(fail)
-    val resolved = objects.fromString("q136_jdbc_dst")
-      .map(objects.outValue).fold(fail, identity)
-    s.table(resolved)
+      "incremental_key" -> "upd", "delete_key" -> "o_orderkey"))
   }
 
   val q136Sql: String =

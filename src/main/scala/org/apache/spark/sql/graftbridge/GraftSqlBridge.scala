@@ -133,6 +133,34 @@ object GraftSqlBridge {
       case _ => None
     }
 
+  /** Waits, at most `timeoutMs`, until no job tagged `tag` is running
+    * and no stage of one has an active task: the tasks a failed job's
+    * cancellation killed run on until they notice, so their output
+    * (`_temporary/…` of a file write) can still appear after the job's
+    * exception reached the caller. Each check first drains the listener
+    * bus (`private[spark]`), so the status tracker has seen every task
+    * start and end posted so far. False when the bound ran out first.
+    */
+  def awaitTaggedTasks(sc: org.apache.spark.SparkContext, tag: String,
+      timeoutMs: Long): Boolean = {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    def left: Long = (deadline - System.nanoTime()) / 1000000L
+    def busy: Boolean = {
+      try sc.listenerBus.waitUntilEmpty(math.max(1L, left))
+      catch { case _: java.util.concurrent.TimeoutException => }
+      val st = sc.statusTracker
+      st.getJobIdsForTag(tag).exists(id => st.getJobInfo(id).exists { j =>
+        j.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+          j.stageIds.exists(st.getStageInfo(_).exists(_.numActiveTasks > 0))
+      })
+    }
+    while (busy) {
+      if (left <= 0) return false
+      Thread.sleep(5)
+    }
+    true
+  }
+
   /** `schema` with every field nullable, nested fields included: the
     * schema a data source table stores for what it was written from
     * (`StructType.asNullable` is `private[spark]`).

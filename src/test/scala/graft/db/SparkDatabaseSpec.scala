@@ -359,10 +359,11 @@ class SparkDatabaseSpec extends SparkSpec {
   test("loadDataFrame replace with a frame that fails mid-write keeps the old rows") {
     assert(db.loadDataFrame(spark.range(3).toDF("id"), "load_fail_t", replace = true).isRight)
     val dir = tableDir("load_fail_t")
-    // one partition: the failing task is the write's only task, so no
-    // task of the failed job is left running when its output is deleted
+    // default partitions: the other tasks of the failed job can still be
+    // running when the failing one ends the write, and no staging
+    // directory may be left once they have
     val r = db.loadDataFrame(spark.sql(
-      "SELECT CASE WHEN id = 2 THEN raise_error('boom') ELSE id END AS id FROM RANGE(0, 5, 1, 1)"),
+      "SELECT CASE WHEN id = 2 THEN raise_error('boom') ELSE id END AS id FROM RANGE(5)"),
       "load_fail_t", replace = true)
     assert(r.isLeft, r)
     assert(r.left.exists(_.toString.contains("boom")), r)

@@ -136,6 +136,33 @@ class InventorySpec extends AnyFunSuite {
     files
   }
 
+  /** `at` lies inside a string literal of `text` (odd `"` count before). */
+  private def inString(text: String, at: Int): Boolean =
+    text.take(at).count(_ == '"') % 2 == 1
+
+  private val DefName = """^\s*(?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
+
+  /** The name of the last `def` at or above each line ("" before any). */
+  private def enclosingDefs(lines: Vector[String]): Vector[String] =
+    lines.scanLeft("") {
+      case (_, DefName(d)) => d
+      case (d, _) => d
+    }.tail
+
+  /** (index, code) of each line that is neither a comment nor oracle-SQL
+    * text (a stripMargin `|` line), with a trailing `//` comment cut.
+    */
+  private def codeLines(lines: Vector[String]): Vector[(Int, String)] =
+    lines.zipWithIndex.collect {
+      case (line, i) if {
+          val t = line.trim
+          !t.startsWith("|") && !t.startsWith("*") &&
+            !t.startsWith("//") && !t.startsWith("/*")
+        } =>
+        val cut = line.indexOf("//")
+        (i, if (cut >= 0 && !inString(line, cut)) line.take(cut) else line)
+    }
+
   test("the embedding quantization grid and the per-query rank window " +
     "are built only in Similarity's shared stages") {
     // every kNN / ANN / near-dup operator composes Similarity.quantize
@@ -146,18 +173,11 @@ class InventorySpec extends AnyFunSuite {
     val Quantize = """floor\((.*?)\s*\*\s*(lit\()?1000\.0\b""".r
     val RankWindow = """partitionBy\((col\()?"qid"""".r
     val Scalar = """col\((valueCol|scoreCol|"value")\).*""".r
-    val DefName = """^\s*(?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
-    def inString(line: String, at: Int): Boolean =
-      line.take(at).count(_ == '"') % 2 == 1
     val copies = for {
       f <- mainSources
       isSimilarity = f.getFileName.toString == "Similarity.scala"
       lines = java.nio.file.Files.readAllLines(f).asScala.toVector
-      enclosing = lines.scanLeft("") {
-        case (_, DefName(d)) => d
-        case (d, _) => d
-      }.tail
-      ((line, i), owner) <- lines.zipWithIndex.zip(enclosing)
+      ((line, i), owner) <- lines.zipWithIndex.zip(enclosingDefs(lines))
       code = line.trim
       if !code.startsWith("|") && !code.startsWith("*") &&
         !code.startsWith("//") && !code.startsWith("/*")
@@ -199,28 +219,14 @@ class InventorySpec extends AnyFunSuite {
       terms.exists(_.group(2) != null) && terms.forall(t =>
         t.group(3) == t.group(1) + Option(t.group(2)).getOrElse(""))
     }
-    val DefName = """^\s*(?:private(?:\[\w+\])? )?def (\w+)""".r.unanchored
     val stages = Set("completeBlocks", "rankedP")
-    def inString(text: String, at: Int): Boolean =
-      text.take(at).count(_ == '"') % 2 == 1
     val copies = for {
       f <- mainSources
       isStats = f.getFileName.toString == "Stats.scala"
       lines = java.nio.file.Files.readAllLines(f).asScala.toVector
-      enclosing = lines.scanLeft("") {
-        case (_, DefName(d)) => d
-        case (d, _) => d
-      }.tail
-      code = lines.zipWithIndex.zip(enclosing).collect {
-        case ((line, i), owner) if {
-            val t = line.trim
-            !t.startsWith("|") && !t.startsWith("*") &&
-              !t.startsWith("//") && !t.startsWith("/*")
-          } =>
-          val cut = line.indexOf("//")
-          val kept =
-            if (cut >= 0 && !inString(line, cut)) line.take(cut) else line
-          (owner, i, kept.filterNot(_.isWhitespace))
+      enclosing = enclosingDefs(lines)
+      code = codeLines(lines).map { case (i, c) =>
+        (enclosing(i), i, c.filterNot(_.isWhitespace))
       }
       (owner, group) <-
         code.foldRight(List.empty[(String, List[(Int, String)])]) {
@@ -256,22 +262,10 @@ class InventorySpec extends AnyFunSuite {
     val Args = """\((?:[^()]|\([^()]*\))*\)"""
     val Read = ("""(?<![\w$])read(?:\.parquet\(|(?:\.\w+""" + Args +
       """)*\.format\("parquet"\)(?:\.\w+""" + Args + """)*\.load\()""").r
-    def inString(text: String, at: Int): Boolean =
-      text.take(at).count(_ == '"') % 2 == 1
     val reads = for {
       f <- mainSources if f.getFileName.toString != "ParquetSource.scala"
       lines = java.nio.file.Files.readAllLines(f).asScala.toVector
-      code = lines.zipWithIndex.collect {
-        case (line, i) if {
-            val t = line.trim
-            !t.startsWith("|") && !t.startsWith("*") &&
-              !t.startsWith("//") && !t.startsWith("/*")
-          } =>
-          val cut = line.indexOf("//")
-          val kept =
-            if (cut >= 0 && !inString(line, cut)) line.take(cut) else line
-          (i, kept.filterNot(_.isWhitespace))
-      }
+      code = codeLines(lines).map { case (i, c) => (i, c.filterNot(_.isWhitespace)) }
       text = code.map(_._2).mkString
       lineAt = code.scanLeft(0)(_ + _._2.length).tail.zip(code.map(_._1))
       m <- Read.findAllMatchIn(text).toSeq if !inString(text, m.start)
@@ -279,6 +273,34 @@ class InventorySpec extends AnyFunSuite {
     } yield s"$f:${line + 1}: ${lines(line).trim}"
     assert(reads.isEmpty, "parquet reads outside graft.db.ParquetSource " +
       s"(use ParquetSource.read):\n${reads.mkString("\n")}")
+  }
+
+  test("every tokenizing split is one of TextStats' tokenization stages") {
+    // every operator that tokenizes text composes TextStats.tokenArray /
+    // wordArray / wordArraySql / charArray and the stages built on them;
+    // a local split(…, " ") / split(…, "") — or split(<col>, ' ') in SQL
+    // text — drifts from the empty-token rules the stages name. Exempt:
+    // comments, the oracle-SQL text (stripMargin lines), the stages' own
+    // bodies, and the splits that are not tokenization (line splits on
+    // "\n", the sentence regex, Behavior's "\\|" key split) — none of
+    // which the patterns match.
+    val CodeSplit = ("""(?<![\w.$])split\((?:[^()"]|\((?:[^()]|\([^()]*\))*\))+?""" +
+      """,\s*" ?"\s*\)""").r
+    val SqlSplit = """(?<![\w.])split\(\s*[$\w{}.]+\s*,\s*' ?'\s*\)""".r
+    val stages = Set("tokenArray", "wordArraySql", "charArray")
+    val copies = for {
+      f <- mainSources
+      isTextStats = f.getFileName.toString == "TextStats.scala"
+      lines = java.nio.file.Files.readAllLines(f).asScala.toVector
+      owners = enclosingDefs(lines)
+      (i, code) <- codeLines(lines)
+      if !(isTextStats && stages(owners(i)))
+      if CodeSplit.findAllMatchIn(code).exists(m => !inString(code, m.start)) ||
+        SqlSplit.findFirstIn(code).isDefined
+    } yield s"$f:${i + 1}: ${lines(i).trim}"
+    assert(copies.isEmpty, "tokenizing splits outside TextStats' " +
+      "tokenization stages (use TextStats.tokenArray / wordArray / " +
+      s"wordArraySql / charArray):\n${copies.mkString("\n")}")
   }
 
   test("every class-6 global-order operator in docs/SCALING.md names " +
